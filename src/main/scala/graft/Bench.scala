@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, print one JSON line of per-query wall seconds.
   *
@@ -77,21 +75,10 @@ object Bench {
     quietBoot()
     log4jConsoleToStderr()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new org.apache.spark.sql.graftglue.GraftExtensions)
-      .getOrCreate())
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-
-    // warmup: a scan, a shuffle, and a broadcast join
-    val r = spark.read.parquet(s"$sfDir/region.parquet")
-    val n = spark.read.parquet(s"$sfDir/nation.parquet")
-    n.join(org.apache.spark.sql.functions.broadcast(r),
-      n("n_regionkey") === r("r_regionkey")).groupBy("r_name").count().collect()
+    Harness.warmup(spark, sfDir)
 
     // ANCHOR: a fixed-shape measurement (scan+shuffle+agg over lineitem,
     // min of 3) taken right after warmup and reported in the JSON line.
@@ -109,77 +96,46 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-    // r15 (generalized multi-row-group basis — r14's gate-only rebase
-    // widened per the verdict): EVERY fixture table ships as ONE parquet
-    // row group, so every zero-exchange per-row query over a corpus
-    // table benched on ONE core of 32 (q_bpe_segment's 4.7 s is a
-    // one-core number). A 100 TB table is never one row group — the
-    // engine's scale shape is file-parallel — so the bench runs ALL
-    // queries against a split copy of the sf dir: corpus-sized tables
-    // repartitioned to one file per core, mid-sized to 8, small dims
-    // kept single-file (splitting a 25-row table measures nothing).
-    // The ANCHOR keeps reading the ORIGINAL dir — its shape must stay
-    // fixed across rounds for drift normalization. Verify/oracle inputs
-    // are untouched; the change of basis is recorded in
-    // plans/BENCHNOTES.md r15 (cross-round diffs start from this
-    // round's committed BENCH_FULL.json).
-    val splitDir: String = try {
-      val d = java.nio.file.Files.createTempDirectory("graft_bench_split")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          import java.nio.file.{Files, Path}
-          Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }))
-      for (t <- graft.sources.Tables.names) {
-        val df = spark.read.parquet(s"$sfDir/$t.parquet")
-        val rows = df.count()
-        val parts = if (rows >= 20000) cpus.toInt
-                    else if (rows >= 2000) 8 else 1
-        (if (parts == 1) df else df.repartition(parts))
-          .write.mode("overwrite").parquet(s"$d/$t.parquet")
-      }
-      d.toString
-    } catch { case e: Throwable =>
-      System.err.println(
-        s"[bench] fixture split failed (${e.getMessage}); using $sfDir")
-      sfDir
-    }
-
+    // queries run against the split copy (Harness.withSplitFixture); the
+    // ANCHOR keeps reading the ORIGINAL dir — its shape must stay fixed
+    // across rounds for drift normalization. Verify/oracle inputs are
+    // untouched.
     // optional comma-separated allowlist for local iteration; the driver
     // leaves it unset → full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      // Two timed runs, report the better: a single pass makes one query
-      // per run eat a multi-second major-GC/JIT pause at random (observed
-      // 2-4x outliers that move between queries run-to-run); min-of-2
-      // measures the query, not the pause lottery.
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        // A failed query must be LOUD: stderr + a "failed" list in the JSON —
-        // a silent -1 timing would make the bench line lie about coverage.
-        // Materialize EVERY result row with ALL columns (toRdd on the
-        // query's own plan), not df.count(): wrapping in count(1) lets
-        // Catalyst prune projection tails and DROP cardinality-preserving
-        // joins outright — discovered in r8 when substringDedup's per-doc
-        // rollup (a left join against a unique-keyed aggregate) "cost"
-        // the same at 100x as at 1x because the entire ownership pipeline
-        // was eliminated under count. toRdd measures producing the result
-        // the way Verify writes it, minus the file IO.
-        val ok = try { fn(spark, splitDir).queryExecution.toRdd.count(); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            false
+    val only = Harness.only
+    val results = Harness.withSplitFixture(spark, sfDir, cpus,
+        "graft_bench_split") { splitDir =>
+      Harness.queries(only).map { case (name, fn) =>
+        // Two timed runs, report the better: a single pass makes one query
+        // per run eat a multi-second major-GC/JIT pause at random (observed
+        // 2-4x outliers that move between queries run-to-run); min-of-2
+        // measures the query, not the pause lottery.
+        val times = (1 to 2).map { _ =>
+          val t0 = System.nanoTime()
+          // A failed query must be LOUD: stderr + a "failed" list in the JSON —
+          // a silent -1 timing would make the bench line lie about coverage.
+          // Materialize EVERY result row with ALL columns (toRdd on the
+          // query's own plan), not df.count(): wrapping in count(1) lets
+          // Catalyst prune projection tails and DROP cardinality-preserving
+          // joins outright — discovered in r8 when substringDedup's per-doc
+          // rollup (a left join against a unique-keyed aggregate) "cost"
+          // the same at 100x as at 1x because the entire ownership pipeline
+          // was eliminated under count. toRdd measures producing the result
+          // the way Verify writes it, minus the file IO.
+          // The drain that isolates queries (internal persists — coreference
+          // edge list, Lm tf frames, … — must not eat heap from, and skew
+          // timings of, later queries) stays INSIDE the timed region.
+          val ok = Caching.withCached {
+            try { fn(spark, splitDir).queryExecution.toRdd.count(); true } catch {
+              case e: Throwable =>
+                System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+                false
+            }
+          }
+          ((System.nanoTime() - t0) / 1e9, ok)
         }
-        // isolate queries: internal persists (coreference edge list, Lm tf
-        // frames, …) must not eat heap from — and skew timings of — later
-        // queries; drain() is the tracked-persist API for exactly this
-        graft.Caching.drain()
-        ((System.nanoTime() - t0) / 1e9, ok)
+        (name, times.map(_._1).min, times.forall(_._2))
       }
-      (name, times.map(_._1).min, times.forall(_._2))
     }
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -122,10 +122,18 @@ object GraftSession {
     * session; `tune` is all graft needs applied to it.
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession =
+    local(cores, s"local[$cores]")
+
+  /** [[local]]'s session under another `master` — e.g.
+    * `local-cluster[2,16,4096]`, whose separate executor JVMs catch
+    * serialization and broadcast-lifecycle bugs `local[N]` cannot.
+    * `cores` still sizes the shuffle partitions.
+    */
+  def local(cores: Int, master: String): SparkSession =
     tune(
       SparkSession
         .builder()
-        .master(s"local[$cores]")
+        .master(master)
         .appName("graft")
         // SQL names + the FuseCountInSet rule for config/SQL pipelines
         // (see graftglue.GraftExtensions; a pre-existing session keeps its

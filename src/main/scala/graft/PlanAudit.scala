@@ -2,14 +2,23 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes the formatted physical plan of every SparkEntry query to
   * plans/PLANS.md — the per-query audit trail for the scale review
   * (SURVEY §5): check pushdown (`PushedFilters`/`ReadSchema`), join
   * strategies (broadcast vs sort-merge), and shuffle (`Exchange`) counts.
   */
 object PlanAudit {
+
+  /** Shuffle exchanges in a FormattedMode plan, counted in the plan TREE
+    * only ("Exchange (n)" with the operator id) — a bare "Exchange" regex
+    * also matches each node's detail section below the tree and
+    * double-counts. Broadcast and Reused exchanges are not shuffles. The
+    * one spelling behind PLANS.md, `exchange_budgets.tsv` and the specs
+    * that check it.
+    */
+  def countExchanges(plan: String): Int =
+    "(?<!Broadcast|Reused)Exchange \\(\\d+\\)".r.findAllIn(plan).size
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "plans/PLANS.md"
@@ -20,16 +29,11 @@ object PlanAudit {
     sb.append("Audit points per SURVEY §5: filters/projections pushed to the ")
     sb.append("parquet scan, dimension joins broadcast, shuffles only where ")
     sb.append("semantics require, partial aggregation before exchanges.\n")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    for ((name, fn) <- Harness.queries(None)) Caching.withCached {
       try {
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
+        val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        // count shuffle exchanges in the plan TREE only ("Exchange (n)"
-        // with the operator id) — a bare "Exchange" regex also matches each
-        // node's detail section below the tree and double-counts
-        val shuffles = "(?<!Broadcast|Reused)Exchange \\(\\d+\\)".r.findAllIn(plan).size
-        sb.append(s"\n## $name  (shuffle exchanges: $shuffles)\n\n```\n")
+        sb.append(s"\n## $name  (shuffle exchanges: ${countExchanges(plan)})\n\n```\n")
         sb.append(plan.take(8000))
         sb.append("\n```\n")
       } catch {

@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling harness for the optimization rounds (guide §1:
-  * measure first). Mirrors [[Bench]]'s environment exactly — same session
-  * confs, same split-fixture basis, same `toRdd.count()` materialization —
+  * measure first). Shares [[Bench]]'s environment through [[Harness]] —
+  * same session, same split-fixture basis, same `toRdd.count()`
+  * materialization —
   * then, for each named query, reports where the wall time went:
   *
   *   - per-JOB wall spans (job id, duration, #tasks, summed task time,
@@ -27,49 +27,23 @@ object Prof {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROF_RUNS", "2").toInt
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new org.apache.spark.sql.graftglue.GraftExtensions)
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-
-    // same warmup + split basis as Bench
-    val r = spark.read.parquet(s"$sfDir/region.parquet")
-    val n = spark.read.parquet(s"$sfDir/nation.parquet")
-    n.join(org.apache.spark.sql.functions.broadcast(r),
-      n("n_regionkey") === r("r_regionkey")).groupBy("r_name").count().collect()
-    val splitDir = {
-      val d = java.nio.file.Files.createTempDirectory("graft_prof_split")
-      for (t <- graft.sources.Tables.names) {
-        val df = spark.read.parquet(s"$sfDir/$t.parquet")
-        val rows = df.count()
-        val parts = if (rows >= 20000) cpus.toInt
-                    else if (rows >= 2000) 8 else 1
-        (if (parts == 1) df else df.repartition(parts))
-          .write.mode("overwrite").parquet(s"$d/$t.parquet")
-      }
-      d.toString
-    }
-
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = Harness.only
       .getOrElse(sys.error("set SPARK_GRAFT_ONLY to the queries to profile"))
-    val sel = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (nm, _) => only.contains(nm) }
+    val spark = GraftSession.local(cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    Harness.warmup(spark, sfDir)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val order = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Int]())
     // stageId → jobId, built at onJobStart: stages are attributed to the
-    // job that REGISTERED them, not to the most recently started job —
-    // concurrent jobs (streaming drains overlap) otherwise misattribute
-    // tasks/bytes across jobs in the report (r17 advice).
+    // job that REGISTERED them. A stage with no mapping is counted and
+    // dropped — charging it to the most recently started job would
+    // misattribute tasks/bytes whenever jobs overlap (streaming drains).
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val droppedStages = new java.util.concurrent.atomic.AtomicInteger
     @volatile var collecting = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -87,10 +61,10 @@ object Prof {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (collecting) {
           val si = e.stageInfo
-          val jid = stageJob.getOrDefault(si.stageId,
-            if (order.isEmpty) -1 else order.get(order.size() - 1))
-          val j = jobs.get(jid)
-          if (j != null) {
+          val j = if (stageJob.containsKey(si.stageId))
+            jobs.get(stageJob.get(si.stageId)) else null
+          if (j == null) droppedStages.incrementAndGet()
+          else {
             j.tasks += si.numTasks
             j.taskMs += si.taskMetrics.executorRunTime
             j.shufR += si.taskMetrics.shuffleReadMetrics.totalBytesRead
@@ -101,36 +75,38 @@ object Prof {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    for ((name, fn) <- sel) {
-      var wall = 0.0
-      for (i <- 1 to runs) {
-        jobs.clear(); order.clear(); stageJob.clear()
-        collecting = i == runs
-        val t0 = System.nanoTime()
-        fn(spark, splitDir).queryExecution.toRdd.count()
-        graft.Caching.drain()
-        wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let the listener bus drain the last job events
+    Harness.withSplitFixture(spark, sfDir, cpus, "graft_prof_split") { splitDir =>
+      for ((name, fn) <- Harness.queries(Some(only))) {
+        var wall = 0.0
+        for (i <- 1 to runs) {
+          jobs.clear(); order.clear(); stageJob.clear(); droppedStages.set(0)
+          collecting = i == runs
+          val t0 = System.nanoTime()
+          Caching.withCached(fn(spark, splitDir).queryExecution.toRdd.count())
+          wall = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(300) // let the listener bus drain the last job events
+        }
+        // merge job spans into covered wall time (jobs can overlap under
+        // concurrent streams; union of intervals)
+        import scala.jdk.CollectionConverters._
+        val rows = order.asScala.toSeq.distinct.flatMap(id => Option(jobs.get(id)))
+          .filter(_.end > 0)
+        val spans = rows.map(j => (j.start, j.end)).sortBy(_._1)
+        var covered = 0L; var curS = Long.MinValue; var curE = Long.MinValue
+        for ((s0, e0) <- spans) {
+          if (s0 > curE) { covered += curE - curS max 0; curS = s0; curE = e0 }
+          else if (e0 > curE) curE = e0
+        }
+        covered += (curE - curS) max 0
+        System.err.println(f"%n== $name  wall=${wall}%.3fs  jobs=${rows.size}" +
+          f"  job-covered=${covered / 1e3}%.3fs  driver-gap=${wall - covered / 1e3}%.3fs" +
+          s"  dropped_stages=${droppedStages.get}")
+        for (j <- rows)
+          System.err.println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3fs" +
+            f" tasks=${j.tasks}%4d taskTime=${j.taskMs / 1e3}%8.3fs" +
+            f" in=${j.inB / 1048576.0}%7.1fMB shufR=${j.shufR / 1048576.0}%6.1fMB" +
+            f" shufW=${j.shufW / 1048576.0}%6.1fMB  ${j.desc.take(80)}")
       }
-      // merge job spans into covered wall time (jobs can overlap under
-      // concurrent streams; union of intervals)
-      import scala.jdk.CollectionConverters._
-      val rows = order.asScala.toSeq.distinct.flatMap(id => Option(jobs.get(id)))
-        .filter(_.end > 0)
-      val spans = rows.map(j => (j.start, j.end)).sortBy(_._1)
-      var covered = 0L; var curS = Long.MinValue; var curE = Long.MinValue
-      for ((s0, e0) <- spans) {
-        if (s0 > curE) { covered += curE - curS max 0; curS = s0; curE = e0 }
-        else if (e0 > curE) curE = e0
-      }
-      covered += (curE - curS) max 0
-      System.err.println(f"%n== $name  wall=${wall}%.3fs  jobs=${rows.size}" +
-        f"  job-covered=${covered / 1e3}%.3fs  driver-gap=${wall - covered / 1e3}%.3fs")
-      for (j <- rows)
-        System.err.println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3fs" +
-          f" tasks=${j.tasks}%4d taskTime=${j.taskMs / 1e3}%8.3fs" +
-          f" in=${j.inB / 1048576.0}%7.1fMB shufR=${j.shufR / 1048576.0}%6.1fMB" +
-          f" shufW=${j.shufW / 1048576.0}%6.1fMB  ${j.desc.take(80)}")
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,35 +7,25 @@ object Verify {
     // args: <sfDir> <outDir> [queryName...] — names limit the run to those
     // queries (local iteration); the driver's two-arg call runs everything
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val only = Some(args.drop(2).toSet).filter(_.nonEmpty)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // SPARK_GRAFT_MASTER overrides the single-JVM default — used by the
     // multi-executor CI pass (`local-cluster[2,16,4096]` via spark-submit)
     // that catches executor-side serialization and broadcast-lifecycle
     // bugs local[N] cannot (separate executor JVMs, real RPC).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.graftglue.GraftExtensions)
-      .getOrCreate())
+    val spark = GraftSession.local(cpus,
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    for ((name, fn) <- Harness.queries(only)) {
+      // queries must not interfere: drop the intermediates a query
+      // persisted internally (e.g. the coreference edge list, Lm's tf
+      // frames) before the next one runs
+      try Caching.withCached(fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries must not interfere: drop the intermediates a query
-      // persisted internally (e.g. the coreference edge list, Lm's tf
-      // frames) before the next one runs — the Caching registry is the
-      // API'd form of the old blanket clearCache
-      graft.Caching.drain()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -51,7 +40,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

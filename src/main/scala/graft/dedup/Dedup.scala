@@ -446,9 +446,9 @@ object Dedup {
     * minhash signatures → guarded LSH banding ([[lshPairs]]) → pointer-jumped
     * connected components ([[dupClusters]]) → keep each cluster's canonical
     * (min-id) row, non-members pass through. This is the composition behind
-    * q_neardup_pipeline, ConfigPipeline's `dedup_near` stage, and
-    * ScaleBench's composed run — one definition so the tie-break and join
-    * semantics cannot drift between them.
+    * q_neardup_pipeline and ConfigPipeline's `dedup_near` stage — one
+    * definition so the tie-break and join semantics cannot drift between
+    * them.
     *
     * The cluster join carries NO broadcast hint: near-dup membership can be
     * corpus-scale in a crawl (AQE broadcasts when it measures small). On

@@ -328,17 +328,8 @@ object Ann {
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
               idCol: String, vecCol: String, k: Int,
               nlist: Int = 64, nprobe: Int = 8,
-              trained: Boolean = true): DataFrame =
-    ivfTopKWith(queries, corpus, idCol, vecCol, k,
-      centroidsFor(corpus, idCol, vecCol, nlist, trained), nprobe)
-
-  /** [[ivfTopK]] with an EXPLICIT centroid set — for callers that already
-    * hold one (sweeps comparing quantizers; a stored model's cells) and
-    * must not pay a redundant re-derivation per call.
-    */
-  private[graft] def ivfTopKWith(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      cents: Seq[(String, Seq[Float])], nprobe: Int): DataFrame = {
+              trained: Boolean = true): DataFrame = {
+    val cents = centroidsFor(corpus, idCol, vecCol, nlist, trained)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .withColumn("c_norm", Vectors.fnorm(col("c_vec")))
     val assigned = c.withColumn("cell", nearestCell(cents, col("c_vec")))

@@ -197,12 +197,12 @@ object MaxSim {
 
   /** Vote-based candidate cut for the stored-candidates composition
     * (q_maxsim_ann_candidates — its DuckDB oracle replays this exact
-    * arithmetic, so the recipe must live in ONE place; ScaleBench and
-    * ClusteredSweep share it too). `docHits` is a (query_id, neighbor_id)
-    * frame at DOCUMENT granularity — one row per retained token hit,
-    * repeats counting as votes; self-pairs drop and the `topN` most-voted
-    * docs per query survive (ties → lower doc id). Hit-set-sized at every
-    * corpus size; the per-query window sees ≤ |hits| rows.
+    * arithmetic, so the recipe must live in ONE place). `docHits` is a
+    * (query_id, neighbor_id) frame at DOCUMENT granularity — one row per
+    * retained token hit, repeats counting as votes; self-pairs drop and
+    * the `topN` most-voted docs per query survive (ties → lower doc id).
+    * Hit-set-sized at every corpus size; the per-query window sees
+    * ≤ |hits| rows.
     */
   def voteCandidates(docHits: DataFrame, topN: Int): DataFrame = {
     require(topN > 0, s"topN must be positive, got $topN")

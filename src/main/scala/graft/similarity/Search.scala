@@ -497,7 +497,8 @@ object Search {
     require(maxDfPermille >= 0 && maxDfPermille <= 1000,
       s"maxDfPermille must be in [0, 1000], got $maxDfPermille")
     val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats", recursive = false).head()
-    val (n, sumdl, buckets) = (st.getLong(0), st.getLong(1), st.getInt(2))
+    val (n, sumdl, buckets) =
+      (st.getAs[Long]("n"), st.getAs[Long]("sumdl"), st.getAs[Int]("buckets"))
     // df-ceiling guard ([[dfCeilingOk]] via [[guardPlan]]): drop stop
     // terms BEFORE their buckets are listed, so a dropped term's posting
     // partition is never even read. The common path is the cached
@@ -548,7 +549,8 @@ object Search {
     require(maxDfPermille >= 0 && maxDfPermille <= 1000,
       s"maxDfPermille must be in [0, 1000], got $maxDfPermille")
     val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats", recursive = false).head()
-    val (n, sumdl, buckets) = (st.getLong(0), st.getLong(1), st.getInt(2))
+    val (n, sumdl, buckets) =
+      (st.getAs[Long]("n"), st.getAs[Long]("sumdl"), st.getAs[Int]("buckets"))
     val qAll = queries.select(col(queryCol).as("query_id"), col(termCol).as("term"))
       .distinct()
     // df-ceiling guard ([[dfCeilingOk]] via [[guardPlan]]). A stop term
@@ -645,7 +647,8 @@ object Search {
     // yet; a no-op in the common case (two exists() probes per dir).
     Seq("terms", "stats", "postings", "doclens").foreach(sub =>
       graft.operators.Sinks.recoverSwap(spark, s"$dir/$sub"))
-    val buckets = graft.streaming.Streams.readIndex(spark, s"$dir/stats", recursive = false).head().getInt(2)
+    val buckets = graft.streaming.Streams.readIndex(spark, s"$dir/stats",
+      recursive = false).head().getAs[Int]("buckets")
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted documents
     // replace any stored copy — the apply is idempotent, so a maintenance
     // loop replaying its uncommitted micro-batch after a crash (even one
@@ -713,7 +716,7 @@ object Search {
     // directory serially (r18, guide §2.4). The live stats row still
     // holds the bucket count at this point — nothing has swapped yet.
     val buckets = graft.streaming.Streams.readIndex(terms.sparkSession,
-      s"$dir/stats", recursive = false).head().getInt(2)
+      s"$dir/stats", recursive = false).head().getAs[Int]("buckets")
     Sinks.swapWrite(terms.repartition(buckets, col("bucket")), s"$dir/terms",
       Seq("bucket"))
     Sinks.swapWrite(stats.coalesce(1), s"$dir/stats")

@@ -39,18 +39,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes the next row overwrites, and `UTF8String.replace` returns the
   * INPUT object when nothing matched.
   */
-object ChainedReplace {
-  /** Memo observability (r16): JVM-wide hit/miss totals across all
-    * [[ChainedReplace]] instances and threads — monotonic; read the
-    * delta around a run for the hit rate (ScaleBench `bpe_memo` prints
-    * it; on a cluster each executor JVM counts its own). LongAdder
-    * keeps the hot-path cost negligible next to even a hit's
-    * O(length) hash probe.
-    */
-  val memoHits = new java.util.concurrent.atomic.LongAdder
-  val memoMisses = new java.util.concurrent.atomic.LongAdder
-}
-
 case class ChainedReplace(child: Expression, steps: Seq[(String, String)],
                           memoSize: Int = 0)
     extends UnaryExpression with ExpectsInputTypes {
@@ -93,9 +81,8 @@ case class ChainedReplace(child: Expression, steps: Seq[(String, String)],
     else {
       val m = memo.get()
       val hit = m.get(v)
-      if (hit != null) { ChainedReplace.memoHits.increment(); hit }
+      if (hit != null) hit
       else {
-        ChainedReplace.memoMisses.increment()
         val k = v.clone() // detach from the reused row buffer
         val out = replaceAll(k) // returns k itself when nothing matched
         m.put(k, out)

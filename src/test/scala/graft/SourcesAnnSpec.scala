@@ -222,6 +222,17 @@ class SourcesAnnSpec extends SparkSpec {
     val want = Search.bm25TopK(docs, "doc_id", "text", Seq("spark", "common"), k = 5)
       .as[(Long, Double)].collect().toSeq
     assert(got == want && got.nonEmpty)
+    // the stats row is read by column NAME: the same values stored as
+    // (sumdl, n, buckets) probe identically, where a positional read
+    // would silently swap the corpus size and the total length
+    val dirR = java.nio.file.Files.createTempDirectory("lexidx_r").toString
+    Search.writeLexIndex(docs, "doc_id", "text", dirR, buckets = 8)
+    val st0 = spark.read.parquet(s"$dirR/stats").head()
+    Seq((st0.getAs[Long]("sumdl"), st0.getAs[Long]("n"), st0.getAs[Int]("buckets")))
+      .toDF("sumdl", "n", "buckets").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dirR/stats")
+    assert(Search.bm25FromIndex(spark, dirR, Seq("spark", "common"), k = 5)
+      .as[(Long, Double)].collect().toSeq == want)
     // the empty doc reached the corpus stats (n=5), not the postings
     val st = spark.read.parquet(s"$dir/stats").head()
     assert(st.getLong(0) == 5L && st.getLong(1) == 20L)
