@@ -856,17 +856,17 @@ object EntryQueriesCore {
         T(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey"),
         idx, Seq("c_nationkey"))
       // maintenance shape: read the LIVE data, write back over it —
-      // through resolveLive (a no-op on the rename layout), so the query
-      // is protocol-agnostic and the suite runs green under
-      // SPARK_GRAFT_SWAP=pointer too (r14)
-      Sinks.swapWrite(s.read.parquet(Sinks.resolveLive(s, idx)), idx,
-        Seq("c_nationkey"))
-      s.read.parquet(Sinks.resolveLive(s, idx)).select(col("c_custkey"),
+      // through readIndex (the live-generation seam, a no-op on the
+      // rename layout), so the query is protocol-agnostic and the suite
+      // runs green under SPARK_GRAFT_SWAP=pointer too (r14)
+      def live() = graft.streaming.Streams.readIndex(s, idx, recursive = false)
+      Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
+      live().select(col("c_custkey"),
         col("c_name"), col("c_nationkey").cast(LongType).as("c_nationkey"))
     }),
     // the SAME roundtrip under the r14 generation-POINTER protocol (the
     // object-store-safe swap — no directory rename at all): write,
-    // maintenance-read the live generation through resolveLive, write
+    // maintenance-read the live generation through readIndex, write
     // back as a new generation, read back bit-for-bit. Shares
     // q_swap_roundtrip's oracle — the protocols are layout-transparent
     // to readers, and this row proves it through the DuckDB gate, not
@@ -881,9 +881,9 @@ object EntryQueriesCore {
         Sinks.swapWrite(
           T(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey"),
           idx, Seq("c_nationkey"))
-        Sinks.swapWrite(
-          s.read.parquet(Sinks.resolveLive(s, idx)), idx, Seq("c_nationkey"))
-        s.read.parquet(Sinks.resolveLive(s, idx)).select(col("c_custkey"),
+        def live() = graft.streaming.Streams.readIndex(s, idx, recursive = false)
+        Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
+        live().select(col("c_custkey"),
           col("c_name"), col("c_nationkey").cast(LongType).as("c_nationkey"))
       } finally prev match {
         case Some(v) => s.conf.set(key, v)

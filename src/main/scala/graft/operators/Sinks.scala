@@ -516,26 +516,39 @@ object Sinks {
     require(fs.rename(tmp, pf), s"writePointer: rename $tmp -> $pf failed")
   }
 
-  /** Resolve the directory a READER should scan: for a pointer-layout
-    * dir, the live `gen-N` subdirectory (`_CURRENT`, falling back to the
-    * newest READY generation when the pointer is mid-update); for a
-    * rename-layout (or not-yet-existing) dir, the dir itself. Every
-    * stored-index read goes through here (via
-    * [[graft.streaming.Streams.readIndex]]), so the two protocols are
-    * interchangeable to readers.
+  /** Resolve what a READER should scan, as (base path for partition
+    * discovery, paths to list): for a pointer-layout dir, the live `gen-N`
+    * subdirectory (`_CURRENT`, falling back to the newest READY generation
+    * when the pointer is mid-update); for a rename-layout (or
+    * not-yet-existing) dir, the dir itself. Every stored-index read goes
+    * through here (via [[graft.streaming.Streams.readIndex]]), so the two
+    * protocols are interchangeable to readers.
+    *
+    * The one case where base and paths differ is the MIGRATION window: a
+    * legacy flat dir whose first pointer generation is still being
+    * written (a `gen-N/` exists, none is ready, no pointer names one).
+    * Listing the dir would put the flat `bucket=…` partitions beside the
+    * unready `gen-0/`, which Spark's partition discovery rejects
+    * (CONFLICTING_DIRECTORY_STRUCTURES); the flat children alone are the
+    * live data until the pointer lands, read with the dir as base. The
+    * paths are empty when the dir holds no flat data either (nothing is
+    * live yet).
     */
-  def resolveLive(spark: SparkSession, dir: String): String = {
+  def resolveLive(spark: SparkSession, dir: String): (String, Seq[String]) = {
     import org.apache.hadoop.fs.Path
     val d = new Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isPointerLayout(fs, d)) dir
-    else {
-      val target = readPointer(fs, d)
-        .map(n => new Path(d, s"$GenPrefix$n"))
-        .filter(fs.exists(_))
-        .orElse(listGens(fs, d).filter(g => genReady(fs, g._2))
-          .lastOption.map(_._2))
-      target.fold(dir)(_.toString)
+    if (!isPointerLayout(fs, d)) (dir, Seq(dir))
+    else readPointer(fs, d)
+      .map(n => new Path(d, s"$GenPrefix$n"))
+      .filter(fs.exists(_))
+      .orElse(listGens(fs, d).filter(g => genReady(fs, g._2))
+        .lastOption.map(_._2)) match {
+      case Some(g) => (g.toString, Seq(g.toString))
+      case None => (dir, fs.listStatus(d).toSeq.map(_.getPath).filter { p =>
+        val n = p.getName
+        genNumber(n).isEmpty && !n.startsWith("_") && !n.startsWith(".")
+      }.map(_.toString))
     }
   }
 

@@ -24,6 +24,16 @@ import graft.Caching.TrackedSyntax
   * order-independent, and a 1-ulp `ln` wobble (~1e-13 absolute) only flips
   * a 1e-6-spaced quantization boundary with negligible probability. Raw
   * double summation would also be partition-order nondeterministic.
+  *
+  * Stored indexes: probes and maintenance of a [[writeLexIndex]] layout
+  * share one cached [[LexHandle]] per index dir. It holds what only
+  * changes with a new generation (n, sumdl, buckets, the postings schema,
+  * the df-ceiling stop set) and is keyed by the live file names and
+  * mtimes under stats/, postings/ and terms/, which every write path
+  * rotates on every store. A warm probe therefore runs no stats read and
+  * no schema inference: 4 Spark jobs where it ran 8. The cache has no
+  * option because its key tracks the data itself and its size is one
+  * small entry per index dir.
   */
 object Search {
 
@@ -216,23 +226,26 @@ object Search {
     val stats = termStats(docs, idCol, textCol, queryTerms)
     val corp = toks.agg(count(lit(1)).as("n"),
       sum(size(col("__tk")).cast(LongType)).as("sumdl"))
-    bm25Tail(stats, corp, k, k1, b)
+    bm25Tail(stats, _.crossJoin(broadcast(corp)), k, k1, b)
   }
 
   /** The BM25 scoring tail over a postings-shaped frame (id, dl, term, tf)
-    * + a 1-row corpus-stats frame (n, sumdl) — ONE definition shared by
-    * [[bm25TopK]] (postings computed from the corpus scan) and
-    * [[bm25FromIndex]] (postings read from the stored index), so the two
-    * paths are bit-identical by construction and share one oracle.
-    * Expression shapes mirror the SQL oracle operator-for-operator: every
-    * double op is IEEE-correctly-rounded, so identical operand order =
-    * identical bits (ln excepted — handled by the decimal quantization).
+    * whose rows `withCorp` extends with the corpus stats (n, sumdl) — ONE
+    * definition shared by [[bm25TopK]] (postings and a 1-row stats frame
+    * computed from the corpus scan) and [[bm25FromIndex]] (postings read
+    * from the stored index, stats as literals off its [[LexHandle]]), so
+    * the two paths are bit-identical by construction and share one
+    * oracle. Expression shapes mirror the SQL oracle operator-for-
+    * operator: every double op is IEEE-correctly-rounded, so identical
+    * operand order = identical bits (ln excepted — handled by the decimal
+    * quantization); a literal n/sumdl folds to the same bits the column
+    * form computes.
     */
-  private def bm25Tail(posts: DataFrame, corp: DataFrame, k: Int,
-                       k1: Double, b: Double): DataFrame = {
+  private def bm25Tail(posts: DataFrame, withCorp: DataFrame => DataFrame,
+                       k: Int, k1: Double, b: Double): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val dfreq = posts.groupBy("term").agg(count(lit(1)).as("df"))
-    val scored = posts.join(broadcast(dfreq), "term").crossJoin(broadcast(corp))
+    val scored = withCorp(posts.join(broadcast(dfreq), "term"))
       .withColumn("__s", bm25ScoreCol(k1, b))
     scored.groupBy("id").agg(sum(col("__s")).as("__sdec"))
       .select(col("id"), col("__sdec").cast(DoubleType).as("score"))
@@ -255,6 +268,11 @@ object Search {
         (lit(1) - lit(b) + lit(b) * (col("dl") / (col("sumdl") / col("n")))))
     (idf * tfc).cast(DecimalType(18, 6))
   }
+
+  /** A stored generation's corpus stats as literal columns: no 1-row
+    * frame to broadcast and cross-join per probe. */
+  private def corpLit(n: Long, sumdl: Long)(df: DataFrame): DataFrame =
+    df.withColumn("n", lit(n)).withColumn("sumdl", lit(sumdl))
 
   /** A term's storage bucket: the 60-bit md5 prefix mod `buckets` —
     * engine-portable (the [[Ann.md5Prefix60]] recipe), computable
@@ -365,9 +383,9 @@ object Search {
     * then; failing at probe time would break every existing index the day
     * the default flipped).
     */
-  private sealed trait GuardPlan
-  private final case class StopSet(terms: Set[String]) extends GuardPlan
-  private case object ConsultPerProbe extends GuardPlan
+  private[graft] sealed trait GuardPlan
+  private[graft] final case class StopSet(terms: Set[String]) extends GuardPlan
+  private[graft] case object ConsultPerProbe extends GuardPlan
   private case object Unguarded extends GuardPlan
 
   /** Stop sets above this size are not cached (or collected): at 990‰ the
@@ -378,24 +396,102 @@ object Search {
     */
   private val StopSetCacheCap = 4096
 
-  /** dir → (terms-dir mtime, n, maxDfPermille, stop set). One live entry
-    * per index dir: a maintain generation lands via swapWrite, whose
-    * rename gives the new terms/ directory a NEW mtime (it is the `.next`
-    * dir, created when the delta job wrote it), so the key changes and the
-    * stale set is recomputed — maintain-safe by construction. `n` is in
-    * the key too: stats/ swaps with the same generation, so a changed
-    * corpus size invalidates even if mtime granularity (ms) ever aliased.
+  /** The `stats/` row's layout, as [[writeLexIndex]] and [[lexIndexDelta]]
+    * write it: read with it, the stats row costs no schema-inference job.
+    * Columns resolve by name, so a reordered row reads the same.
     */
-  private val stopTermCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int, Set[String])]()
+  private val StatsSchema = StructType.fromDDL("n BIGINT, sumdl BIGINT, buckets INT")
 
-  /** Test hook: the live cache entry for `dir` as (mtime, n, permille,
-    * stop set) — lets the invalidation spec pin that a swapWrite actually
-    * rotates the generation key rather than inferring it from results.
+  /** Everything about one stored lexical-index GENERATION that probes and
+    * maintenance would otherwise re-read per call: the corpus stats `n`
+    * and `sumdl`, the layout's `buckets`, the `postings` schema (reads
+    * pass it, so no Parquet schema-inference job runs) and the df-ceiling
+    * guard's resolution for the last ceiling probed (`guard`: (permille,
+    * plan); the stop-term set is one terms/ scan per generation, not per
+    * probe).
+    *
+    * `gen` is the generation token: per artifact (stats/, postings/,
+    * terms/) the live base [[graft.operators.Sinks.resolveLive]] names
+    * and the (name, mtime) of every entry directly under its read paths
+    * (none when the artifact is absent). It rests on FILE names and mtimes
+    * because directory mtimes are not real on every store (S3-class
+    * stores report a synthetic one), so a directory rewritten in place
+    * can keep its path and its mtime. Every write path writes stats/ anew
+    * — an in-place [[writeLexIndex]] overwrite, a rename-layout swapWrite
+    * of a maintenance batch, a pointer-layout `gen-N` — and Spark names
+    * each part file with the writing job's UUID, so every write path
+    * rotates the token on every store; a pointer-layout swap also moves
+    * the base. The handle is rebuilt on the first call that sees a new
+    * token. The token is resolved BEFORE the handle's reads, so a handle
+    * can hold data newer than its token (the next call rebuilds it) but
+    * never older.
+    *
+    * There is no knob: one handle per index dir, a few longs, one schema
+    * and at most [[StopSetCacheCap]] terms, and the token check (a few
+    * status calls and three listings on the driver) replaces what used to
+    * be three Spark jobs per probe.
     */
-  private[graft] def stopTermCacheEntry(
-      dir: String): Option[(Long, Long, Int, Set[String])] =
-    Option(stopTermCache.get(dir))
+  private[graft] final case class LexHandle(
+      gen: Seq[(String, Seq[(String, Long)])], n: Long, sumdl: Long,
+      buckets: Int, postings: StructType,
+      guard: Option[(Int, GuardPlan)] = None) {
+    def hasTerms: Boolean = gen(LexArtifacts.indexOf("terms"))._2.nonEmpty
+  }
+
+  /** dir → its live generation's handle (one entry per index dir). */
+  private val lexHandles =
+    new java.util.concurrent.ConcurrentHashMap[String, LexHandle]()
+
+  /** Test hook: the live handle for `dir` — lets the invalidation spec
+    * pin that every write path rotates the generation token rather than
+    * inferring it from results.
+    */
+  private[graft] def lexHandleEntry(dir: String): Option[LexHandle] =
+    Option(lexHandles.get(dir))
+
+  /** The artifacts whose live directories make up the generation token,
+    * in `LexHandle.gen` order. */
+  private val LexArtifacts = Seq("stats", "postings", "terms")
+
+  private def lexGeneration(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): Seq[(String, Seq[(String, Long)])] =
+    LexArtifacts.map { sub =>
+      val (base, paths) = graft.operators.Sinks.resolveLive(spark, s"$dir/$sub")
+      val ps = paths.map(new org.apache.hadoop.fs.Path(_)).toArray
+      val entries =
+        if (ps.isEmpty) Nil
+        else try ps.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(ps).toSeq.map(f => f.getPath.getName -> f.getModificationTime)
+        catch { case _: java.io.FileNotFoundException => Nil }
+      base -> entries
+    }
+
+  /** The [[LexHandle]] of `dir`'s live generation: cached while the
+    * generation token holds, else rebuilt from one stats/ read (a `head`
+    * job) and one postings/ schema inference.
+    */
+  private def lexHandle(spark: org.apache.spark.sql.SparkSession,
+                        dir: String): LexHandle = {
+    val gen = lexGeneration(spark, dir)
+    val hit = lexHandles.get(dir)
+    if (hit != null && hit.gen == gen) hit
+    else {
+      val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats",
+        recursive = false, schema = Some(StatsSchema)).head()
+      val h = LexHandle(gen, st.getAs[Long]("n"), st.getAs[Long]("sumdl"),
+        st.getAs[Int]("buckets"), graft.streaming.Streams.readIndex(spark,
+          s"$dir/postings", recursive = false).schema)
+      lexHandles.put(dir, h)
+      h
+    }
+  }
+
+  /** The live postings/ of a handle's generation, read with its cached
+    * schema (no inference job). */
+  private def postingsOf(spark: org.apache.spark.sql.SparkSession,
+                         dir: String, h: LexHandle): DataFrame =
+    graft.streaming.Streams.readIndex(spark, s"$dir/postings",
+      recursive = false, schema = Some(h.postings))
 
   /** Dirs already warned about probing unguarded (pre-guard layout) — the
     * warning is per-dir, not per-probe, so a streaming probe loop does not
@@ -406,29 +502,25 @@ object Search {
 
   /** Resolve the guard for one probe. The stop-term SET of a generation
     * (every term whose df exceeds the ceiling) is computed ONCE per
-    * (dir, generation, ceiling) and cached — a static index pays the
-    * terms/ consult once instead of per micro-batch (q_stream_bm25probe
-    * was +30% paying it every batch), and a maintained index invalidates
-    * on the swap (see [[stopTermCache]]). The terms/ scan here reads the
-    * whole vocabulary-sized table once (column-pruned to term+df) instead
-    * of the legacy query-bucket-pruned read; past [[StopSetCacheCap]]
-    * survivors it falls back to that legacy consult.
+    * (generation, ceiling) and kept on the [[LexHandle]] — a static index
+    * pays the terms/ consult once instead of per micro-batch
+    * (q_stream_bm25probe was +30% paying it every batch), and a
+    * maintained index gets a new handle on the swap. The terms/ scan here
+    * reads the whole vocabulary-sized table once (column-pruned to
+    * term+df) instead of the legacy query-bucket-pruned read; past
+    * [[StopSetCacheCap]] survivors the generation keeps that legacy
+    * consult.
     *
     * Absent terms/ handling distinguishes the swap window (retry, mirror
     * of [[graft.streaming.Streams.readIndex]]) from a genuinely pre-guard
-    * layout (WARN once per dir + probe unguarded).
+    * layout (WARN once per dir + probe unguarded); neither is cached.
     */
   private def guardPlan(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, n: Long, maxDfPermille: Int): GuardPlan = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/terms")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def status(): Option[org.apache.hadoop.fs.FileStatus] =
-      try Some(fs.getFileStatus(p)) catch {
-        case _: java.io.FileNotFoundException => None
-      }
-    val st = status().orElse { Thread.sleep(200L); status() }
-    st match {
-      case None =>
+                        dir: String, h: LexHandle, maxDfPermille: Int): GuardPlan =
+    h.guard.collect { case (p, plan) if p == maxDfPermille => plan }.getOrElse {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/terms")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!h.hasTerms && { Thread.sleep(200L); !fs.exists(p) }) {
         if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/terms.next")))
           throw new IllegalStateException(
             s"terms table $dir/terms is missing but terms.next exists: a " +
@@ -441,25 +533,20 @@ object Search {
               "(= maxDfPermille 1000). Rebuild with writeLexIndex or run " +
               "one lexIndexDelta generation to migrate.")
         Unguarded
-      case Some(s) =>
-        val mtime = s.getModificationTime
-        val hit = stopTermCache.get(dir)
-        if (hit != null && hit._1 == mtime && hit._2 == n && hit._3 == maxDfPermille)
-          StopSet(hit._4)
-        else {
-          val stop = graft.streaming.Streams
-            .readIndex(spark, s"$dir/terms", recursive = false)
-            .filter(!dfCeilingOk(n, maxDfPermille))
-            .select("term").limit(StopSetCacheCap + 1)
-            .collect().map(_.getString(0)).toSet
-          if (stop.size > StopSetCacheCap) ConsultPerProbe
-          else {
-            stopTermCache.put(dir, (mtime, n, maxDfPermille, stop))
-            StopSet(stop)
-          }
-        }
+      } else {
+        val stop = graft.streaming.Streams
+          .readIndex(spark, s"$dir/terms", recursive = false)
+          .filter(!dfCeilingOk(h.n, maxDfPermille))
+          .select("term").limit(StopSetCacheCap + 1)
+          .collect().map(_.getString(0)).toSet
+        val plan = if (stop.size > StopSetCacheCap) ConsultPerProbe else StopSet(stop)
+        // a terms/ that appeared after the token was taken belongs to a
+        // newer generation than this handle: use it, do not cache it
+        if (h.hasTerms)
+          lexHandles.replace(dir, h, h.copy(guard = Some(maxDfPermille -> plan)))
+        plan
+      }
     }
-  }
 
   /** The df-ceiling guard shared by [[bm25FromIndex]] and
     * [[bm25ManyFromIndex]]: a term whose document frequency exceeds
@@ -496,9 +583,8 @@ object Search {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(maxDfPermille >= 0 && maxDfPermille <= 1000,
       s"maxDfPermille must be in [0, 1000], got $maxDfPermille")
-    val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats", recursive = false).head()
-    val (n, sumdl, buckets) =
-      (st.getAs[Long]("n"), st.getAs[Long]("sumdl"), st.getAs[Int]("buckets"))
+    val h = lexHandle(spark, dir)
+    val (n, buckets) = (h.n, h.buckets)
     // df-ceiling guard ([[dfCeilingOk]] via [[guardPlan]]): drop stop
     // terms BEFORE their buckets are listed, so a dropped term's posting
     // partition is never even read. The common path is the cached
@@ -506,7 +592,7 @@ object Search {
     // probe); adversarially low ceilings keep the legacy pruned consult.
     val terms: Seq[String] =
       if (maxDfPermille >= 1000) queryTerms
-      else guardPlan(spark, dir, n, maxDfPermille) match {
+      else guardPlan(spark, dir, h, maxDfPermille) match {
         case Unguarded      => queryTerms
         case StopSet(stop)  => queryTerms.filterNot(stop)
         case ConsultPerProbe =>
@@ -518,13 +604,11 @@ object Search {
             .select("term").collect().map(_.getString(0)).toSeq
       }
     val bks = terms.map(t => Ann.md5Prefix60(t) % buckets).distinct
-    val posts = graft.streaming.Streams.readIndex(spark, s"$dir/postings", recursive = false)
+    val posts = postingsOf(spark, dir, h)
       .filter(col("bucket").isin(bks: _*))
       .filter(col("term").isin(terms: _*))
       .select("id", "dl", "term", "tf")
-    import spark.implicits._
-    val corp = Seq((n, sumdl)).toDF("n", "sumdl")
-    bm25Tail(posts, corp, k, k1, b)
+    bm25Tail(posts, corpLit(n, h.sumdl), k, k1, b)
   }
 
   /** MULTI-query BM25 over the stored index: `queries` is a (query_id,
@@ -548,9 +632,8 @@ object Search {
     require(k > 0, s"k must be positive, got $k")
     require(maxDfPermille >= 0 && maxDfPermille <= 1000,
       s"maxDfPermille must be in [0, 1000], got $maxDfPermille")
-    val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats", recursive = false).head()
-    val (n, sumdl, buckets) =
-      (st.getAs[Long]("n"), st.getAs[Long]("sumdl"), st.getAs[Int]("buckets"))
+    val h = lexHandle(spark, dir)
+    val (n, buckets) = (h.n, h.buckets)
     val qAll = queries.select(col(queryCol).as("query_id"), col(termCol).as("term"))
       .distinct()
     // df-ceiling guard ([[dfCeilingOk]] via [[guardPlan]]). A stop term
@@ -563,7 +646,7 @@ object Search {
     // that legacy semi-join (query terms never collect there).
     val q =
       if (maxDfPermille >= 1000) qAll
-      else guardPlan(spark, dir, n, maxDfPermille) match {
+      else guardPlan(spark, dir, h, maxDfPermille) match {
         case Unguarded => qAll
         case StopSet(stop) =>
           if (stop.isEmpty) qAll
@@ -580,14 +663,13 @@ object Search {
       }
     val bks = q.select(termBucket(col("term"), buckets).as("b"))
       .distinct().collect().map(_.getLong(0)) // bounded: <= buckets values
-    val posts = graft.streaming.Streams.readIndex(spark, s"$dir/postings", recursive = false)
+    val posts = postingsOf(spark, dir, h)
       .filter(col("bucket").isin(bks.toSeq: _*))
       .join(q.select("term").distinct(), Seq("term"), "left_semi")
       .select("id", "dl", "term", "tf")
     val dfreq = posts.groupBy("term").agg(count(lit(1)).as("df"))
-    val scored = posts.join(q, "term")
-      .join(broadcast(dfreq), "term")
-      .withColumn("n", lit(n)).withColumn("sumdl", lit(sumdl))
+    val scored = corpLit(n, h.sumdl)(posts.join(q, "term")
+      .join(broadcast(dfreq), "term"))
       .withColumn("__s", bm25ScoreCol(k1, b))
     import org.apache.spark.sql.expressions.Window
     scored.groupBy("query_id", "id").agg(sum(col("__s")).as("__sdec"))
@@ -647,15 +729,15 @@ object Search {
     // yet; a no-op in the common case (two exists() probes per dir).
     Seq("terms", "stats", "postings", "doclens").foreach(sub =>
       graft.operators.Sinks.recoverSwap(spark, s"$dir/$sub"))
-    val buckets = graft.streaming.Streams.readIndex(spark, s"$dir/stats",
-      recursive = false).head().getAs[Int]("buckets")
+    val h = lexHandle(spark, dir)
+    val buckets = h.buckets
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted documents
     // replace any stored copy — the apply is idempotent, so a maintenance
     // loop replaying its uncommitted micro-batch after a crash (even one
     // whose swaps PARTIALLY landed across the four dirs) converges to the
     // same generation (MaintainCrashSpec pins all three crash windows)
     val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val keptPosts = graft.streaming.Streams.readIndex(spark, s"$dir/postings", recursive = false)
+    val keptPosts = postingsOf(spark, dir, h)
       .join(broadcast(retire), Seq("id"), "left_anti")
       // partition-column inference reads bucket back as INT; the fresh
       // side computes LONG — align before the union
@@ -713,10 +795,10 @@ object Search {
     // (REPARTITION_BY_NUM) like writeLexIndex's: the bare
     // repartition(col("bucket")) AQE-coalesced this vocabulary-sized
     // shuffle to ONE partition and a single task wrote every bucket
-    // directory serially (r18, guide §2.4). The live stats row still
-    // holds the bucket count at this point — nothing has swapped yet.
-    val buckets = graft.streaming.Streams.readIndex(terms.sparkSession,
-      s"$dir/stats", recursive = false).head().getAs[Int]("buckets")
+    // directory serially (r18, guide §2.4). The bucket count comes off
+    // the live generation's handle, resolved before anything swaps — the
+    // one lexIndexDelta just built, so no stats/ read runs here.
+    val buckets = lexHandle(terms.sparkSession, dir).buckets
     Sinks.swapWrite(terms.repartition(buckets, col("bucket")), s"$dir/terms",
       Seq("bucket"))
     Sinks.swapWrite(stats.coalesce(1), s"$dir/stats")

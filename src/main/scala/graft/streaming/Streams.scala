@@ -822,11 +822,17 @@ object Streams {
     * (see [[compactIndex]]: one writer, compaction only between drains,
     * probes launched during a compaction window retry here; probes
     * launched before it must finish first).
+    *
+    * `schema` skips Parquet schema inference (one Spark job per read) for
+    * a caller that already knows the live generation's schema; unlike
+    * `emptySchema` it does not turn a missing directory into an empty
+    * index.
     */
   def readIndex(spark: SparkSession, indexDir: String,
                 emptySchema: Option[org.apache.spark.sql.types.StructType] = None,
                 onRetry: () => Unit = () => Thread.sleep(200L),
-                recursive: Boolean = true): DataFrame = {
+                recursive: Boolean = true,
+                schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -848,9 +854,16 @@ object Streams {
         val r = if (recursive) r0.option("recursiveFileLookup", "true") else r0
         // pointer-layout dirs (r14, object-store-safe swap protocol)
         // resolve to their live gen-N; rename-layout dirs to themselves —
-        // the ONE seam that makes the two protocols reader-transparent
-        val live = graft.operators.Sinks.resolveLive(spark, indexDir)
-        Some(emptySchema.fold(r)(sc => r.schema(sc)).parquet(live))
+        // the ONE seam that makes the two protocols reader-transparent.
+        // During a flat dir's migration to the pointer layout the live
+        // data is its flat children, read under the dir as basePath so
+        // partition discovery still sees bucket=… / cell=…
+        val rs = schema.orElse(emptySchema).fold(r)(sc => r.schema(sc))
+        graft.operators.Sinks.resolveLive(spark, indexDir) match {
+          case (_, Seq()) => None
+          case (live, Seq(p)) if p == live => Some(rs.parquet(live))
+          case (base, flat) => Some(rs.option("basePath", base).parquet(flat: _*))
+        }
       } else None
     attempt().orElse { onRetry(); attempt() }.getOrElse {
       if (fs.exists(new Path(indexDir + ".next")))
@@ -861,7 +874,8 @@ object Streams {
       emptySchema.map(sc => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
         .getOrElse(throw new IllegalStateException(
-          s"index dir $indexDir does not exist (and no stranded swap to recover)"))
+          s"index dir $indexDir does not exist or holds no ready generation " +
+            "(and no stranded swap to recover)"))
     }
   }
 
@@ -875,13 +889,13 @@ object Streams {
     // a pointer-layout dir (r14) compacts by writing a fresh generation:
     // swapWrite's layout dispatch does exactly that, and resolveLive
     // scopes the read to the LIVE generation (a recursive read of the
-    // whole dir would fold retained older generations into the compacted
-    // output)
-    if (graft.operators.Sinks.resolveLive(spark, indexDir) != indexDir) {
+    // whole dir would fold retained older generations, or a migrating
+    // flat dir's unready first one, into the compacted output)
+    def live() = graft.operators.Sinks.resolveLive(spark, indexDir)
+    if (live()._1 != indexDir) {
       graft.operators.Sinks.recoverSwap(spark, indexDir)
-      val live = graft.operators.Sinks.resolveLive(spark, indexDir)
       val flat = spark.read.option("recursiveFileLookup", "true")
-        .parquet(live).distinct()
+        .parquet(live()._1).distinct()
       graft.operators.Sinks.swapWrite(
         if (partitions > 0) flat.repartition(partitions) else flat, indexDir)
       return
@@ -890,9 +904,10 @@ object Streams {
     if (!fs.exists(dir) && fs.exists(next)) fs.rename(next, dir)
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(next)) fs.delete(next, true)
-    if (!fs.exists(dir)) return
+    val paths = if (fs.exists(dir)) live()._2 else Nil
+    if (paths.isEmpty) return
     val flat = spark.read.option("recursiveFileLookup", "true")
-      .parquet(indexDir).distinct()
+      .parquet(paths: _*).distinct()
     (if (partitions > 0) flat.repartition(partitions) else flat)
       .write.mode("overwrite").parquet(next.toString)
     fs.rename(dir, old)

@@ -177,6 +177,42 @@ class PointerSwapSpec extends SparkSpec {
     }
   }
 
+  test("a probe while the first pointer generation is written over a flat " +
+       "index reads the flat data, not the unready gen-0/ beside it") {
+    val docs = Seq(
+      (1L, "spark common alpha"),
+      (2L, "spark common beta"),
+      (3L, "common rare"),
+      (4L, "gamma delta")).toDF("doc_id", "text")
+    withTempDir("ptr_window") { idx =>
+      Search.writeLexIndex(docs, "doc_id", "text", idx, buckets = 8)
+      def probe() = Search.bm25FromIndex(spark, idx,
+          Seq("spark", "common", "rare"), k = 5, maxDfPermille = 700)
+        .as[(Long, Double)].collect().toSeq
+      val want = probe()
+      // the migrating swap's write jobs have committed into gen-0/, the
+      // _GEN_READY markers and the pointer are not written yet; the junk
+      // rows would change every score if a reader took them in
+      Seq(("junk", 99L, 0)).toDF("term", "df", "bucket")
+        .write.partitionBy("bucket").parquet(s"$idx/terms/gen-0")
+      Seq((9L, 3L, "junk", 1L, 0)).toDF("id", "dl", "term", "tf", "bucket")
+        .write.partitionBy("bucket").parquet(s"$idx/postings/gen-0")
+      Seq((99L, 999L, 8)).toDF("n", "sumdl", "buckets")
+        .write.parquet(s"$idx/stats/gen-0")
+      assert(probe() == want && want.nonEmpty)
+      // the flat partitions keep their partition column and pruning
+      val plan = graft.streaming.Streams.readIndex(spark, s"$idx/postings",
+          recursive = false).filter(col("bucket") === 1)
+        .queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined, plan)
+      // compaction reads the same live data: the unready gen-0/ is not
+      // folded into the compacted stats
+      graft.streaming.Streams.compactIndex(spark, s"$idx/stats")
+      assert(spark.read.parquet(s"$idx/stats").select("n").as[Long]
+        .collect().toSeq == Seq(4L))
+    }
+  }
+
   test("crash windows: unready carcass cleaned; ready-but-unpointed " +
        "promoted by recoverSwap; mid-pointer-update falls back to the " +
        "newest ready generation") {

@@ -494,32 +494,32 @@ class PropertySpec extends SparkSpec {
     val params = SCTest.Parameters.default.withMinSuccessfulTests(4)
     val res = SCTest.check(params, Prop.forAll(caseGen) {
       case (stored, admitted, retiredBase) =>
-        val dir = java.nio.file.Files.createTempDirectory("lexlaw").toString
-        Search.writeLexIndex(stored.toDF("doc_id", "text"), "doc_id", "text",
-          dir, buckets = 4)
-        // the documented snapshotDiff contract: a CHANGED doc appears in
-        // BOTH sets (retired = removed ∪ changed, admitted = added ∪
-        // changed) — so every admitted id that might already be stored
-        // rides in the retire set too (retiring a never-stored id no-ops)
-        val admittedIds = admitted.map(_._1).toSet
-        val retired = (retiredBase ++ admittedIds).distinct
-        val (posts, _, _, _) = Search.lexIndexDelta(
-          admitted.toDF("doc_id", "text"), "doc_id", "text", dir,
-          retired.toDF("id"))
-        // membership law: (stored − retired) ∪ admitted
-        val membership = stored.filterNot(d =>
-          retired.contains(d._1)) ++ admitted
-        val dir2 = java.nio.file.Files.createTempDirectory("lexlaw2").toString
-        Search.writeLexIndex(membership.toDF("doc_id", "text"),
-          "doc_id", "text", dir2, buckets = 4)
-        def rows(df: org.apache.spark.sql.DataFrame) =
-          df.select(col("id"), col("dl"), col("term"), col("tf"),
-              col("bucket").cast("long"))
-            .as[(Long, Long, String, Long, Long)].collect().toSet
-        val ok = rows(posts) ==
-          rows(spark.read.parquet(s"$dir2/postings"))
-        graft.Caching.drain()
-        ok
+        withTempDir("lexlaw") { dir => withTempDir("lexlaw2") { dir2 =>
+          Search.writeLexIndex(stored.toDF("doc_id", "text"), "doc_id", "text",
+            dir, buckets = 4)
+          // the documented snapshotDiff contract: a CHANGED doc appears in
+          // BOTH sets (retired = removed ∪ changed, admitted = added ∪
+          // changed) — so every admitted id that might already be stored
+          // rides in the retire set too (retiring a never-stored id no-ops)
+          val admittedIds = admitted.map(_._1).toSet
+          val retired = (retiredBase ++ admittedIds).distinct
+          val (posts, _, _, _) = Search.lexIndexDelta(
+            admitted.toDF("doc_id", "text"), "doc_id", "text", dir,
+            retired.toDF("id"))
+          // membership law: (stored − retired) ∪ admitted
+          val membership = stored.filterNot(d =>
+            retired.contains(d._1)) ++ admitted
+          Search.writeLexIndex(membership.toDF("doc_id", "text"),
+            "doc_id", "text", dir2, buckets = 4)
+          def rows(df: org.apache.spark.sql.DataFrame) =
+            df.select(col("id"), col("dl"), col("term"), col("tf"),
+                col("bucket").cast("long"))
+              .as[(Long, Long, String, Long, Long)].collect().toSet
+          val ok = rows(posts) ==
+            rows(spark.read.parquet(s"$dir2/postings"))
+          graft.Caching.drain()
+          ok
+        }}
     })
     assert(res.passed, res.status.toString)
   }

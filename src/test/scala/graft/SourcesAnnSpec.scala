@@ -379,46 +379,147 @@ class SourcesAnnSpec extends SparkSpec {
       (2L, "spark common beta"),
       (3L, "common rare"),
       (4L, "gamma delta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lexidx_gc").toString
-    Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
-    // generation 1: common df 3/4 = 750‰ > 700 → stopped; the probe
-    // populates the generation-keyed cache
-    def probe(terms: Seq[String], permille: Int) =
-      Search.bm25FromIndex(spark, dir, terms, k = 5, maxDfPermille = permille)
+    withTempDir("lexidx_gc") { dir =>
+      Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
+      // generation 1: common df 3/4 = 750‰ > 700 → stopped; the probe
+      // populates the generation's handle
+      def probe(terms: Seq[String], permille: Int) =
+        Search.bm25FromIndex(spark, dir, terms, k = 5, maxDfPermille = permille)
+          .as[(Long, Double)].collect().toSeq
+      def stopped(h: Option[Search.LexHandle], n: Long, stop: Set[String]) =
+        h.exists(e => e.n == n && e.guard.contains(700 -> Search.StopSet(stop)))
+      assert(probe(Seq("spark", "common"), 700) == probe(Seq("spark"), 1000))
+      val e1 = Search.lexHandleEntry(dir)
+      assert(stopped(e1, 4L, Set("common")), s"handle: $e1")
+      // maintain generation 2 via the REAL swap path: retire doc 3, admit
+      // doc 5 — membership {1,2,4,5}, common df 2/4 = 500‰ ≤ 700 → common
+      // must now SURVIVE the guard. A stale cache would keep dropping it.
+      def maintain(admit: Seq[(Long, String)], retire: Seq[Long]): Unit = {
+        val (posts, doclens, stats, terms) = Search.lexIndexDelta(
+          admit.toDF("doc_id", "text"), "doc_id", "text", dir, retire.toDF("id"))
+        Search.writeLexDelta(dir, posts, doclens, stats, terms)
+        graft.Caching.drain()
+      }
+      maintain(Seq((5L, "rare fresh")), Seq(3L))
+      assert(probe(Seq("spark", "common"), 700) ==
+        probe(Seq("spark", "common"), 1000),
+        "post-swap guarded probe must see the NEW generation's df (common " +
+          "is no longer a stop term) — a stale cache entry survived the swap")
+      val e2 = Search.lexHandleEntry(dir)
+      assert(stopped(e2, 4L, Set.empty), s"handle: $e2")
+      assert(e1.get.gen != e2.get.gen || e1.get.guard != e2.get.guard,
+        "the generation key (terms/ mtime) must rotate across a swapWrite")
+      assert(e1.get.gen != e2.get.gen, "a rename-layout swap must rotate the token")
+      // in-place writeLexIndex overwrite: same live dirs, same n (4), only
+      // the mtimes move — common is back to 3/4 and must be stopped again
+      Search.writeLexIndex(Seq((1L, "spark common alpha"), (2L, "spark common"),
+        (3L, "common rare"), (4L, "gamma")).toDF("doc_id", "text"),
+        "doc_id", "text", dir, buckets = 8)
+      assert(probe(Seq("spark", "common"), 700) == probe(Seq("spark"), 1000),
+        "an in-place overwrite must rotate the handle")
+      val e3 = Search.lexHandleEntry(dir)
+      assert(stopped(e3, 4L, Set("common")), s"handle: $e3")
+      assert(e3.get.gen.map(_._1) == e2.get.gen.map(_._1) &&
+        e3.get.gen != e2.get.gen, s"${e2.get.gen} -> ${e3.get.gen}")
+      // pointer layout: the first pointer swap migrates each artifact to
+      // gen-0/ — the live paths move; retiring doc 1 leaves common 2/3 =
+      // 667‰ ≤ 700, so common survives
+      val key = "spark.graft.swap.protocol"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "pointer")
+      try maintain(Nil, Seq(1L))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(probe(Seq("spark", "common"), 700) ==
+        probe(Seq("spark", "common"), 1000))
+      val e4 = Search.lexHandleEntry(dir)
+      assert(stopped(e4, 3L, Set.empty), s"handle: $e4")
+      assert(e4.get.gen.forall(_._1.endsWith("/gen-0")), s"${e4.get.gen}")
+      graft.Caching.drain()
+      // pre-guard layout: delete terms/ entirely — the guarded DEFAULT must
+      // warn-and-fallback to the unguarded probe, not fail at probe time
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/terms"), true)
+      assert(probe(Seq("spark", "common"), 990) ==
+        probe(Seq("spark", "common"), 1000))
+      // multi-query twin over the same pre-guard layout
+      val q = Seq((0L, "spark"), (0L, "common")).toDF("qid", "term")
+      assert(Search.bm25ManyFromIndex(spark, dir, q, "qid", "term", k = 5)
+          .count() > 0)
+    }
+  }
+
+  test("an in-place rebuild rotates the stored-index handle even when the " +
+       "directory mtimes stay the same") {
+    val docs = Seq(
+      (1L, "spark common alpha"),
+      (2L, "spark common beta"),
+      (3L, "common rare"),
+      (4L, "gamma delta")).toDF("doc_id", "text")
+    val rebuilt = Seq(
+      (1L, "spark spark rare"),
+      (2L, "common beta"),
+      (3L, "spark common rare rare"),
+      (4L, "gamma spark"),
+      (5L, "rare delta common"),
+      (6L, "epsilon")).toDF("doc_id", "text")
+    val terms = Seq("spark", "common", "rare")
+    withTempDir("lexidx_mtime") { dir =>
+      def probe() = Search.bm25FromIndex(spark, dir, terms, k = 6)
         .as[(Long, Double)].collect().toSeq
-    assert(probe(Seq("spark", "common"), 700) == probe(Seq("spark"), 1000))
-    val e1 = Search.stopTermCacheEntry(dir)
-    assert(e1.exists { case (_, n, p, stop) =>
-      n == 4L && p == 700 && stop == Set("common") }, s"cache entry: $e1")
-    // maintain generation 2 via the REAL swap path: retire doc 3, admit
-    // doc 5 — membership {1,2,4,5}, common df 2/4 = 500‰ ≤ 700 → common
-    // must now SURVIVE the guard. A stale cache would keep dropping it.
-    val admitted = Seq((5L, "rare fresh")).toDF("doc_id", "text")
-    val retired = Seq(3L).toDF("id")
-    val (posts, doclens, stats, terms) = Search.lexIndexDelta(
-      admitted, "doc_id", "text", dir, retired)
-    Search.writeLexDelta(dir, posts, doclens, stats, terms)
-    assert(probe(Seq("spark", "common"), 700) ==
-      probe(Seq("spark", "common"), 1000),
-      "post-swap guarded probe must see the NEW generation's df (common " +
-        "is no longer a stop term) — a stale cache entry survived the swap")
-    val e2 = Search.stopTermCacheEntry(dir)
-    assert(e2.exists { case (_, n, p, stop) =>
-      n == 4L && p == 700 && stop.isEmpty }, s"cache entry: $e2")
-    assert(e1.get._1 != e2.get._1 || e1.get._4 != e2.get._4,
-      "the generation key (terms/ mtime) must rotate across a swapWrite")
-    graft.Caching.drain()
-    // pre-guard layout: delete terms/ entirely — the guarded DEFAULT must
-    // warn-and-fallback to the unguarded probe, not fail at probe time
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/terms"), true)
-    assert(probe(Seq("spark", "common"), 990) ==
-      probe(Seq("spark", "common"), 1000))
-    // multi-query twin over the same pre-guard layout
-    val q = Seq((0L, "spark"), (0L, "common")).toDF("qid", "term")
-    assert(Search.bm25ManyFromIndex(spark, dir, q, "qid", "term", k = 5)
-        .count() > 0)
+      Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
+      assert(probe().nonEmpty) // builds the generation's handle
+      val subs = Seq("stats", "postings", "terms")
+        .map(sub => new org.apache.hadoop.fs.Path(s"$dir/$sub"))
+      val fs = subs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val mtimes = subs.map(fs.getFileStatus(_).getModificationTime)
+      // another corpus and bucket count under the same paths, with the
+      // directory mtimes put back: what a store with synthetic directory
+      // mtimes shows after an in-place rebuild
+      Search.writeLexIndex(rebuilt, "doc_id", "text", dir, buckets = 5)
+      subs.zip(mtimes).foreach { case (p, t) => fs.setTimes(p, t, -1L) }
+      assert(subs.map(fs.getFileStatus(_).getModificationTime) == mtimes)
+      val want = Search.bm25TopK(rebuilt, "doc_id", "text", terms, k = 6)
+        .as[(Long, Double)].collect().toSeq
+      assert(probe() == want && want.nonEmpty)
+      val h = Search.lexHandleEntry(dir)
+      assert(h.exists(e => e.n == 6L && e.buckets == 5), s"handle: $h")
+      graft.Caching.drain()
+    }
+  }
+
+  test("a warm stored-index probe runs at most 4 jobs and no schema inference") {
+    val docs = Seq(
+      (1L, "spark spark common alpha"),
+      (2L, "spark common beta"),
+      (3L, "common rare"),
+      (4L, "gamma delta common")).toDF("doc_id", "text")
+    withTempDir("lexidx_jobs") { dir =>
+      Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
+      def probe() = Search.bm25FromIndex(spark, dir, Seq("spark", "common", "rare"),
+        k = 3).collect()
+      val want = probe() // cold: builds the generation's handle
+      var got = Array.empty[org.apache.spark.sql.Row]
+      val warm = jobsOf { got = probe() }
+      assert(got.toSeq == want.toSeq && got.nonEmpty)
+      assert(warm.size <= 4, s"warm probe ran ${warm.size} jobs: $warm")
+      assert(!warm.exists(_.startsWith("parquet at")), s"inference job in $warm")
+      val q = Seq((0L, "spark"), (0L, "common"), (1L, "rare")).toDF("qid", "term")
+      val many = jobsOf {
+        Search.bm25ManyFromIndex(spark, dir, q, "qid", "term", k = 3).collect()
+      }
+      assert(many.nonEmpty && !many.exists(_.startsWith("parquet at")),
+        s"inference job in $many")
+      // maintenance reads stats/ once: writeLexDelta takes the bucket
+      // count off the handle lexIndexDelta just built
+      val (posts, doclens, stats, terms) = Search.lexIndexDelta(
+        Seq((5L, "fresh spark")).toDF("doc_id", "text"), "doc_id", "text",
+        dir, Seq(3L).toDF("id"))
+      val wb = jobsOf { Search.writeLexDelta(dir, posts, doclens, stats, terms) }
+      assert(!wb.exists(j => j.startsWith("head at") ||
+        j.startsWith("parquet at Streams")), s"stats re-read in $wb")
+      graft.Caching.drain()
+    }
   }
 
   test("rrfFuse sums integer reciprocal-rank contributions and cuts top-k") {
