@@ -845,50 +845,38 @@ object EntryQueriesCore {
       s.read.parquet(out)
     }),
     // ATOMIC-SWAP rewrite round trip (the index write-back device): first
-    // swapWrite creates the dir, the second READS the live dir and writes
-    // back over it through the .next/rename protocol — the exact
-    // maintenance loop every stored-index family runs; the read-back must
-    // be the full unchanged table (partition layout included)
+    // swapWrite creates the dir as gen-0, the second READS the live
+    // generation through readIndex and writes it back as gen-1 — the
+    // exact maintenance loop every stored-index family runs; the
+    // read-back must be the full unchanged table (partition layout
+    // included)
     "q_swap_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_swp").toString
-      val idx = s"$base/idx"
+      val idx = java.nio.file.Files.createTempDirectory("graft_swp").toString + "/idx"
       Sinks.swapWrite(
         T(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey"),
         idx, Seq("c_nationkey"))
-      // maintenance shape: read the LIVE data, write back over it —
-      // through readIndex (the live-generation seam, a no-op on the
-      // rename layout), so the query is protocol-agnostic and the suite
-      // runs green under SPARK_GRAFT_SWAP=pointer too (r14)
       def live() = graft.streaming.Streams.readIndex(s, idx, recursive = false)
       Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
       live().select(col("c_custkey"),
         col("c_name"), col("c_nationkey").cast(LongType).as("c_nationkey"))
     }),
-    // the SAME roundtrip under the r14 generation-POINTER protocol (the
-    // object-store-safe swap — no directory rename at all): write,
-    // maintenance-read the live generation through readIndex, write
-    // back as a new generation, read back bit-for-bit. Shares
-    // q_swap_roundtrip's oracle — the protocols are layout-transparent
-    // to readers, and this row proves it through the DuckDB gate, not
-    // just the spec.
+    // the same roundtrip through RETENTION: three generations, so the
+    // third swap retires gen-0 (keepGenerations = 2) while gen-2 reads
+    // gen-1 — the read-back must still be the full unchanged table.
+    // Shares q_swap_roundtrip's oracle.
     "q_swap_pointer" -> ((s, dir) => {
-      val key = "spark.graft.swap.protocol"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "pointer")
-      try {
-        val base = java.nio.file.Files.createTempDirectory("graft_swp_p").toString
-        val idx = s"$base/idx"
-        Sinks.swapWrite(
-          T(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey"),
-          idx, Seq("c_nationkey"))
-        def live() = graft.streaming.Streams.readIndex(s, idx, recursive = false)
-        Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
-        live().select(col("c_custkey"),
-          col("c_name"), col("c_nationkey").cast(LongType).as("c_nationkey"))
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+      val idx = java.nio.file.Files.createTempDirectory("graft_swp_p").toString + "/idx"
+      Sinks.swapWrite(
+        T(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey"),
+        idx, Seq("c_nationkey"))
+      def live() = graft.streaming.Streams.readIndex(s, idx, recursive = false)
+      Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
+      Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
+      val gen0 = new org.apache.hadoop.fs.Path(idx, "gen-0")
+      require(!gen0.getFileSystem(s.sparkContext.hadoopConfiguration).exists(gen0),
+        s"retention kept $gen0 past keepGenerations")
+      live().select(col("c_custkey"),
+        col("c_name"), col("c_nationkey").cast(LongType).as("c_nationkey"))
     }),
     // Z-ORDER layout (D5): the Morton keys zorderWrite range-partitions by.
     // Binning and interleave are pure BIGINT arithmetic, so the oracle

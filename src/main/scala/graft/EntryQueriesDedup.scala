@@ -1421,8 +1421,8 @@ object EntryQueriesDedup {
         .select(col("doc_id").as("id"))
       val base = java.nio.file.Files.createTempDirectory("graft_stream_wnm").toString
       val inDir = s"$base/in"; val idxDir = s"$base/index"; val ckpt = s"$base/ckpt"
-      Dedup.winnowedPrints(stored, "doc_id", "text", k = 8, w = 4)
-        .write.mode("overwrite").parquet(idxDir)
+      graft.operators.Sinks.swapWrite(
+        Dedup.winnowedPrints(stored, "doc_id", "text", k = 8, w = 4), idxDir)
       admitted.repartition(2).write.mode("overwrite").parquet(inDir)
       val stream = graft.streaming.Streams.watchDirectory(s, inDir,
         format = "parquet", schemaDdl = Some(admitted.schema.toDDL),
@@ -1430,9 +1430,9 @@ object EntryQueriesDedup {
       val q = graft.streaming.Streams.toForeachBatch(stream, ckpt,
         availableNow = true) { (batch, _) =>
         if (!batch.isEmpty) {
-          // restart step: finish any swap a crashed generation stranded
-          // BEFORE listing the prints dir (winnowIndexDelta takes the
-          // frame, so the loop owns the read — and the recovery)
+          // restart step: promote a generation a crash left ready but
+          // unpointed BEFORE listing the prints dir (winnowIndexDelta takes
+          // the frame, so the loop owns the read — and the recovery)
           graft.operators.Sinks.recoverSwap(s, idxDir)
           val idx = graft.streaming.Streams.readIndex(s, idxDir, recursive = false)
           graft.operators.Sinks.swapWrite(

@@ -45,12 +45,6 @@ object GraftSession {
     // whole suite/bench can run under RocksDB without code changes
     if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
       conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    // swap-protocol opt-in (r14, see [[graft.operators.Sinks.swapWrite]]):
-    // rename | pointer | auto — env-selectable so the whole suite/bench
-    // can run the object-store-safe generation-pointer protocol without
-    // code changes (the full suite runs green under it; BENCHNOTES r14)
-    sys.env.get("SPARK_GRAFT_SWAP").foreach(p =>
-      conf.set("spark.graft.swap.protocol", p))
     // TIMESTAMP(NANOS) parquet (the `events` table) is rejected by the
     // vectorized reader; read the raw int64 and convert (see Tables.events).
     conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

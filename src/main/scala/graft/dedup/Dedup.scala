@@ -46,7 +46,7 @@ object Dedup {
     * foreachBatch body) would duplicate every admitted row. With it, the
     * delta apply is IDEMPOTENT — apply(apply(index, d), d) = apply(index,
     * d) — which is what makes the online maintain loops crash-convergent
-    * (MaintainCrashSpec). On a first apply admitted ids are absent from
+    * (PointerSwapSpec). On a first apply admitted ids are absent from
     * the stored side, so the union changes nothing; duplicates in the
     * union are harmless to an anti-join (existence, not counts) and it
     * stays delta-sized — no distinct, no extra exchange.

@@ -238,367 +238,65 @@ object Sinks {
     w.saveAsTable(table)
   }
 
-  /** Atomic-swap parquet rewrite — the safe way to write an index-delta
-    * result BACK over the live directory it was read from (the
-    * [[graft.streaming.Streams.compactIndex]] device, generalized to any
-    * parquet dir): materialize to `<dir>.next`, then two renames swap it
-    * in, so no reader ever sees a half-written directory and a crash at
-    * ANY point leaves either the old data or a completed `.next` (marked
-    * `_SWAP_READY` once its write job finishes) that [[recoverSwap]] —
-    * the restart step, run before delta frames are built — promotes, so
-    * completed-but-unswapped deltas are kept rather than redone. The in-place
-    * alternative — `mode("overwrite")` onto `dir` — deletes the input
+  /** Atomic-swap parquet write — the writer of every stored-index
+    * directory, first generation included, and the safe way to write a
+    * maintained frame BACK over the live directory it was read from. Every
+    * directory it writes is a generation-POINTER directory: immutable
+    * `gen-N/` subdirectories plus a tiny `_CURRENT` file naming the live
+    * one. A swap writes the frame into a FRESH `gen-N/` (no live file is
+    * touched, so the maintained frame keeps reading its own generation
+    * throughout), marks it `_GEN_READY` once the job commits, atomically
+    * re-points `_CURRENT`, then retires old generations. No directory ever
+    * moves, so nothing depends on an atomic directory rename: on S3-class
+    * object stores every step is one small-object operation. Readers
+    * resolve the live generation through [[resolveLive]] (inside
+    * [[graft.streaming.Streams.readIndex]]). The four stored-index
+    * families' delta functions ([[graft.similarity.Pq.indexCodesDelta]],
+    * `Sq.indexCodesDelta`, `Search.lexIndexDelta`,
+    * [[graft.similarity.MaxSim.indexMatsDelta]]) all say "the caller
+    * writes the result back" — this is the writer they mean. The in-place
+    * alternative — `mode("overwrite")` onto the dir — deletes the input
     * BEFORE the job that reads it finishes planning, and a failure
     * mid-write loses the index outright.
     *
-    * The only residual window is the microseconds between the two
-    * renames, during which a CONCURRENT reader's file listing can miss
-    * the dir — the single-writer cadence (or the one-shot listing retry,
-    * [[graft.streaming.Streams]]' readIndex recipe) covers it. The four
-    * stored-index families' delta functions ([[graft.similarity.Pq
-    * .indexCodesDelta]], `Sq.indexCodesDelta`, `Search.lexIndexDelta`,
-    * [[graft.similarity.MaxSim.indexMatsDelta]]) all say "the caller
-    * writes the result back" — this is the writer they mean.
-    *
-    * NOTE: the maintained frame READS from `dir`, so it must be fully
-    * materialized before `dir` can move — the write to `.next` does that;
-    * the renames run after the job completes.
-    *
-    * CONSTRAINT (r14): the two-rename protocol requires an ATOMIC, O(1)
-    * `FileSystem.rename` — HDFS, POSIX local, viewfs, Ozone. On S3-class
-    * object stores (s3a, gs, abfs, wasb, oss, …) rename is COPY+DELETE:
-    * non-atomic (a crash mid-copy leaves a half-copied destination that
-    * the marker protocol would trust) and O(data) (the swap costs a full
-    * index copy per generation). For those, [[swapWrite]] automatically
-    * switches to the generation-POINTER protocol (immutable `gen-N/`
-    * directories + a tiny `_CURRENT` pointer file — no directory ever
-    * moves; see [[resolveLive]]); force either via the
-    * `spark.graft.swap.protocol` conf (`rename` | `pointer` | `auto`).
-    * A directory already in pointer layout stays pointer regardless of
-    * the conf. plans/LAYOUT.md states the full deployment matrix.
-    *
-    * Pointer-protocol retention honors `spark.graft.swap.keepGenerations`
-    * (count, default 2) AND `spark.graft.swap.keepMinAgeMs` (time floor,
-    * default 0): a ready generation is retired only when beyond the
-    * count bound and older than the floor — the reader SLA "any scan
-    * that resolved `_CURRENT` within the last keepMinAgeMs finds every
-    * file it listed", which the count bound alone cannot promise under
-    * back-to-back maintain bursts.
-    */
-  def swapWrite(df: DataFrame, dir: String,
-                partitionCols: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = df.sparkSession
-    // siblings derive from the NORMALIZED path (Path strips trailing
-    // slashes): raw `dir + ".next"` on "/data/idx/" would put .next
-    // INSIDE the live directory and the swap would silently no-op
-    val d = new Path(dir)
-    val next = new Path(d.getParent, d.getName + ".next")
-    val old = new Path(d.getParent, d.getName + ".old")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // r14: the two-rename protocol below assumes `FileSystem.rename` is
-    // ATOMIC and O(1) — true on HDFS/POSIX, FALSE on S3-class object
-    // stores (rename = copy+delete, non-atomic, O(data)). There, the
-    // generation-POINTER protocol is used instead: no directory ever
-    // moves. Dispatch: an existing pointer LAYOUT always stays pointer
-    // (the on-disk truth outranks configuration), else the
-    // `spark.graft.swap.protocol` conf / filesystem scheme decides.
-    if (swapProtocol(spark, fs, d) == "pointer") {
-      swapWritePointer(df, dir, partitionCols)
-      return
-    }
-    // every rename/delete result is CHECKED: Hadoop FileSystem signals
-    // most failures by returning false, not throwing — an unchecked
-    // false here would return "success" with the live dir still holding
-    // old data and the only copy of the update stranded in .next, which
-    // the NEXT call's cleanup would then delete
-    def renameOrDie(from: Path, to: Path): Unit =
-      require(fs.rename(from, to), s"swapWrite: rename $from -> $to failed")
-    def deleteOrDie(p: Path): Unit =
-      require(!fs.exists(p) || fs.delete(p, true),
-        s"swapWrite: delete $p failed")
-    // recovery: a stranded swap from a crashed earlier run finishes first
-    // when the live dir is GONE and the .next carries its _SWAP_READY
-    // marker (the between-renames crash window — post-marker writes
-    // always carry it through that window). The marker is REQUIRED even
-    // with the live dir missing: a FIRST-generation swapWrite runs its
-    // write job with no live dir existing at all, so a crash mid-write
-    // leaves an unmarked partial .next beside a missing live dir —
-    // promoting that carcass would hand every downstream delta a
-    // partial index. Unmarked .next falls through to the cleanup delete
-    // below. A completed .next BESIDE a live dir (crash after the write
-    // job, before the first rename) is NOT promoted here either: the
-    // caller's input frame was already constructed against the live dir,
-    // and Spark file indexes list eagerly — renaming the live dir away
-    // now would fail that frame's tasks on deleted files mid-job.
-    // [[recoverSwap]], run BEFORE delta frames are built, is the path
-    // that promotes it; reaching this line without it means the caller
-    // recomputed the same deterministic delta against the unchanged live
-    // generation, so discarding the stranded copy costs the redo but
-    // never correctness.
-    if (!fs.exists(d) && fs.exists(next) && fs.exists(markerPath(next)))
-      renameOrDie(next, d)
-    deleteOrDie(markerPath(d))
-    deleteOrDie(old)
-    deleteOrDie(next)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(next.toString)
-    // the marker commits the write: from here on, recovery PROMOTES this
-    // .next instead of redoing the delta (an underscore file — the
-    // _SUCCESS convention — so parquet readers never see it)
-    fs.create(markerPath(next), true).close()
-    if (fs.exists(d)) renameOrDie(d, old)
-    renameOrDie(next, d)
-    deleteOrDie(markerPath(d))
-    deleteOrDie(old)
-  }
-
-  /** The `_SWAP_READY` marker a completed-but-unswapped `<dir>.next`
-    * carries (written by [[swapWrite]] after its write job finishes,
-    * removed once the swap lands).
-    */
-  private def markerPath(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p, "_SWAP_READY")
-
-  /** Finish a [[swapWrite]] interrupted by a crash — the RESTART step a
-    * maintenance loop runs BEFORE constructing its delta frames. Promotes
-    * a completed `<dir>.next` — identified by its `_SWAP_READY` marker,
-    * which is REQUIRED: post-marker writes carry it through every window
-    * a promotable .next can exist in (including between the two renames,
-    * when the live dir is briefly missing), so a marker-less .next is
-    * always a mid-write carcass, never a completed swap. The one case a
-    * missing live dir does NOT imply a completed write is exactly the
-    * dangerous one — a FIRST-generation swapWrite (no live dir exists
-    * during its write job) that crashed mid-write: promoting that
-    * unmarked partial would hand the maintenance loop a half-written
-    * index to build every subsequent delta on. Such a carcass beside a
-    * missing live dir is deleted here (there is no old data to preserve
-    * and [[swapWrite]]'s own cleanup would delete it anyway); a carcass
-    * beside a LIVE dir is left for swapWrite's cleanup. Returns true
-    * when a stranded swap was promoted.
-    *
-    * Ordering matters: promoting moves the live directory, so frames
-    * already listed against it would fail on deleted files — which is why
-    * [[swapWrite]] itself cannot do this once the caller's inputs exist.
-    */
-  def recoverSwap(spark: SparkSession, dir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val d = new Path(dir)
-    val next = new Path(d.getParent, d.getName + ".next")
-    val old = new Path(d.getParent, d.getName + ".old")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a pointer-layout dir recovers via the pointer protocol (layout
-    // outranks conf — the residues on disk are pointer-shaped)
-    if (isPointerLayout(fs, d)) return recoverSwapPointer(fs, d)
-    def renameOrDie(from: Path, to: Path): Unit =
-      require(fs.rename(from, to), s"recoverSwap: rename $from -> $to failed")
-    def deleteOrDie(p: Path): Unit =
-      require(!fs.exists(p) || fs.delete(p, true),
-        s"recoverSwap: delete $p failed")
-    val stranded = fs.exists(next) && fs.exists(markerPath(next))
-    // first-generation mid-write carcass: unmarked .next, no live dir —
-    // delete rather than promote (see scaladoc)
-    if (!stranded && !fs.exists(d) && fs.exists(next)) deleteOrDie(next)
-    if (stranded) {
-      deleteOrDie(old)
-      if (fs.exists(d)) renameOrDie(d, old)
-      renameOrDie(next, d)
-      deleteOrDie(markerPath(d))
-      deleteOrDie(old)
-    }
-    stranded
-  }
-
-  // -------------------------------------------------------------------
-  // generation-pointer swap protocol (r14) — the object-store-safe form
-  // -------------------------------------------------------------------
-
-  /** The pointer file naming a live generation (`gen-N`) inside a
-    * pointer-layout directory, and the per-generation completion marker.
-    * Both underscore-prefixed so parquet readers never see them.
-    */
-  val PointerFile = "_CURRENT"
-  val GenReadyMarker = "_GEN_READY"
-  private val GenPrefix = "gen-"
-
-  /** Filesystems whose `rename` is atomic and O(1) — the two-rename
-    * protocol's requirement. Everything else (s3a, gs, abfs, wasb, oss,
-    * …: rename = copy+delete) gets the pointer protocol under `auto`.
-    */
-  private val renameAtomicSchemes =
-    Set("file", "hdfs", "viewfs", "o3fs", "ofs", "alluxio")
-
-  /** Protocol for one swap target: an existing pointer LAYOUT always
-    * stays pointer (the on-disk state outranks configuration — flipping
-    * the conf must not strand readers of `_CURRENT`); otherwise the
-    * `spark.graft.swap.protocol` conf decides (`rename` | `pointer` |
-    * default `auto` = by filesystem scheme).
-    */
-  private def swapProtocol(spark: SparkSession,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           d: org.apache.hadoop.fs.Path): String =
-    if (isPointerLayout(fs, d)) "pointer"
-    else spark.conf.get("spark.graft.swap.protocol", "auto") match {
-      case "auto" =>
-        if (renameAtomicSchemes(Option(fs.getScheme).getOrElse("file")))
-          "rename"
-        else "pointer"
-      case p @ ("rename" | "pointer") => p
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.swap.protocol must be rename|pointer|auto, got $other")
-    }
-
-  private def isPointerLayout(fs: org.apache.hadoop.fs.FileSystem,
-                              d: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(d, PointerFile)) ||
-      (fs.exists(d) && fs.listStatus(d).exists(st =>
-        st.isDirectory && genNumber(st.getPath.getName).isDefined))
-
-  private def genNumber(name: String): Option[Long] =
-    if (name.startsWith(GenPrefix)) name.drop(GenPrefix.length).toLongOption
-    else None
-
-  /** generation directories under `d`, numerically ascending. */
-  private def listGens(fs: org.apache.hadoop.fs.FileSystem,
-                       d: org.apache.hadoop.fs.Path)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq.filter(_.isDirectory)
-      .flatMap(st => genNumber(st.getPath.getName).map(_ -> st.getPath))
-      .sortBy(_._1)
-
-  private def genReady(fs: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, GenReadyMarker))
-
-  /** the generation number `_CURRENT` names, if the pointer exists and
-    * parses (a torn/empty pointer — impossible under atomic PUT, handled
-    * defensively — reads as absent and readers fall back to the newest
-    * READY generation, which is never older than a valid pointer). The
-    * exists→open pair is not atomic: a writer's delete→rename update can
-    * land between the two calls, so a vanished pointer reads as absent
-    * too — the same fallback covers it.
-    */
-  private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
-                          d: org.apache.hadoop.fs.Path): Option[Long] = {
-    val pf = new org.apache.hadoop.fs.Path(d, PointerFile)
-    if (!fs.exists(pf)) None
-    else {
-      try {
-        val in = fs.open(pf)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        genNumber(txt)
-      } catch {
-        case _: java.io.FileNotFoundException => None
-      }
-    }
-  }
-
-  /** Atomically re-point `_CURRENT` at `gen`: write `_CURRENT.tmp`,
-    * delete the old pointer, rename the tmp in. On an object store each
-    * step is a single small-OBJECT operation (atomic PUT / DELETE / a
-    * one-object copy) — never an O(data) directory move; the only
-    * residue window is a missing pointer between the delete and the
-    * rename, which readers resolve by falling back to the newest READY
-    * generation (= the one this pointer names).
-    */
-  private def writePointer(fs: org.apache.hadoop.fs.FileSystem,
-                           d: org.apache.hadoop.fs.Path, gen: Long): Unit = {
-    val pf = new org.apache.hadoop.fs.Path(d, PointerFile)
-    val tmp = new org.apache.hadoop.fs.Path(d, PointerFile + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$GenPrefix$gen".getBytes("UTF-8")) finally out.close()
-    require(!fs.exists(pf) || fs.delete(pf, false),
-      s"writePointer: delete $pf failed")
-    require(fs.rename(tmp, pf), s"writePointer: rename $tmp -> $pf failed")
-  }
-
-  /** Resolve what a READER should scan, as (base path for partition
-    * discovery, paths to list): for a pointer-layout dir, the live `gen-N`
-    * subdirectory (`_CURRENT`, falling back to the newest READY generation
-    * when the pointer is mid-update); for a rename-layout (or
-    * not-yet-existing) dir, the dir itself. Every stored-index read goes
-    * through here (via [[graft.streaming.Streams.readIndex]]), so the two
-    * protocols are interchangeable to readers.
-    *
-    * The one case where base and paths differ is the MIGRATION window: a
-    * legacy flat dir whose first pointer generation is still being
-    * written (a `gen-N/` exists, none is ready, no pointer names one).
-    * Listing the dir would put the flat `bucket=…` partitions beside the
-    * unready `gen-0/`, which Spark's partition discovery rejects
-    * (CONFLICTING_DIRECTORY_STRUCTURES); the flat children alone are the
-    * live data until the pointer lands, read with the dir as base. The
-    * paths are empty when the dir holds no flat data either (nothing is
-    * live yet).
-    */
-  def resolveLive(spark: SparkSession, dir: String): (String, Seq[String]) = {
-    import org.apache.hadoop.fs.Path
-    val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isPointerLayout(fs, d)) (dir, Seq(dir))
-    else readPointer(fs, d)
-      .map(n => new Path(d, s"$GenPrefix$n"))
-      .filter(fs.exists(_))
-      .orElse(listGens(fs, d).filter(g => genReady(fs, g._2))
-        .lastOption.map(_._2)) match {
-      case Some(g) => (g.toString, Seq(g.toString))
-      case None => (dir, fs.listStatus(d).toSeq.map(_.getPath).filter { p =>
-        val n = p.getName
-        genNumber(n).isEmpty && !n.startsWith("_") && !n.startsWith(".")
-      }.map(_.toString))
-    }
-  }
-
-  /** The pointer-protocol form of [[swapWrite]]: write the frame into a
-    * FRESH immutable `gen-N/` (no live data is touched — the maintained
-    * frame keeps reading its own generation throughout), mark it
-    * `_GEN_READY` once the job commits, atomically re-point `_CURRENT`,
-    * then retire all but the newest `keepGens` ready generations (the
-    * retained predecessor covers readers that resolved the previous
-    * pointer and are still scanning — the pointer protocol's analogue of
-    * the rename protocol's between-renames listing retry, but a full
-    * GENERATION wide instead of microseconds). Unready carcasses from
-    * crashed writes are cleaned at entry; a legacy FLAT (rename-layout)
-    * dir migrates: its old content is deleted only after the pointer
-    * lands.
+    * A non-empty directory that is not in pointer layout (flat parquet
+    * written some other way) is refused, not converted: its files would
+    * sit beside the first generation.
     *
     * Crash windows (each green in PointerSwapSpec):
-    *  - mid-write: an unready `gen-N` carcass, pointer unchanged — next
-    *    entry cleans it, the replayed generation lands as `gen-N+1`;
+    *  - mid-write: an unready `gen-N` carcass, pointer unchanged — the
+    *    next swap cleans it, the replayed generation lands as `gen-N+1`;
     *  - post-ready, pre-pointer: recovery ([[recoverSwap]]) PROMOTES the
     *    newest ready generation by re-pointing — no data moves;
     *  - mid-pointer-update (pointer deleted, tmp not yet renamed):
     *    readers fall back to the newest ready generation; recovery
     *    rewrites the pointer.
+    *
+    * Retention honors `spark.graft.swap.keepGenerations` (count, default
+    * 2) AND `spark.graft.swap.keepMinAgeMs` (time floor, default 0): a
+    * ready generation is retired only when beyond the count bound and
+    * superseded longer ago than the floor — the reader SLA "any scan that
+    * resolved `_CURRENT` within the last keepMinAgeMs finds every file it
+    * listed", which the count bound alone cannot promise under
+    * back-to-back maintain bursts (plans/LAYOUT.md).
     */
-  private def swapWritePointer(df: DataFrame, dir: String,
-                               partitionCols: Seq[String]): Unit = {
+  def swapWrite(df: DataFrame, dir: String,
+                partitionCols: Seq[String] = Nil): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = df.sparkSession
     val d = new Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keepGens = spark.conf.get("spark.graft.swap.keepGenerations", "2").toInt
     require(keepGens >= 1, s"keepGenerations must be >= 1, got $keepGens")
-    // legacy RENAME-protocol residue (a protocol switch mid-life): finish
-    // a stranded two-rename swap first — a MARKED sibling `.next` is a
-    // completed generation that must be promoted, not orphaned — then
-    // clear carcass siblings; the pointer protocol never looks at them
-    // again
-    val next = new Path(d.getParent, d.getName + ".next")
-    val old = new Path(d.getParent, d.getName + ".old")
-    if (!fs.exists(d) && fs.exists(next) && fs.exists(markerPath(next)))
-      require(fs.rename(next, d), s"swapWritePointer: rename $next -> $d failed")
+    require(!fs.exists(d) || fs.listStatus(d).isEmpty || isPointerLayout(fs, d),
+      s"swapWrite: $dir holds data but is not a generation-pointer " +
+        "directory (no gen-N/ or _CURRENT); write it anew through swapWrite")
+    // every delete result is CHECKED: Hadoop FileSystem signals most
+    // failures by returning false, not throwing
     def deleteOrDie(p: Path): Unit =
       require(!fs.exists(p) || fs.delete(p, true),
-        s"swapWritePointer: delete $p failed")
-    deleteOrDie(markerPath(d))
-    deleteOrDie(old)
-    deleteOrDie(next)
+        s"swapWrite: delete $p failed")
     val cur = readPointer(fs, d)
-    val legacyFlat = fs.exists(d) && !isPointerLayout(fs, d)
     // clean unready carcasses (a crashed write's partial generation is
     // referenced by nothing; the pointed generation is never touched)
     listGens(fs, d).filterNot { case (n, p) =>
@@ -647,34 +345,112 @@ object Sinks {
       .dropRight(keepGens - 1)
       .filter { case (n, _) => supersededAgeMs(n) >= keepMinAgeMs }
       .foreach { case (_, p) => deleteOrDie(p) }
-    // legacy flat content (a rename-protocol life before the protocol
-    // switch) is retired only now — the input frame read those files and
-    // the write job above fully materialized before anything is deleted
-    // (the same ordering contract the rename protocol's .next gives)
-    if (legacyFlat)
-      fs.listStatus(d).foreach { st =>
-        val n = st.getPath.getName
-        if (genNumber(n).isEmpty && n != PointerFile &&
-          n != PointerFile + ".tmp") deleteOrDie(st.getPath)
-      }
   }
 
-  /** [[recoverSwap]]'s pointer-protocol arm: promote the newest READY
-    * generation when the pointer is stale or mid-update — a pure pointer
-    * rewrite, no data moves, so (unlike the rename protocol's promotion)
-    * it is safe even with reader frames already listed against the old
-    * generation: their files stay on disk until retention. Returns true
-    * when a promotion happened.
+  /** Finish a [[swapWrite]] interrupted by a crash — the RESTART step a
+    * maintenance loop runs before constructing its delta frames: promote
+    * the newest READY generation when `_CURRENT` is stale or mid-update.
+    * A pure pointer rewrite, no data moves, so it is safe even with reader
+    * frames already listed against the old generation: their files stay
+    * on disk until retention. Returns true when a promotion happened; a
+    * dir without generations is left alone.
     */
-  private def recoverSwapPointer(fs: org.apache.hadoop.fs.FileSystem,
-                                 d: org.apache.hadoop.fs.Path): Boolean = {
-    val newestReady = listGens(fs, d).filter(g => genReady(fs, g._2))
-      .lastOption.map(_._1)
-    val cur = readPointer(fs, d)
-    newestReady match {
-      case Some(n) if !cur.contains(n) => writePointer(fs, d, n); true
+  def recoverSwap(spark: SparkSession, dir: String): Boolean = {
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    listGens(fs, d).filter(g => genReady(fs, g._2)).lastOption.map(_._1) match {
+      case Some(n) if !readPointer(fs, d).contains(n) => writePointer(fs, d, n); true
       case _ => false
     }
+  }
+
+  /** The pointer file naming a live generation (`gen-N`) inside a
+    * pointer-layout directory, and the per-generation completion marker.
+    * Both underscore-prefixed so parquet readers never see them.
+    */
+  val PointerFile = "_CURRENT"
+  val GenReadyMarker = "_GEN_READY"
+  private val GenPrefix = "gen-"
+
+  private[graft] def isPointerLayout(fs: org.apache.hadoop.fs.FileSystem,
+                                     d: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(new org.apache.hadoop.fs.Path(d, PointerFile)) ||
+      listGens(fs, d).nonEmpty
+
+  private def genNumber(name: String): Option[Long] =
+    if (name.startsWith(GenPrefix)) name.drop(GenPrefix.length).toLongOption
+    else None
+
+  /** generation directories under `d`, numerically ascending. */
+  private def listGens(fs: org.apache.hadoop.fs.FileSystem,
+                       d: org.apache.hadoop.fs.Path)
+      : Seq[(Long, org.apache.hadoop.fs.Path)] =
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq.filter(_.isDirectory)
+      .flatMap(st => genNumber(st.getPath.getName).map(_ -> st.getPath))
+      .sortBy(_._1)
+
+  private def genReady(fs: org.apache.hadoop.fs.FileSystem,
+                       p: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(new org.apache.hadoop.fs.Path(p, GenReadyMarker))
+
+  /** the generation number `_CURRENT` names, if the pointer exists and
+    * parses (a torn/empty pointer — impossible under atomic PUT, handled
+    * defensively — reads as absent and readers fall back to the newest
+    * READY generation, which is never older than a valid pointer). A
+    * writer's delete→rename update can land while the pointer is being
+    * opened, so a vanished pointer reads as absent too — the same
+    * fallback covers it.
+    */
+  private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
+                          d: org.apache.hadoop.fs.Path): Option[Long] =
+    try {
+      val in = fs.open(new org.apache.hadoop.fs.Path(d, PointerFile))
+      try genNumber(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
+      finally in.close()
+    } catch {
+      case _: java.io.FileNotFoundException => None
+    }
+
+  /** Atomically re-point `_CURRENT` at `gen`: write `_CURRENT.tmp`,
+    * delete the old pointer, rename the tmp in. On an object store each
+    * step is a single small-OBJECT operation (atomic PUT / DELETE / a
+    * one-object copy) — never an O(data) directory move; the only
+    * residue window is a missing pointer between the delete and the
+    * rename, which readers resolve by falling back to the newest READY
+    * generation (= the one this pointer names).
+    */
+  private def writePointer(fs: org.apache.hadoop.fs.FileSystem,
+                           d: org.apache.hadoop.fs.Path, gen: Long): Unit = {
+    val pf = new org.apache.hadoop.fs.Path(d, PointerFile)
+    val tmp = new org.apache.hadoop.fs.Path(d, PointerFile + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(s"$GenPrefix$gen".getBytes("UTF-8")) finally out.close()
+    require(!fs.exists(pf) || fs.delete(pf, false),
+      s"writePointer: delete $pf failed")
+    require(fs.rename(tmp, pf), s"writePointer: rename $tmp -> $pf failed")
+  }
+
+  /** The one path a READER scans, or None when nothing is live. For a
+    * pointer-layout dir that is its live `gen-N` (`_CURRENT`, falling back
+    * to the newest READY generation while the pointer is mid-update), and
+    * None while no generation is ready yet. Any other existing dir — the
+    * append-only [[graft.streaming.Streams.indexMaintainStream]] layout —
+    * is its own live path; a missing dir has none. Every stored-index read
+    * goes through here, via [[graft.streaming.Streams.readIndex]].
+    */
+  def resolveLive(spark: SparkSession, dir: String): Option[String] = {
+    import org.apache.hadoop.fs.Path
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readPointer(fs, d).map(n => new Path(d, s"$GenPrefix$n"))
+      .filter(fs.exists(_)).map(_.toString)
+      .orElse {
+        if (!fs.exists(d)) None
+        else if (!isPointerLayout(fs, d)) Some(dir)
+        else listGens(fs, d).filter(g => genReady(fs, g._2))
+          .lastOption.map(_._2.toString)
+      }
   }
 
   /** Small-file compaction: rewrite a parquet directory into

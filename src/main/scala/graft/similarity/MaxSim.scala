@@ -348,8 +348,9 @@ object MaxSim {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/meta")
     cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cent_id", "cent_vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/coarse")
-    d.withColumn("cell", element_at(probeCellsD(cents, col("pool"), 1), 1))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/mats")
+    graft.operators.Sinks.swapWrite(
+      d.withColumn("cell", element_at(probeCellsD(cents, col("pool"), 1), 1)),
+      s"$dir/mats", Seq("cell"))
   }
 
   /** The frozen model as plan-side values — a bounded collect by the build
@@ -440,7 +441,7 @@ object MaxSim {
                      vecCol: String, dir: String,
                      retiredIds: DataFrame): DataFrame = {
     val spark = admitted.sparkSession
-    // restart step first: finish any stranded swap before listing mats/
+    // restart step first: promote a stranded generation before listing mats/
     graft.operators.Sinks.recoverSwap(spark, s"$dir/mats")
     val (cents, scale) = readModel(spark, dir)
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted documents

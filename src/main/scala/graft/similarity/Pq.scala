@@ -251,8 +251,9 @@ object Pq {
     }
     val celled = corpusR.select(col(idCol), col(vecCol),
       Ann.nearestCell(cents, col(vecCol)).as("cell"))
-    encode(celled, idCol, vecCol, cbs, scale, carry = Seq("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    graft.operators.Sinks.swapWrite(
+      encode(celled, idCol, vecCol, cbs, scale, carry = Seq("cell")),
+      s"$dir/codes", Seq("cell"))
   }
 
   /** Load the frozen model back as plan literals (model-sized collects by
@@ -336,9 +337,9 @@ object Pq {
                       scale: Double = 1048576.0): DataFrame = {
     import graft.functions.Vectors
     val spark = admitted.sparkSession
-    // restart step first: finish any swap a crashed maintenance loop left
-    // stranded on the codes dir BEFORE listing it (the model is frozen,
-    // never delta-swapped)
+    // restart step first: promote any generation a crashed maintenance
+    // loop left ready but unpointed on the codes dir BEFORE listing it
+    // (the model is frozen, never delta-swapped)
     graft.operators.Sinks.recoverSwap(spark, s"$dir/codes")
     val (cents, cbs, rot) = readModel(spark, dir)
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors

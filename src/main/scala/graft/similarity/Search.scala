@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Text
+import graft.operators.Sinks
 import graft.Caching.TrackedSyntax
 
 /** Keyword search over a document corpus: per-term TF-IDF statistics and
@@ -297,6 +298,11 @@ object Search {
     *     inputs plus the layout's bucket count, so probes are
     *     self-describing.
     *
+    * Each artifact is written through [[graft.operators.Sinks.swapWrite]]:
+    * a fresh build lands as the artifacts' `gen-0/`, a rebuild over a
+    * live index as their next generation, and maintenance
+    * ([[writeLexDelta]]) swaps in later ones the same way.
+    *
     * Build cost: one corpus tokenize scan; the postings aggregate shuffles
     * (id, term) pairs — fixed-width rows, never the text.
     */
@@ -311,10 +317,11 @@ object Search {
     // jobs (AQE stage + final + head) per index build
     val obs = new org.apache.spark.sql.Observation()
     graft.Jobs.labeled(spark, "lexindex: doclens write") {
-      toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl"))
-        .observe(obs, count(lit(1)).as("n"),
-          coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
-        .write.mode("overwrite").parquet(s"$dir/doclens")
+      Sinks.swapWrite(
+        toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl"))
+          .observe(obs, count(lit(1)).as("n"),
+            coalesce(sum(col("dl")), lit(0L)).as("sumdl")),
+        s"$dir/doclens")
     }
     graft.Jobs.labeled(spark, "lexindex: postings write") {
       // per-document native term counting (graftglue.TermCounts) replaces
@@ -322,7 +329,7 @@ object Search {
       // row's token array, so the groupBy's corpus-sized exchange bought
       // nothing (r17, guide §2.4); rows and values are identical for
       // unique-id corpora — the contract every caller holds
-      toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl"),
+      Sinks.swapWrite(toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl"),
           explode(org.apache.spark.sql.graftglue.ColumnBridge.column(
             org.apache.spark.sql.graftglue.TermCounts(
               org.apache.spark.sql.graftglue.ColumnBridge.expression(
@@ -340,15 +347,14 @@ object Search {
         // one-file-per-bucket layout holds regardless. Files scale with
         // `buckets` — the layout's documented parallelism/pruning knob —
         // not with the shuffle width.
-        .repartition(buckets, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
+        .repartition(buckets, col("bucket")), s"$dir/postings", Seq("bucket"))
     }
     import spark.implicits._
     val stRow = obs.get
     graft.Jobs.labeled(spark, "lexindex: stats write") {
-      Seq((stRow("n").asInstanceOf[Long], stRow("sumdl").asInstanceOf[Long],
-          buckets)).toDF("n", "sumdl", "buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+      Sinks.swapWrite(Seq((stRow("n").asInstanceOf[Long],
+          stRow("sumdl").asInstanceOf[Long], buckets))
+        .toDF("n", "sumdl", "buckets").coalesce(1), s"$dir/stats")
     }
     // per-term document frequency, bucket-partitioned like the postings:
     // a probe learns every query term's df from the pruned terms/ buckets
@@ -366,11 +372,11 @@ object Search {
     // partition at this size — serializing the write like the postings
     // path above.
     graft.Jobs.labeled(spark, "lexindex: terms write") {
-      spark.read.parquet(s"$dir/postings")
+      Sinks.swapWrite(graft.streaming.Streams
+        .readIndex(spark, s"$dir/postings", recursive = false)
         .groupBy("term").agg(count(lit(1)).as("df"))
         .withColumn("bucket", termBucket(col("term"), buckets))
-        .repartition(buckets, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/terms")
+        .repartition(buckets, col("bucket")), s"$dir/terms", Seq("bucket"))
     }
   }
 
@@ -411,20 +417,17 @@ object Search {
     * probe).
     *
     * `gen` is the generation token: per artifact (stats/, postings/,
-    * terms/) the live base [[graft.operators.Sinks.resolveLive]] names
-    * and the (name, mtime) of every entry directly under its read paths
-    * (none when the artifact is absent). It rests on FILE names and mtimes
-    * because directory mtimes are not real on every store (S3-class
-    * stores report a synthetic one), so a directory rewritten in place
-    * can keep its path and its mtime. Every write path writes stats/ anew
-    * — an in-place [[writeLexIndex]] overwrite, a rename-layout swapWrite
-    * of a maintenance batch, a pointer-layout `gen-N` — and Spark names
-    * each part file with the writing job's UUID, so every write path
-    * rotates the token on every store; a pointer-layout swap also moves
-    * the base. The handle is rebuilt on the first call that sees a new
-    * token. The token is resolved BEFORE the handle's reads, so a handle
-    * can hold data newer than its token (the next call rebuilds it) but
-    * never older.
+    * terms/) the live `gen-N` path [[graft.operators.Sinks.resolveLive]]
+    * names and the (name, mtime) of every entry directly under it (none
+    * when the artifact is absent). Every write moves the live path, but a
+    * directory deleted and rebuilt starts again at `gen-0`, so the path
+    * alone would serve a stale handle; the file names close that gap,
+    * because Spark names each part file with the writing job's UUID (and
+    * FILE names, not directory mtimes: S3-class stores report synthetic
+    * directory mtimes). The handle is rebuilt on the first call that sees
+    * a new token. The token is resolved BEFORE the handle's reads, so a
+    * handle can hold data newer than its token (the next call rebuilds
+    * it) but never older.
     *
     * There is no knob: one handle per index dir, a few longs, one schema
     * and at most [[StopSetCacheCap]] terms, and the token check (a few
@@ -456,14 +459,14 @@ object Search {
   private def lexGeneration(spark: org.apache.spark.sql.SparkSession,
                             dir: String): Seq[(String, Seq[(String, Long)])] =
     LexArtifacts.map { sub =>
-      val (base, paths) = graft.operators.Sinks.resolveLive(spark, s"$dir/$sub")
-      val ps = paths.map(new org.apache.hadoop.fs.Path(_)).toArray
-      val entries =
-        if (ps.isEmpty) Nil
-        else try ps.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .listStatus(ps).toSeq.map(f => f.getPath.getName -> f.getModificationTime)
+      val live = Sinks.resolveLive(spark, s"$dir/$sub")
+      val entries = live.toSeq.flatMap { l =>
+        val p = new org.apache.hadoop.fs.Path(l)
+        try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(p).toSeq.map(f => f.getPath.getName -> f.getModificationTime)
         catch { case _: java.io.FileNotFoundException => Nil }
-      base -> entries
+      }
+      live.getOrElse("") -> entries
     }
 
   /** The [[LexHandle]] of `dir`'s live generation: cached while the
@@ -511,21 +514,15 @@ object Search {
     * [[StopSetCacheCap]] survivors the generation keeps that legacy
     * consult.
     *
-    * Absent terms/ handling distinguishes the swap window (retry, mirror
-    * of [[graft.streaming.Streams.readIndex]]) from a genuinely pre-guard
-    * layout (WARN once per dir + probe unguarded); neither is cached.
+    * An absent terms/ is a pre-guard layout (WARN once per dir + probe
+    * unguarded, not cached): a swapped directory never disappears.
     */
   private def guardPlan(spark: org.apache.spark.sql.SparkSession,
                         dir: String, h: LexHandle, maxDfPermille: Int): GuardPlan =
     h.guard.collect { case (p, plan) if p == maxDfPermille => plan }.getOrElse {
       val p = new org.apache.hadoop.fs.Path(s"$dir/terms")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!h.hasTerms && { Thread.sleep(200L); !fs.exists(p) }) {
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/terms.next")))
-          throw new IllegalStateException(
-            s"terms table $dir/terms is missing but terms.next exists: a " +
-              "maintenance swap crashed mid-rename — run recoverSwap/" +
-              "compactIndex to completion, then retry the probe")
+      if (!h.hasTerms && !fs.exists(p)) {
         if (warnedPreGuard.add(dir))
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"maxDfPermille=$maxDfPermille requested but $dir has no stored " +
@@ -697,16 +694,12 @@ object Search {
     * partitionBy("bucket")) — the atomic-swap writer; an in-place
     * overwrite would delete the postings under the job reading them.
     *
-    * WRITE-BACK ORDER MATTERS: the returned frames read the LIVE index
-    * lazily — `posts` and `terms` list `$dir/postings` eagerly at first
-    * materialization, `doclens` and `stats` list `$dir/doclens` — so a
-    * frame must be written BEFORE the directory it reads is swapped out
-    * from under it. The safe order is terms, stats, postings, doclens
-    * (terms before the postings swap, stats before the doclens swap;
-    * postings/doclens last — swapWrite materializes each to `.next`
-    * before any rename, so a frame may safely read the directory it is
-    * itself replacing). [[writeLexDelta]] performs exactly this sequence;
-    * use it unless you have a reason to hand-order. Each directory swap
+    * WRITE-BACK ORDER: the returned frames read the LIVE generation
+    * lazily — `posts` and `terms` read postings/, `doclens` and `stats`
+    * read doclens/ — and swapWrite never touches a live generation, so
+    * every frame keeps reading its own inputs through the swaps;
+    * [[writeLexDelta]] writes terms, stats, postings, doclens, the order
+    * that keeps a frame's inputs ahead of retention. Each directory swap
     * is individually atomic; a crash between swaps leaves dirs from two
     * generations, which the next [[lexIndexDelta]] + [[writeLexDelta]]
     * run re-converges (every artifact re-derives from postings/doclens).
@@ -721,12 +714,10 @@ object Search {
                     dir: String, retiredIds: DataFrame):
       (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val spark = admitted.sparkSession
-    // restart step first (before ANY of the four dirs is listed): finish
-    // every swap a crashed [[writeLexDelta]] left stranded — a crash
-    // between its two renames leaves that dir missing with a marked
-    // .next, and a bare readIndex would fail where promotion is the
-    // correct move. Safe mid-construction because no input frame exists
-    // yet; a no-op in the common case (two exists() probes per dir).
+    // restart step first (before ANY of the four dirs is listed): promote
+    // every generation a crashed [[writeLexDelta]] left ready but
+    // unpointed, so the replay builds on it. A no-op in the common case
+    // (one listing per dir).
     Seq("terms", "stats", "postings", "doclens").foreach(sub =>
       graft.operators.Sinks.recoverSwap(spark, s"$dir/$sub"))
     val h = lexHandle(spark, dir)
@@ -735,7 +726,7 @@ object Search {
     // replace any stored copy — the apply is idempotent, so a maintenance
     // loop replaying its uncommitted micro-batch after a crash (even one
     // whose swaps PARTIALLY landed across the four dirs) converges to the
-    // same generation (MaintainCrashSpec pins all three crash windows)
+    // same generation (PointerSwapSpec pins all three crash windows)
     val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
     val keptPosts = postingsOf(spark, dir, h)
       .join(broadcast(retire), Seq("id"), "left_anti")
@@ -776,19 +767,13 @@ object Search {
     (posts, doclens, stats, terms)
   }
 
-  /** Write a [[lexIndexDelta]] result back over the live index in the
-    * SAFE order (see lexIndexDelta's scaladoc): terms and stats first —
-    * they lazily read the live postings/doclens directories that the
-    * later swaps replace — then postings, then doclens, each through
-    * [[graft.operators.Sinks.swapWrite]] (atomic per directory). Writing
-    * in the returned-tuple order instead would swap postings out from
-    * under the terms frame's eager file listing: the terms write fails
-    * and the index is left with new postings beside a stale terms/ table,
-    * silently mis-guarding every subsequent df-ceiling probe.
+  /** Write a [[lexIndexDelta]] result back over the live index: terms and
+    * stats first — they lazily read the live postings/doclens generations
+    * that the later swaps supersede — then postings, then doclens, each
+    * through [[graft.operators.Sinks.swapWrite]] (atomic per directory).
     */
   def writeLexDelta(dir: String, posts: DataFrame, doclens: DataFrame,
                     stats: DataFrame, terms: DataFrame): Unit = {
-    import graft.operators.Sinks
     // repartition ON the bucket first — the writeLexIndex layout rule:
     // an unrepartitioned write fans every shuffle partition across every
     // bucket directory (partitions × buckets tiny files). Explicit-N form

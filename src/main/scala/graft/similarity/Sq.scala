@@ -198,8 +198,9 @@ object Sq {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/coarse")
     val celled = corpus.select(col(idCol), col(vecCol),
       Ann.nearestCell(cents, col(vecCol)).as("cell"))
-    encode(celled, idCol, vecCol, s, carry = Seq("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    graft.operators.Sinks.swapWrite(
+      encode(celled, idCol, vecCol, s, carry = Seq("cell")),
+      s"$dir/codes", Seq("cell"))
   }
 
   /** Load the frozen model back (dim + nlist rows — bounded collects by
@@ -260,7 +261,7 @@ object Sq {
   def indexCodesDelta(admitted: DataFrame, idCol: String, vecCol: String,
                       dir: String, retiredIds: DataFrame): DataFrame = {
     val spark = admitted.sparkSession
-    // restart step first: finish any stranded swap before listing codes/
+    // restart step first: promote a stranded generation before listing codes/
     graft.operators.Sinks.recoverSwap(spark, s"$dir/codes")
     val (cents, s) = readModel(spark, dir)
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors

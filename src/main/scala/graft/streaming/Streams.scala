@@ -797,13 +797,16 @@ object Streams {
     Mine.marginFromTopK(fwd, bwd, tau, mutual)
   }
 
-  /** Read a maintained index directory (bootstrap files + per-batch
-    * subdirs — the [[indexMaintainStream]] layout), tolerating
-    * [[compactIndex]]'s rename-swap window: between its step 2 and step 3
-    * the directory does not exist for a moment, so a point-in-time reader
-    * retries ONCE (after `onRetry`, default a 200 ms sleep — two renames
-    * take microseconds, so one retry is ample) before concluding the index
-    * is genuinely absent. Probes ([[graft.dedup.Dedup.incrementalNearDup]]
+  /** Read a stored index directory: the live generation of a
+    * [[graft.operators.Sinks.swapWrite]] directory, or the whole of an
+    * [[indexMaintainStream]] one (bootstrap files + per-batch subdirs),
+    * both through [[graft.operators.Sinks.resolveLive]]. A directory with
+    * nothing live — missing, in [[compactIndex]]'s rename window (between
+    * its step 2 and step 3 the directory does not exist for a moment), or
+    * a pointer directory whose first generation is still being written —
+    * is retried ONCE (after `onRetry`, default a 200 ms sleep — two
+    * renames take microseconds, so one retry is ample) before the index
+    * is concluded absent. Probes ([[graft.dedup.Dedup.incrementalNearDup]]
     * / `winnowProbe` / ADC callers) should load through this instead of a
     * bare `spark.read.parquet`.
     *
@@ -812,16 +815,16 @@ object Streams {
     * completes, so this throws with the recovery instruction (run
     * [[compactIndex]] to completion) rather than fabricating an empty
     * index — an empty-index probe would silently admit every delta row.
-    * A missing directory with NO stranded swap is the bootstrap case:
-    * `emptySchema` (when provided) yields an empty frame, else this
-    * throws.
+    * Otherwise nothing live is the bootstrap case: `emptySchema` (when
+    * provided) yields an empty frame, else this throws.
     *
     * Scope of the guarantee: the retry covers the LISTING window only. A
     * job still scanning old-generation FILES when a compaction deletes
     * them will fail mid-flight — that overlap is excluded by contract
     * (see [[compactIndex]]: one writer, compaction only between drains,
     * probes launched during a compaction window retry here; probes
-    * launched before it must finish first).
+    * launched before it must finish first). A swapWrite directory has no
+    * such window: its previous generations stay on disk until retention.
     *
     * `schema` skips Parquet schema inference (one Spark job per read) for
     * a caller that already knows the live generation's schema; unlike
@@ -834,39 +837,26 @@ object Streams {
                 recursive: Boolean = true,
                 schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val dir = new Path(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // apply the caller's schema when provided: an existing-but-FILELESS
+    // dir (batch 0 crashed pre-commit, replay deleted its own subdir —
+    // the indexMaintainStream hygiene step) has nothing to infer from,
+    // and bare parquet() would throw 'Unable to infer schema' on every
+    // restart, crash-looping a stream that readIndex's bootstrap
+    // contract says should see an EMPTY index
+    //
+    // recursive = false is the BATCH stored-index shape ([[Pq]]/[[Sq]]/
+    // [[MaxSim]]/Search probes): those layouts are hive-partitioned
+    // (cell=… / bucket=… directories), and recursiveFileLookup DISABLES
+    // partition inference — the probes' partition-pruning filters need
+    // the partition column discovered
+    val r0 = spark.read
+    val r = if (recursive) r0.option("recursiveFileLookup", "true") else r0
+    val rs = schema.orElse(emptySchema).fold(r)(sc => r.schema(sc))
     def attempt(): Option[DataFrame] =
-      if (fs.exists(dir)) {
-        // apply the caller's schema when provided: an existing-but-FILELESS
-        // dir (batch 0 crashed pre-commit, replay deleted its own subdir —
-        // the indexMaintainStream hygiene step) has nothing to infer from,
-        // and bare parquet() would throw 'Unable to infer schema' on every
-        // restart, crash-looping a stream that readIndex's bootstrap
-        // contract says should see an EMPTY index
-        //
-        // recursive = false is the BATCH stored-index shape ([[Pq]]/[[Sq]]/
-        // [[MaxSim]]/Search probes): those layouts are hive-partitioned
-        // (cell=… / bucket=… directories), and recursiveFileLookup DISABLES
-        // partition inference — the probes' partition-pruning filters need
-        // the partition column discovered
-        val r0 = spark.read
-        val r = if (recursive) r0.option("recursiveFileLookup", "true") else r0
-        // pointer-layout dirs (r14, object-store-safe swap protocol)
-        // resolve to their live gen-N; rename-layout dirs to themselves —
-        // the ONE seam that makes the two protocols reader-transparent.
-        // During a flat dir's migration to the pointer layout the live
-        // data is its flat children, read under the dir as basePath so
-        // partition discovery still sees bucket=… / cell=…
-        val rs = schema.orElse(emptySchema).fold(r)(sc => r.schema(sc))
-        graft.operators.Sinks.resolveLive(spark, indexDir) match {
-          case (_, Seq()) => None
-          case (live, Seq(p)) if p == live => Some(rs.parquet(live))
-          case (base, flat) => Some(rs.option("basePath", base).parquet(flat: _*))
-        }
-      } else None
+      graft.operators.Sinks.resolveLive(spark, indexDir).map(rs.parquet(_))
     attempt().orElse { onRetry(); attempt() }.getOrElse {
-      if (fs.exists(new Path(indexDir + ".next")))
+      val next = new Path(indexDir + ".next")
+      if (next.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(next))
         throw new IllegalStateException(
           s"index dir $indexDir is missing but $indexDir.next exists: a " +
             "compaction crashed mid-swap — run compactIndex to completion " +
@@ -886,33 +876,32 @@ object Streams {
     val next = new Path(indexDir + ".next")
     val old = new Path(indexDir + ".old")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a pointer-layout dir (r14) compacts by writing a fresh generation:
-    // swapWrite's layout dispatch does exactly that, and resolveLive
-    // scopes the read to the LIVE generation (a recursive read of the
-    // whole dir would fold retained older generations, or a migrating
-    // flat dir's unready first one, into the compacted output)
-    def live() = graft.operators.Sinks.resolveLive(spark, indexDir)
-    if (live()._1 != indexDir) {
-      graft.operators.Sinks.recoverSwap(spark, indexDir)
-      val flat = spark.read.option("recursiveFileLookup", "true")
-        .parquet(live()._1).distinct()
-      graft.operators.Sinks.swapWrite(
-        if (partitions > 0) flat.repartition(partitions) else flat, indexDir)
-      return
-    }
+    // a swapWrite (generation-pointer) dir is written whole, one generation
+    // at a time, and never takes appends: there is nothing to flatten, and
+    // the recursive read below would fold its retained generations together
+    require(!graft.operators.Sinks.isPointerLayout(fs, dir),
+      s"compactIndex: $indexDir is a generation-pointer directory; only " +
+        "the indexMaintainStream append layout is compacted")
+    // every rename/delete result is CHECKED (the swapWrite rule): Hadoop
+    // FileSystem signals most failures by returning false, and an
+    // unchecked false would return normally from a half-applied swap
+    def renameOrDie(from: Path, to: Path): Unit =
+      require(fs.rename(from, to), s"compactIndex: rename $from -> $to failed")
+    def deleteOrDie(p: Path): Unit =
+      require(!fs.exists(p) || fs.delete(p, true),
+        s"compactIndex: delete $p failed")
     // recovery: a stranded swap from a crashed earlier run finishes first
-    if (!fs.exists(dir) && fs.exists(next)) fs.rename(next, dir)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(next)) fs.delete(next, true)
-    val paths = if (fs.exists(dir)) live()._2 else Nil
-    if (paths.isEmpty) return
+    if (!fs.exists(dir) && fs.exists(next)) renameOrDie(next, dir)
+    deleteOrDie(old)
+    deleteOrDie(next)
+    if (!fs.exists(dir)) return
     val flat = spark.read.option("recursiveFileLookup", "true")
-      .parquet(paths: _*).distinct()
+      .parquet(indexDir).distinct()
     (if (partitions > 0) flat.repartition(partitions) else flat)
       .write.mode("overwrite").parquet(next.toString)
-    fs.rename(dir, old)
-    fs.rename(next, dir)
-    fs.delete(old, true)
+    renameOrDie(dir, old)
+    renameOrDie(next, dir)
+    deleteOrDie(old)
   }
 
   /** Run a micro-batch sink function (reference batch markers → foreachBatch

@@ -227,43 +227,48 @@ class LayoutSpec extends SparkSpec {
   test("swapWrite: first write, read-then-rewrite over the live dir, " +
        "partition layout preserved, stranded swaps recovered") {
     import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("swapw").toString
-    val dir = s"$base/idx"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def rows = spark.read.parquet(dir)
-      .select(col("id"), col("v"), col("cell").cast("long").as("cell"))
-      .as[(Long, String, Long)].collect().toSet
-    val df1 = (0L until 20L).map(i => (i, s"v$i", i % 4)).toDF("id", "v", "cell")
-    // first write: no dir yet — swapWrite must create it
-    Sinks.swapWrite(df1, dir, Seq("cell"))
-    assert(rows == df1.as[(Long, String, Long)].collect().toSet)
-    assert(fs.exists(new Path(s"$dir/cell=0")), "partition layout lost")
-    // the maintenance loop: a frame READING from dir writes back over it
-    // (the in-place overwrite this exists to replace would delete the
-    // input under the running job)
-    val maintained = spark.read.parquet(dir)
-      .filter(col("id") =!= 3L)
-      .select(col("id"), concat(col("v"), lit("'")) .as("v"), col("cell"))
-    Sinks.swapWrite(maintained, dir, Seq("cell"))
-    assert(rows.map(_._1) == (0L until 20L).toSet - 3L)
-    assert(rows.forall(_._2.endsWith("'")), "rewrite lost the projection")
-    // stranded swap (crash between the two renames): dir missing, .next
-    // complete — the next call finishes the swap FIRST, so the recovered
-    // content is what .next held before the new write lands
-    fs.rename(new Path(dir), new Path(s"$dir.next"))
-    val df3 = Seq((100L, "fresh", 0L)).toDF("id", "v", "cell")
-    Sinks.swapWrite(df3, dir, Seq("cell"))
-    assert(rows == Set((100L, "fresh", 0L)))
-    // stale .next beside a live dir (crash BEFORE the first rename) is
-    // discarded, not swapped in
-    val df4 = Seq((200L, "live", 1L)).toDF("id", "v", "cell")
-    df4.write.partitionBy("cell").parquet(s"$dir.next")
-    Sinks.swapWrite(df3, dir, Seq("cell"))
-    assert(rows == Set((100L, "fresh", 0L)),
-      "a stale .next from a pre-swap crash leaked into the index")
-    // no _SWAP_READY marker survives in the live dir after a clean swap
-    assert(!fs.exists(new Path(s"$dir/_SWAP_READY")),
-      "marker leaked into the live directory")
+    withTempDir("swapw") { base =>
+      val dir = s"$base/idx"
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def live() = graft.streaming.Streams.readIndex(spark, dir, recursive = false)
+      def rows = live()
+        .select(col("id"), col("v"), col("cell").cast("long").as("cell"))
+        .as[(Long, String, Long)].collect().toSet
+      val df1 = (0L until 20L).map(i => (i, s"v$i", i % 4)).toDF("id", "v", "cell")
+      // first write: no dir yet — swapWrite must create it, as gen-0
+      Sinks.swapWrite(df1, dir, Seq("cell"))
+      assert(rows == df1.as[(Long, String, Long)].collect().toSet)
+      assert(fs.exists(new Path(s"$dir/gen-0/cell=0")), "partition layout lost")
+      // the maintenance loop: a frame READING from dir writes back over it
+      // (the in-place overwrite this exists to replace would delete the
+      // input under the running job)
+      val maintained = live()
+        .filter(col("id") =!= 3L)
+        .select(col("id"), concat(col("v"), lit("'")) .as("v"), col("cell"))
+      Sinks.swapWrite(maintained, dir, Seq("cell"))
+      assert(rows.map(_._1) == (0L until 20L).toSet - 3L)
+      assert(rows.forall(_._2.endsWith("'")), "rewrite lost the projection")
+      // stranded swap (crash after a generation's write job, before its
+      // pointer update): readers keep the pointed generation until the
+      // restart step promotes the ready one
+      val df3 = Seq((100L, "fresh", 0L)).toDF("id", "v", "cell")
+      df3.write.partitionBy("cell").parquet(s"$dir/gen-5")
+      fs.create(new Path(s"$dir/gen-5/${Sinks.GenReadyMarker}"), true).close()
+      assert(rows.map(_._1) == (0L until 20L).toSet - 3L,
+        "an unpointed generation went live before recovery")
+      assert(Sinks.recoverSwap(spark, dir))
+      assert(rows == Set((100L, "fresh", 0L)))
+      // a mid-write carcass (no ready marker) is discarded, not swapped in
+      val df4 = Seq((200L, "live", 1L)).toDF("id", "v", "cell")
+      df4.write.partitionBy("cell").parquet(s"$dir/gen-9")
+      Sinks.swapWrite(df3, dir, Seq("cell"))
+      assert(rows == Set((100L, "fresh", 0L)),
+        "a mid-write carcass leaked into the index")
+      assert(!fs.exists(new Path(s"$dir/gen-9")), "carcass not cleaned")
+      // no pointer temp file survives a clean swap
+      assert(!fs.exists(new Path(s"$dir/${Sinks.PointerFile}.tmp")),
+        "pointer tmp file leaked into the live directory")
+    }
   }
 
   test("bloom-filtered layout: a point probe on a scattered column skips " +
@@ -292,79 +297,28 @@ class LayoutSpec extends SparkSpec {
     assert(bloom <= plain / 4, s"bloom read $bloom of $plain — no row-group skip")
   }
 
-  test("recoverSwap: completed .next promoted at restart, mid-write " +
-       "carcass left alone, between-renames window finished") {
-    import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("swapr").toString
-    val dir = s"$base/idx"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def rows = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    Seq((1L, "gen0")).toDF("id", "v").write.parquet(dir)
-    // crash AFTER the .next write job, BEFORE the first rename: the
-    // marker marks it complete — recoverSwap (the restart step, before
-    // any delta frame is built) promotes it instead of redoing the delta
-    Seq((2L, "gen1")).toDF("id", "v").write.parquet(s"$dir.next")
-    fs.create(new Path(s"$dir.next/_SWAP_READY"), true).close()
-    assert(Sinks.recoverSwap(spark, dir), "completed .next not promoted")
-    assert(rows == Set((2L, "gen1")))
-    assert(!fs.exists(new Path(s"$dir.next")) &&
-      !fs.exists(new Path(s"$dir/_SWAP_READY")))
-    // mid-write carcass (no marker, live dir present): NOT promoted —
-    // swapWrite's own cleanup owns it
-    Seq((9L, "junk")).toDF("id", "v").write.parquet(s"$dir.next")
-    assert(!Sinks.recoverSwap(spark, dir), "promoted a mid-write carcass")
-    assert(rows == Set((2L, "gen1")) && fs.exists(new Path(s"$dir.next")))
-    fs.delete(new Path(s"$dir.next"), true)
-    // between-renames crash window: live dir gone, .next complete AND
-    // marked — in a real swapWrite the _SWAP_READY marker is created
-    // right after the write job and deleted only after the final rename,
-    // so it is always present in this window
-    fs.rename(new Path(dir), new Path(s"$dir.next"))
-    fs.create(new Path(s"$dir.next/_SWAP_READY"), true).close()
-    assert(Sinks.recoverSwap(spark, dir), "window swap not finished")
-    assert(rows == Set((2L, "gen1")))
-    // FIRST-GENERATION mid-write carcass: unmarked .next beside a MISSING
-    // live dir (the write job of a first build runs with no live dir at
-    // all, so a crash mid-write leaves exactly this). It must be deleted,
-    // never promoted — promoting a partial write would hand every later
-    // delta a half-written index
-    val dirG0 = s"$base/idx_gen0"
-    Seq((7L, "partial")).toDF("id", "v").write.parquet(s"$dirG0.next")
-    assert(!Sinks.recoverSwap(spark, dirG0), "promoted an unmarked carcass")
-    assert(!fs.exists(new Path(s"$dirG0.next")) && !fs.exists(new Path(dirG0)),
-      "first-generation carcass not cleaned up")
-    // restart cadence end-to-end: recover first, THEN build the delta
-    // frame, then swapWrite — the maintained generation is gen1's
-    Seq((3L, "gen2")).toDF("id", "v").write.parquet(s"$dir.next")
-    fs.create(new Path(s"$dir.next/_SWAP_READY"), true).close()
-    Sinks.recoverSwap(spark, dir)
-    val delta = spark.read.parquet(dir)
-      .select(col("id") + 10L as "id", col("v"))
-    Sinks.swapWrite(delta, dir)
-    assert(rows == Set((13L, "gen2")),
-      "delta did not build on the recovered generation")
-  }
-
   test("readIndex(recursive=false): hive partition column inferred, and a " +
        "probe issued inside swapWrite's rename window retries through it") {
     import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("swapri").toString
-    val dir = s"$base/codes"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val df = (0L until 12L).map(i => (i, i % 3)).toDF("id", "cell")
-    Sinks.swapWrite(df, dir, Seq("cell"))
-    // the batch stored-index probes (Pq/Sq/MaxSim/Search) read through
-    // this shape: partition inference ON (recursiveFileLookup would drop
-    // the cell column their pruning filters need)
-    val flat = graft.streaming.Streams.readIndex(spark, dir, recursive = false)
-    assert(flat.columns.contains("cell"), "partition column lost")
-    assert(flat.filter(col("cell") === 1).count() == 4)
-    // concurrent swapWrite's between-renames window: the dir is missing
-    // for the first listing; the retry (here: the swap completing) finds it
-    fs.rename(new Path(dir), new Path(s"$dir.next"))
-    val probed = graft.streaming.Streams.readIndex(spark, dir,
-      onRetry = () => { fs.rename(new Path(s"$dir.next"), new Path(dir)); () },
-      recursive = false)
-    assert(probed.count() == 12 && probed.columns.contains("cell"))
+    withTempDir("swapri") { base =>
+      val dir = s"$base/codes"
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val df = (0L until 12L).map(i => (i, i % 3)).toDF("id", "cell")
+      Sinks.swapWrite(df, dir, Seq("cell"))
+      // the batch stored-index probes (Pq/Sq/MaxSim/Search) read through
+      // this shape: partition inference ON (recursiveFileLookup would drop
+      // the cell column their pruning filters need)
+      val flat = graft.streaming.Streams.readIndex(spark, dir, recursive = false)
+      assert(flat.columns.contains("cell"), "partition column lost")
+      assert(flat.filter(col("cell") === 1).count() == 4)
+      // a rename window (compactIndex's, between its two renames): the dir
+      // is missing for the first listing; the retry (here: the rename
+      // completing) finds it
+      fs.rename(new Path(dir), new Path(s"$dir.next"))
+      val probed = graft.streaming.Streams.readIndex(spark, dir,
+        onRetry = () => { fs.rename(new Path(s"$dir.next"), new Path(dir)); () },
+        recursive = false)
+      assert(probed.count() == 12 && probed.columns.contains("cell"))
+    }
   }
 }

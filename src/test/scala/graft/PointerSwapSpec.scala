@@ -6,22 +6,19 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sinks
 import graft.similarity.Search
 
-/** The generation-POINTER swap protocol (r14) — the object-store-safe
-  * form of [[Sinks.swapWrite]]: immutable `gen-N/` directories plus a
-  * tiny `_CURRENT` pointer file, selected by layout or the
-  * `spark.graft.swap.protocol` conf. The two-rename protocol assumes
-  * `FileSystem.rename` is atomic and O(1) — false on S3-class stores
-  * (copy+delete, non-atomic, O(data)); the pointer protocol never moves
-  * a directory at all: commit = one small-object pointer update.
+/** The generation-POINTER swap protocol of [[Sinks.swapWrite]]:
+  * immutable `gen-N/` directories plus a tiny `_CURRENT` pointer file. No
+  * directory ever moves — commit is one small-object pointer update — so
+  * the protocol holds on S3-class stores, where rename is copy+delete.
   *
   * Pinned here:
-  *  - roundtrip ≡ the rename protocol (same rows back, readers resolve
-  *    through [[Sinks.resolveLive]] / readIndex transparently);
-  *  - a legacy FLAT dir migrates on the first pointer-protocol swap;
+  *  - roundtrip: the same rows back, readers resolve through
+  *    [[Sinks.resolveLive]] / readIndex;
+  *  - a non-empty flat dir is refused, not converted;
   *  - the three crash windows (mid-write carcass / ready-but-unpointed /
   *    mid-pointer-update) each recover — and the full ONLINE maintain
-  *    loop (MaintainCrashSpec's q_stream_lexmaintain identity) converges
-  *    to the from-scratch rebuild through each of them;
+  *    loop (the q_stream_lexmaintain identity) converges to the
+  *    from-scratch rebuild through each of them;
   *  - retention keeps the previous generation for in-flight readers.
   */
 class PointerSwapSpec extends SparkSpec {
@@ -30,26 +27,13 @@ class PointerSwapSpec extends SparkSpec {
   private def fs(p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** run `body` with the session forced onto the pointer protocol,
-    * restoring the previous setting after (the shared test session must
-    * not leak the override into rename-protocol suites).
-    */
-  private def withPointer[T](body: => T): T = {
-    val key = "spark.graft.swap.protocol"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "pointer")
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   private def rowsOf(dir: String): Set[(Long, String)] =
     graft.streaming.Streams.readIndex(spark, dir, recursive = false)
       .select(col("id"), col("v")).as[(Long, String)].collect().toSet
 
   test("pointer-protocol roundtrip: write, read via resolveLive, rewrite " +
        "from the live generation, retention keeps exactly two") {
-    withPointer {
-      val base = java.nio.file.Files.createTempDirectory("ptr_rt").toString
+    withTempDir("ptr_rt") { base =>
       val idx = s"$base/idx"
       Sinks.swapWrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), idx)
       val f = fs(idx)
@@ -73,7 +57,7 @@ class PointerSwapSpec extends SparkSpec {
 
   test("keepMinAgeMs time-floors retention: a young generation beyond " +
        "keepGenerations survives until it ages past the floor") {
-    withPointer {
+    withTempDir("ptr_floor") { base =>
       val key = "spark.graft.swap.keepMinAgeMs"
       val prev = spark.conf.getOption(key)
       // 1h floor: every generation written in this test is "young", so
@@ -82,7 +66,6 @@ class PointerSwapSpec extends SparkSpec {
       // files even across a burst of back-to-back maintains
       spark.conf.set(key, "3600000")
       try {
-        val base = java.nio.file.Files.createTempDirectory("ptr_floor").toString
         val idx = s"$base/idx"
         Sinks.swapWrite(Seq((1L, "a")).toDF("id", "v"), idx)
         Sinks.swapWrite(Seq((2L, "b")).toDF("id", "v"), idx)
@@ -108,12 +91,11 @@ class PointerSwapSpec extends SparkSpec {
   test("the retention floor clocks from SUPERSESSION, not readiness: a " +
        "long-current generation survives a burst of back-to-back " +
        "maintains, and retires once its successor ages past the floor") {
-    withPointer {
+    withTempDir("ptr_sup") { base =>
       val key = "spark.graft.swap.keepMinAgeMs"
       val prev = spark.conf.getOption(key)
       spark.conf.set(key, "3600000") // 1h floor
       try {
-        val base = java.nio.file.Files.createTempDirectory("ptr_sup").toString
         val idx = s"$base/idx"
         val f = fs(idx)
         def backdate(gen: String): Unit = {
@@ -146,78 +128,28 @@ class PointerSwapSpec extends SparkSpec {
     }
   }
 
-  test("a legacy FLAT dir migrates on the first pointer-protocol swap; " +
-       "partitioned generations keep their partition column") {
-    withPointer {
-      val base = java.nio.file.Files.createTempDirectory("ptr_mig").toString
+  test("swapWrite refuses a non-empty flat directory instead of " +
+       "converting it, and writes an empty one as gen-0") {
+    withTempDir("ptr_flat") { base =>
       val idx = s"$base/idx"
-      Seq((1L, "a", 0), (2L, "b", 1)).toDF("id", "v", "cell")
-        .write.partitionBy("cell").parquet(idx)
-      // the maintain shape: the delta frame READS the flat live dir
-      val maintained = graft.streaming.Streams
-        .readIndex(spark, idx, recursive = false)
-        .union(Seq((3L, "c", 0)).toDF("id", "v", "cell"))
-      Sinks.swapWrite(maintained, idx, Seq("cell"))
-      val got = graft.streaming.Streams.readIndex(spark, idx,
-          recursive = false)
-        .select(col("id"), col("v"), col("cell").cast("int"))
-        .as[(Long, String, Int)].collect().toSet
-      assert(got == Set((1L, "a", 0), (2L, "b", 1), (3L, "c", 0)))
-      // flat content is gone; only the generation + pointer remain
-      val names = fs(idx).listStatus(new Path(idx)).map(_.getPath.getName)
-      assert(names.toSet.subsetOf(
-        Set("gen-0", Sinks.PointerFile, Sinks.PointerFile + ".tmp")),
-        s"legacy residue: ${names.mkString(",")}")
-      // partition pruning still applies: the resolved scan carries cell
-      val plan = graft.streaming.Streams.readIndex(spark, idx,
-          recursive = false)
-        .filter(col("cell") === 0)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("cell"), plan)
-    }
-  }
-
-  test("a probe while the first pointer generation is written over a flat " +
-       "index reads the flat data, not the unready gen-0/ beside it") {
-    val docs = Seq(
-      (1L, "spark common alpha"),
-      (2L, "spark common beta"),
-      (3L, "common rare"),
-      (4L, "gamma delta")).toDF("doc_id", "text")
-    withTempDir("ptr_window") { idx =>
-      Search.writeLexIndex(docs, "doc_id", "text", idx, buckets = 8)
-      def probe() = Search.bm25FromIndex(spark, idx,
-          Seq("spark", "common", "rare"), k = 5, maxDfPermille = 700)
-        .as[(Long, Double)].collect().toSeq
-      val want = probe()
-      // the migrating swap's write jobs have committed into gen-0/, the
-      // _GEN_READY markers and the pointer are not written yet; the junk
-      // rows would change every score if a reader took them in
-      Seq(("junk", 99L, 0)).toDF("term", "df", "bucket")
-        .write.partitionBy("bucket").parquet(s"$idx/terms/gen-0")
-      Seq((9L, 3L, "junk", 1L, 0)).toDF("id", "dl", "term", "tf", "bucket")
-        .write.partitionBy("bucket").parquet(s"$idx/postings/gen-0")
-      Seq((99L, 999L, 8)).toDF("n", "sumdl", "buckets")
-        .write.parquet(s"$idx/stats/gen-0")
-      assert(probe() == want && want.nonEmpty)
-      // the flat partitions keep their partition column and pruning
-      val plan = graft.streaming.Streams.readIndex(spark, s"$idx/postings",
-          recursive = false).filter(col("bucket") === 1)
-        .queryExecution.executedPlan.toString
-      assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined, plan)
-      // compaction reads the same live data: the unready gen-0/ is not
-      // folded into the compacted stats
-      graft.streaming.Streams.compactIndex(spark, s"$idx/stats")
-      assert(spark.read.parquet(s"$idx/stats").select("n").as[Long]
-        .collect().toSeq == Seq(4L))
+      Seq((1L, "a")).toDF("id", "v").write.parquet(idx)
+      val ex = intercept[IllegalArgumentException] {
+        Sinks.swapWrite(Seq((2L, "b")).toDF("id", "v"), idx)
+      }
+      assert(ex.getMessage.contains("not a generation-pointer"), ex.getMessage)
+      assert(rowsOf(idx) == Set((1L, "a")), "the flat data was touched")
+      val empty = s"$base/empty"
+      assert(fs(empty).mkdirs(new Path(empty)))
+      Sinks.swapWrite(Seq((3L, "c")).toDF("id", "v"), empty)
+      assert(fs(empty).exists(new Path(s"$empty/gen-0/${Sinks.GenReadyMarker}")))
+      assert(rowsOf(empty) == Set((3L, "c")))
     }
   }
 
   test("crash windows: unready carcass cleaned; ready-but-unpointed " +
        "promoted by recoverSwap; mid-pointer-update falls back to the " +
        "newest ready generation") {
-    withPointer {
-      val base = java.nio.file.Files.createTempDirectory("ptr_cw").toString
+    withTempDir("ptr_cw") { base =>
       val idx = s"$base/idx"
       Sinks.swapWrite(Seq((1L, "a")).toDF("id", "v"), idx)
       val f = fs(idx)
@@ -245,52 +177,17 @@ class PointerSwapSpec extends SparkSpec {
     }
   }
 
-  test("a protocol switch finishes stranded RENAME-protocol residue: a " +
-       "marked .next promotes (recoverSwap's rename arm), carcass " +
-       "siblings are cleared, and the first pointer swap migrates") {
-    withPointer {
-      val base = java.nio.file.Files.createTempDirectory("ptr_res").toString
-      val idx = s"$base/idx"
-      val f = fs(idx)
-      // the between-renames crash of a rename-protocol life: live dir
-      // missing, completed marked .next
-      Seq((1L, "a")).toDF("id", "v").write.parquet(s"$idx.next")
-      f.create(new Path(s"$idx.next/_SWAP_READY"), true).close()
-      // restart: recoverSwap promotes via its rename arm (the layout is
-      // not pointer yet), THEN the maintain generation reads the live
-      // data and swap-writes back — migrating to pointer layout
-      assert(Sinks.recoverSwap(spark, idx))
-      val maintained = graft.streaming.Streams
-        .readIndex(spark, idx, recursive = false)
-        .union(Seq((2L, "b")).toDF("id", "v"))
-      Sinks.swapWrite(maintained, idx)
-      assert(rowsOf(idx) == Set((1L, "a"), (2L, "b")))
-      assert(!f.exists(new Path(s"$idx.next")) &&
-        !f.exists(new Path(s"$idx.old")))
-      assert(f.exists(new Path(s"$idx/${Sinks.PointerFile}")))
-      // and an unpromoted marked .next BESIDE a live dir follows the
-      // rename arm's documented redo rule: discarded at the next swap
-      Seq((9L, "junk")).toDF("id", "v").write.parquet(s"$idx.next")
-      f.create(new Path(s"$idx.next/_SWAP_READY"), true).close()
-      Sinks.swapWrite(Seq((3L, "c")).toDF("id", "v"), idx)
-      assert(!f.exists(new Path(s"$idx.next")))
-      assert(rowsOf(idx) == Set((3L, "c")))
-    }
-  }
-
   test("an in-flight reader frame survives a full generation swap: " +
        "retention keeps the previous generation's files on disk") {
-    withPointer {
-      val base = java.nio.file.Files.createTempDirectory("ptr_rd").toString
+    withTempDir("ptr_rd") { base =>
       val idx = s"$base/idx"
       Sinks.swapWrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), idx)
       // the reader resolved gen-0 and its file index listed gen-0's files
       val frame = graft.streaming.Streams.readIndex(spark, idx,
         recursive = false)
       assert(frame.count() == 2)
-      // a new generation lands — the rename protocol's equivalent moment
-      // deletes the old dir within microseconds; the pointer protocol's
-      // retention (keepGenerations = 2) keeps gen-0 intact
+      // a new generation lands; retention (keepGenerations = 2) keeps
+      // gen-0 intact under the running frame
       Sinks.swapWrite(Seq((9L, "z")).toDF("id", "v"), idx)
       assert(frame.select(col("id")).as[Long].collect().toSet == Set(1L, 2L),
         "the pre-swap frame must keep reading its own generation")
@@ -300,7 +197,16 @@ class PointerSwapSpec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // the MaintainCrashSpec identity, re-run under the pointer protocol
+  // crash injection into the ONLINE maintain loop: kill a generation
+  // inside writeLexDelta's swaps, in each crash window, and assert the
+  // RESTARTED stream (same checkpoint — Structured Streaming replays the
+  // uncommitted micro-batch) converges to a from-scratch rebuild over the
+  // maintained membership. The levers: lexIndexDelta runs recoverSwap on
+  // all four dirs before listing them, and the delta apply is IDEMPOTENT
+  // (Dedup.replaceIdFrame), so replaying a batch whose swaps PARTIALLY
+  // landed still converges. The crash states are installed directly
+  // between two AvailableNow drains — deterministic, where killing a
+  // thread mid-swap is not.
   // ------------------------------------------------------------------
 
   private val corpus = Seq(
@@ -338,28 +244,29 @@ class PointerSwapSpec extends SparkSpec {
   private def runWindow(tag: String)(
       crash: (String, (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)) => Unit): Unit = withPointer {
-    val base = java.nio.file.Files.createTempDirectory(s"ptrcrash_$tag").toString
+        org.apache.spark.sql.DataFrame)) => Unit): Unit =
+    withTempDir(s"ptrcrash_$tag") { base =>
     val inDir = s"$base/in"; val idxDir = s"$base/index"; val ckpt = s"$base/ckpt"
-    // bootstrap writes FLAT — the first maintain generation migrates each
-    // subdir to pointer layout (exercised on every window)
+    // the bootstrap build lands as every artifact's gen-0
     Search.writeLexIndex(corpus.toDF("doc_id", "text"), "doc_id", "text",
       idxDir, buckets = 8)
     fileA.toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(inDir)
-    drain(inDir, idxDir, ckpt)
-    assert(fs(idxDir).exists(
-      new Path(s"$idxDir/postings/${Sinks.PointerFile}")),
-      "maintain generation did not migrate to pointer layout")
+    drain(inDir, idxDir, ckpt) // generation A lands, batch 0 commits
+    assert(fs(idxDir).exists(new Path(s"$idxDir/postings/gen-1")),
+      "the maintain generation did not land as gen-1")
+    // batch B becomes visible but is NEVER committed: the crash windows
+    // below are states the loop body leaves when killed mid-writeLexDelta
     fileB.toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(inDir)
     val delta = Search.lexIndexDelta(fileB.toDF("doc_id", "text"),
       "doc_id", "text", idxDir, retiredIds.toDF("id"))
     crash(idxDir, delta)
     graft.Caching.drain()
+    // restart: same checkpoint → the loop replays batch B against
+    // whatever the crash left, runs recovery, and must converge
     drain(inDir, idxDir, ckpt)
-    val rebuildDir = java.nio.file.Files
-      .createTempDirectory(s"ptrcrash_rb_$tag").toString
+    val rebuildDir = s"$base/rebuild"
     Search.writeLexIndex(membership.toDF("doc_id", "text"), "doc_id", "text",
       rebuildDir, buckets = 8)
     assert(postsOf(idxDir) == postsOf(rebuildDir),

@@ -516,7 +516,8 @@ class PropertySpec extends SparkSpec {
                 col("bucket").cast("long"))
               .as[(Long, Long, String, Long, Long)].collect().toSet
           val ok = rows(posts) ==
-            rows(spark.read.parquet(s"$dir2/postings"))
+            rows(graft.streaming.Streams.readIndex(spark, s"$dir2/postings",
+              recursive = false))
           graft.Caching.drain()
           ok
         }}

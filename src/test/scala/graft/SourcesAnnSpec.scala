@@ -227,14 +227,14 @@ class SourcesAnnSpec extends SparkSpec {
     // would silently swap the corpus size and the total length
     val dirR = java.nio.file.Files.createTempDirectory("lexidx_r").toString
     Search.writeLexIndex(docs, "doc_id", "text", dirR, buckets = 8)
-    val st0 = spark.read.parquet(s"$dirR/stats").head()
-    Seq((st0.getAs[Long]("sumdl"), st0.getAs[Long]("n"), st0.getAs[Int]("buckets")))
-      .toDF("sumdl", "n", "buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dirR/stats")
+    val st0 = graft.streaming.Streams.readIndex(spark, s"$dirR/stats").head()
+    graft.operators.Sinks.swapWrite(
+      Seq((st0.getAs[Long]("sumdl"), st0.getAs[Long]("n"), st0.getAs[Int]("buckets")))
+        .toDF("sumdl", "n", "buckets").coalesce(1), s"$dirR/stats")
     assert(Search.bm25FromIndex(spark, dirR, Seq("spark", "common"), k = 5)
       .as[(Long, Double)].collect().toSeq == want)
     // the empty doc reached the corpus stats (n=5), not the postings
-    val st = spark.read.parquet(s"$dir/stats").head()
+    val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats").head()
     assert(st.getLong(0) == 5L && st.getLong(1) == 20L)
     // term routing reaches the scan as a PARTITION filter on the
     // bucket-partitioned layout — pruned at file-listing time
@@ -283,18 +283,20 @@ class SourcesAnnSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "dl", "term", "tf", "bucket")
         .as[(Long, Long, String, Long, Long)].collect().toSet
-    assert(rows(posts) == rows(spark.read.parquet(s"$dir2/postings")
+    def stored(sub: String) =
+      graft.streaming.Streams.readIndex(spark, s"$dir2/$sub", recursive = false)
+    assert(rows(posts) == rows(stored("postings")
       .select(col("id"), col("dl"), col("term"), col("tf"),
         col("bucket").cast("long"))))
     assert(doclens.as[(Long, Long)].collect().toSet ==
-      spark.read.parquet(s"$dir2/doclens").as[(Long, Long)].collect().toSet)
+      stored("doclens").as[(Long, Long)].collect().toSet)
     assert(stats.select("n", "sumdl").as[(Long, Long)].head() ==
-      spark.read.parquet(s"$dir2/stats").select("n", "sumdl")
+      stored("stats").select("n", "sumdl")
         .as[(Long, Long)].head())
     // the maintained terms table ≡ the rebuilt one (df + bucket per term)
     assert(terms.select("term", "df", "bucket")
         .as[(String, Long, Long)].collect().toSet ==
-      spark.read.parquet(s"$dir2/terms")
+      stored("terms")
         .select(col("term"), col("df"), col("bucket").cast("long"))
         .as[(String, Long, Long)].collect().toSet)
   }
@@ -409,9 +411,10 @@ class SourcesAnnSpec extends SparkSpec {
       assert(stopped(e2, 4L, Set.empty), s"handle: $e2")
       assert(e1.get.gen != e2.get.gen || e1.get.guard != e2.get.guard,
         "the generation key (terms/ mtime) must rotate across a swapWrite")
-      assert(e1.get.gen != e2.get.gen, "a rename-layout swap must rotate the token")
-      // in-place writeLexIndex overwrite: same live dirs, same n (4), only
-      // the mtimes move — common is back to 3/4 and must be stopped again
+      assert(e1.get.gen != e2.get.gen, "a maintain swap must rotate the token")
+      assert(e2.get.gen.forall(_._1.endsWith("/gen-1")), s"${e2.get.gen}")
+      // writeLexIndex over the live index: same n (4), the next generation
+      // of every artifact — common is back to 3/4 and must be stopped again
       Search.writeLexIndex(Seq((1L, "spark common alpha"), (2L, "spark common"),
         (3L, "common rare"), (4L, "gamma")).toDF("doc_id", "text"),
         "doc_id", "text", dir, buckets = 8)
@@ -419,21 +422,15 @@ class SourcesAnnSpec extends SparkSpec {
         "an in-place overwrite must rotate the handle")
       val e3 = Search.lexHandleEntry(dir)
       assert(stopped(e3, 4L, Set("common")), s"handle: $e3")
-      assert(e3.get.gen.map(_._1) == e2.get.gen.map(_._1) &&
-        e3.get.gen != e2.get.gen, s"${e2.get.gen} -> ${e3.get.gen}")
-      // pointer layout: the first pointer swap migrates each artifact to
-      // gen-0/ — the live paths move; retiring doc 1 leaves common 2/3 =
-      // 667‰ ≤ 700, so common survives
-      val key = "spark.graft.swap.protocol"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "pointer")
-      try maintain(Nil, Seq(1L))
-      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(e3.get.gen.forall(_._1.endsWith("/gen-2")), s"${e3.get.gen}")
+      // a second maintain: retiring doc 1 leaves common 2/3 = 667‰ ≤ 700,
+      // so common survives
+      maintain(Nil, Seq(1L))
       assert(probe(Seq("spark", "common"), 700) ==
         probe(Seq("spark", "common"), 1000))
       val e4 = Search.lexHandleEntry(dir)
       assert(stopped(e4, 3L, Set.empty), s"handle: $e4")
-      assert(e4.get.gen.forall(_._1.endsWith("/gen-0")), s"${e4.get.gen}")
+      assert(e4.get.gen.forall(_._1.endsWith("/gen-3")), s"${e4.get.gen}")
       graft.Caching.drain()
       // pre-guard layout: delete terms/ entirely — the guarded DEFAULT must
       // warn-and-fallback to the unguarded probe, not fail at probe time
@@ -469,13 +466,16 @@ class SourcesAnnSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
       Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
       assert(probe().nonEmpty) // builds the generation's handle
-      val subs = Seq("stats", "postings", "terms")
-        .map(sub => new org.apache.hadoop.fs.Path(s"$dir/$sub"))
+      val before = Search.lexHandleEntry(dir).map(_.gen.map(_._1))
+      val subs = Seq("stats", "postings", "terms").flatMap(sub =>
+        Seq(s"$dir/$sub", s"$dir/$sub/gen-0").map(new org.apache.hadoop.fs.Path(_)))
       val fs = subs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val mtimes = subs.map(fs.getFileStatus(_).getModificationTime)
-      // another corpus and bucket count under the same paths, with the
-      // directory mtimes put back: what a store with synthetic directory
-      // mtimes shows after an in-place rebuild
+      // deleted and rebuilt with another corpus and bucket count: the
+      // rebuild lands at gen-0 again, under the same live paths, and the
+      // directory mtimes are put back — what a store with synthetic
+      // directory mtimes shows
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
       Search.writeLexIndex(rebuilt, "doc_id", "text", dir, buckets = 5)
       subs.zip(mtimes).foreach { case (p, t) => fs.setTimes(p, t, -1L) }
       assert(subs.map(fs.getFileStatus(_).getModificationTime) == mtimes)
@@ -484,6 +484,7 @@ class SourcesAnnSpec extends SparkSpec {
       assert(probe() == want && want.nonEmpty)
       val h = Search.lexHandleEntry(dir)
       assert(h.exists(e => e.n == 6L && e.buckets == 5), s"handle: $h")
+      assert(h.map(_.gen.map(_._1)) == before, s"live paths moved: $h")
       graft.Caching.drain()
     }
   }

@@ -230,7 +230,8 @@ class SqJlSpec extends SparkSpec {
     graft.operators.Sinks.swapWrite(
       Sq.indexCodesDelta(a2, "vec_id", "embedding", dir, r2),
       s"$dir/codes", Seq("cell"))
-    val maintained = spark.read.parquet(s"$dir/codes")
+    val maintained = graft.streaming.Streams.readIndex(spark, s"$dir/codes",
+        recursive = false)
       .select(col("id"), col("cell").cast("string"), col("codes"))
       .as[(Long, String, Seq[Int])].collect().toSet
     // one re-encode of the FINAL membership under the same frozen model

@@ -233,6 +233,35 @@ class StreamsSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(idxDir + ".next")))
   }
 
+  test("compactIndex throws on a failed rename and leaves the live index whole") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.failrename.impl", classOf[FailOldRenameFs].getName)
+    hc.setBoolean("fs.failrename.impl.disable.cache", true)
+    try withTempDir("graft_idxfail") { base =>
+      val idxDir = s"$base/index"
+      Seq((1L, 0, "k1"), (2L, 1, "k2")).toDF("id", "band", "band_key")
+        .write.parquet(idxDir)
+      Seq((3L, 0, "k3")).toDF("id", "band", "band_key")
+        .write.parquet(s"$idxDir/batch_1")
+      def rows() = spark.read.option("recursiveFileLookup", "true")
+        .parquet(idxDir).as[(Long, Int, String)].collect().toSet
+      val before = rows()
+      assert(before.size == 3)
+      // the same directory through a filesystem whose rename onto
+      // <dir>.old returns false, as Hadoop stores signal most failures
+      val ex = intercept[IllegalArgumentException] {
+        Streams.compactIndex(spark, s"failrename://$idxDir")
+      }
+      assert(ex.getMessage.contains("rename"), ex.getMessage)
+      assert(rows() == before)
+      assert(new java.io.File(s"$idxDir/batch_1").isDirectory,
+        "the live batch tree was touched")
+    } finally {
+      hc.unset("fs.failrename.impl")
+      hc.unset("fs.failrename.impl.disable.cache")
+    }
+  }
+
   test("readIndex bridges the compaction swap window, fails loudly on a " +
        "stranded swap, and bootstraps empty with a schema") {
     val base = java.nio.file.Files.createTempDirectory("graft_idxrace").toString
@@ -684,4 +713,16 @@ class StreamsSpec extends SparkSpec {
         (1L, 1L, 0L, 50L, 2L), (1L, 1L, 0L, 60L, 3L), (1L, 2L, 300L, 300L, 1L)))
     } finally q.stop()
   }
+}
+
+/** The local filesystem under the `failrename` scheme, except that a
+  * rename onto a `*.old` path returns false — the way Hadoop stores report
+  * most failures, without throwing.
+  */
+class FailOldRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def getScheme: String = "failrename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.endsWith(".old") && super.rename(src, dst)
 }
