@@ -855,7 +855,7 @@ object EntryQueriesCore {
       Sinks.swapWrite(
         T(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey"),
         idx, Seq("c_nationkey"))
-      def live() = graft.streaming.Streams.readIndex(s, idx, recursive = false)
+      def live() = graft.streaming.Streams.readIndex(s, idx)
       Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
       live().select(col("c_custkey"),
         col("c_name"), col("c_nationkey").cast(LongType).as("c_nationkey"))
@@ -869,7 +869,7 @@ object EntryQueriesCore {
       Sinks.swapWrite(
         T(s, dir, "customer").select("c_custkey", "c_name", "c_nationkey"),
         idx, Seq("c_nationkey"))
-      def live() = graft.streaming.Streams.readIndex(s, idx, recursive = false)
+      def live() = graft.streaming.Streams.readIndex(s, idx)
       Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
       Sinks.swapWrite(live(), idx, Seq("c_nationkey"))
       val gen0 = new org.apache.hadoop.fs.Path(idx, "gen-0")

@@ -505,7 +505,7 @@ object EntryQueriesDedup {
         }
       }
       q.awaitTermination()
-      graft.streaming.Streams.readIndex(s, s"$idxDir/postings", recursive = false)
+      graft.streaming.Streams.readIndex(s, s"$idxDir/postings")
         .select(col("id").as("doc_id"), col("term"), col("tf"), col("dl"),
           col("bucket").cast(LongType).as("bucket"))
     }),
@@ -764,7 +764,7 @@ object EntryQueriesDedup {
         }
       }
       q.awaitTermination()
-      graft.streaming.Streams.readIndex(s, s"$idxDir/codes", recursive = false)
+      graft.streaming.Streams.readIndex(s, s"$idxDir/codes")
         .select(col("id").as("vec_id"),
           element_at(col("codes"), 1).cast(LongType).as("code0"),
           element_at(col("codes"), 2).cast(LongType).as("code1"))
@@ -873,8 +873,8 @@ object EntryQueriesDedup {
       val base = java.nio.file.Files.createTempDirectory("graft_stream_idxm").toString
       val inDir = s"$base/in"; val idxDir = s"$base/index"
       val verdictDir = s"$base/verdicts"; val ckpt = s"$base/ckpt"
-      Dedup.bandKeysOf(corpus, "doc_id", "text", 16, 4, 4)
-        .write.mode("overwrite").parquet(idxDir)
+      graft.operators.Sinks.swapWrite(
+        Dedup.bandKeysOf(corpus, "doc_id", "text", 16, 4, 4), idxDir)
       delta.repartition(2).write.mode("overwrite").parquet(inDir)
       val stream = graft.streaming.Streams.watchDirectory(s, inDir,
         format = "parquet", schemaDdl = Some(delta.schema.toDDL),
@@ -882,8 +882,8 @@ object EntryQueriesDedup {
       val q = graft.streaming.Streams.indexMaintainStream(stream, "doc_id",
         "text", idxDir, verdictDir, ckpt, 16, 4, 4)
       q.awaitTermination()
-      // the maintained index = bootstrap files + per-batch subdirs
-      s.read.option("recursiveFileLookup", "true").parquet(idxDir)
+      // the maintained index = the bootstrap generation + the deltas
+      graft.streaming.Streams.readIndex(s, idxDir)
     }),
     // STREAMING LSH near-dup: the stateful twin of the G3 flagship path.
     // Banded minhash buckets live as keyed state — (min_id, n_members)
@@ -1434,14 +1434,14 @@ object EntryQueriesDedup {
           // unpointed BEFORE listing the prints dir (winnowIndexDelta takes
           // the frame, so the loop owns the read — and the recovery)
           graft.operators.Sinks.recoverSwap(s, idxDir)
-          val idx = graft.streaming.Streams.readIndex(s, idxDir, recursive = false)
+          val idx = graft.streaming.Streams.readIndex(s, idxDir)
           graft.operators.Sinks.swapWrite(
             Dedup.winnowIndexDelta(idx, batch, "doc_id", "text", retired,
               k = 8, w = 4), idxDir)
         }
       }
       q.awaitTermination()
-      graft.streaming.Streams.readIndex(s, idxDir, recursive = false)
+      graft.streaming.Streams.readIndex(s, idxDir)
         .select(col("id").as("doc_id"), col("pos"), col("print"))
     }),
     "q_cosine_neardup" -> ((s, dir) =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, col, expr, lit, max, min}
 
@@ -279,18 +280,28 @@ object Sinks {
     * resolved `_CURRENT` within the last keepMinAgeMs finds every file it
     * listed", which the count bound alone cannot promise under
     * back-to-back maintain bursts (plans/LAYOUT.md).
+    *
+    * Delta log: a dir may also hold `deltas/batch_<id>/` appends (see
+    * [[deltaPath]]). `watermark` is the highest batch id folded into this
+    * generation, written as the content of its `_GEN_READY` before the
+    * pointer flips (no watermark: an empty marker). Readers scan the live
+    * generation plus the deltas above its watermark ([[resolveLive]]), and
+    * retention deletes each delta at or below the lowest watermark among
+    * the views it keeps — the view before `gen-0`, which read every delta,
+    * counts as one while `gen-0` survives.
     */
   def swapWrite(df: DataFrame, dir: String,
-                partitionCols: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
+                partitionCols: Seq[String] = Nil,
+                watermark: Option[Long] = None): Unit = {
     val spark = df.sparkSession
     val d = new Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keepGens = spark.conf.get("spark.graft.swap.keepGenerations", "2").toInt
     require(keepGens >= 1, s"keepGenerations must be >= 1, got $keepGens")
-    require(!fs.exists(d) || fs.listStatus(d).isEmpty || isPointerLayout(fs, d),
+    val entries = listing(fs, d)
+    require(entries.isEmpty || isPointerLayout(entries),
       s"swapWrite: $dir holds data but is not a generation-pointer " +
-        "directory (no gen-N/ or _CURRENT); write it anew through swapWrite")
+        "directory (no gen-N/, _CURRENT or deltas/); write it anew through swapWrite")
     // every delete result is CHECKED: Hadoop FileSystem signals most
     // failures by returning false, not throwing
     def deleteOrDie(p: Path): Unit =
@@ -299,7 +310,7 @@ object Sinks {
     val cur = readPointer(fs, d)
     // clean unready carcasses (a crashed write's partial generation is
     // referenced by nothing; the pointed generation is never touched)
-    listGens(fs, d).filterNot { case (n, p) =>
+    numbered(entries, GenPrefix).filterNot { case (n, p) =>
       cur.contains(n) || genReady(fs, p)
     }.foreach { case (_, p) => deleteOrDie(p) }
     val nextN =
@@ -308,7 +319,9 @@ object Sinks {
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(gen.toString)
-    fs.create(new Path(gen, GenReadyMarker), true).close()
+    val marker = fs.create(new Path(gen, GenReadyMarker), true)
+    try watermark.foreach(w => marker.write(w.toString.getBytes("UTF-8")))
+    finally marker.close()
     writePointer(fs, d, nextN)
     // retention: the new generation + its keepGens-1 newest predecessors
     // always survive; `spark.graft.swap.keepMinAgeMs` (default 0 = count
@@ -341,10 +354,20 @@ object Sinks {
     def supersededAgeMs(n: Long): Long =
       readyGens.find(_._1 > n).flatMap(g => readyMtime(g._2))
         .map(nowMs - _).getOrElse(0L)
-    readyGens.filter(_._1 != nextN)
+    // delta readers hold views, not only generations: the view before
+    // gen-0 (every delta, no generation) retires as a generation -1
+    val views = (if (readyGens.headOption.exists(_._1 == 0L)) Seq(-1L -> None)
+                 else Nil) ++ readyGens.map { case (n, p) => n -> Some(p) }
+    val retired = views.filter(_._1 != nextN)
       .dropRight(keepGens - 1)
       .filter { case (n, _) => supersededAgeMs(n) >= keepMinAgeMs }
-      .foreach { case (_, p) => deleteOrDie(p) }
+    retired.foreach { case (_, p) => p.foreach(deleteOrDie) }
+    val deltas = deltasIn(fs, d)
+    if (deltas.nonEmpty) {
+      val floor = views.filterNot(retired.contains)
+        .map(_._2.flatMap(watermarkOf(fs, _)).getOrElse(-1L)).min
+      deltas.filter(_._1 <= floor).foreach { case (_, p) => deleteOrDie(p) }
+    }
   }
 
   /** Finish a [[swapWrite]] interrupted by a crash — the RESTART step a
@@ -356,7 +379,7 @@ object Sinks {
     * dir without generations is left alone.
     */
   def recoverSwap(spark: SparkSession, dir: String): Boolean = {
-    val d = new org.apache.hadoop.fs.Path(dir)
+    val d = new Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     listGens(fs, d).filter(g => genReady(fs, g._2)).lastOption.map(_._1) match {
       case Some(n) if !readPointer(fs, d).contains(n) => writePointer(fs, d, n); true
@@ -365,34 +388,66 @@ object Sinks {
   }
 
   /** The pointer file naming a live generation (`gen-N`) inside a
-    * pointer-layout directory, and the per-generation completion marker.
-    * Both underscore-prefixed so parquet readers never see them.
+    * pointer-layout directory, the per-generation completion marker
+    * (holding the generation's watermark, if any), and the delta log.
+    * The files are underscore-prefixed so parquet readers never see them.
     */
   val PointerFile = "_CURRENT"
   val GenReadyMarker = "_GEN_READY"
+  val DeltaDir = "deltas"
   private val GenPrefix = "gen-"
+  private val BatchPrefix = "batch_"
 
-  private[graft] def isPointerLayout(fs: org.apache.hadoop.fs.FileSystem,
-                                     d: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(d, PointerFile)) ||
-      listGens(fs, d).nonEmpty
+  /** Where an appender writes micro-batch `batchId`'s rows in the delta
+    * log of pointer-layout dir `dir` (readers see them through
+    * [[resolveLive]] until a [[swapWrite]] with a watermark folds them).
+    */
+  def deltaPath(dir: String, batchId: Long): String =
+    s"$dir/$DeltaDir/$BatchPrefix$batchId"
 
-  private def genNumber(name: String): Option[Long] =
-    if (name.startsWith(GenPrefix)) name.drop(GenPrefix.length).toLongOption
+  private def listing(fs: FileSystem, d: Path): Seq[FileStatus] =
+    try fs.listStatus(d).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  private def isPointerLayout(entries: Seq[FileStatus]): Boolean =
+    entries.exists { st =>
+      val name = st.getPath.getName
+      name == PointerFile || name == DeltaDir || numberAfter(GenPrefix, name).nonEmpty
+    }
+
+  private def numberAfter(prefix: String, name: String): Option[Long] =
+    if (name.startsWith(prefix)) name.drop(prefix.length).toLongOption
     else None
 
-  /** generation directories under `d`, numerically ascending. */
-  private def listGens(fs: org.apache.hadoop.fs.FileSystem,
-                       d: org.apache.hadoop.fs.Path)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq.filter(_.isDirectory)
-      .flatMap(st => genNumber(st.getPath.getName).map(_ -> st.getPath))
+  /** the `<prefix><n>` subdirectories of a listing, by n ascending. */
+  private def numbered(entries: Seq[FileStatus], prefix: String): Seq[(Long, Path)] =
+    entries.filter(_.isDirectory)
+      .flatMap(st => numberAfter(prefix, st.getPath.getName).map(_ -> st.getPath))
       .sortBy(_._1)
 
-  private def genReady(fs: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, GenReadyMarker))
+  private def listGens(fs: FileSystem, d: Path): Seq[(Long, Path)] =
+    numbered(listing(fs, d), GenPrefix)
+
+  private def deltasIn(fs: FileSystem, d: Path): Seq[(Long, Path)] =
+    numbered(listing(fs, new Path(d, DeltaDir)), BatchPrefix)
+
+  private def genReady(fs: FileSystem, p: Path): Boolean =
+    fs.exists(new Path(p, GenReadyMarker))
+
+  /** the highest batch id folded into generation `p`: its `_GEN_READY`
+    * content, None when empty. */
+  private def watermarkOf(fs: FileSystem, p: Path): Option[Long] =
+    readSmall(fs, new Path(p, GenReadyMarker)).flatMap(_.toLongOption)
+
+  /** a small file's trimmed UTF-8 content, None when it is missing. */
+  private def readSmall(fs: FileSystem, f: Path): Option[String] =
+    try {
+      val in = fs.open(f)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
+      finally in.close()
+    } catch {
+      case _: java.io.FileNotFoundException => None
+    }
 
   /** the generation number `_CURRENT` names, if the pointer exists and
     * parses (a torn/empty pointer — impossible under atomic PUT, handled
@@ -402,15 +457,8 @@ object Sinks {
     * opened, so a vanished pointer reads as absent too — the same
     * fallback covers it.
     */
-  private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
-                          d: org.apache.hadoop.fs.Path): Option[Long] =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(d, PointerFile))
-      try genNumber(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException => None
-    }
+  private def readPointer(fs: FileSystem, d: Path): Option[Long] =
+    readSmall(fs, new Path(d, PointerFile)).flatMap(numberAfter(GenPrefix, _))
 
   /** Atomically re-point `_CURRENT` at `gen`: write `_CURRENT.tmp`,
     * delete the old pointer, rename the tmp in. On an object store each
@@ -420,10 +468,9 @@ object Sinks {
     * rename, which readers resolve by falling back to the newest READY
     * generation (= the one this pointer names).
     */
-  private def writePointer(fs: org.apache.hadoop.fs.FileSystem,
-                           d: org.apache.hadoop.fs.Path, gen: Long): Unit = {
-    val pf = new org.apache.hadoop.fs.Path(d, PointerFile)
-    val tmp = new org.apache.hadoop.fs.Path(d, PointerFile + ".tmp")
+  private def writePointer(fs: FileSystem, d: Path, gen: Long): Unit = {
+    val pf = new Path(d, PointerFile)
+    val tmp = new Path(d, PointerFile + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(s"$GenPrefix$gen".getBytes("UTF-8")) finally out.close()
     require(!fs.exists(pf) || fs.delete(pf, false),
@@ -431,26 +478,41 @@ object Sinks {
     require(fs.rename(tmp, pf), s"writePointer: rename $tmp -> $pf failed")
   }
 
-  /** The one path a READER scans, or None when nothing is live. For a
-    * pointer-layout dir that is its live `gen-N` (`_CURRENT`, falling back
-    * to the newest READY generation while the pointer is mid-update), and
-    * None while no generation is ready yet. Any other existing dir — the
-    * append-only [[graft.streaming.Streams.indexMaintainStream]] layout —
-    * is its own live path; a missing dir has none. Every stored-index read
-    * goes through here, via [[graft.streaming.Streams.readIndex]].
+  /** What a reader scans in a pointer-layout dir: `paths` (empty when
+    * nothing is live) and `watermark`, the highest delta-log batch id
+    * they cover (None when they cover none).
     */
-  def resolveLive(spark: SparkSession, dir: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
+  final case class LiveView(paths: Seq[String], watermark: Option[Long])
+
+  /** The paths a READER scans. The live generation is the `gen-N` that
+    * `_CURRENT` names, falling back to the newest READY generation while
+    * the pointer is mid-update, and none while no generation is ready
+    * yet. A dir with a delta log adds every `deltas/batch_<id>` above that
+    * generation's watermark (all of them when no generation is live). A
+    * missing or empty dir has nothing live; a non-empty dir in any other
+    * layout is refused, as [[swapWrite]] refuses it. A dir without a
+    * delta log costs one pointer read and one listing. Every stored-index
+    * read goes through here, via [[graft.streaming.Streams.readIndex]].
+    */
+  def resolveLive(spark: SparkSession, dir: String): LiveView = {
     val d = new Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readPointer(fs, d).map(n => new Path(d, s"$GenPrefix$n"))
-      .filter(fs.exists(_)).map(_.toString)
-      .orElse {
-        if (!fs.exists(d)) None
-        else if (!isPointerLayout(fs, d)) Some(dir)
-        else listGens(fs, d).filter(g => genReady(fs, g._2))
-          .lastOption.map(_._2.toString)
-      }
+    val pointed = readPointer(fs, d)
+    val entries = listing(fs, d)
+    require(entries.isEmpty || isPointerLayout(entries),
+      s"resolveLive: $dir holds data but is not a generation-pointer " +
+        "directory (no gen-N/, _CURRENT or deltas/); rewrite it through swapWrite")
+    val gens = numbered(entries, GenPrefix)
+    val gen = pointed.flatMap(n => gens.find(_._1 == n))
+      .orElse(gens.filter(g => genReady(fs, g._2)).lastOption).map(_._2)
+    if (!entries.exists(_.getPath.getName == DeltaDir))
+      LiveView(gen.map(_.toString).toSeq, None)
+    else {
+      val folded = gen.flatMap(watermarkOf(fs, _))
+      val deltas = deltasIn(fs, d).filter(b => folded.forall(b._1 > _))
+      LiveView(gen.map(_.toString).toSeq ++ deltas.map(_._2.toString),
+        (folded ++ deltas.map(_._1)).maxOption)
+    }
   }
 
   /** Small-file compaction: rewrite a parquet directory into

@@ -404,7 +404,7 @@ object MaxSim {
     // the probed-cell union across the batch: ≤ nlist ids, a bounded
     // collect that becomes a partition-pruning predicate on the layout
     val cells = probed.select("cell").distinct().collect().map(_.getString(0))
-    val mats = graft.streaming.Streams.readIndex(spark, s"$dir/mats", recursive = false)
+    val mats = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
       .filter(col("cell").isin(cells.toSeq: _*))
     val screened = mats.select(col("id").as("neighbor_id"), col("pool"), col("cell"))
       .join(broadcast(probed), Seq("cell"))
@@ -447,7 +447,7 @@ object MaxSim {
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted documents
     // replace any stored copy — idempotent under crash replay
     val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/mats", recursive = false)
+    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
       .join(broadcast(retire), Seq("id"), "left_anti")
       .select("id", "cell", "mat", "pool")
     // retire applies to STORED rows only — retire + admit = single-call

@@ -244,10 +244,18 @@ object Pq {
       cb.map { case (cid, cv) => (j, cid, cv.toSeq) }
     }.toDF("subspace", "cid", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/codebooks")
-    rotation.foreach { r =>
-      r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-        .toDF("i", "row")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/rotation")
+    val rotPath = new org.apache.hadoop.fs.Path(s"$dir/model/rotation")
+    rotation match {
+      case Some(r) =>
+        r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
+          .toDF("i", "row")
+          .coalesce(1).write.mode("overwrite").parquet(rotPath.toString)
+      case None =>
+        // an earlier rotated build's rotation would be applied at probe
+        // time to an unrotated model
+        val fs = rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        require(!fs.exists(rotPath) || fs.delete(rotPath, true),
+          s"Pq.writeIndex: delete stale $rotPath failed")
     }
     val celled = corpusR.select(col(idCol), col(vecCol),
       Ann.nearestCell(cents, col(vecCol)).as("cell"))
@@ -311,7 +319,7 @@ object Pq {
     // a bounded collect that turns routing into a partition-pruning
     // predicate on the cell-partitioned layout
     val cells = probed.select("cell").distinct().collect().map(_.getString(0))
-    val codes = graft.streaming.Streams.readIndex(spark, s"$dir/codes", recursive = false)
+    val codes = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
       .filter(col("cell").isin(cells.toSeq: _*))
     val scored = codes.join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("id"))
@@ -345,7 +353,7 @@ object Pq {
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors
     // replace any stored copy — idempotent under crash replay
     val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/codes", recursive = false)
+    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
       .join(broadcast(retire), Seq("id"), "left_anti")
       .select("id", "cell", "codes")
     // a stored rotation applies to the DELTA too — frozen-model encoding

@@ -373,7 +373,7 @@ object Search {
     // path above.
     graft.Jobs.labeled(spark, "lexindex: terms write") {
       Sinks.swapWrite(graft.streaming.Streams
-        .readIndex(spark, s"$dir/postings", recursive = false)
+        .readIndex(spark, s"$dir/postings")
         .groupBy("term").agg(count(lit(1)).as("df"))
         .withColumn("bucket", termBucket(col("term"), buckets))
         .repartition(buckets, col("bucket")), s"$dir/terms", Seq("bucket"))
@@ -459,14 +459,14 @@ object Search {
   private def lexGeneration(spark: org.apache.spark.sql.SparkSession,
                             dir: String): Seq[(String, Seq[(String, Long)])] =
     LexArtifacts.map { sub =>
-      val live = Sinks.resolveLive(spark, s"$dir/$sub")
-      val entries = live.toSeq.flatMap { l =>
+      val live = Sinks.resolveLive(spark, s"$dir/$sub").paths
+      val entries = live.flatMap { l =>
         val p = new org.apache.hadoop.fs.Path(l)
         try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .listStatus(p).toSeq.map(f => f.getPath.getName -> f.getModificationTime)
         catch { case _: java.io.FileNotFoundException => Nil }
       }
-      live.getOrElse("") -> entries
+      live.mkString(",") -> entries
     }
 
   /** The [[LexHandle]] of `dir`'s live generation: cached while the
@@ -480,10 +480,10 @@ object Search {
     if (hit != null && hit.gen == gen) hit
     else {
       val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats",
-        recursive = false, schema = Some(StatsSchema)).head()
+        schema = Some(StatsSchema)).head()
       val h = LexHandle(gen, st.getAs[Long]("n"), st.getAs[Long]("sumdl"),
         st.getAs[Int]("buckets"), graft.streaming.Streams.readIndex(spark,
-          s"$dir/postings", recursive = false).schema)
+          s"$dir/postings").schema)
       lexHandles.put(dir, h)
       h
     }
@@ -494,7 +494,7 @@ object Search {
   private def postingsOf(spark: org.apache.spark.sql.SparkSession,
                          dir: String, h: LexHandle): DataFrame =
     graft.streaming.Streams.readIndex(spark, s"$dir/postings",
-      recursive = false, schema = Some(h.postings))
+      schema = Some(h.postings))
 
   /** Dirs already warned about probing unguarded (pre-guard layout) — the
     * warning is per-dir, not per-probe, so a streaming probe loop does not
@@ -532,7 +532,7 @@ object Search {
         Unguarded
       } else {
         val stop = graft.streaming.Streams
-          .readIndex(spark, s"$dir/terms", recursive = false)
+          .readIndex(spark, s"$dir/terms")
           .filter(!dfCeilingOk(h.n, maxDfPermille))
           .select("term").limit(StopSetCacheCap + 1)
           .collect().map(_.getString(0)).toSet
@@ -594,7 +594,7 @@ object Search {
         case StopSet(stop)  => queryTerms.filterNot(stop)
         case ConsultPerProbe =>
           val tbks = queryTerms.map(t => Ann.md5Prefix60(t) % buckets).distinct
-          graft.streaming.Streams.readIndex(spark, s"$dir/terms", recursive = false)
+          graft.streaming.Streams.readIndex(spark, s"$dir/terms")
             .filter(col("bucket").isin(tbks: _*))
             .filter(col("term").isin(queryTerms: _*))
             .filter(dfCeilingOk(n, maxDfPermille))
@@ -652,7 +652,7 @@ object Search {
           val tbks = qAll.select(termBucket(col("term"), buckets).as("b"))
             .distinct().collect().map(_.getLong(0)) // bounded: <= buckets
           val survivors = graft.streaming.Streams
-            .readIndex(spark, s"$dir/terms", recursive = false)
+            .readIndex(spark, s"$dir/terms")
             .filter(col("bucket").isin(tbks.toSeq: _*))
             .filter(dfCeilingOk(n, maxDfPermille))
             .select("term")
@@ -756,7 +756,7 @@ object Search {
         col("__tc.tf").as("tf"))
       .withColumn("bucket", termBucket(col("term"), buckets))
     val posts = keptPosts.unionByName(freshPosts)
-    val doclens = graft.streaming.Streams.readIndex(spark, s"$dir/doclens", recursive = false)
+    val doclens = graft.streaming.Streams.readIndex(spark, s"$dir/doclens")
       .join(broadcast(retire), Seq("id"), "left_anti")
       .unionByName(toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl")))
     val stats = doclens.agg(count(lit(1)).as("n"),

@@ -237,7 +237,7 @@ object Sq {
       .withColumn("cell", Ann.probeCells(cents, col("__v"), nprobe))
       .select("query_id", "__qv", "cell")
     val cells = probed.select("cell").distinct().collect().map(_.getString(0))
-    val codes = graft.streaming.Streams.readIndex(spark, s"$dir/codes", recursive = false)
+    val codes = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
       .filter(col("cell").isin(cells.toSeq: _*))
     val scored = codes.join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("id"))
@@ -267,7 +267,7 @@ object Sq {
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors
     // replace any stored copy — idempotent under crash replay
     val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/codes", recursive = false)
+    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
       .join(broadcast(retire), Seq("id"), "left_anti")
       .select("id", "cell", "codes")
     val celled = admitted.select(col(idCol), col(vecCol),

@@ -549,15 +549,21 @@ object Streams {
     * batch-side [[graft.dedup.Dedup.indexDelta]] compaction, run on the
     * snapshot-diff cadence (daily), never inside the hot micro-batch loop.
     *
-    * Ordering and replay safety: appends land in per-batch subdirectories
-    * (`indexDir/batch_<id>`) written with OVERWRITE, and a replayed batch
-    * first DELETES its own subdirectory — so a crash anywhere between the
-    * append and the checkpoint commit re-runs the batch exactly: no
-    * duplicate key rows from a partial append, and no self-collision
-    * (without the delete, a replay would probe the crashed attempt's own
-    * band keys and flip every verdict to dup). The index read lists the
-    * directory tree fresh each batch (recursive lookup), so earlier
-    * batches' appends are visible and the current batch's are not.
+    * Layout: `indexDir` is a generation-pointer directory with a delta
+    * log — an optional live generation (a bootstrap or [[compactIndex]]
+    * output, written by [[graft.operators.Sinks.swapWrite]]) plus one
+    * `deltas/batch_<id>` per micro-batch. Readers go through
+    * [[readIndex]]; a dir in any other layout (e.g. flat bootstrap files)
+    * is refused there.
+    *
+    * Ordering and replay safety: each append is written with OVERWRITE,
+    * and a replayed batch first DELETES its own delta — so a crash
+    * anywhere between the append and the checkpoint commit re-runs the
+    * batch exactly: no duplicate key rows from a partial append, and no
+    * self-collision (without the delete, a replay would probe the
+    * crashed attempt's own band keys and flip every verdict to dup). The
+    * index is resolved fresh each batch, so earlier batches' appends are
+    * visible and the current batch's are not.
     *
     * Scale: per batch the corpus-sized side is the index SCAN (32-byte
     * keys, no text, pruned to band/band_key for the probe join), run ONCE
@@ -565,12 +571,6 @@ object Streams {
     * the batch side is delta-sized everywhere. State is the files
     * themselves — no streaming state store at all, so an unbounded crawl
     * holds nothing in executor memory between batches.
-    *
-    * Readers of the maintained index must use
-    * `spark.read.option("recursiveFileLookup", "true")` — the directory
-    * is bootstrap files + per-batch subdirectories. Periodic
-    * [[graft.dedup.Dedup.indexDelta]] compaction naturally flattens it
-    * back to one generation of files.
     */
   def indexMaintainStream(docs: DataFrame, idCol: String, textCol: String,
                           indexDir: String, verdictDir: String,
@@ -595,11 +595,11 @@ object Streams {
       // append and the checkpoint commit), drop its subdir before probing —
       // otherwise the replay probes its own band keys and every verdict
       // flips to dup_of_corpus
-      val ownDir = new org.apache.hadoop.fs.Path(s"$indexDir/batch_$id")
-      if (fs.exists(ownDir)) fs.delete(ownDir, true)
-      // readIndex: bootstrap (no dir yet) yields the empty index; a
-      // stranded compaction swap fails loudly instead of admitting
-      // everything against a phantom empty index
+      val ownDir = new org.apache.hadoop.fs.Path(
+        graft.operators.Sinks.deltaPath(indexDir, id))
+      require(!fs.exists(ownDir) || fs.delete(ownDir, true),
+        s"indexMaintainStream: delete $ownDir failed")
+      // readIndex: bootstrap (no dir yet) yields the empty index
       val index = readIndex(spark, indexDir, emptySchema = Some(emptySchema))
       val probed = graft.dedup.Dedup.incrementalNearDup(
         graft.dedup.Dedup.keepCanonical(batch, idCol, textCol,
@@ -618,53 +618,11 @@ object Streams {
           batch(idCol) === admittedIds("id"), "left_semi")
         graft.dedup.Dedup.bandKeysOf(admitted, idCol, textCol,
           numHashes, bands, rowsPerBand)
-          .write.mode("overwrite").parquet(s"$indexDir/batch_$id")
+          .write.mode("overwrite").parquet(graft.operators.Sinks.deltaPath(indexDir, id))
       } finally { admittedIds.unpersist(); batch.unpersist() }
     }
   }
 
-  /** Compact an [[indexMaintainStream]] index directory: flatten the
-    * bootstrap files + per-batch subdirectories back to ONE generation of
-    * files. Run it BETWEEN drains (the natural daily-crawl cadence is
-    * drain-with-AvailableNow → compact → next drain), never while the
-    * stream is writing: the stream's files-as-state contract means the
-    * directory IS the state, and compaction must not race an append.
-    * "Between drains" means after `awaitTermination` RETURNED — a drain
-    * that crashed has an uncommitted last batch, and compacting before the
-    * replay would fold that batch's own keys into the flattened
-    * generation where the replay's self-append hygiene (which deletes
-    * `batch_<id>`) can no longer remove them, flipping its verdicts to
-    * dup_of_corpus. Restart and finish the drain first, then compact.
-    *
-    * Crash-safe by rename protocol, and SELF-RECOVERING on restart:
-    *  1. write the distinct'd flattened rows to `<dir>.next`
-    *  2. rename `<dir>` → `<dir>.old`
-    *  3. rename `<dir>.next` → `<dir>`
-    *  4. delete `<dir>.old`
-    * A crash between 2 and 3 leaves no `<dir>`; calling compactIndex again
-    * first completes the swap (it checks for a stranded `.next`/`.old`
-    * pair) before doing new work — so the documented recovery rule is
-    * simply "run compactIndex to completion before restarting the stream".
-    * `distinct()` makes re-compaction idempotent even if a crashed earlier
-    * attempt left duplicate rows.
-    *
-    * CONCURRENCY CONTRACT (explicit, not just implied by the recipe):
-    * exactly ONE writer — never run compaction while the maintaining
-    * stream is draining, and never two compactions at once (the swap
-    * protocol has no lock). CONCURRENT READERS are allowed only through
-    * [[readIndex]], whose one-shot retry bridges the brief no-`<dir>`
-    * window between steps 2 and 3; a probe JOB already executing over the
-    * old generation's files must finish before compaction starts (its
-    * file splits die with the `.old` delete). The safe cadence remains
-    * drain → (quiesce probes) → compact → resume.
-    *
-    * Why compact at all: every micro-batch appends a `batch_<id>` subdir,
-    * and every later probe pays a recursive listing of ALL files — driver
-    * work that grows linearly with batch count (measured in
-    * plans/SCALE.md). Compaction resets that to one generation; the
-    * band/band_key payload is 32-byte keys, so even a corpus-sized rewrite
-    * is small next to the corpus itself.
-    */
   /** Streaming twin of [[graft.similarity.Mine.marginMine]] (G45 — the
     * last r8 family without one): NEW-snapshot embeddings arrive as a
     * stream and are margin-mined against the STORED corpus `tgt`. The
@@ -797,111 +755,68 @@ object Streams {
     Mine.marginFromTopK(fwd, bwd, tau, mutual)
   }
 
-  /** Read a stored index directory: the live generation of a
-    * [[graft.operators.Sinks.swapWrite]] directory, or the whole of an
-    * [[indexMaintainStream]] one (bootstrap files + per-batch subdirs),
-    * both through [[graft.operators.Sinks.resolveLive]]. A directory with
-    * nothing live — missing, in [[compactIndex]]'s rename window (between
-    * its step 2 and step 3 the directory does not exist for a moment), or
-    * a pointer directory whose first generation is still being written —
-    * is retried ONCE (after `onRetry`, default a 200 ms sleep — two
-    * renames take microseconds, so one retry is ample) before the index
-    * is concluded absent. Probes ([[graft.dedup.Dedup.incrementalNearDup]]
-    * / `winnowProbe` / ADC callers) should load through this instead of a
-    * bare `spark.read.parquet`.
-    *
-    * If the directory is still missing AND a stranded `<dir>.next` exists,
-    * a compaction crashed mid-swap: reading is impossible until the swap
-    * completes, so this throws with the recovery instruction (run
-    * [[compactIndex]] to completion) rather than fabricating an empty
-    * index — an empty-index probe would silently admit every delta row.
-    * Otherwise nothing live is the bootstrap case: `emptySchema` (when
-    * provided) yields an empty frame, else this throws.
-    *
-    * Scope of the guarantee: the retry covers the LISTING window only. A
-    * job still scanning old-generation FILES when a compaction deletes
-    * them will fail mid-flight — that overlap is excluded by contract
-    * (see [[compactIndex]]: one writer, compaction only between drains,
-    * probes launched during a compaction window retry here; probes
-    * launched before it must finish first). A swapWrite directory has no
-    * such window: its previous generations stay on disk until retention.
+  /** Read a stored index directory: the paths
+    * [[graft.operators.Sinks.resolveLive]] names — the live generation of
+    * a [[graft.operators.Sinks.swapWrite]] directory, plus the unfolded
+    * deltas of an [[indexMaintainStream]] one — read as given, so hive
+    * partition columns (`cell=…`, `bucket=…`) are inferred. A pointer dir
+    * that was once live always has a live generation (retention keeps
+    * it); nothing live means a missing dir, or a first build still being
+    * written. Then `emptySchema` (when provided) yields an empty frame,
+    * else this throws. Probes ([[graft.dedup.Dedup.incrementalNearDup]] /
+    * `winnowProbe` / ADC callers) load through this, never through a
+    * bare `spark.read.parquet`, which would fold retained generations
+    * together. A non-empty dir in any other layout is refused.
     *
     * `schema` skips Parquet schema inference (one Spark job per read) for
     * a caller that already knows the live generation's schema; unlike
     * `emptySchema` it does not turn a missing directory into an empty
-    * index.
+    * index. `recursive` is ignored: no lookup recurses.
     */
   def readIndex(spark: SparkSession, indexDir: String,
                 emptySchema: Option[org.apache.spark.sql.types.StructType] = None,
-                onRetry: () => Unit = () => Thread.sleep(200L),
-                recursive: Boolean = true,
+                recursive: Boolean = false,
                 schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    // apply the caller's schema when provided: an existing-but-FILELESS
-    // dir (batch 0 crashed pre-commit, replay deleted its own subdir —
-    // the indexMaintainStream hygiene step) has nothing to infer from,
-    // and bare parquet() would throw 'Unable to infer schema' on every
-    // restart, crash-looping a stream that readIndex's bootstrap
-    // contract says should see an EMPTY index
-    //
-    // recursive = false is the BATCH stored-index shape ([[Pq]]/[[Sq]]/
-    // [[MaxSim]]/Search probes): those layouts are hive-partitioned
-    // (cell=… / bucket=… directories), and recursiveFileLookup DISABLES
-    // partition inference — the probes' partition-pruning filters need
-    // the partition column discovered
-    val r0 = spark.read
-    val r = if (recursive) r0.option("recursiveFileLookup", "true") else r0
-    val rs = schema.orElse(emptySchema).fold(r)(sc => r.schema(sc))
-    def attempt(): Option[DataFrame] =
-      graft.operators.Sinks.resolveLive(spark, indexDir).map(rs.parquet(_))
-    attempt().orElse { onRetry(); attempt() }.getOrElse {
-      val next = new Path(indexDir + ".next")
-      if (next.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(next))
-        throw new IllegalStateException(
-          s"index dir $indexDir is missing but $indexDir.next exists: a " +
-            "compaction crashed mid-swap — run compactIndex to completion " +
-            "(it finishes the stranded swap first), then retry the probe")
-      emptySchema.map(sc => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
-        .getOrElse(throw new IllegalStateException(
-          s"index dir $indexDir does not exist or holds no ready generation " +
-            "(and no stranded swap to recover)"))
-    }
+    val live = graft.operators.Sinks.resolveLive(spark, indexDir).paths
+    // emptySchema applies to a live index too: an existing-but-FILELESS
+    // delta (batch 0 crashed pre-commit) has nothing to infer from
+    val r = schema.orElse(emptySchema).fold(spark.read)(spark.read.schema(_))
+    if (live.nonEmpty) r.parquet(live: _*)
+    else emptySchema.map(sc => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
+      .getOrElse(throw new IllegalStateException(
+        s"index dir $indexDir does not exist or holds no ready generation"))
   }
 
-  def compactIndex(spark: SparkSession, indexDir: String,
-                   partitions: Int = 0): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(indexDir)
-    val next = new Path(indexDir + ".next")
-    val old = new Path(indexDir + ".old")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a swapWrite (generation-pointer) dir is written whole, one generation
-    // at a time, and never takes appends: there is nothing to flatten, and
-    // the recursive read below would fold its retained generations together
-    require(!graft.operators.Sinks.isPointerLayout(fs, dir),
-      s"compactIndex: $indexDir is a generation-pointer directory; only " +
-        "the indexMaintainStream append layout is compacted")
-    // every rename/delete result is CHECKED (the swapWrite rule): Hadoop
-    // FileSystem signals most failures by returning false, and an
-    // unchecked false would return normally from a half-applied swap
-    def renameOrDie(from: Path, to: Path): Unit =
-      require(fs.rename(from, to), s"compactIndex: rename $from -> $to failed")
-    def deleteOrDie(p: Path): Unit =
-      require(!fs.exists(p) || fs.delete(p, true),
-        s"compactIndex: delete $p failed")
-    // recovery: a stranded swap from a crashed earlier run finishes first
-    if (!fs.exists(dir) && fs.exists(next)) renameOrDie(next, dir)
-    deleteOrDie(old)
-    deleteOrDie(next)
-    if (!fs.exists(dir)) return
-    val flat = spark.read.option("recursiveFileLookup", "true")
-      .parquet(indexDir).distinct()
-    (if (partitions > 0) flat.repartition(partitions) else flat)
-      .write.mode("overwrite").parquet(next.toString)
-    renameOrDie(dir, old)
-    renameOrDie(next, dir)
-    deleteOrDie(old)
+  /** Compact an [[indexMaintainStream]] index directory: one
+    * [[graft.operators.Sinks.swapWrite]] of the distinct live rows (the
+    * live generation plus its unfolded deltas), carrying the highest
+    * folded batch id as the new generation's watermark. Readers switch at
+    * the pointer flip; retention then deletes old generations and the
+    * deltas every kept view has folded, under the swapWrite reader SLA —
+    * so a probe already scanning keeps its files. A crash anywhere leaves
+    * the old view readable (an unready carcass is invisible; a
+    * ready-but-unpointed generation holds exactly the rows it folded),
+    * and the next compaction converges.
+    *
+    * Run it BETWEEN drains — after `awaitTermination` RETURNED, one
+    * writer at a time: a drain that crashed has an uncommitted last
+    * batch, and compacting before the replay would fold that batch's own
+    * keys, where the replay's self-append hygiene (which deletes its own
+    * delta) can no longer remove them, flipping its verdicts to
+    * dup_of_corpus. Restart and finish the drain first, then compact.
+    *
+    * Why compact at all: every later probe lists ALL deltas — driver
+    * work that grows linearly with batch count (plans/SCALE.md). The
+    * band/band_key payload is 32-byte keys, so even a corpus-sized
+    * rewrite is small next to the corpus itself.
+    */
+  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
+    val live = graft.operators.Sinks.resolveLive(spark, indexDir)
+    if (live.paths.nonEmpty)
+      graft.operators.Sinks.swapWrite(
+        spark.read.parquet(live.paths: _*).distinct(), indexDir,
+        watermark = live.watermark)
   }
 
   /** Run a micro-batch sink function (reference batch markers → foreachBatch

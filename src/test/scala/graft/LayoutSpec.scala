@@ -230,7 +230,7 @@ class LayoutSpec extends SparkSpec {
     withTempDir("swapw") { base =>
       val dir = s"$base/idx"
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def live() = graft.streaming.Streams.readIndex(spark, dir, recursive = false)
+      def live() = graft.streaming.Streams.readIndex(spark, dir)
       def rows = live()
         .select(col("id"), col("v"), col("cell").cast("long").as("cell"))
         .as[(Long, String, Long)].collect().toSet
@@ -297,28 +297,17 @@ class LayoutSpec extends SparkSpec {
     assert(bloom <= plain / 4, s"bloom read $bloom of $plain — no row-group skip")
   }
 
-  test("readIndex(recursive=false): hive partition column inferred, and a " +
-       "probe issued inside swapWrite's rename window retries through it") {
-    import org.apache.hadoop.fs.Path
+  test("readIndex infers a swapWrite generation's hive partition column") {
     withTempDir("swapri") { base =>
       val dir = s"$base/codes"
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val df = (0L until 12L).map(i => (i, i % 3)).toDF("id", "cell")
       Sinks.swapWrite(df, dir, Seq("cell"))
       // the batch stored-index probes (Pq/Sq/MaxSim/Search) read through
       // this shape: partition inference ON (recursiveFileLookup would drop
       // the cell column their pruning filters need)
-      val flat = graft.streaming.Streams.readIndex(spark, dir, recursive = false)
-      assert(flat.columns.contains("cell"), "partition column lost")
-      assert(flat.filter(col("cell") === 1).count() == 4)
-      // a rename window (compactIndex's, between its two renames): the dir
-      // is missing for the first listing; the retry (here: the rename
-      // completing) finds it
-      fs.rename(new Path(dir), new Path(s"$dir.next"))
-      val probed = graft.streaming.Streams.readIndex(spark, dir,
-        onRetry = () => { fs.rename(new Path(s"$dir.next"), new Path(dir)); () },
-        recursive = false)
-      assert(probed.count() == 12 && probed.columns.contains("cell"))
+      val live = graft.streaming.Streams.readIndex(spark, dir)
+      assert(live.columns.contains("cell"), "partition column lost")
+      assert(live.filter(col("cell") === 1).count() == 4)
     }
   }
 }

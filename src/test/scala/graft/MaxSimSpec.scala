@@ -217,8 +217,7 @@ class MaxSimSpec extends SparkSpec {
     val spiked = toks.unionByName(ragged)
     val dir = java.nio.file.Files.createTempDirectory("msidx_null").toString
     MaxSim.writeIndex(spiked, "id", "pos", "embedding", dir, nlist = 8)
-    val stored = graft.streaming.Streams.readIndex(spark, s"$dir/mats",
-      recursive = false)
+    val stored = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
     assert(stored.filter(col("id") === 999999L).isEmpty,
       "a null-pool document leaked into the stored layout")
     // the index over the clean subset still probes identically
@@ -265,7 +264,7 @@ class MaxSimSpec extends SparkSpec {
         "id", "pos", "embedding", dirB, r1.unionByName(r2)),
       s"$dirB/mats", Seq("cell"))
     def rows(d: String) =
-      graft.streaming.Streams.readIndex(spark, s"$d/mats", recursive = false)
+      graft.streaming.Streams.readIndex(spark, s"$d/mats")
       .select(col("id"), col("cell").cast("string"), col("mat"), col("pool"))
       .as[(Long, String, Seq[Seq[Double]], Seq[Double])].collect().toSet
     val (loop, combined) = (rows(dirA), rows(dirB))
@@ -297,8 +296,7 @@ class MaxSimSpec extends SparkSpec {
     assert(freshCells.nonEmpty && freshCells.subsetOf(centIds),
       s"admitted rows routed off-model: ${freshCells -- centIds}")
     // kept rows pass through byte-identical to the stored layout
-    val storedKept = graft.streaming.Streams.readIndex(spark, s"$dir/mats",
-        recursive = false)
+    val storedKept = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
       .filter(col("id") % 13 =!= 0).select("id", "cell", "mat", "pool")
     val keptOut = maintained.filter(col("id") % 10 =!= 0)
       .select("id", "cell", "mat", "pool")

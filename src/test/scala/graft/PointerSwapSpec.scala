@@ -28,7 +28,7 @@ class PointerSwapSpec extends SparkSpec {
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def rowsOf(dir: String): Set[(Long, String)] =
-    graft.streaming.Streams.readIndex(spark, dir, recursive = false)
+    graft.streaming.Streams.readIndex(spark, dir)
       .select(col("id"), col("v")).as[(Long, String)].collect().toSet
 
   test("pointer-protocol roundtrip: write, read via resolveLive, rewrite " +
@@ -42,8 +42,7 @@ class PointerSwapSpec extends SparkSpec {
       // generation 2: read the LIVE data and write it back enriched —
       // the q_swap_roundtrip shape; the input frame's generation is not
       // touched by the new write
-      val live = graft.streaming.Streams.readIndex(spark, idx,
-        recursive = false)
+      val live = graft.streaming.Streams.readIndex(spark, idx)
       Sinks.swapWrite(live.union(Seq((3L, "c")).toDF("id", "v")), idx)
       assert(rowsOf(idx) == Set((1L, "a"), (2L, "b"), (3L, "c")))
       // a third: retention (keepGenerations default 2) retires gen-0
@@ -137,7 +136,10 @@ class PointerSwapSpec extends SparkSpec {
         Sinks.swapWrite(Seq((2L, "b")).toDF("id", "v"), idx)
       }
       assert(ex.getMessage.contains("not a generation-pointer"), ex.getMessage)
-      assert(rowsOf(idx) == Set((1L, "a")), "the flat data was touched")
+      assert(spark.read.parquet(idx).as[(Long, String)].collect().toSet ==
+        Set((1L, "a")), "the flat data was touched")
+      // and readers refuse it the same way
+      intercept[IllegalArgumentException](rowsOf(idx))
       val empty = s"$base/empty"
       assert(fs(empty).mkdirs(new Path(empty)))
       Sinks.swapWrite(Seq((3L, "c")).toDF("id", "v"), empty)
@@ -183,8 +185,7 @@ class PointerSwapSpec extends SparkSpec {
       val idx = s"$base/idx"
       Sinks.swapWrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), idx)
       // the reader resolved gen-0 and its file index listed gen-0's files
-      val frame = graft.streaming.Streams.readIndex(spark, idx,
-        recursive = false)
+      val frame = graft.streaming.Streams.readIndex(spark, idx)
       assert(frame.count() == 2)
       // a new generation lands; retention (keepGenerations = 2) keeps
       // gen-0 intact under the running frame
@@ -236,7 +237,7 @@ class PointerSwapSpec extends SparkSpec {
   }
 
   private def postsOf(dir: String): Set[(Long, Long, String, Long, Long)] =
-    graft.streaming.Streams.readIndex(spark, s"$dir/postings", recursive = false)
+    graft.streaming.Streams.readIndex(spark, s"$dir/postings")
       .select(col("id"), col("dl"), col("term"), col("tf"),
         col("bucket").cast("long"))
       .as[(Long, Long, String, Long, Long)].collect().toSet

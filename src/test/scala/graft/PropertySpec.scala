@@ -516,8 +516,7 @@ class PropertySpec extends SparkSpec {
                 col("bucket").cast("long"))
               .as[(Long, Long, String, Long, Long)].collect().toSet
           val ok = rows(posts) ==
-            rows(graft.streaming.Streams.readIndex(spark, s"$dir2/postings",
-              recursive = false))
+            rows(graft.streaming.Streams.readIndex(spark, s"$dir2/postings"))
           graft.Caching.drain()
           ok
         }}

@@ -284,7 +284,7 @@ class SourcesAnnSpec extends SparkSpec {
       df.select("id", "dl", "term", "tf", "bucket")
         .as[(Long, Long, String, Long, Long)].collect().toSet
     def stored(sub: String) =
-      graft.streaming.Streams.readIndex(spark, s"$dir2/$sub", recursive = false)
+      graft.streaming.Streams.readIndex(spark, s"$dir2/$sub")
     assert(rows(posts) == rows(stored("postings")
       .select(col("id"), col("dl"), col("term"), col("tf"),
         col("bucket").cast("long"))))
@@ -863,6 +863,30 @@ class SourcesAnnSpec extends SparkSpec {
     val sampled = Ann.trainedCentroids(df, "vec_id", "embedding", nlist = 4,
       sampleMod = 4)
     assert(sampled.size == 4)
+  }
+
+  test("Pq: an unrotated rebuild over a rotated index probes like a fresh build") {
+    import graft.similarity.{Pca, Pq}
+    val pts = (0 until 16).map { i =>
+      val base = if (i % 2 == 0) 1.0f else -1.0f
+      (i.toLong, Array.tabulate(8)(j => base + i * 1e-4f + j * 0.01f))
+    }
+    val df = pts.toDF("vec_id", "embedding")
+    val rot = Pca.rotation(df, "embedding", dim = 8)
+    def build(dir: String, rotation: Option[Array[Array[Double]]]): Unit =
+      Pq.writeIndex(df, "vec_id", "embedding", dim = 8, m = 2, k = 2,
+        dir = dir, nlist = 4, rotation = rotation)
+    def probe(dir: String) = Pq.probeIndex(df.filter($"vec_id" < 2),
+        "vec_id", "embedding", dir, topK = 5, nprobe = 4)
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+    withTempDir("pqidx_rebuild") { base =>
+      build(s"$base/rebuilt", Some(rot))
+      build(s"$base/rebuilt", None)
+      build(s"$base/fresh", None)
+      val want = probe(s"$base/fresh")
+      assert(want.nonEmpty && probe(s"$base/rebuilt") == want,
+        "the rotated build's model/rotation outlived the unrotated rebuild")
+    }
   }
 
   test("OPQ-rotated index: the stored rotation applies automatically at " +

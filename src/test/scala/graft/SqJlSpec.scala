@@ -230,8 +230,7 @@ class SqJlSpec extends SparkSpec {
     graft.operators.Sinks.swapWrite(
       Sq.indexCodesDelta(a2, "vec_id", "embedding", dir, r2),
       s"$dir/codes", Seq("cell"))
-    val maintained = graft.streaming.Streams.readIndex(spark, s"$dir/codes",
-        recursive = false)
+    val maintained = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
       .select(col("id"), col("cell").cast("string"), col("codes"))
       .as[(Long, String, Seq[Int])].collect().toSet
     // one re-encode of the FINAL membership under the same frozen model

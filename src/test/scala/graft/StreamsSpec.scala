@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.operators.Sinks
 import graft.streaming.Streams
 
 class StreamsSpec extends SparkSpec {
@@ -153,152 +154,225 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("indexMaintainStream admits first arrivals and keeps the index ≡ admitted band keys") {
-    val base = java.nio.file.Files.createTempDirectory("graft_idxm").toString
-    val inDir = s"$base/in"; val idxDir = s"$base/index"
-    val verdictDir = s"$base/verdicts"; val ckpt = s"$base/ckpt"
-    // file 1: ten docs with pairwise-disjoint vocabularies; file 2 (strictly
-    // later mod time → second batch): five EXACT copies under new ids (every
-    // band collides with the already-admitted original) + five new docs
-    def text(i: Long) = s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i"
-    val first = (1L to 10L).map(i => (i, text(i)))
-    val second = (101L to 105L).map(i => (i, text(i - 100L))) ++
-      (111L to 115L).map(i => (i, text(i)))
-    first.toDF("doc_id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(s"$inDir/g1")
-    second.toDF("doc_id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(s"$inDir/g2")
+  /** Drain `files` (each one micro-batch, in order) through
+    * indexMaintainStream into `idxDir`, no bootstrap. */
+  private def maintain(base: String, idxDir: String,
+                       files: Seq[Seq[(Long, String)]]): Unit = {
+    val inDir = s"$base/in"
     val now = System.currentTimeMillis()
-    def touch(dir: String, t: Long): Unit = {
-      val d = new java.io.File(dir)
-      d.listFiles().foreach(f => f.setLastModified(t)); d.setLastModified(t)
+    files.zipWithIndex.foreach { case (rows, i) =>
+      val d = s"$inDir/g$i"
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(d)
+      val t = now - 60000L * (files.size - i)
+      new java.io.File(d).listFiles().foreach(_.setLastModified(t))
+      new java.io.File(d).setLastModified(t)
     }
-    touch(s"$inDir/g1", now - 60000L); touch(s"$inDir/g2", now)
-    val stream = Streams.watchDirectory(spark, s"$inDir/*",
-      format = "parquet", schemaDdl = Some("doc_id BIGINT, text STRING"),
-      maxFilesPerTrigger = 1)
-    val q = Streams.indexMaintainStream(stream, "doc_id", "text",
-      idxDir, verdictDir, ckpt)
-    q.awaitTermination()
-
-    val verdicts = spark.read.parquet(s"$verdictDir/batch_*")
-      .as[(Long, Boolean)].collect().toMap
-    assert(verdicts.size == 20)
-    // originals and genuinely-new docs admitted; later copies rejected
-    assert((1L to 10L).forall(verdicts(_)) && (111L to 115L).forall(verdicts(_)))
-    assert((101L to 105L).forall(!verdicts(_)))
-    // the maintained index is exactly the admitted docs' band keys
-    val admitted = (first ++ second.filter(t => t._1 > 110L))
-      .toDF("doc_id", "text")
-    val expected = graft.dedup.Dedup.bandKeysOf(admitted, "doc_id", "text")
-    val got = spark.read.option("recursiveFileLookup", "true").parquet(idxDir)
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
-  }
-
-  test("compactIndex flattens the batch tree, preserves the row set, and recovers a stranded swap") {
-    val base = java.nio.file.Files.createTempDirectory("graft_idxcompact").toString
-    val inDir = s"$base/in"; val idxDir = s"$base/index"
-    def text(i: Long) = s"ka$i kb$i kc$i kd$i ke$i kf$i"
-    (1L to 8L).map(i => (i, text(i))).toDF("doc_id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(s"$inDir/g1")
-    (21L to 28L).map(i => (i, text(i))).toDF("doc_id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(s"$inDir/g2")
-    val q = Streams.indexMaintainStream(
+    Streams.indexMaintainStream(
       Streams.watchDirectory(spark, s"$inDir/*", format = "parquet",
         schemaDdl = Some("doc_id BIGINT, text STRING"), maxFilesPerTrigger = 1),
       "doc_id", "text", idxDir, s"$base/verdicts", s"$base/ckpt")
-    q.awaitTermination()
-    val read = () => spark.read.option("recursiveFileLookup", "true").parquet(idxDir)
-    val before = read().collect().toSet
-    assert(new java.io.File(idxDir).listFiles().exists(_.isDirectory),
-      "precondition: the drain left per-batch subdirectories")
-    Streams.compactIndex(spark, idxDir)
-    // one flat generation, identical row set
-    assert(!new java.io.File(idxDir).listFiles().exists(_.isDirectory))
-    assert(read().collect().toSet == before)
-    // a probe sees the same index either way
-    val probe = graft.dedup.Dedup.incrementalNearDup(
-      Seq((100L, text(3)), (101L, text(50))).toDF("doc_id", "text"),
-      "doc_id", "text", read())
-    assert(probe.as[(Long, Boolean)].collect().toMap == Map(100L -> true, 101L -> false))
-    // stranded-swap recovery: simulate a crash between renames 2 and 3 —
-    // <dir> gone, complete <dir>.next present — and compact again
-    val fs = new org.apache.hadoop.fs.Path(idxDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(idxDir),
-      new org.apache.hadoop.fs.Path(idxDir + ".next"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idxDir)))
-    Streams.compactIndex(spark, idxDir)
-    assert(read().collect().toSet == before)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idxDir + ".next")))
+      .awaitTermination()
+  }
+
+  test("indexMaintainStream admits first arrivals and keeps the index ≡ admitted band keys") {
+    withTempDir("graft_idxm") { base =>
+      val idxDir = s"$base/index"
+      // batch 0: ten docs with pairwise-disjoint vocabularies; batch 1: five
+      // EXACT copies under new ids (every band collides with the
+      // already-admitted original) + five new docs
+      def text(i: Long) = s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i"
+      val first = (1L to 10L).map(i => (i, text(i)))
+      val second = (101L to 105L).map(i => (i, text(i - 100L))) ++
+        (111L to 115L).map(i => (i, text(i)))
+      maintain(base, idxDir, Seq(first, second))
+
+      val verdicts = spark.read.parquet(s"$base/verdicts/batch_*")
+        .as[(Long, Boolean)].collect().toMap
+      assert(verdicts.size == 20)
+      // originals and genuinely-new docs admitted; later copies rejected
+      assert((1L to 10L).forall(verdicts(_)) && (111L to 115L).forall(verdicts(_)))
+      assert((101L to 105L).forall(!verdicts(_)))
+      // the maintained index is exactly the admitted docs' band keys
+      val admitted = (first ++ second.filter(t => t._1 > 110L))
+        .toDF("doc_id", "text")
+      val expected = graft.dedup.Dedup.bandKeysOf(admitted, "doc_id", "text")
+      val got = Streams.readIndex(spark, idxDir)
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+    }
+  }
+
+  private def keyRows(dir: String): Set[(Long, Int, String)] =
+    Streams.readIndex(spark, dir).select("id", "band", "band_key")
+      .as[(Long, Int, String)].collect().toSet
+
+  test("compactIndex flattens the batch tree, preserves the row set, and recovers a stranded swap") {
+    withTempDir("graft_idxcompact") { base =>
+      val idxDir = s"$base/index"
+      def text(i: Long) = s"ka$i kb$i kc$i kd$i ke$i kf$i"
+      maintain(base, idxDir, Seq((1L to 8L).map(i => (i, text(i))),
+        (21L to 28L).map(i => (i, text(i)))))
+      val before = keyRows(idxDir)
+      // no bootstrap: the live view is the two deltas alone
+      val drained = Sinks.resolveLive(spark, idxDir)
+      assert(drained.paths.size == 2 && drained.watermark.contains(1L),
+        s"precondition: one delta per batch, got $drained")
+      Streams.compactIndex(spark, idxDir)
+      // one generation, folding both batches, identical row set
+      val compacted = Sinks.resolveLive(spark, idxDir)
+      assert(compacted.paths.size == 1 && compacted.paths.head.endsWith("gen-0") &&
+        compacted.watermark.contains(1L), s"compacted view: $compacted")
+      assert(keyRows(idxDir) == before)
+      // a probe sees the same index either way
+      val probe = graft.dedup.Dedup.incrementalNearDup(
+        Seq((100L, text(3)), (101L, text(50))).toDF("doc_id", "text"),
+        "doc_id", "text", Streams.readIndex(spark, idxDir))
+      assert(probe.as[(Long, Boolean)].collect().toMap == Map(100L -> true, 101L -> false))
+      // stranded swap: a crash between the pointer delete and its rename —
+      // readers fall back to the newest ready generation, and compacting
+      // again writes the pointer back
+      val fs = new org.apache.hadoop.fs.Path(idxDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val pointer = new org.apache.hadoop.fs.Path(
+        s"$idxDir/${Sinks.PointerFile}")
+      assert(fs.delete(pointer, false))
+      assert(keyRows(idxDir) == before)
+      Streams.compactIndex(spark, idxDir)
+      assert(fs.exists(pointer) && keyRows(idxDir) == before)
+    }
+  }
+
+  test("a reader frame built before compactIndex returns the pre-compaction rows") {
+    withTempDir("graft_idxinflight") { base =>
+      val idxDir = s"$base/index"
+      def text(i: Long) = s"fa$i fb$i fc$i fd$i fe$i ff$i"
+      maintain(base, idxDir, Seq((1L to 6L).map(i => (i, text(i))),
+        (11L to 16L).map(i => (i, text(i)))))
+      // the reader resolved the live view and listed its files
+      val frame = Streams.readIndex(spark, idxDir)
+      val before = frame.select("id", "band", "band_key")
+        .as[(Long, Int, String)].collect().toSet
+      assert(before.nonEmpty)
+      Streams.compactIndex(spark, idxDir)
+      // retention keeps the view the frame listed: it reads its own files
+      assert(frame.select("id", "band", "band_key")
+        .as[(Long, Int, String)].collect().toSet == before,
+        "the pre-compaction frame must keep reading its own files")
+      assert(keyRows(idxDir) == before)
+    }
+  }
+
+  /** A maintained index: a bootstrap generation plus the deltas of
+    * batches 0 and 1; returns every live row. */
+  private def seedIndex(idxDir: String): Set[(Long, Int, String)] = {
+    Sinks.swapWrite(
+      Seq((1L, 0, "k1"), (2L, 1, "k2")).toDF("id", "band", "band_key"), idxDir)
+    Seq((3L, 0, "k3")).toDF("id", "band", "band_key")
+      .write.parquet(Sinks.deltaPath(idxDir, 0))
+    Seq((4L, 2, "k4")).toDF("id", "band", "band_key")
+      .write.parquet(Sinks.deltaPath(idxDir, 1))
+    Set((1L, 0, "k1"), (2L, 1, "k2"), (3L, 0, "k3"), (4L, 2, "k4"))
+  }
+
+  test("a crashed compactIndex keeps every row live, and a rerun converges") {
+    withTempDir("graft_idxcrash") { base =>
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def converges(idxDir: String, all: Set[(Long, Int, String)]): Unit = {
+        Streams.compactIndex(spark, idxDir)
+        val live = Sinks.resolveLive(spark, idxDir)
+        assert(live.paths.size == 1 && live.watermark.contains(1L), s"view: $live")
+        assert(keyRows(idxDir) == all)
+      }
+      // crash mid-write: an unready carcass (no _GEN_READY) beside gen-0
+      val carcass = s"$base/carcass"
+      val all = seedIndex(carcass)
+      Seq((9L, 9, "junk")).toDF("id", "band", "band_key")
+        .write.parquet(s"$carcass/gen-1")
+      assert(keyRows(carcass) == all)
+      converges(carcass, all)
+      // crash after the marker, before the pointer flip: a ready generation
+      // folding both batches that no pointer names yet
+      val unpointed = s"$base/unpointed"
+      assert(seedIndex(unpointed) == all)
+      all.toSeq.toDF("id", "band", "band_key").write.parquet(s"$unpointed/gen-1")
+      val marker = fs.create(new org.apache.hadoop.fs.Path(
+        s"$unpointed/gen-1/${Sinks.GenReadyMarker}"), true)
+      marker.write("1".getBytes("UTF-8")); marker.close()
+      assert(keyRows(unpointed) == all)
+      converges(unpointed, all)
+    }
+  }
+
+  test("retention deletes folded deltas and keeps unfolded ones") {
+    withTempDir("graft_idxretain") { base =>
+      val idxDir = s"$base/index"
+      val all = seedIndex(idxDir)
+      def deltas() = new java.io.File(s"$idxDir/${Sinks.DeltaDir}")
+        .list().filter(_.startsWith("batch_")).sorted.toSeq
+      // gen-1 folds batches 0-1; gen-0 (the bootstrap, which folded none)
+      // is still kept for its readers, so every delta stays
+      Streams.compactIndex(spark, idxDir)
+      assert(deltas() == Seq("batch_0", "batch_1"))
+      Seq((5L, 3, "k5")).toDF("id", "band", "band_key")
+        .write.parquet(Sinks.deltaPath(idxDir, 2))
+      // gen-2 folds batch 2; the kept views are gen-1 and gen-2, and both
+      // folded batches 0-1, while batch 2 is unfolded in gen-1
+      Streams.compactIndex(spark, idxDir)
+      assert(deltas() == Seq("batch_2"), s"deltas: ${deltas()}")
+      assert(keyRows(idxDir) == all + ((5L, 3, "k5")))
+      // a delta appended after the last compaction is live and kept
+      Seq((6L, 0, "k6")).toDF("id", "band", "band_key")
+        .write.parquet(Sinks.deltaPath(idxDir, 3))
+      assert(keyRows(idxDir) == all + ((5L, 3, "k5")) + ((6L, 0, "k6")))
+      Streams.compactIndex(spark, idxDir)
+      assert(deltas() == Seq("batch_3"), s"deltas: ${deltas()}")
+      assert(keyRows(idxDir) == all + ((5L, 3, "k5")) + ((6L, 0, "k6")))
+    }
   }
 
   test("compactIndex throws on a failed rename and leaves the live index whole") {
     val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.failrename.impl", classOf[FailOldRenameFs].getName)
+    hc.set("fs.failrename.impl", classOf[FailPointerRenameFs].getName)
     hc.setBoolean("fs.failrename.impl.disable.cache", true)
     try withTempDir("graft_idxfail") { base =>
       val idxDir = s"$base/index"
-      Seq((1L, 0, "k1"), (2L, 1, "k2")).toDF("id", "band", "band_key")
-        .write.parquet(idxDir)
-      Seq((3L, 0, "k3")).toDF("id", "band", "band_key")
-        .write.parquet(s"$idxDir/batch_1")
-      def rows() = spark.read.option("recursiveFileLookup", "true")
-        .parquet(idxDir).as[(Long, Int, String)].collect().toSet
-      val before = rows()
-      assert(before.size == 3)
-      // the same directory through a filesystem whose rename onto
-      // <dir>.old returns false, as Hadoop stores signal most failures
+      val before = seedIndex(idxDir)
+      // the same directory through a filesystem whose rename onto the
+      // pointer file returns false, as Hadoop stores signal most failures
       val ex = intercept[IllegalArgumentException] {
         Streams.compactIndex(spark, s"failrename://$idxDir")
       }
       assert(ex.getMessage.contains("rename"), ex.getMessage)
-      assert(rows() == before)
-      assert(new java.io.File(s"$idxDir/batch_1").isDirectory,
-        "the live batch tree was touched")
+      assert(keyRows(idxDir) == before)
+      assert(new java.io.File(Sinks.deltaPath(idxDir, 1)).isDirectory,
+        "a delta was deleted before the pointer flipped")
+      // the next compaction on a working store converges
+      Streams.compactIndex(spark, idxDir)
+      assert(Sinks.resolveLive(spark, idxDir).paths.size == 1)
+      assert(keyRows(idxDir) == before)
     } finally {
       hc.unset("fs.failrename.impl")
       hc.unset("fs.failrename.impl.disable.cache")
     }
   }
 
-  test("readIndex bridges the compaction swap window, fails loudly on a " +
-       "stranded swap, and bootstraps empty with a schema") {
-    val base = java.nio.file.Files.createTempDirectory("graft_idxrace").toString
-    val idxDir = s"$base/index"
-    val rows = Seq((1L, 0, "k1"), (2L, 1, "k2")).toDF("id", "band", "band_key")
-    rows.write.mode("overwrite").parquet(idxDir)
-    val dirP = new org.apache.hadoop.fs.Path(idxDir)
-    val nextP = new org.apache.hadoop.fs.Path(idxDir + ".next")
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // mid-swap: compactIndex is between rename(dir, old) and
-    // rename(next, dir) — dir briefly missing. The retry hook stands in
-    // for the compactor's second rename landing during the reader's wait
-    // (deterministic; no sleep-race)
-    fs.rename(dirP, nextP)
-    var retried = false
-    val got = Streams.readIndex(spark, idxDir,
-      onRetry = () => { retried = true; fs.rename(nextP, dirP) })
-    assert(retried && got.collect().toSet == rows.collect().toSet)
-    // stranded swap (compactor crashed before the second rename): the
-    // retry doesn't help, and a loud failure beats probing a phantom
-    // empty index that would admit every delta row
-    fs.rename(dirP, nextP)
-    val ex = intercept[IllegalStateException] {
-      Streams.readIndex(spark, idxDir, onRetry = () => ())
-    }
-    assert(ex.getMessage.contains("compactIndex"))
-    // compactIndex recovers the stranded swap; readIndex then succeeds
-    Streams.compactIndex(spark, idxDir)
-    assert(Streams.readIndex(spark, idxDir).collect().toSet ==
-      rows.collect().toSet)
-    // bootstrap: no dir, no stranded swap — empty frame iff a schema says
-    // what "empty" looks like, loud otherwise
-    val fresh = s"$base/never_written"
-    assert(Streams.readIndex(spark, fresh, onRetry = () => (),
-      emptySchema = Some(rows.schema)).isEmpty)
-    intercept[IllegalStateException] {
-      Streams.readIndex(spark, fresh, onRetry = () => ())
+  test("readIndex bootstraps empty with a schema and refuses a flat directory") {
+    withTempDir("graft_idxread") { base =>
+      val rows = Seq((1L, 0, "k1"), (2L, 1, "k2")).toDF("id", "band", "band_key")
+      // bootstrap: no dir — empty frame iff a schema says what "empty"
+      // looks like, loud otherwise
+      val fresh = s"$base/never_written"
+      assert(Streams.readIndex(spark, fresh, emptySchema = Some(rows.schema)).isEmpty)
+      intercept[IllegalStateException] { Streams.readIndex(spark, fresh) }
+      // the flat bootstrap + batch_<id>/ layout is refused, not read
+      val flat = s"$base/flat"
+      rows.write.parquet(flat)
+      rows.write.parquet(s"$flat/batch_1")
+      val ex = intercept[IllegalArgumentException] {
+        Streams.readIndex(spark, flat, emptySchema = Some(rows.schema))
+      }
+      assert(ex.getMessage.contains("not a generation-pointer"), ex.getMessage)
+      intercept[IllegalArgumentException] { Streams.compactIndex(spark, flat) }
     }
   }
 
@@ -716,13 +790,13 @@ class StreamsSpec extends SparkSpec {
 }
 
 /** The local filesystem under the `failrename` scheme, except that a
-  * rename onto a `*.old` path returns false — the way Hadoop stores report
-  * most failures, without throwing.
+  * rename onto a generation pointer (`_CURRENT`) returns false — the way
+  * Hadoop stores report most failures, without throwing.
   */
-class FailOldRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+class FailPointerRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("failrename:///")
   override def getScheme: String = "failrename"
   override def rename(src: org.apache.hadoop.fs.Path,
                       dst: org.apache.hadoop.fs.Path): Boolean =
-    !dst.getName.endsWith(".old") && super.rename(src, dst)
+    dst.getName != Sinks.PointerFile && super.rename(src, dst)
 }
