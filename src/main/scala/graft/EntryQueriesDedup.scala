@@ -470,10 +470,10 @@ object EntryQueriesDedup {
     }),
     // G58: STREAMING lexical-index MAINTENANCE — the crawl loop for the
     // postings family (the G40 q_stream_idxmaintain device, lexical
-    // edition, and the first ONLINE exerciser of the r12 safe-order
-    // writeLexDelta): bootstrap the 90% generation, drain admitted docs
-    // as a file stream, and per micro-batch run lexIndexDelta + the
-    // atomic-swap write-back over the LIVE index. The retire set is
+    // edition, and the ONLINE exerciser of writeLexDelta): bootstrap the
+    // 90% generation, drain admitted docs as a file stream, and per
+    // micro-batch run lexIndexDelta + the one-generation swap write-back
+    // over the LIVE index. The retire set is
     // disjoint from the admitted ids and re-applied idempotently each
     // batch (anti-joins no-op once retired), so the final maintained
     // membership — (stored − retired) ∪ admitted — is identical under
@@ -1430,10 +1430,6 @@ object EntryQueriesDedup {
       val q = graft.streaming.Streams.toForeachBatch(stream, ckpt,
         availableNow = true) { (batch, _) =>
         if (!batch.isEmpty) {
-          // restart step: promote a generation a crash left ready but
-          // unpointed BEFORE listing the prints dir (winnowIndexDelta takes
-          // the frame, so the loop owns the read — and the recovery)
-          graft.operators.Sinks.recoverSwap(s, idxDir)
           val idx = graft.streaming.Streams.readIndex(s, idxDir)
           graft.operators.Sinks.swapWrite(
             Dedup.winnowIndexDelta(idx, batch, "doc_id", "text", retired,

@@ -239,39 +239,62 @@ object Sinks {
     w.saveAsTable(table)
   }
 
-  /** Atomic-swap parquet write — the writer of every stored-index
-    * directory, first generation included, and the safe way to write a
-    * maintained frame BACK over the live directory it was read from. Every
-    * directory it writes is a generation-POINTER directory: immutable
-    * `gen-N/` subdirectories plus a tiny `_CURRENT` file naming the live
-    * one. A swap writes the frame into a FRESH `gen-N/` (no live file is
-    * touched, so the maintained frame keeps reading its own generation
-    * throughout), marks it `_GEN_READY` once the job commits, atomically
+  /** Atomic-swap parquet write — the writer of every single-frame
+    * stored-index directory, first generation included, and the safe way
+    * to write a maintained frame BACK over the live directory it was read
+    * from: the one-frame call of [[swapGeneration]], writing `df`
+    * (partitioned by `partitionCols`) as the new generation's contents.
+    * The stored-index families' delta functions
+    * ([[graft.similarity.Pq.indexCodesDelta]], `Sq.indexCodesDelta`,
+    * [[graft.similarity.MaxSim.indexMatsDelta]], and `Search.lexIndexDelta`
+    * through `Search.writeLexDelta`) all say "the caller writes the result
+    * back" — this is the writer they mean. The in-place alternative —
+    * `mode("overwrite")` onto the dir — deletes the input BEFORE the job
+    * that reads it finishes planning, and a failure mid-write loses the
+    * index outright.
+    */
+  def swapWrite(df: DataFrame, dir: String,
+                partitionCols: Seq[String] = Nil,
+                watermark: Option[Long] = None): Unit =
+    swapGeneration(df.sparkSession, dir, watermark) { gen =>
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(gen)
+    }
+
+  /** The one swap protocol. Every directory it writes is a
+    * generation-POINTER directory: immutable `gen-N/` subdirectories plus
+    * a tiny `_CURRENT` file naming the live one. A swap runs `write` on a
+    * FRESH `gen-N/` path — no live file is touched, so a maintained frame
+    * keeps reading its own generation throughout, and `write` may lay
+    * several artifacts out under that path (the lexical index writes its
+    * four) — marks it `_GEN_READY` once `write` returns, atomically
     * re-points `_CURRENT`, then retires old generations. No directory ever
     * moves, so nothing depends on an atomic directory rename: on S3-class
     * object stores every step is one small-object operation. Readers
     * resolve the live generation through [[resolveLive]] (inside
-    * [[graft.streaming.Streams.readIndex]]). The four stored-index
-    * families' delta functions ([[graft.similarity.Pq.indexCodesDelta]],
-    * `Sq.indexCodesDelta`, `Search.lexIndexDelta`,
-    * [[graft.similarity.MaxSim.indexMatsDelta]]) all say "the caller
-    * writes the result back" — this is the writer they mean. The in-place
-    * alternative — `mode("overwrite")` onto the dir — deletes the input
-    * BEFORE the job that reads it finishes planning, and a failure
-    * mid-write loses the index outright.
+    * [[graft.streaming.Streams.readIndex]]).
     *
     * A non-empty directory that is not in pointer layout (flat parquet
     * written some other way) is refused, not converted: its files would
     * sit beside the first generation.
     *
-    * Crash windows (each green in PointerSwapSpec):
-    *  - mid-write: an unready `gen-N` carcass, pointer unchanged — the
-    *    next swap cleans it, the replayed generation lands as `gen-N+1`;
-    *  - post-ready, pre-pointer: recovery ([[recoverSwap]]) PROMOTES the
-    *    newest ready generation by re-pointing — no data moves;
+    * Crash windows (each green in PointerSwapSpec), none with a recovery
+    * step:
+    *  - mid-write: an unready `gen-N` carcass, pointer unchanged;
+    *  - post-ready, pre-pointer: a ready `gen-N` newer than the pointed
+    *    one, which no reader resolves;
     *  - mid-pointer-update (pointer deleted, tmp not yet renamed):
-    *    readers fall back to the newest ready generation; recovery
-    *    rewrites the pointer.
+    *    readers fall back to the newest ready generation — the one the
+    *    flip was writing — and the next swap writes a pointer again.
+    * The next swap DISCARDS the first two: its sweep deletes every
+    * generation but the live one that is unready or newer than it, and
+    * numbers the new generation past everything it found. Such a
+    * generation belongs to a write whose caller never saw it commit (the
+    * flip did not happen), so a replaying caller rebuilds it from the
+    * live generation — every maintenance caller's apply is idempotent
+    * ([[graft.dedup.Dedup.replaceIdFrame]]) — and discarding it keeps it
+    * from pushing the live generation out of the retention window.
     *
     * Retention honors `spark.graft.swap.keepGenerations` (count, default
     * 2) AND `spark.graft.swap.keepMinAgeMs` (time floor, default 0): a
@@ -290,10 +313,8 @@ object Sinks {
     * the views it keeps — the view before `gen-0`, which read every delta,
     * counts as one while `gen-0` survives.
     */
-  def swapWrite(df: DataFrame, dir: String,
-                partitionCols: Seq[String] = Nil,
-                watermark: Option[Long] = None): Unit = {
-    val spark = df.sparkSession
+  def swapGeneration(spark: SparkSession, dir: String,
+                     watermark: Option[Long] = None)(write: String => Unit): Unit = {
     val d = new Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keepGens = spark.conf.get("spark.graft.swap.keepGenerations", "2").toInt
@@ -307,18 +328,17 @@ object Sinks {
     def deleteOrDie(p: Path): Unit =
       require(!fs.exists(p) || fs.delete(p, true),
         s"swapWrite: delete $p failed")
-    val cur = readPointer(fs, d)
-    // clean unready carcasses (a crashed write's partial generation is
-    // referenced by nothing; the pointed generation is never touched)
-    numbered(entries, GenPrefix).filterNot { case (n, p) =>
-      cur.contains(n) || genReady(fs, p)
+    val gens = numbered(entries, GenPrefix)
+    val live = liveGen(fs, readSmall(fs, new Path(d, PointerFile)), gens)._1.map(_._1)
+    // discard what no reader resolves (the live generation is never
+    // touched): unready carcasses, and ready generations newer than the
+    // live one, whose flip never ran
+    gens.filterNot { case (n, p) =>
+      live.exists(l => n == l || n < l && genReady(fs, p))
     }.foreach { case (_, p) => deleteOrDie(p) }
-    val nextN =
-      (listGens(fs, d).map(_._1) ++ cur).foldLeft(-1L)(_ max _) + 1
+    val nextN = gens.lastOption.fold(0L)(_._1 + 1)
     val gen = new Path(d, s"$GenPrefix$nextN")
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(gen.toString)
+    write(gen.toString)
     val marker = fs.create(new Path(gen, GenReadyMarker), true)
     try watermark.foreach(w => marker.write(w.toString.getBytes("UTF-8")))
     finally marker.close()
@@ -370,25 +390,9 @@ object Sinks {
     }
   }
 
-  /** Finish a [[swapWrite]] interrupted by a crash — the RESTART step a
-    * maintenance loop runs before constructing its delta frames: promote
-    * the newest READY generation when `_CURRENT` is stale or mid-update.
-    * A pure pointer rewrite, no data moves, so it is safe even with reader
-    * frames already listed against the old generation: their files stay
-    * on disk until retention. Returns true when a promotion happened; a
-    * dir without generations is left alone.
-    */
-  def recoverSwap(spark: SparkSession, dir: String): Boolean = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listGens(fs, d).filter(g => genReady(fs, g._2)).lastOption.map(_._1) match {
-      case Some(n) if !readPointer(fs, d).contains(n) => writePointer(fs, d, n); true
-      case _ => false
-    }
-  }
-
-  /** The pointer file naming a live generation (`gen-N`) inside a
-    * pointer-layout directory, the per-generation completion marker
+  /** The pointer file naming a live generation inside a pointer-layout
+    * directory (its content is `gen-N` plus a nonce fresh per swap, see
+    * [[liveToken]]), the per-generation completion marker
     * (holding the generation's watermark, if any), and the delta log.
     * The files are underscore-prefixed so parquet readers never see them.
     */
@@ -449,16 +453,33 @@ object Sinks {
       case _: java.io.FileNotFoundException => None
     }
 
-  /** the generation number `_CURRENT` names, if the pointer exists and
-    * parses (a torn/empty pointer — impossible under atomic PUT, handled
-    * defensively — reads as absent and readers fall back to the newest
-    * READY generation, which is never older than a valid pointer). A
-    * writer's delete→rename update can land while the pointer is being
-    * opened, so a vanished pointer reads as absent too — the same
-    * fallback covers it.
+  /** The live generation among pointer dir `gens`, and the token it was
+    * resolved through: the generation `pointer` (the `_CURRENT` content,
+    * read BEFORE `gens` was listed) names, with that content as the
+    * token; else — no pointer, a torn one (impossible under atomic PUT,
+    * handled defensively), or one a writer's delete→rename update moved
+    * while it was being opened — the newest READY generation, which is
+    * never older than a valid pointer, and no token.
     */
-  private def readPointer(fs: FileSystem, d: Path): Option[Long] =
-    readSmall(fs, new Path(d, PointerFile)).flatMap(numberAfter(GenPrefix, _))
+  private def liveGen(fs: FileSystem, pointer: Option[String],
+                      gens: Seq[(Long, Path)]): (Option[(Long, Path)], Option[String]) =
+    pointer.flatMap(t => numberAfter(GenPrefix, t.takeWhile(_ != ' ')))
+      .flatMap(n => gens.find(_._1 == n)) match {
+      case Some(g) => (Some(g), pointer)
+      case None => (gens.filter(g => genReady(fs, g._2)).lastOption, None)
+    }
+
+  /** The content of `dir`'s `_CURRENT`, None while there is none: `gen-N`
+    * plus the nonce of the swap that wrote it, so it changes on every
+    * swap — a directory deleted and rebuilt at `gen-0` included. One small
+    * read, no listing: a cache keyed on it (the lexical index's handle in
+    * [[graft.similarity.Search]]) checks freshness with it per call.
+    */
+  def liveToken(spark: SparkSession, dir: String): Option[String] = {
+    val d = new Path(dir)
+    readSmall(d.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(d, PointerFile))
+  }
 
   /** Atomically re-point `_CURRENT` at `gen`: write `_CURRENT.tmp`,
     * delete the old pointer, rename the tmp in. On an object store each
@@ -472,46 +493,68 @@ object Sinks {
     val pf = new Path(d, PointerFile)
     val tmp = new Path(d, PointerFile + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write(s"$GenPrefix$gen".getBytes("UTF-8")) finally out.close()
+    try out.write(s"$GenPrefix$gen ${java.util.UUID.randomUUID()}".getBytes("UTF-8"))
+    finally out.close()
     require(!fs.exists(pf) || fs.delete(pf, false),
       s"writePointer: delete $pf failed")
     require(fs.rename(tmp, pf), s"writePointer: rename $tmp -> $pf failed")
   }
 
   /** What a reader scans in a pointer-layout dir: `paths` (empty when
-    * nothing is live) and `watermark`, the highest delta-log batch id
-    * they cover (None when they cover none).
+    * nothing is live), `watermark`, the highest delta-log batch id they
+    * cover (None when they cover none), and `token`, the [[liveToken]]
+    * the live generation was resolved through (None when the reader fell
+    * back past a missing pointer, or nothing is live).
     */
-  final case class LiveView(paths: Seq[String], watermark: Option[Long])
+  final case class LiveView(paths: Seq[String], watermark: Option[Long],
+                            token: Option[String])
 
   /** The paths a READER scans. The live generation is the `gen-N` that
     * `_CURRENT` names, falling back to the newest READY generation while
     * the pointer is mid-update, and none while no generation is ready
     * yet. A dir with a delta log adds every `deltas/batch_<id>` above that
     * generation's watermark (all of them when no generation is live). A
-    * missing or empty dir has nothing live; a non-empty dir in any other
-    * layout is refused, as [[swapWrite]] refuses it. A dir without a
-    * delta log costs one pointer read and one listing. Every stored-index
-    * read goes through here, via [[graft.streaming.Streams.readIndex]].
+    * missing or empty dir has nothing live — with one layout rule: a
+    * missing `d/a` inside pointer dir `d` names artifact `a` of `d`'s live
+    * generation (`idx/postings` reads a lexical index's
+    * `idx/gen-N/postings`; nothing is live when that generation has no
+    * `a`). A non-empty dir in any other layout is refused, as [[swapWrite]]
+    * refuses it. A dir without a delta log costs one pointer read and one
+    * listing. Every stored-index read goes through here, via
+    * [[graft.streaming.Streams.readIndex]].
     */
   def resolveLive(spark: SparkSession, dir: String): LiveView = {
     val d = new Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pointed = readPointer(fs, d)
+    val pointer = readSmall(fs, new Path(d, PointerFile))
     val entries = listing(fs, d)
     require(entries.isEmpty || isPointerLayout(entries),
       s"resolveLive: $dir holds data but is not a generation-pointer " +
         "directory (no gen-N/, _CURRENT or deltas/); rewrite it through swapWrite")
-    val gens = numbered(entries, GenPrefix)
-    val gen = pointed.flatMap(n => gens.find(_._1 == n))
-      .orElse(gens.filter(g => genReady(fs, g._2)).lastOption).map(_._2)
-    if (!entries.exists(_.getPath.getName == DeltaDir))
-      LiveView(gen.map(_.toString).toSeq, None)
+    val (live, token) = liveGen(fs, pointer, numbered(entries, GenPrefix))
+    val gen = live.map(_._2)
+    if (entries.isEmpty) artifactOf(fs, d)
+    else if (!entries.exists(_.getPath.getName == DeltaDir))
+      LiveView(gen.map(_.toString).toSeq, None, token)
     else {
       val folded = gen.flatMap(watermarkOf(fs, _))
       val deltas = deltasIn(fs, d).filter(b => folded.forall(b._1 > _))
       LiveView(gen.map(_.toString).toSeq ++ deltas.map(_._2.toString),
-        (folded ++ deltas.map(_._1)).maxOption)
+        (folded ++ deltas.map(_._1)).maxOption, token)
+    }
+  }
+
+  /** [[resolveLive]] of a dir with no entries: artifact `a` of the live
+    * generation when it is a missing `d/a` of a dir `d` with one (only a
+    * pointer dir has generations), else nothing live. */
+  private def artifactOf(fs: FileSystem, a: Path): LiveView = {
+    val d = a.getParent
+    if (d == null || fs.exists(a)) LiveView(Nil, None, None)
+    else {
+      val pointer = readSmall(fs, new Path(d, PointerFile))
+      val (live, token) = liveGen(fs, pointer, numbered(listing(fs, d), GenPrefix))
+      LiveView(live.map(g => new Path(g._2, a.getName)).filter(fs.exists)
+        .map(_.toString).toSeq, None, token)
     }
   }
 

@@ -102,8 +102,8 @@ import graft.Caching.TrackedSyntax
   * trained=true] — the persistent IVFPQ layout), `sq_index_write`
   * (id/vec/dim/dir[, nlist=64, trained=true]), `maxsim_index_write`
   * (id/pos/vec/dir[, nlist=8, trained=true] — gathered token matrices),
-  * `lex_index_write` (id/text/dir[, buckets=64] — postings/doclens/
-  * stats/terms; probe with `bm25` + `indexDir`),
+  * `lex_index_write` (id/text/dir[, buckets=64] — one generation of
+  * postings/doclens/stats/terms; probe with `bm25` + `indexDir`),
   * `sq_index_probe`/`sq_index_delta` (the stored IVF-SQ index twins of
   * `ann_index_probe`/`ann_index_delta`),
   * `maxsim_index_probe`/`maxsim_index_delta` (the stored late-interaction

@@ -441,8 +441,6 @@ object MaxSim {
                      vecCol: String, dir: String,
                      retiredIds: DataFrame): DataFrame = {
     val spark = admitted.sparkSession
-    // restart step first: promote a stranded generation before listing mats/
-    graft.operators.Sinks.recoverSwap(spark, s"$dir/mats")
     val (cents, scale) = readModel(spark, dir)
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted documents
     // replace any stored copy — idempotent under crash replay

@@ -345,10 +345,6 @@ object Pq {
                       scale: Double = 1048576.0): DataFrame = {
     import graft.functions.Vectors
     val spark = admitted.sparkSession
-    // restart step first: promote any generation a crashed maintenance
-    // loop left ready but unpointed on the codes dir BEFORE listing it
-    // (the model is frozen, never delta-swapped)
-    graft.operators.Sinks.recoverSwap(spark, s"$dir/codes")
     val (cents, cbs, rot) = readModel(spark, dir)
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors
     // replace any stored copy — idempotent under crash replay

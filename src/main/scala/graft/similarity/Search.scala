@@ -286,7 +286,8 @@ object Search {
   /** Persistent lexical (BM25) index — the FIFTH stored-index family
     * (G40 LSH keys, G44 winnow prints, G47 IVFPQ codes, G52 SQ codes, now
     * postings): query a 100 TB corpus's keyword surface WITHOUT
-    * re-scanning it. Layout under `dir`:
+    * re-scanning it. `dir` is a [[graft.operators.Sinks.swapGeneration]]
+    * pointer directory: `_CURRENT` names `dir/gen-N/`, which holds
     *
     *   - `postings/` — (id, dl, term, tf) parquet PARTITIONED BY
     *     `bucket` = [[termBucket]](term), so a probe's term routing
@@ -296,12 +297,16 @@ object Search {
     *     docs, which have no postings but count in the corpus stats);
     *   - `stats/` — one row (n, sumdl, buckets): the corpus-level BM25
     *     inputs plus the layout's bucket count, so probes are
-    *     self-describing.
+    *     self-describing;
+    *   - `terms/` — (term, df) partitioned like the postings: the table
+    *     [[bm25FromIndex]]'s df-ceiling guard reads.
     *
-    * Each artifact is written through [[graft.operators.Sinks.swapWrite]]:
-    * a fresh build lands as the artifacts' `gen-0/`, a rebuild over a
-    * live index as their next generation, and maintenance
-    * ([[writeLexDelta]]) swaps in later ones the same way.
+    * A fresh build lands as `gen-0/`, a rebuild over a live index as its
+    * next generation, and maintenance ([[writeLexDelta]]) swaps in later
+    * ones the same way: one pointer flip per generation, so a reader sees
+    * all four artifacts of one generation, never a mix of two.
+    * `Streams.readIndex(s"$dir/postings")` reads one artifact of the live
+    * generation ([[graft.operators.Sinks.resolveLive]]).
     *
     * Build cost: one corpus tokenize scan; the postings aggregate shuffles
     * (id, term) pairs — fixed-width rows, never the text.
@@ -311,88 +316,85 @@ object Search {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = docs.sparkSession
     val toks = docs.select(col(idCol).as("id"), Text.tokens(col(textCol)).as("__tk"))
-    // stats ride the doclens WRITE as observed metrics (r17, guide §1):
-    // same values as the old written-doclens re-read (count + sum over
-    // exactly the rows written), zero extra jobs — the re-read paid three
-    // jobs (AQE stage + final + head) per index build
-    val obs = new org.apache.spark.sql.Observation()
-    graft.Jobs.labeled(spark, "lexindex: doclens write") {
-      Sinks.swapWrite(
+    Sinks.swapGeneration(spark, dir) { gen =>
+      // stats ride the doclens WRITE as observed metrics (r17, guide §1):
+      // same values as the old written-doclens re-read (count + sum over
+      // exactly the rows written), zero extra jobs — the re-read paid three
+      // jobs (AQE stage + final + head) per index build
+      val obs = new org.apache.spark.sql.Observation()
+      graft.Jobs.labeled(spark, "lexindex: doclens write") {
         toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl"))
           .observe(obs, count(lit(1)).as("n"),
-            coalesce(sum(col("dl")), lit(0L)).as("sumdl")),
-        s"$dir/doclens")
-    }
-    graft.Jobs.labeled(spark, "lexindex: postings write") {
-      // per-document native term counting (graftglue.TermCounts) replaces
-      // the explode → groupBy(id, dl, term) count: tf is a function of ONE
-      // row's token array, so the groupBy's corpus-sized exchange bought
-      // nothing (r17, guide §2.4); rows and values are identical for
-      // unique-id corpora — the contract every caller holds
-      Sinks.swapWrite(toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl"),
-          explode(org.apache.spark.sql.graftglue.ColumnBridge.column(
-            org.apache.spark.sql.graftglue.TermCounts(
-              org.apache.spark.sql.graftglue.ColumnBridge.expression(
-                col("__tk"))))).as("__tc"))
-        .select(col("id"), col("dl"), col("__tc.term").as("term"),
-          col("__tc.tf").as("tf"))
-        .withColumn("bucket", termBucket(col("term"), buckets))
-        // explicit-N repartition on the bucket (REPARTITION_BY_NUM — AQE
-        // never coalesces it): without it AQE folds this small shuffle to
-        // ONE partition and a single task sorts + writes every bucket
-        // directory serially (profiled 0.69 s of a 0.23 s-agg build).
-        // Hash-partitioning bucket ids into `buckets` partitions collides
-        // (~1/e of tasks land empty), so write parallelism is ~(1-1/e)·N,
-        // not exactly one task per bucket — still parallel, and the
-        // one-file-per-bucket layout holds regardless. Files scale with
-        // `buckets` — the layout's documented parallelism/pruning knob —
-        // not with the shuffle width.
-        .repartition(buckets, col("bucket")), s"$dir/postings", Seq("bucket"))
-    }
-    import spark.implicits._
-    val stRow = obs.get
-    graft.Jobs.labeled(spark, "lexindex: stats write") {
-      Sinks.swapWrite(Seq((stRow("n").asInstanceOf[Long],
-          stRow("sumdl").asInstanceOf[Long], buckets))
-        .toDF("n", "sumdl", "buckets").coalesce(1), s"$dir/stats")
-    }
-    // per-term document frequency, bucket-partitioned like the postings:
-    // a probe learns every query term's df from the pruned terms/ buckets
-    // BEFORE touching a posting row, so the df-ceiling guard can drop a
-    // near-zero-idf stop term without paying its corpus-sized posting
-    // list. Derived from the WRITTEN postings (fixed-width rows — no
-    // third text scan); vocabulary-sized, not corpus-sized.
-    // repartition ON the bucket before the partitioned write: the
-    // default layout would fan every shuffle partition across every
-    // bucket directory (partitions × buckets tiny files — measured
-    // +60% on the stream-probe bench, which builds in-query); this
-    // writes one file per bucket per holding task and scales with the
-    // vocabulary, not the shuffle width. Explicit N (r17): the bare
-    // repartition(col) is REPARTITION_BY_COL, which AQE coalesces to one
-    // partition at this size — serializing the write like the postings
-    // path above.
-    graft.Jobs.labeled(spark, "lexindex: terms write") {
-      Sinks.swapWrite(graft.streaming.Streams
-        .readIndex(spark, s"$dir/postings")
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .withColumn("bucket", termBucket(col("term"), buckets))
-        .repartition(buckets, col("bucket")), s"$dir/terms", Seq("bucket"))
+            coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
+          .write.parquet(s"$gen/doclens")
+      }
+      graft.Jobs.labeled(spark, "lexindex: postings write") {
+        // per-document native term counting (graftglue.TermCounts) replaces
+        // the explode → groupBy(id, dl, term) count: tf is a function of ONE
+        // row's token array, so the groupBy's corpus-sized exchange bought
+        // nothing (r17, guide §2.4); rows and values are identical for
+        // unique-id corpora — the contract every caller holds
+        toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl"),
+            explode(org.apache.spark.sql.graftglue.ColumnBridge.column(
+              org.apache.spark.sql.graftglue.TermCounts(
+                org.apache.spark.sql.graftglue.ColumnBridge.expression(
+                  col("__tk"))))).as("__tc"))
+          .select(col("id"), col("dl"), col("__tc.term").as("term"),
+            col("__tc.tf").as("tf"))
+          .withColumn("bucket", termBucket(col("term"), buckets))
+          // explicit-N repartition on the bucket (REPARTITION_BY_NUM — AQE
+          // never coalesces it): without it AQE folds this small shuffle to
+          // ONE partition and a single task sorts + writes every bucket
+          // directory serially (profiled 0.69 s of a 0.23 s-agg build).
+          // Hash-partitioning bucket ids into `buckets` partitions collides
+          // (~1/e of tasks land empty), so write parallelism is ~(1-1/e)·N,
+          // not exactly one task per bucket — still parallel, and the
+          // one-file-per-bucket layout holds regardless. Files scale with
+          // `buckets` — the layout's documented parallelism/pruning knob —
+          // not with the shuffle width.
+          .repartition(buckets, col("bucket"))
+          .write.partitionBy("bucket").parquet(s"$gen/postings")
+      }
+      import spark.implicits._
+      val stRow = obs.get
+      graft.Jobs.labeled(spark, "lexindex: stats write") {
+        Seq((stRow("n").asInstanceOf[Long], stRow("sumdl").asInstanceOf[Long], buckets))
+          .toDF("n", "sumdl", "buckets").coalesce(1).write.parquet(s"$gen/stats")
+      }
+      // per-term document frequency, bucket-partitioned like the postings:
+      // a probe learns every query term's df from the pruned terms/ buckets
+      // BEFORE touching a posting row, so the df-ceiling guard can drop a
+      // near-zero-idf stop term without paying its corpus-sized posting
+      // list. Derived from the WRITTEN, not yet published, postings
+      // (fixed-width rows — no third text scan); vocabulary-sized, not
+      // corpus-sized.
+      // repartition ON the bucket before the partitioned write: the
+      // default layout would fan every shuffle partition across every
+      // bucket directory (partitions × buckets tiny files — measured
+      // +60% on the stream-probe bench, which builds in-query); this
+      // writes one file per bucket per holding task and scales with the
+      // vocabulary, not the shuffle width. Explicit N (r17): the bare
+      // repartition(col) is REPARTITION_BY_COL, which AQE coalesces to one
+      // partition at this size — serializing the write like the postings
+      // path above.
+      graft.Jobs.labeled(spark, "lexindex: terms write") {
+        spark.read.parquet(s"$gen/postings")
+          .groupBy("term").agg(count(lit(1)).as("df"))
+          .withColumn("bucket", termBucket(col("term"), buckets))
+          .repartition(buckets, col("bucket"))
+          .write.partitionBy("bucket").parquet(s"$gen/terms")
+      }
     }
   }
 
   /** How the df-ceiling guard resolves against a stored index generation:
-    * the cached stop-term set (the common case), the legacy per-probe
+    * the cached stop-term set (the common case), or the legacy per-probe
     * terms/ consult (adversarially low ceilings whose stop set is too
-    * large to cache), or unguarded (pre-guard layout without a terms/
-    * table — warn-and-fallback, not an error: the index was built before
-    * the guard existed and probing it at 1000‰ is exactly what it did
-    * then; failing at probe time would break every existing index the day
-    * the default flipped).
+    * large to cache).
     */
   private[graft] sealed trait GuardPlan
   private[graft] final case class StopSet(terms: Set[String]) extends GuardPlan
   private[graft] case object ConsultPerProbe extends GuardPlan
-  private case object Unguarded extends GuardPlan
 
   /** Stop sets above this size are not cached (or collected): at 990‰ the
     * stop set is a handful of true stop terms, but an adversarially low
@@ -409,37 +411,31 @@ object Search {
   private val StatsSchema = StructType.fromDDL("n BIGINT, sumdl BIGINT, buckets INT")
 
   /** Everything about one stored lexical-index GENERATION that probes and
-    * maintenance would otherwise re-read per call: the corpus stats `n`
-    * and `sumdl`, the layout's `buckets`, the `postings` schema (reads
-    * pass it, so no Parquet schema-inference job runs) and the df-ceiling
-    * guard's resolution for the last ceiling probed (`guard`: (permille,
-    * plan); the stop-term set is one terms/ scan per generation, not per
-    * probe).
+    * maintenance would otherwise re-read per call: its path `gen`
+    * (`dir/gen-N`, under which every read of the call goes, so one call
+    * never mixes two generations), the corpus stats `n` and `sumdl`, the
+    * layout's `buckets`, the `postings` schema (reads pass it, so no
+    * Parquet schema-inference job runs) and the df-ceiling guard's
+    * resolution for the last ceiling probed (`guard`: (permille, plan);
+    * the stop-term set is one terms/ scan per generation, not per probe).
     *
-    * `gen` is the generation token: per artifact (stats/, postings/,
-    * terms/) the live `gen-N` path [[graft.operators.Sinks.resolveLive]]
-    * names and the (name, mtime) of every entry directly under it (none
-    * when the artifact is absent). Every write moves the live path, but a
-    * directory deleted and rebuilt starts again at `gen-0`, so the path
-    * alone would serve a stale handle; the file names close that gap,
-    * because Spark names each part file with the writing job's UUID (and
-    * FILE names, not directory mtimes: S3-class stores report synthetic
-    * directory mtimes). The handle is rebuilt on the first call that sees
-    * a new token. The token is resolved BEFORE the handle's reads, so a
-    * handle can hold data newer than its token (the next call rebuilds
-    * it) but never older.
+    * `token` is the `_CURRENT` content the generation was resolved
+    * through ([[graft.operators.Sinks.liveToken]]): `gen-N` plus a nonce
+    * fresh per swap, so it rotates on every maintain and rebuild, and a
+    * directory deleted and rebuilt at `gen-0` cannot alias its old handle.
+    * A call reuses the cached handle while the pointer still reads
+    * `token` — one small read on the driver, no listing — and rebuilds it
+    * otherwise. A handle resolved without a pointer (the fallback while a
+    * swap's pointer update is mid-flight) has no token and is never
+    * cached.
     *
     * There is no knob: one handle per index dir, a few longs, one schema
-    * and at most [[StopSetCacheCap]] terms, and the token check (a few
-    * status calls and three listings on the driver) replaces what used to
-    * be three Spark jobs per probe.
+    * and at most [[StopSetCacheCap]] terms.
     */
   private[graft] final case class LexHandle(
-      gen: Seq[(String, Seq[(String, Long)])], n: Long, sumdl: Long,
+      gen: String, token: Option[String], n: Long, sumdl: Long,
       buckets: Int, postings: StructType,
-      guard: Option[(Int, GuardPlan)] = None) {
-    def hasTerms: Boolean = gen(LexArtifacts.indexOf("terms"))._2.nonEmpty
-  }
+      guard: Option[(Int, GuardPlan)] = None)
 
   /** dir → its live generation's handle (one entry per index dir). */
   private val lexHandles =
@@ -452,56 +448,43 @@ object Search {
   private[graft] def lexHandleEntry(dir: String): Option[LexHandle] =
     Option(lexHandles.get(dir))
 
-  /** The artifacts whose live directories make up the generation token,
-    * in `LexHandle.gen` order. */
-  private val LexArtifacts = Seq("stats", "postings", "terms")
-
-  private def lexGeneration(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Seq[(String, Seq[(String, Long)])] =
-    LexArtifacts.map { sub =>
-      val live = Sinks.resolveLive(spark, s"$dir/$sub").paths
-      val entries = live.flatMap { l =>
-        val p = new org.apache.hadoop.fs.Path(l)
-        try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .listStatus(p).toSeq.map(f => f.getPath.getName -> f.getModificationTime)
-        catch { case _: java.io.FileNotFoundException => Nil }
-      }
-      live.mkString(",") -> entries
-    }
-
-  /** The [[LexHandle]] of `dir`'s live generation: cached while the
-    * generation token holds, else rebuilt from one stats/ read (a `head`
-    * job) and one postings/ schema inference.
+  /** The [[LexHandle]] of `dir`'s live generation: the cached one while
+    * `_CURRENT` still reads its token, else rebuilt from one stats/ read
+    * (a `head` job) and one postings/ schema inference. An index in the
+    * older per-artifact layout (a pointer per artifact) is refused.
     */
   private def lexHandle(spark: org.apache.spark.sql.SparkSession,
                         dir: String): LexHandle = {
-    val gen = lexGeneration(spark, dir)
     val hit = lexHandles.get(dir)
-    if (hit != null && hit.gen == gen) hit
+    if (hit != null && hit.token == Sinks.liveToken(spark, dir)) hit
     else {
-      val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats",
-        schema = Some(StatsSchema)).head()
-      val h = LexHandle(gen, st.getAs[Long]("n"), st.getAs[Long]("sumdl"),
-        st.getAs[Int]("buckets"), graft.streaming.Streams.readIndex(spark,
-          s"$dir/postings").schema)
-      lexHandles.put(dir, h)
+      val old = new org.apache.hadoop.fs.Path(dir, s"postings/${Sinks.PointerFile}")
+      require(!old.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(old),
+        s"$dir is a lexical index in the per-artifact layout (a generation " +
+          "pointer per artifact); rebuild it through writeLexIndex")
+      val live = Sinks.resolveLive(spark, dir)
+      val gen = live.paths.headOption.getOrElse(throw new IllegalStateException(
+        s"lexical index dir $dir does not exist or holds no ready generation"))
+      val st = artifact(spark, gen, "stats", Some(StatsSchema)).head()
+      val h = LexHandle(gen, live.token, st.getAs[Long]("n"),
+        st.getAs[Long]("sumdl"), st.getAs[Int]("buckets"),
+        artifact(spark, gen, "postings").schema)
+      if (h.token.nonEmpty) lexHandles.put(dir, h)
       h
     }
   }
 
-  /** The live postings/ of a handle's generation, read with its cached
-    * schema (no inference job). */
-  private def postingsOf(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, h: LexHandle): DataFrame =
-    graft.streaming.Streams.readIndex(spark, s"$dir/postings",
-      schema = Some(h.postings))
+  /** Artifact `a` (postings, doclens, stats or terms) of generation
+    * `gen`; a known `schema` skips the inference job. */
+  private def artifact(spark: org.apache.spark.sql.SparkSession, gen: String,
+                       a: String, schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(s"$gen/$a")
 
-  /** Dirs already warned about probing unguarded (pre-guard layout) — the
-    * warning is per-dir, not per-probe, so a streaming probe loop does not
-    * spam it every micro-batch.
-    */
-  private val warnedPreGuard =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** The postings of a handle's generation, read with its cached schema
+    * (no inference job). */
+  private def postingsOf(spark: org.apache.spark.sql.SparkSession,
+                         h: LexHandle): DataFrame =
+    artifact(spark, h.gen, "postings", Some(h.postings))
 
   /** Resolve the guard for one probe. The stop-term SET of a generation
     * (every term whose df exceeds the ceiling) is computed ONCE per
@@ -513,36 +496,18 @@ object Search {
     * term+df) instead of the legacy query-bucket-pruned read; past
     * [[StopSetCacheCap]] survivors the generation keeps that legacy
     * consult.
-    *
-    * An absent terms/ is a pre-guard layout (WARN once per dir + probe
-    * unguarded, not cached): a swapped directory never disappears.
     */
   private def guardPlan(spark: org.apache.spark.sql.SparkSession,
                         dir: String, h: LexHandle, maxDfPermille: Int): GuardPlan =
     h.guard.collect { case (p, plan) if p == maxDfPermille => plan }.getOrElse {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/terms")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!h.hasTerms && !fs.exists(p)) {
-        if (warnedPreGuard.add(dir))
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"maxDfPermille=$maxDfPermille requested but $dir has no stored " +
-              "terms/ table (pre-guard layout): probing UNGUARDED " +
-              "(= maxDfPermille 1000). Rebuild with writeLexIndex or run " +
-              "one lexIndexDelta generation to migrate.")
-        Unguarded
-      } else {
-        val stop = graft.streaming.Streams
-          .readIndex(spark, s"$dir/terms")
-          .filter(!dfCeilingOk(h.n, maxDfPermille))
-          .select("term").limit(StopSetCacheCap + 1)
-          .collect().map(_.getString(0)).toSet
-        val plan = if (stop.size > StopSetCacheCap) ConsultPerProbe else StopSet(stop)
-        // a terms/ that appeared after the token was taken belongs to a
-        // newer generation than this handle: use it, do not cache it
-        if (h.hasTerms)
-          lexHandles.replace(dir, h, h.copy(guard = Some(maxDfPermille -> plan)))
-        plan
-      }
+      val stop = artifact(spark, h.gen, "terms")
+        .filter(!dfCeilingOk(h.n, maxDfPermille))
+        .select("term").limit(StopSetCacheCap + 1)
+        .collect().map(_.getString(0)).toSet
+      val plan = if (stop.size > StopSetCacheCap) ConsultPerProbe else StopSet(stop)
+      // kept only while `h` is still the cached handle of dir
+      lexHandles.replace(dir, h, h.copy(guard = Some(maxDfPermille -> plan)))
+      plan
     }
 
   /** The df-ceiling guard shared by [[bm25FromIndex]] and
@@ -557,9 +522,7 @@ object Search {
     * plans/SCALE.md r11.2) while the guarded cut is semantically free
     * (idf ≈ 0 above 990‰) — a default IS the product at 100× scale.
     * 1000‰ is the explicit opt-out that admits every term without
-    * reading `terms/`; a pre-r11 index without that table probes
-    * unguarded with a one-time WARN ([[guardPlan]]) — the layout predates
-    * the guard, so failing at probe time would break it retroactively.
+    * reading `terms/`.
     * The cut is EXACT and engine-replayable: the oracle applies the same
     * `df · 1000 <= maxDfPermille · n` predicate on its own dfreq CTE.
     */
@@ -590,18 +553,17 @@ object Search {
     val terms: Seq[String] =
       if (maxDfPermille >= 1000) queryTerms
       else guardPlan(spark, dir, h, maxDfPermille) match {
-        case Unguarded      => queryTerms
         case StopSet(stop)  => queryTerms.filterNot(stop)
         case ConsultPerProbe =>
           val tbks = queryTerms.map(t => Ann.md5Prefix60(t) % buckets).distinct
-          graft.streaming.Streams.readIndex(spark, s"$dir/terms")
+          artifact(spark, h.gen, "terms")
             .filter(col("bucket").isin(tbks: _*))
             .filter(col("term").isin(queryTerms: _*))
             .filter(dfCeilingOk(n, maxDfPermille))
             .select("term").collect().map(_.getString(0)).toSeq
       }
     val bks = terms.map(t => Ann.md5Prefix60(t) % buckets).distinct
-    val posts = postingsOf(spark, dir, h)
+    val posts = postingsOf(spark, h)
       .filter(col("bucket").isin(bks: _*))
       .filter(col("term").isin(terms: _*))
       .select("id", "dl", "term", "tf")
@@ -644,15 +606,13 @@ object Search {
     val q =
       if (maxDfPermille >= 1000) qAll
       else guardPlan(spark, dir, h, maxDfPermille) match {
-        case Unguarded => qAll
         case StopSet(stop) =>
           if (stop.isEmpty) qAll
           else qAll.filter(!col("term").isin(stop.toSeq: _*))
         case ConsultPerProbe =>
           val tbks = qAll.select(termBucket(col("term"), buckets).as("b"))
             .distinct().collect().map(_.getLong(0)) // bounded: <= buckets
-          val survivors = graft.streaming.Streams
-            .readIndex(spark, s"$dir/terms")
+          val survivors = artifact(spark, h.gen, "terms")
             .filter(col("bucket").isin(tbks.toSeq: _*))
             .filter(dfCeilingOk(n, maxDfPermille))
             .select("term")
@@ -660,7 +620,7 @@ object Search {
       }
     val bks = q.select(termBucket(col("term"), buckets).as("b"))
       .distinct().collect().map(_.getLong(0)) // bounded: <= buckets values
-    val posts = postingsOf(spark, dir, h)
+    val posts = postingsOf(spark, h)
       .filter(col("bucket").isin(bks.toSeq: _*))
       .join(q.select("term").distinct(), Seq("term"), "left_semi")
       .select("id", "dl", "term", "tf")
@@ -689,46 +649,31 @@ object Search {
     * touched only for the delta. `retiredIds` retires STORED rows only;
     * admitted docs always enter — retire + admit in one call replaces a
     * changed document (the [[graft.dedup.Dedup.indexDelta]] snapshotDiff
-    * contract). Write each frame back via
-    * [[graft.operators.Sinks.swapWrite]] (postings and terms with
-    * partitionBy("bucket")) — the atomic-swap writer; an in-place
-    * overwrite would delete the postings under the job reading them.
+    * contract).
     *
-    * WRITE-BACK ORDER: the returned frames read the LIVE generation
-    * lazily — `posts` and `terms` read postings/, `doclens` and `stats`
-    * read doclens/ — and swapWrite never touches a live generation, so
-    * every frame keeps reading its own inputs through the swaps;
-    * [[writeLexDelta]] writes terms, stats, postings, doclens, the order
-    * that keeps a frame's inputs ahead of retention. Each directory swap
-    * is individually atomic; a crash between swaps leaves dirs from two
-    * generations, which the next [[lexIndexDelta]] + [[writeLexDelta]]
-    * run re-converges (every artifact re-derives from postings/doclens).
+    * Write the result back with [[writeLexDelta]]: the returned frames
+    * lazily read the live generation they were built from, and the swap
+    * writes a fresh one beside it, so they keep reading their inputs
+    * until the one pointer flip. An in-place overwrite would delete the
+    * postings under the job reading them.
     *
     * Returns (postings, doclens, stats, terms) — `terms` is the
     * maintained per-term df table ([[writeLexIndex]]'s fourth artifact,
     * re-aggregated from the maintained postings: index-scan-sized, no
-    * text). An old-layout index without `terms/` migrates on its first
-    * delta: the returned frame materializes either way.
+    * text).
     */
   def lexIndexDelta(admitted: DataFrame, idCol: String, textCol: String,
                     dir: String, retiredIds: DataFrame):
       (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val spark = admitted.sparkSession
-    // restart step first (before ANY of the four dirs is listed): promote
-    // every generation a crashed [[writeLexDelta]] left ready but
-    // unpointed, so the replay builds on it. A no-op in the common case
-    // (one listing per dir).
-    Seq("terms", "stats", "postings", "doclens").foreach(sub =>
-      graft.operators.Sinks.recoverSwap(spark, s"$dir/$sub"))
     val h = lexHandle(spark, dir)
     val buckets = h.buckets
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted documents
     // replace any stored copy — the apply is idempotent, so a maintenance
-    // loop replaying its uncommitted micro-batch after a crash (even one
-    // whose swaps PARTIALLY landed across the four dirs) converges to the
-    // same generation (PointerSwapSpec pins all three crash windows)
+    // loop replaying its uncommitted micro-batch after a crash converges
+    // to the same generation (PointerSwapSpec pins the crash windows)
     val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val keptPosts = postingsOf(spark, dir, h)
+    val keptPosts = postingsOf(spark, h)
       .join(broadcast(retire), Seq("id"), "left_anti")
       // partition-column inference reads bucket back as INT; the fresh
       // side computes LONG — align before the union
@@ -756,7 +701,7 @@ object Search {
         col("__tc.tf").as("tf"))
       .withColumn("bucket", termBucket(col("term"), buckets))
     val posts = keptPosts.unionByName(freshPosts)
-    val doclens = graft.streaming.Streams.readIndex(spark, s"$dir/doclens")
+    val doclens = artifact(spark, h.gen, "doclens")
       .join(broadcast(retire), Seq("id"), "left_anti")
       .unionByName(toks.select(col("id"), size(col("__tk")).cast(LongType).as("dl")))
     val stats = doclens.agg(count(lit(1)).as("n"),
@@ -767,10 +712,11 @@ object Search {
     (posts, doclens, stats, terms)
   }
 
-  /** Write a [[lexIndexDelta]] result back over the live index: terms and
-    * stats first — they lazily read the live postings/doclens generations
-    * that the later swaps supersede — then postings, then doclens, each
-    * through [[graft.operators.Sinks.swapWrite]] (atomic per directory).
+  /** Write a [[lexIndexDelta]] result back over the live index as ONE
+    * new generation: all four artifacts land in a fresh `gen-N`, then
+    * `_CURRENT` flips once ([[graft.operators.Sinks.swapGeneration]]), so
+    * a probe scores against the old generation or the new one, never a
+    * mix of the two.
     */
   def writeLexDelta(dir: String, posts: DataFrame, doclens: DataFrame,
                     stats: DataFrame, terms: DataFrame): Unit = {
@@ -781,13 +727,16 @@ object Search {
     // repartition(col("bucket")) AQE-coalesced this vocabulary-sized
     // shuffle to ONE partition and a single task wrote every bucket
     // directory serially (r18, guide §2.4). The bucket count comes off
-    // the live generation's handle, resolved before anything swaps — the
-    // one lexIndexDelta just built, so no stats/ read runs here.
-    val buckets = lexHandle(terms.sparkSession, dir).buckets
-    Sinks.swapWrite(terms.repartition(buckets, col("bucket")), s"$dir/terms",
-      Seq("bucket"))
-    Sinks.swapWrite(stats.coalesce(1), s"$dir/stats")
-    Sinks.swapWrite(posts, s"$dir/postings", Seq("bucket"))
-    Sinks.swapWrite(doclens, s"$dir/doclens")
+    // the live generation's handle — the one lexIndexDelta just built, so
+    // no stats/ read runs here.
+    val spark = terms.sparkSession
+    val buckets = lexHandle(spark, dir).buckets
+    Sinks.swapGeneration(spark, dir) { gen =>
+      posts.write.partitionBy("bucket").parquet(s"$gen/postings")
+      doclens.write.parquet(s"$gen/doclens")
+      stats.coalesce(1).write.parquet(s"$gen/stats")
+      terms.repartition(buckets, col("bucket"))
+        .write.partitionBy("bucket").parquet(s"$gen/terms")
+    }
   }
 }

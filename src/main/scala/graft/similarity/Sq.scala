@@ -261,8 +261,6 @@ object Sq {
   def indexCodesDelta(admitted: DataFrame, idCol: String, vecCol: String,
                       dir: String, retiredIds: DataFrame): DataFrame = {
     val spark = admitted.sparkSession
-    // restart step first: promote a stranded generation before listing codes/
-    graft.operators.Sinks.recoverSwap(spark, s"$dir/codes")
     val (cents, s) = readModel(spark, dir)
     // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors
     // replace any stored copy — idempotent under crash replay

@@ -249,21 +249,20 @@ class LayoutSpec extends SparkSpec {
       assert(rows.map(_._1) == (0L until 20L).toSet - 3L)
       assert(rows.forall(_._2.endsWith("'")), "rewrite lost the projection")
       // stranded swap (crash after a generation's write job, before its
-      // pointer update): readers keep the pointed generation until the
-      // restart step promotes the ready one
+      // pointer update): never read, and discarded by the next swapWrite
       val df3 = Seq((100L, "fresh", 0L)).toDF("id", "v", "cell")
-      df3.write.partitionBy("cell").parquet(s"$dir/gen-5")
+      Seq((300L, "stranded", 2L)).toDF("id", "v", "cell")
+        .write.partitionBy("cell").parquet(s"$dir/gen-5")
       fs.create(new Path(s"$dir/gen-5/${Sinks.GenReadyMarker}"), true).close()
       assert(rows.map(_._1) == (0L until 20L).toSet - 3L,
-        "an unpointed generation went live before recovery")
-      assert(Sinks.recoverSwap(spark, dir))
-      assert(rows == Set((100L, "fresh", 0L)))
-      // a mid-write carcass (no ready marker) is discarded, not swapped in
-      val df4 = Seq((200L, "live", 1L)).toDF("id", "v", "cell")
-      df4.write.partitionBy("cell").parquet(s"$dir/gen-9")
+        "an unpointed generation went live")
+      // a mid-write carcass (no ready marker) is discarded too
+      Seq((200L, "carcass", 1L)).toDF("id", "v", "cell")
+        .write.partitionBy("cell").parquet(s"$dir/gen-9")
       Sinks.swapWrite(df3, dir, Seq("cell"))
       assert(rows == Set((100L, "fresh", 0L)),
-        "a mid-write carcass leaked into the index")
+        "a stranded generation leaked into the index")
+      assert(!fs.exists(new Path(s"$dir/gen-5")), "stranded generation not discarded")
       assert(!fs.exists(new Path(s"$dir/gen-9")), "carcass not cleaned")
       // no pointer temp file survives a clean swap
       assert(!fs.exists(new Path(s"$dir/${Sinks.PointerFile}.tmp")),

@@ -16,9 +16,11 @@ import graft.similarity.Search
   *    [[Sinks.resolveLive]] / readIndex;
   *  - a non-empty flat dir is refused, not converted;
   *  - the three crash windows (mid-write carcass / ready-but-unpointed /
-  *    mid-pointer-update) each recover — and the full ONLINE maintain
-  *    loop (the q_stream_lexmaintain identity) converges to the
-  *    from-scratch rebuild through each of them;
+  *    mid-pointer-update): readers never see the first two and the next
+  *    swap discards them; the third reads through the fallback — and the
+  *    full ONLINE maintain loop (the q_stream_lexmaintain identity)
+  *    converges to the from-scratch rebuild through each of them;
+  *  - a probe racing a lexical-index write-back scores one generation;
   *  - retention keeps the previous generation for in-flight readers.
   */
 class PointerSwapSpec extends SparkSpec {
@@ -148,34 +150,36 @@ class PointerSwapSpec extends SparkSpec {
     }
   }
 
-  test("crash windows: unready carcass cleaned; ready-but-unpointed " +
-       "promoted by recoverSwap; mid-pointer-update falls back to the " +
-       "newest ready generation") {
+  test("crash windows: an unready carcass and a ready-but-unpointed " +
+       "generation are never read and the next swap discards both; " +
+       "mid-pointer-update falls back to the newest ready generation") {
     withTempDir("ptr_cw") { base =>
       val idx = s"$base/idx"
       Sinks.swapWrite(Seq((1L, "a")).toDF("id", "v"), idx)
       val f = fs(idx)
       // window 1: a mid-write carcass (partial gen, no _GEN_READY)
       Seq((7L, "junk")).toDF("id", "v").write.parquet(s"$idx/gen-5")
-      assert(rowsOf(idx) == Set((1L, "a"))) // readers never see it
-      Sinks.swapWrite(Seq((2L, "b")).toDF("id", "v"), idx)
-      assert(!f.exists(new Path(s"$idx/gen-5")), "carcass not cleaned")
-      // the replayed generation numbers PAST the carcass, never reuses it
-      assert(rowsOf(idx) == Set((2L, "b")))
-      // window 2: a completed generation whose pointer update never ran —
-      // recoverSwap PROMOTES it (pure pointer rewrite, no data moves)
+      // window 2: a completed generation whose pointer update never ran
       Seq((3L, "c")).toDF("id", "v").write.parquet(s"$idx/gen-9")
       f.create(new Path(s"$idx/gen-9/${Sinks.GenReadyMarker}"), true).close()
-      assert(Sinks.recoverSwap(spark, idx))
-      assert(rowsOf(idx) == Set((3L, "c")))
-      assert(!Sinks.recoverSwap(spark, idx)) // idempotent: nothing stranded
+      assert(rowsOf(idx) == Set((1L, "a"))) // readers see neither
+      Sinks.swapWrite(Seq((2L, "b")).toDF("id", "v"), idx)
+      assert(!f.exists(new Path(s"$idx/gen-5")), "carcass not discarded")
+      assert(!f.exists(new Path(s"$idx/gen-9")), "unpointed generation not discarded")
+      // the new generation numbers past both, never reusing a name
+      assert(f.exists(new Path(s"$idx/gen-10")))
+      assert(rowsOf(idx) == Set((2L, "b")))
       // window 3: crash between pointer delete and tmp rename — readers
-      // fall back to the newest READY generation; recovery rewrites
-      assert(f.delete(new Path(s"$idx/${Sinks.PointerFile}"), false))
-      assert(rowsOf(idx) == Set((3L, "c")))
-      assert(Sinks.recoverSwap(spark, idx))
-      assert(f.exists(new Path(s"$idx/${Sinks.PointerFile}")))
-      assert(rowsOf(idx) == Set((3L, "c")))
+      // fall back to the newest READY generation (no token: nothing may
+      // cache it), and the next swap takes it as live and re-points
+      val pointer = new Path(s"$idx/${Sinks.PointerFile}")
+      assert(f.delete(pointer, false))
+      assert(rowsOf(idx) == Set((2L, "b")))
+      assert(Sinks.resolveLive(spark, idx).token.isEmpty)
+      Sinks.swapWrite(Seq((4L, "d")).toDF("id", "v"), idx)
+      assert(f.exists(pointer) && f.exists(new Path(s"$idx/gen-10")),
+        "the fallback-live generation must survive as the predecessor")
+      assert(rowsOf(idx) == Set((4L, "d")))
     }
   }
 
@@ -197,17 +201,61 @@ class PointerSwapSpec extends SparkSpec {
     }
   }
 
+  test("a probe racing writeLexDelta scores the live generation, never " +
+       "the new stats against the old postings") {
+    withTempDir("ptr_torn") { base =>
+      val idx = s"$base/index"
+      val stored = Seq((1L, "spark common"), (2L, "common words here"),
+        (3L, "spark spark rare"))
+      // the admitted docs grow n and sumdl without touching the probed
+      // terms' postings: new stats over the old postings change every score
+      val admitted = Seq((4L, "common fresh doc"), (5L, "another common"),
+        (6L, "more words here too"))
+      Search.writeLexIndex(stored.toDF("doc_id", "text"), "doc_id", "text",
+        idx, buckets = 8)
+      val terms = Seq("spark", "rare")
+      def probe() = Search.bm25FromIndex(spark, idx, terms, k = 5,
+          maxDfPermille = 1000).as[(Long, Double)].collect().toSeq
+      def want(m: Seq[(Long, String)]) = Search.bm25TopK(
+          m.toDF("doc_id", "text"), "doc_id", "text", terms, k = 5)
+        .as[(Long, Double)].collect().toSeq
+      val before = want(stored)
+      val after = want(stored ++ admitted)
+      assert(before != after, "the admitted docs must move the scores")
+      assert(probe() == before)
+      val (posts, doclens, stats, dfs) = Search.lexIndexDelta(
+        admitted.toDF("doc_id", "text"), "doc_id", "text", idx,
+        Seq.empty[Long].toDF("id"))
+      // the postings write's one task blocks until the gate opens
+      val gated = spark.createDataFrame(posts.coalesce(1).rdd.mapPartitions {
+        it => TornReadGate.hold(); it }, posts.schema)
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      val writer = Future(Search.writeLexDelta(idx, gated, doclens, stats, dfs))(
+        scala.concurrent.ExecutionContext.global)
+      try {
+        assert(TornReadGate.entered.await(120, SECONDS),
+          "the postings write never started")
+        assert(probe() == before,
+          "a probe during the write-back mixed two generations")
+      } finally TornReadGate.open.countDown()
+      Await.result(writer, 5.minutes)
+      assert(probe() == after)
+      graft.Caching.drain()
+    }
+  }
+
   // ------------------------------------------------------------------
   // crash injection into the ONLINE maintain loop: kill a generation
-  // inside writeLexDelta's swaps, in each crash window, and assert the
+  // inside writeLexDelta's one swap, in each crash window, and assert the
   // RESTARTED stream (same checkpoint — Structured Streaming replays the
   // uncommitted micro-batch) converges to a from-scratch rebuild over the
-  // maintained membership. The levers: lexIndexDelta runs recoverSwap on
-  // all four dirs before listing them, and the delta apply is IDEMPOTENT
-  // (Dedup.replaceIdFrame), so replaying a batch whose swaps PARTIALLY
-  // landed still converges. The crash states are installed directly
-  // between two AvailableNow drains — deterministic, where killing a
-  // thread mid-swap is not.
+  // maintained membership. The levers: a lexical index is ONE pointer dir
+  // (all four artifacts in each gen-N), an unflipped generation is never
+  // read and the next swap discards it, and the delta apply is IDEMPOTENT
+  // (Dedup.replaceIdFrame), so replaying the batch converges. The crash
+  // states are installed directly between two AvailableNow drains —
+  // deterministic, where killing a thread mid-swap is not.
   // ------------------------------------------------------------------
 
   private val corpus = Seq(
@@ -248,13 +296,13 @@ class PointerSwapSpec extends SparkSpec {
         org.apache.spark.sql.DataFrame)) => Unit): Unit =
     withTempDir(s"ptrcrash_$tag") { base =>
     val inDir = s"$base/in"; val idxDir = s"$base/index"; val ckpt = s"$base/ckpt"
-    // the bootstrap build lands as every artifact's gen-0
+    // the bootstrap build lands as the index's gen-0
     Search.writeLexIndex(corpus.toDF("doc_id", "text"), "doc_id", "text",
       idxDir, buckets = 8)
     fileA.toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(inDir)
     drain(inDir, idxDir, ckpt) // generation A lands, batch 0 commits
-    assert(fs(idxDir).exists(new Path(s"$idxDir/postings/gen-1")),
+    assert(fs(idxDir).exists(new Path(s"$idxDir/gen-1/postings")),
       "the maintain generation did not land as gen-1")
     // batch B becomes visible but is NEVER committed: the crash windows
     // below are states the loop body leaves when killed mid-writeLexDelta
@@ -265,7 +313,7 @@ class PointerSwapSpec extends SparkSpec {
     crash(idxDir, delta)
     graft.Caching.drain()
     // restart: same checkpoint → the loop replays batch B against
-    // whatever the crash left, runs recovery, and must converge
+    // whatever the crash left, and must converge
     drain(inDir, idxDir, ckpt)
     val rebuildDir = s"$base/rebuild"
     Search.writeLexIndex(membership.toDF("doc_id", "text"), "doc_id", "text",
@@ -276,29 +324,46 @@ class PointerSwapSpec extends SparkSpec {
       Search.bm25FromIndex(spark, d, Seq("spark", "common"), k = 5)
         .as[(Long, Double)].collect().toSeq
     assert(probe(idxDir) == probe(rebuildDir) && probe(idxDir).nonEmpty)
+    val gens = fs(idxDir).listStatus(new Path(idxDir)).map(_.getPath.getName)
+      .filter(_.startsWith("gen-")).toSet
+    assert(!gens.exists(Set("gen-77", "gen-88")),
+      s"$tag: a stranded generation survived the next swap: $gens")
     graft.Caching.drain()
+  }
+
+  /** Lay a lexIndexDelta result out as generation `gen` of `idxDir`,
+    * with no pointer flip: what writeLexDelta leaves when killed before
+    * its `_GEN_READY` marker (`ready = false`) or between the marker and
+    * the flip. */
+  private def strandGen(idxDir: String, gen: String, ready: Boolean,
+      delta: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)): Unit = {
+    val (posts, doclens, stats, terms) = delta
+    val g = s"$idxDir/$gen"
+    posts.write.partitionBy("bucket").parquet(s"$g/postings")
+    if (ready) {
+      doclens.write.parquet(s"$g/doclens")
+      stats.coalesce(1).write.parquet(s"$g/stats")
+      terms.write.partitionBy("bucket").parquet(s"$g/terms")
+      fs(g).create(new Path(s"$g/${Sinks.GenReadyMarker}"), true).close()
+    }
+    val live = postsOf(idxDir)
+    assert(live.nonEmpty && !live.exists(_._1 == 20L),
+      s"$gen: a generation the pointer never named went live")
   }
 
   test("pointer maintain, mid-write window: an UNREADY partial generation " +
        "beside the pointed one is discarded and the replay converges") {
-    runWindow("midwrite") { case (idxDir, (posts, _, _, _)) =>
-      posts.limit(1).write.partitionBy("bucket")
-        .parquet(s"$idxDir/postings/gen-77")
+    runWindow("midwrite") { case (idxDir, delta) =>
+      strandGen(idxDir, "gen-77", ready = false, delta)
     }
   }
 
-  test("pointer maintain, pre-pointer window: terms/stats landed, " +
-       "postings READY but unpointed, doclens untouched — recovery " +
-       "promotes and the replay is idempotent") {
-    runWindow("prepointer") { case (idxDir, (posts, _, stats, terms)) =>
-      Sinks.swapWrite(terms.repartition(col("bucket")), s"$idxDir/terms",
-        Seq("bucket"))
-      Sinks.swapWrite(stats.coalesce(1), s"$idxDir/stats")
-      // postings generation fully written + READY, pointer never updated
-      posts.write.partitionBy("bucket").parquet(s"$idxDir/postings/gen-88")
-      fs(idxDir).create(
-        new Path(s"$idxDir/postings/gen-88/${Sinks.GenReadyMarker}"),
-        true).close()
+  test("pointer maintain, pre-pointer window: a READY generation holding " +
+       "all four artifacts but never pointed to is not read, the next swap " +
+       "discards it and the replay converges") {
+    runWindow("prepointer") { case (idxDir, delta) =>
+      strandGen(idxDir, "gen-88", ready = true, delta)
     }
   }
 
@@ -308,7 +373,22 @@ class PointerSwapSpec extends SparkSpec {
     runWindow("midpointer") { case (idxDir, (posts, doclens, stats, terms)) =>
       Search.writeLexDelta(idxDir, posts, doclens, stats, terms)
       assert(fs(idxDir).delete(
-        new Path(s"$idxDir/doclens/${Sinks.PointerFile}"), false))
+        new Path(s"$idxDir/${Sinks.PointerFile}"), false))
+      // the fallback reads the generation the flip was writing
+      assert(postsOf(idxDir).exists(_._1 == 20L))
     }
+  }
+}
+
+/** The latch of PointerSwapSpec's torn-read test: the one task that
+  * reaches [[hold]] signals `entered` and waits for `open`. A top-level
+  * object, so task closures reach it without capturing the spec.
+  */
+object TornReadGate {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val open = new java.util.concurrent.CountDownLatch(1)
+  def hold(): Unit = {
+    entered.countDown()
+    open.await(5, java.util.concurrent.TimeUnit.MINUTES)
   }
 }

@@ -208,97 +208,98 @@ class SourcesAnnSpec extends SparkSpec {
   }
 
   test("stored lexical index: probe ≡ direct BM25, bucket pruning, delta identity") {
-    val docs = Seq(
-      (1L, "spark spark spark common common"),
-      (2L, "spark common common common common"),
-      (3L, "common common common common common"),
-      (4L, "spark spark spark common common"),
-      (5L, "")).toDF("doc_id", "text") // empty doc: no postings, counts in stats
-    val dir = java.nio.file.Files.createTempDirectory("lexidx").toString
-    Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
-    // store/load identity: shared bm25Tail ⇒ bit-identical scores
-    val got = Search.bm25FromIndex(spark, dir, Seq("spark", "common"), k = 5)
-      .as[(Long, Double)].collect().toSeq
-    val want = Search.bm25TopK(docs, "doc_id", "text", Seq("spark", "common"), k = 5)
-      .as[(Long, Double)].collect().toSeq
-    assert(got == want && got.nonEmpty)
-    // the stats row is read by column NAME: the same values stored as
-    // (sumdl, n, buckets) probe identically, where a positional read
-    // would silently swap the corpus size and the total length
-    val dirR = java.nio.file.Files.createTempDirectory("lexidx_r").toString
-    Search.writeLexIndex(docs, "doc_id", "text", dirR, buckets = 8)
-    val st0 = graft.streaming.Streams.readIndex(spark, s"$dirR/stats").head()
-    graft.operators.Sinks.swapWrite(
+    withTempDir("lexidx") { base =>
+      val (dir, dirR, dir2) = (s"$base/idx", s"$base/idx_r", s"$base/idx2")
+      val docs = Seq(
+        (1L, "spark spark spark common common"),
+        (2L, "spark common common common common"),
+        (3L, "common common common common common"),
+        (4L, "spark spark spark common common"),
+        (5L, "")).toDF("doc_id", "text") // empty doc: no postings, counts in stats
+      Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
+      // store/load identity: shared bm25Tail ⇒ bit-identical scores
+      val got = Search.bm25FromIndex(spark, dir, Seq("spark", "common"), k = 5)
+        .as[(Long, Double)].collect().toSeq
+      val want = Search.bm25TopK(docs, "doc_id", "text", Seq("spark", "common"), k = 5)
+        .as[(Long, Double)].collect().toSeq
+      assert(got == want && got.nonEmpty)
+      // the stats row is read by column NAME: the same values stored as
+      // (sumdl, n, buckets) probe identically, where a positional read
+      // would silently swap the corpus size and the total length (the row
+      // is rewritten in place, before any probe caches the generation)
+      Search.writeLexIndex(docs, "doc_id", "text", dirR, buckets = 8)
+      val st0 = graft.streaming.Streams.readIndex(spark, s"$dirR/stats").head()
       Seq((st0.getAs[Long]("sumdl"), st0.getAs[Long]("n"), st0.getAs[Int]("buckets")))
-        .toDF("sumdl", "n", "buckets").coalesce(1), s"$dirR/stats")
-    assert(Search.bm25FromIndex(spark, dirR, Seq("spark", "common"), k = 5)
-      .as[(Long, Double)].collect().toSeq == want)
-    // the empty doc reached the corpus stats (n=5), not the postings
-    val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats").head()
-    assert(st.getLong(0) == 5L && st.getLong(1) == 20L)
-    // term routing reaches the scan as a PARTITION filter on the
-    // bucket-partitioned layout — pruned at file-listing time
-    val probe = Search.bm25FromIndex(spark, dir, Seq("spark"), k = 3)
-    probe.collect()
-    val p = probe.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(p).isDefined,
-      s"expected a bucket partition filter in:\n${p.take(3000)}")
-    // df-ceiling stop-term guard: 1000‰ admits everything — today's
-    // behavior bit-for-bit; 700‰ drops 'common' (df 4/5 = 800‰) and the
-    // result equals a spark-only probe; the dropped term's bucket
-    // partition (common → bucket 0, spark → bucket 1 at buckets=8) is
-    // never read — pruning happens at file-listing time off the stored
-    // terms/ table, before a posting row is touched
-    val full = Search.bm25FromIndex(spark, dir, Seq("spark", "common"),
-      k = 5, maxDfPermille = 1000).as[(Long, Double)].collect().toSeq
-    assert(full == got)
-    val guarded = Search.bm25FromIndex(spark, dir, Seq("spark", "common"),
-      k = 5, maxDfPermille = 700)
-    assert(guarded.as[(Long, Double)].collect().toSeq ==
-      Search.bm25FromIndex(spark, dir, Seq("spark"), k = 5)
-        .as[(Long, Double)].collect().toSeq)
-    guarded.collect()
-    val pfSeg = "PartitionFilters: \\[[^\\]]*\\]".r
-      .findFirstIn(guarded.queryExecution.executedPlan.toString).getOrElse("")
-    assert(pfSeg.nonEmpty &&
-      (pfSeg.contains("= 1)") || pfSeg.contains("IN (1)")) &&
-      !pfSeg.contains("= 0)") && !pfSeg.contains("IN (0"),
-      s"expected a bucket=1-only partition filter, got: $pfSeg")
-    // a ceiling that drops EVERY query term yields an empty result, not
-    // an error (the all-stop-words query)
-    assert(Search.bm25FromIndex(spark, dir, Seq("spark", "common"), k = 5,
-      maxDfPermille = 0).count() == 0)
-    // maintenance identity: retire + admit ≡ rebuild over the membership.
-    // doc 6 is in BOTH sets — the single-call replace: its stored postings
-    // retire, its admitted text enters (previously the drop semantics
-    // silently deleted a changed doc; the Dedup.indexDelta contract wins)
-    val admitted = Seq((6L, "fresh spark doc"), (7L, "common fresh")).toDF("doc_id", "text")
-    val retired = Seq(2L, 6L).toDF("id")
-    val (posts, doclens, stats, terms) = Search.lexIndexDelta(
-      admitted, "doc_id", "text", dir, retired)
-    val membership = docs.filter(!$"doc_id".isin(2L, 6L))
-      .unionByName(admitted)
-    val dir2 = java.nio.file.Files.createTempDirectory("lexidx2").toString
-    Search.writeLexIndex(membership, "doc_id", "text", dir2, buckets = 8)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "dl", "term", "tf", "bucket")
-        .as[(Long, Long, String, Long, Long)].collect().toSet
-    def stored(sub: String) =
-      graft.streaming.Streams.readIndex(spark, s"$dir2/$sub")
-    assert(rows(posts) == rows(stored("postings")
-      .select(col("id"), col("dl"), col("term"), col("tf"),
-        col("bucket").cast("long"))))
-    assert(doclens.as[(Long, Long)].collect().toSet ==
-      stored("doclens").as[(Long, Long)].collect().toSet)
-    assert(stats.select("n", "sumdl").as[(Long, Long)].head() ==
-      stored("stats").select("n", "sumdl")
-        .as[(Long, Long)].head())
-    // the maintained terms table ≡ the rebuilt one (df + bucket per term)
-    assert(terms.select("term", "df", "bucket")
-        .as[(String, Long, Long)].collect().toSet ==
-      stored("terms")
-        .select(col("term"), col("df"), col("bucket").cast("long"))
-        .as[(String, Long, Long)].collect().toSet)
+        .toDF("sumdl", "n", "buckets").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dirR/gen-0/stats")
+      assert(Search.bm25FromIndex(spark, dirR, Seq("spark", "common"), k = 5)
+        .as[(Long, Double)].collect().toSeq == want)
+      // the empty doc reached the corpus stats (n=5), not the postings
+      val st = graft.streaming.Streams.readIndex(spark, s"$dir/stats").head()
+      assert(st.getLong(0) == 5L && st.getLong(1) == 20L)
+      // term routing reaches the scan as a PARTITION filter on the
+      // bucket-partitioned layout — pruned at file-listing time
+      val probe = Search.bm25FromIndex(spark, dir, Seq("spark"), k = 3)
+      probe.collect()
+      val p = probe.queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(p).isDefined,
+        s"expected a bucket partition filter in:\n${p.take(3000)}")
+      // df-ceiling stop-term guard: 1000‰ admits everything — today's
+      // behavior bit-for-bit; 700‰ drops 'common' (df 4/5 = 800‰) and the
+      // result equals a spark-only probe; the dropped term's bucket
+      // partition (common → bucket 0, spark → bucket 1 at buckets=8) is
+      // never read — pruning happens at file-listing time off the stored
+      // terms/ table, before a posting row is touched
+      val full = Search.bm25FromIndex(spark, dir, Seq("spark", "common"),
+        k = 5, maxDfPermille = 1000).as[(Long, Double)].collect().toSeq
+      assert(full == got)
+      val guarded = Search.bm25FromIndex(spark, dir, Seq("spark", "common"),
+        k = 5, maxDfPermille = 700)
+      assert(guarded.as[(Long, Double)].collect().toSeq ==
+        Search.bm25FromIndex(spark, dir, Seq("spark"), k = 5)
+          .as[(Long, Double)].collect().toSeq)
+      guarded.collect()
+      val pfSeg = "PartitionFilters: \\[[^\\]]*\\]".r
+        .findFirstIn(guarded.queryExecution.executedPlan.toString).getOrElse("")
+      assert(pfSeg.nonEmpty &&
+        (pfSeg.contains("= 1)") || pfSeg.contains("IN (1)")) &&
+        !pfSeg.contains("= 0)") && !pfSeg.contains("IN (0"),
+        s"expected a bucket=1-only partition filter, got: $pfSeg")
+      // a ceiling that drops EVERY query term yields an empty result, not
+      // an error (the all-stop-words query)
+      assert(Search.bm25FromIndex(spark, dir, Seq("spark", "common"), k = 5,
+        maxDfPermille = 0).count() == 0)
+      // maintenance identity: retire + admit ≡ rebuild over the membership.
+      // doc 6 is in BOTH sets — the single-call replace: its stored postings
+      // retire, its admitted text enters (previously the drop semantics
+      // silently deleted a changed doc; the Dedup.indexDelta contract wins)
+      val admitted = Seq((6L, "fresh spark doc"), (7L, "common fresh")).toDF("doc_id", "text")
+      val retired = Seq(2L, 6L).toDF("id")
+      val (posts, doclens, stats, terms) = Search.lexIndexDelta(
+        admitted, "doc_id", "text", dir, retired)
+      val membership = docs.filter(!$"doc_id".isin(2L, 6L))
+        .unionByName(admitted)
+      Search.writeLexIndex(membership, "doc_id", "text", dir2, buckets = 8)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("id", "dl", "term", "tf", "bucket")
+          .as[(Long, Long, String, Long, Long)].collect().toSet
+      def stored(sub: String) =
+        graft.streaming.Streams.readIndex(spark, s"$dir2/$sub")
+      assert(rows(posts) == rows(stored("postings")
+        .select(col("id"), col("dl"), col("term"), col("tf"),
+          col("bucket").cast("long"))))
+      assert(doclens.as[(Long, Long)].collect().toSet ==
+        stored("doclens").as[(Long, Long)].collect().toSet)
+      assert(stats.select("n", "sumdl").as[(Long, Long)].head() ==
+        stored("stats").select("n", "sumdl")
+          .as[(Long, Long)].head())
+      // the maintained terms table ≡ the rebuilt one (df + bucket per term)
+      assert(terms.select("term", "df", "bucket")
+          .as[(String, Long, Long)].collect().toSet ==
+        stored("terms")
+          .select(col("term"), col("df"), col("bucket").cast("long"))
+          .as[(String, Long, Long)].collect().toSet)
+    }
   }
 
   test("bm25ManyFromIndex matches per-call probes and dedupes repeated terms") {
@@ -337,40 +338,40 @@ class SourcesAnnSpec extends SparkSpec {
     assert(guardedMany == perGuarded && guardedMany.nonEmpty)
   }
 
-  test("writeLexDelta writes the maintained index back in the SAFE order; " +
+  test("writeLexDelta writes the maintained index back as one generation; " +
        "probes over the written-back index ≡ a from-scratch rebuild") {
-    val docs = Seq(
-      (1L, "spark spark spark common common"),
-      (2L, "spark common common common common"),
-      (3L, "common common common common common"),
-      (4L, "spark rare common")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lexidx_wb").toString
-    Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
-    // doc 2 is in BOTH sets — the single-call replace; 3 retires; 5 enters
-    val admitted = Seq((5L, "fresh spark doc"), (2L, "spark rare rewrite"))
-      .toDF("doc_id", "text")
-    val retired = Seq(2L, 3L).toDF("id")
-    val (posts, doclens, stats, terms) = Search.lexIndexDelta(
-      admitted, "doc_id", "text", dir, retired)
-    // the hazard under test: terms/stats lazily read the live
-    // postings/doclens dirs, so writeLexDelta must swap them FIRST —
-    // tuple-order writes would fail the terms job on deleted files
-    Search.writeLexDelta(dir, posts, doclens, stats, terms)
-    val membership = docs.filter(!$"doc_id".isin(2L, 3L)).unionByName(admitted)
-    val dir2 = java.nio.file.Files.createTempDirectory("lexidx_wb2").toString
-    Search.writeLexIndex(membership, "doc_id", "text", dir2, buckets = 8)
-    def probe(d: String) =
-      Search.bm25FromIndex(spark, d, Seq("spark", "rare"), k = 5)
-        .as[(Long, Double)].collect().toSeq
-    assert(probe(dir) == probe(dir2) && probe(dir).nonEmpty)
-    // the guarded probe consults the SWAPPED terms/ table — a stale
-    // terms/ beside new postings would drop the wrong terms
-    def guarded(d: String) =
-      Search.bm25FromIndex(spark, d, Seq("spark", "common"), k = 5,
-          maxDfPermille = 700)
-        .as[(Long, Double)].collect().toSeq
-    assert(guarded(dir) == guarded(dir2))
-    graft.Caching.drain()
+    withTempDir("lexidx_wb") { base =>
+      val (dir, dir2) = (s"$base/idx", s"$base/rebuilt")
+      val docs = Seq(
+        (1L, "spark spark spark common common"),
+        (2L, "spark common common common common"),
+        (3L, "common common common common common"),
+        (4L, "spark rare common")).toDF("doc_id", "text")
+      Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
+      // doc 2 is in BOTH sets — the single-call replace; 3 retires; 5 enters
+      val admitted = Seq((5L, "fresh spark doc"), (2L, "spark rare rewrite"))
+        .toDF("doc_id", "text")
+      val retired = Seq(2L, 3L).toDF("id")
+      val (posts, doclens, stats, terms) = Search.lexIndexDelta(
+        admitted, "doc_id", "text", dir, retired)
+      // the frames lazily read the live generation, which the one-flip
+      // swap never touches
+      Search.writeLexDelta(dir, posts, doclens, stats, terms)
+      val membership = docs.filter(!$"doc_id".isin(2L, 3L)).unionByName(admitted)
+      Search.writeLexIndex(membership, "doc_id", "text", dir2, buckets = 8)
+      def probe(d: String) =
+        Search.bm25FromIndex(spark, d, Seq("spark", "rare"), k = 5)
+          .as[(Long, Double)].collect().toSeq
+      assert(probe(dir) == probe(dir2) && probe(dir).nonEmpty)
+      // the guarded probe consults the new generation's terms/ table — a
+      // stale terms/ beside new postings would drop the wrong terms
+      def guarded(d: String) =
+        Search.bm25FromIndex(spark, d, Seq("spark", "common"), k = 5,
+            maxDfPermille = 700)
+          .as[(Long, Double)].collect().toSeq
+      assert(guarded(dir) == guarded(dir2))
+      graft.Caching.drain()
+    }
   }
 
   test("stop-term guard cache invalidates across a swapWrite generation; " +
@@ -409,12 +410,11 @@ class SourcesAnnSpec extends SparkSpec {
           "is no longer a stop term) — a stale cache entry survived the swap")
       val e2 = Search.lexHandleEntry(dir)
       assert(stopped(e2, 4L, Set.empty), s"handle: $e2")
-      assert(e1.get.gen != e2.get.gen || e1.get.guard != e2.get.guard,
-        "the generation key (terms/ mtime) must rotate across a swapWrite")
-      assert(e1.get.gen != e2.get.gen, "a maintain swap must rotate the token")
-      assert(e2.get.gen.forall(_._1.endsWith("/gen-1")), s"${e2.get.gen}")
+      assert(e1.get.token.nonEmpty && e1.get.token != e2.get.token,
+        "a maintain swap must rotate the token")
+      assert(e2.get.gen.endsWith("/gen-1"), e2.get.gen)
       // writeLexIndex over the live index: same n (4), the next generation
-      // of every artifact — common is back to 3/4 and must be stopped again
+      // — common is back to 3/4 and must be stopped again
       Search.writeLexIndex(Seq((1L, "spark common alpha"), (2L, "spark common"),
         (3L, "common rare"), (4L, "gamma")).toDF("doc_id", "text"),
         "doc_id", "text", dir, buckets = 8)
@@ -422,7 +422,8 @@ class SourcesAnnSpec extends SparkSpec {
         "an in-place overwrite must rotate the handle")
       val e3 = Search.lexHandleEntry(dir)
       assert(stopped(e3, 4L, Set("common")), s"handle: $e3")
-      assert(e3.get.gen.forall(_._1.endsWith("/gen-2")), s"${e3.get.gen}")
+      assert(e3.get.token != e2.get.token, "a rebuild must rotate the token")
+      assert(e3.get.gen.endsWith("/gen-2"), e3.get.gen)
       // a second maintain: retiring doc 1 leaves common 2/3 = 667‰ ≤ 700,
       // so common survives
       maintain(Nil, Seq(1L))
@@ -430,19 +431,20 @@ class SourcesAnnSpec extends SparkSpec {
         probe(Seq("spark", "common"), 1000))
       val e4 = Search.lexHandleEntry(dir)
       assert(stopped(e4, 3L, Set.empty), s"handle: $e4")
-      assert(e4.get.gen.forall(_._1.endsWith("/gen-3")), s"${e4.get.gen}")
+      assert(e4.get.token != e3.get.token && e4.get.gen.endsWith("/gen-3"),
+        s"handle: $e4")
       graft.Caching.drain()
-      // pre-guard layout: delete terms/ entirely — the guarded DEFAULT must
-      // warn-and-fallback to the unguarded probe, not fail at probe time
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/terms"), true)
-      assert(probe(Seq("spark", "common"), 990) ==
-        probe(Seq("spark", "common"), 1000))
-      // multi-query twin over the same pre-guard layout
-      val q = Seq((0L, "spark"), (0L, "common")).toDF("qid", "term")
-      assert(Search.bm25ManyFromIndex(spark, dir, q, "qid", "term", k = 5)
-          .count() > 0)
+    }
+    // an index in the older per-artifact layout (a pointer per artifact)
+    // is refused with the rebuild path, not half-read
+    withTempDir("lexidx_old") { old =>
+      graft.operators.Sinks.swapWrite(
+        Seq((1L, 2L, "spark", 1L, 0L)).toDF("id", "dl", "term", "tf", "bucket"),
+        s"$old/postings", Seq("bucket"))
+      val ex = intercept[IllegalArgumentException](
+        Search.bm25FromIndex(spark, old, Seq("spark"), k = 5))
+      assert(ex.getMessage.contains("rebuild it through writeLexIndex"),
+        ex.getMessage)
     }
   }
 
@@ -466,13 +468,14 @@ class SourcesAnnSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
       Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
       assert(probe().nonEmpty) // builds the generation's handle
-      val before = Search.lexHandleEntry(dir).map(_.gen.map(_._1))
-      val subs = Seq("stats", "postings", "terms").flatMap(sub =>
-        Seq(s"$dir/$sub", s"$dir/$sub/gen-0").map(new org.apache.hadoop.fs.Path(_)))
+      val before = Search.lexHandleEntry(dir)
+      val subs = (Seq(dir, s"$dir/gen-0") ++
+        Seq("stats", "postings", "terms").map(a => s"$dir/gen-0/$a"))
+        .map(new org.apache.hadoop.fs.Path(_))
       val fs = subs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val mtimes = subs.map(fs.getFileStatus(_).getModificationTime)
       // deleted and rebuilt with another corpus and bucket count: the
-      // rebuild lands at gen-0 again, under the same live paths, and the
+      // rebuild lands at gen-0 again, under the same live path, and the
       // directory mtimes are put back — what a store with synthetic
       // directory mtimes shows
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -484,7 +487,9 @@ class SourcesAnnSpec extends SparkSpec {
       assert(probe() == want && want.nonEmpty)
       val h = Search.lexHandleEntry(dir)
       assert(h.exists(e => e.n == 6L && e.buckets == 5), s"handle: $h")
-      assert(h.map(_.gen.map(_._1)) == before, s"live paths moved: $h")
+      assert(h.map(_.gen) == before.map(_.gen), s"live path moved: $h")
+      assert(h.get.token != before.get.token,
+        "a delete-and-rebuild must rotate the token")
       graft.Caching.drain()
     }
   }
