@@ -172,7 +172,7 @@ object EntryQueriesSimilarity {
     // pool + route the admitted docs with the stored scale/centroids — the
     // index builds with the TRAINED coarse quantizer (the r12 default),
     // whose k-means means are not SQL-replayable, so the oracle reads the
-    // centroids back from the stored model/coarse parquet (the model IS
+    // centroids back from the stored coarse parquet (the model IS
     // the frozen contract) and re-derives everything else from scratch
     // (cosine routing, token counts, exact Frobenius digests): maintained
     // ≡ rebuilt-under-the-stored-model is checked row for row (the
@@ -182,9 +182,11 @@ object EntryQueriesSimilarity {
       val toks = emb.select(expr("vec_id DIV 5").as("id"),
         expr("vec_id % 5").as("pos"), col("embedding"))
       val idx = java.nio.file.Files.createTempDirectory("graft_msidx_d").toString
-      msIdxDeltaDir.set(idx) // the oracle replay reads model/coarse here
       graft.similarity.MaxSim.writeIndex(toks.filter(col("id") % 10 =!= 0),
         "id", "pos", "embedding", idx, nlist = 8)
+      // the oracle replay reads the live generation's coarse parquet
+      msIdxDeltaDir.set(new org.apache.hadoop.fs.Path(graft.operators.Sinks
+        .resolveLive(s, s"$idx/coarse").paths.head).toUri.getPath)
       graft.similarity.MaxSim.indexMatsDelta(
           toks.filter(col("id") % 10 === 0), "id", "pos", "embedding", idx,
           toks.filter(col("id") % 13 === 0).select(col("id")))

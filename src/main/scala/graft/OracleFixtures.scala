@@ -844,7 +844,7 @@ object OracleFixtures {
     * components), centroids READ FROM THE STORED MODEL ([[msIdxDeltaDir]]
     * — the build trains them with k-means, which SQL cannot replay; what
     * the oracle checks is maintenance under the frozen model, and the
-    * model/coarse parquet IS that model), routing = argmax cosine over
+    * live generation's coarse parquet IS that model), routing = argmax cosine over
     * the pooled doubles with the (cos DESC, cent_id ASC) ProbeCells order
     * (dots are exact integers; sqrt/division are correctly-rounded IEEE
     * on both engines, so the cosines are bit-identical), membership =
@@ -866,7 +866,7 @@ object OracleFixtures {
       |    CAST(SUM(list_dot_product(qv, qv)) AS BIGINT) AS fro
       |  FROM e GROUP BY id),
       |cents AS MATERIALIZED (SELECT cent_id, CAST(cent_vec AS DOUBLE[]) AS cv
-      |  FROM read_parquet('${msIdxDeltaDir.get}/model/coarse/*.parquet')),
+      |  FROM read_parquet('${msIdxDeltaDir.get}/*.parquet')),
       |asg AS (SELECT id, cent_id AS cell FROM (
       |    SELECT p.id, c.cent_id,
       |      row_number() OVER (PARTITION BY p.id ORDER BY

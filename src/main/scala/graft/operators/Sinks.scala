@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, col, expr, lit, max, min}
 
@@ -244,32 +244,50 @@ object Sinks {
     * to write a maintained frame BACK over the live directory it was read
     * from: the one-frame call of [[swapGeneration]], writing `df`
     * (partitioned by `partitionCols`) as the new generation's contents.
-    * The stored-index families' delta functions
-    * ([[graft.similarity.Pq.indexCodesDelta]], `Sq.indexCodesDelta`,
-    * [[graft.similarity.MaxSim.indexMatsDelta]], and `Search.lexIndexDelta`
-    * through `Search.writeLexDelta`) all say "the caller writes the result
-    * back" — this is the writer they mean. The in-place alternative —
-    * `mode("overwrite")` onto the dir — deletes the input BEFORE the job
-    * that reads it finishes planning, and a failure mid-write loses the
-    * index outright.
+    * The in-place alternative — `mode("overwrite")` onto the dir —
+    * deletes the input BEFORE the job that reads it finishes planning,
+    * and a failure mid-write loses the index outright.
+    *
+    * One layout rule, the writer-side twin of [[resolveLive]]'s: a
+    * missing `dir` inside a pointer dir `idx` names artifact `a` of `idx`
+    * (`idx/codes` of a vector index). The write is then ONE new
+    * generation of `idx` holding `df` as `a` plus a byte copy of every
+    * other artifact of the live generation, so a maintained code or
+    * matrix table ([[graft.similarity.Pq.indexCodesDelta]],
+    * `Sq.indexCodesDelta`, [[graft.similarity.MaxSim.indexMatsDelta]])
+    * and the frozen model it was encoded under flip together. The copy is
+    * model-sized by the build contract and runs no Spark job. An `idx`
+    * with no live generation is refused: there is no model to carry.
     */
   def swapWrite(df: DataFrame, dir: String,
                 partitionCols: Seq[String] = Nil,
-                watermark: Option[Long] = None): Unit =
-    swapGeneration(df.sparkSession, dir, watermark) { gen =>
+                watermark: Option[Long] = None): Unit = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val a = new Path(dir)
+    val fs = a.getFileSystem(conf)
+    // the live generation to carry, when `dir` is an artifact of a pointer dir
+    val carry = ownerOf(fs, a).map(_._1.getOrElse(throw new IllegalStateException(
+      s"swapWrite: ${a.getParent} holds no live generation to carry into $dir"))._2)
+    swapGeneration(df.sparkSession, carry.fold(dir)(_ => a.getParent.toString), watermark) { gen =>
       val w = df.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(gen)
+        .parquet(carry.fold(gen)(_ => s"$gen/${a.getName}"))
+      for (from <- carry; st <- listing(fs, from)
+           if st.isDirectory && st.getPath.getName != a.getName)
+        require(FileUtil.copy(fs, st.getPath, fs, new Path(gen, st.getPath.getName), false, conf),
+          s"swapWrite: copy ${st.getPath} into $gen failed")
     }
+  }
 
   /** The one swap protocol. Every directory it writes is a
     * generation-POINTER directory: immutable `gen-N/` subdirectories plus
     * a tiny `_CURRENT` file naming the live one. A swap runs `write` on a
     * FRESH `gen-N/` path — no live file is touched, so a maintained frame
     * keeps reading its own generation throughout, and `write` may lay
-    * several artifacts out under that path (the lexical index writes its
-    * four) — marks it `_GEN_READY` once `write` returns, atomically
-    * re-points `_CURRENT`, then retires old generations. No directory ever
+    * several artifacts out under that path (a lexical index writes its
+    * four, a vector index its model tables and codes or mats) — marks it
+    * `_GEN_READY` once `write` returns, atomically re-points `_CURRENT`,
+    * then retires old generations. No directory ever
     * moves, so nothing depends on an atomic directory rename: on S3-class
     * object stores every step is one small-object operation. Readers
     * resolve the live generation through [[resolveLive]] (inside
@@ -518,10 +536,10 @@ object Sinks {
     * missing `d/a` inside pointer dir `d` names artifact `a` of `d`'s live
     * generation (`idx/postings` reads a lexical index's
     * `idx/gen-N/postings`; nothing is live when that generation has no
-    * `a`). A non-empty dir in any other layout is refused, as [[swapWrite]]
-    * refuses it. A dir without a delta log costs one pointer read and one
-    * listing. Every stored-index read goes through here, via
-    * [[graft.streaming.Streams.readIndex]].
+    * `a`), the rule [[swapWrite]] writes by. A non-empty dir in any other
+    * layout is refused, as [[swapWrite]] refuses it. A dir without a
+    * delta log costs one pointer read and one listing. Every stored-index
+    * read goes through here, via [[graft.streaming.Streams.readIndex]].
     */
   def resolveLive(spark: SparkSession, dir: String): LiveView = {
     val d = new Path(dir)
@@ -533,7 +551,10 @@ object Sinks {
         "directory (no gen-N/, _CURRENT or deltas/); rewrite it through swapWrite")
     val (live, token) = liveGen(fs, pointer, numbered(entries, GenPrefix))
     val gen = live.map(_._2)
-    if (entries.isEmpty) artifactOf(fs, d)
+    if (entries.isEmpty) ownerOf(fs, d).fold(LiveView(Nil, None, None)) { case (g, t) =>
+      LiveView(g.map(x => new Path(x._2, d.getName)).filter(fs.exists)
+        .map(_.toString).toSeq, None, t)
+    }
     else if (!entries.exists(_.getPath.getName == DeltaDir))
       LiveView(gen.map(_.toString).toSeq, None, token)
     else {
@@ -544,19 +565,18 @@ object Sinks {
     }
   }
 
-  /** [[resolveLive]] of a dir with no entries: artifact `a` of the live
-    * generation when it is a missing `d/a` of a dir `d` with one (only a
-    * pointer dir has generations), else nothing live. */
-  private def artifactOf(fs: FileSystem, a: Path): LiveView = {
-    val d = a.getParent
-    if (d == null || fs.exists(a)) LiveView(Nil, None, None)
-    else {
+  /** The live generation of the pointer dir that a missing path `a` names
+    * an artifact of (`a`'s parent, when that is a pointer dir), and the
+    * token it was resolved through; None when `a` is no such artifact.
+    * The one layout rule of [[resolveLive]] (reading `idx/postings`) and
+    * [[swapWrite]] (writing `idx/codes`).
+    */
+  private def ownerOf(fs: FileSystem, a: Path): Option[(Option[(Long, Path)], Option[String])] =
+    Option(a.getParent).filter(_ => !fs.exists(a)).flatMap { d =>
       val pointer = readSmall(fs, new Path(d, PointerFile))
-      val (live, token) = liveGen(fs, pointer, numbered(listing(fs, d), GenPrefix))
-      LiveView(live.map(g => new Path(g._2, a.getName)).filter(fs.exists)
-        .map(_.toString).toSeq, None, token)
+      val entries = listing(fs, d)
+      Option.when(isPointerLayout(entries))(liveGen(fs, pointer, numbered(entries, GenPrefix)))
     }
-  }
 
   /** Small-file compaction: rewrite a parquet directory into
     * `ceil(bytes / targetBytes)` files at `outDir`. Streaming ingest and

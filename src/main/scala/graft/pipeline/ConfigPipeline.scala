@@ -98,14 +98,18 @@ import graft.Caching.TrackedSyntax
   * `jl_project` (vec/dim/outDim[, seed] — standalone JL reduction),
   * stored-index BUILD ops (r12 — a config can stand an index up, then
   * probe it in the same pipeline: stages resolve in declaration order):
-  * `ann_index_write` (id/vec/dim/m/codebookK/dir[, nlist=64,
-  * trained=true] — the persistent IVFPQ layout), `sq_index_write`
-  * (id/vec/dim/dir[, nlist=64, trained=true]), `maxsim_index_write`
-  * (id/pos/vec/dir[, nlist=8, trained=true] — gathered token matrices),
-  * `lex_index_write` (id/text/dir[, buckets=64] — one generation of
+  * each writing ONE generation of a pointer dir, its model beside its
+  * data: `ann_index_write` (id/vec/dim/m/codebookK/dir[, nlist=64,
+  * trained=true] — coarse/codebooks[/rotation]/codes), `sq_index_write`
+  * (id/vec/dim/dir[, nlist=64, trained=true] — scales/coarse/codes),
+  * `maxsim_index_write` (id/pos/vec/dir[, nlist=8, trained=true] —
+  * meta/coarse and the gathered token matrices `mats`),
+  * `lex_index_write` (id/text/dir[, buckets=64] —
   * postings/doclens/stats/terms; probe with `bm25` + `indexDir`),
   * `sq_index_probe`/`sq_index_delta` (the stored IVF-SQ index twins of
-  * `ann_index_probe`/`ann_index_delta`),
+  * `ann_index_probe`/`ann_index_delta`; a delta stage's output is the
+  * maintained table, which `Sinks.swapWrite` to `dir/codes` or
+  * `dir/mats` stores as the next generation, model carried),
   * `maxsim_index_probe`/`maxsim_index_delta` (the stored late-interaction
   * index: id/pos/vec token rows, dir, k/nprobe/mShort — scale comes from
   * the model), `maxsim_pooled` (from[2] = [queries, corpus] — the

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -267,6 +267,47 @@ object Ann {
       trained: Boolean): Seq[(String, Seq[Float])] =
     if (trained) trainedCentroids(corpus, idCol, vecCol, nlist)
     else coarseCentroids(corpus, idCol, vecCol, nlist)
+
+  /** The live generation of stored vector index `dir` (a
+    * [[graft.operators.Sinks.swapGeneration]] pointer dir). A probe or a
+    * delta resolves it ONCE and reads its model and its codes or mats
+    * under that one path, so one call never mixes two generations.
+    */
+  private[similarity] def liveGeneration(spark: SparkSession, dir: String): String =
+    graft.operators.Sinks.resolveLive(spark, dir).paths.headOption.getOrElse(throw
+      new IllegalStateException(s"index dir $dir does not exist or holds no ready generation"))
+
+  /** The rows of `stored` (a generation's codes or mats) that a delta
+    * keeps: all but the retired AND the admitted ids
+    * ([[graft.dedup.Dedup.replaceIdFrame]] — admitted rows replace any
+    * stored copy, so a replayed delta is idempotent).
+    */
+  private[similarity] def keptRows(stored: String, retiredIds: DataFrame,
+                                   admitted: DataFrame, idCol: String): DataFrame =
+    admitted.sparkSession.read.parquet(stored).join(
+      broadcast(graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)), Seq("id"), "left_anti")
+
+  /** The partitions of cell-partitioned table `stored` (a generation's
+    * codes or mats) that `probed`'s `cell` column routes to. The union of
+    * probed cells across a query batch is ≤ nlist ids — a bounded collect
+    * that turns routing into a partition filter, pruned at file-listing
+    * time.
+    */
+  private[similarity] def probedPartitions(stored: String, probed: DataFrame): DataFrame = {
+    val cells = probed.select("cell").distinct().collect().map(_.getString(0))
+    probed.sparkSession.read.parquet(stored).filter(col("cell").isin(cells.toSeq: _*))
+  }
+
+  /** `gen/coarse` of a Pq or Sq index generation: (cent_id, cent_vec),
+    * the nlist cells — a model-sized write and collect. */
+  private[similarity] def writeCoarse(spark: SparkSession, cents: Seq[(String, Seq[Float])],
+                                      gen: String): Unit =
+    spark.createDataFrame(cents).toDF("cent_id", "cent_vec")
+      .coalesce(1).write.parquet(s"$gen/coarse")
+
+  private[similarity] def readCoarse(spark: SparkSession, gen: String): Seq[(String, Seq[Float])] =
+    spark.read.parquet(s"$gen/coarse").collect()
+      .map(r => (r.getString(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
 
   /** The centroid set as the native [[org.apache.spark.sql.graftglue
     * .ProbeCells]] expression — ONE reference object holding the whole

@@ -272,19 +272,20 @@ object MaxSim {
 
   /** Write a persistent late-interaction index under `dir` — the gathered
     * ColBERT layout (one token matrix per document) with pooled-vector
-    * cell routing:
+    * cell routing, as one generation of a pointer dir ([[Pq.writeIndex]]'s
+    * layout: one `dir/gen-N/`, one `_CURRENT` flip):
     *
-    *   - `model/meta`   — (nlist, scale): the frozen build parameters.
+    *   - `meta`   — (nlist, scale): the frozen build parameters.
     *     `scale` is PART OF THE MODEL (the r9 [[Pq.writeIndex]] rotation
     *     lesson): matrices quantized at one scale are meaningless for a
     *     probe quantizing at another, so [[probeIndex]] and
     *     [[indexMatsDelta]] read it back rather than trusting the caller
     *     to repeat it.
-    *   - `model/coarse` — (cent_id, cent_vec: array<double>): `nlist`
+    *   - `coarse` — (cent_id, cent_vec: array<double>): `nlist`
     *     SUM-pooled document vectors picked by md5-order of the doc id
     *     (the [[Ann.coarseCentroids]] contract), driver-collected by
     *     design — config-table sized.
-    *   - `mats`         — (id, mat, pool) parquet PARTITIONED BY `cell`.
+    *   - `mats`   — (id, mat, pool) parquet PARTITIONED BY `cell`.
     *
     * The cell partitioning turns a probe's routing into directory-level
     * partition pruning exactly as [[Pq.writeIndex]] does for codes: a
@@ -344,25 +345,28 @@ object MaxSim {
           else means ++ picked(nlist - means.size).map(_._2)
         full.toIndexedSeq.zipWithIndex.map { case (v, i) => (f"t$i%05d", v) }
       }
-    Seq((cents.size, scale)).toDF("nlist", "scale")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/meta")
-    cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cent_id", "cent_vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/coarse")
-    graft.operators.Sinks.swapWrite(
-      d.withColumn("cell", element_at(probeCellsD(cents, col("pool"), 1), 1)),
-      s"$dir/mats", Seq("cell"))
+    graft.operators.Sinks.swapGeneration(spark, dir) { gen =>
+      Seq((cents.size, scale)).toDF("nlist", "scale")
+        .coalesce(1).write.parquet(s"$gen/meta")
+      cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cent_id", "cent_vec")
+        .coalesce(1).write.parquet(s"$gen/coarse")
+      d.withColumn("cell", element_at(probeCellsD(cents, col("pool"), 1), 1))
+        .write.partitionBy("cell").parquet(s"$gen/mats")
+    }
   }
 
-  /** The frozen model as plan-side values — a bounded collect by the build
-    * contract (nlist centroid rows + one meta row).
+  /** The live generation of index `dir` and its frozen model as
+    * plan-side values — a bounded collect by the build contract (nlist
+    * centroid rows + one meta row).
     */
   private def readModel(spark: SparkSession, dir: String)
-      : (Seq[(String, Array[Double])], Double) = {
-    val meta = spark.read.parquet(s"$dir/model/meta").collect().head
-    val cents = spark.read.parquet(s"$dir/model/coarse").collect()
+      : (String, Seq[(String, Array[Double])], Double) = {
+    val gen = Ann.liveGeneration(spark, dir)
+    val meta = spark.read.parquet(s"$gen/meta").collect().head
+    val cents = spark.read.parquet(s"$gen/coarse").collect()
       .map(r => (r.getString(0), r.getSeq[Double](1).toArray))
       .toIndexedSeq.sortBy(_._1)
-    (cents, meta.getAs[Double]("scale"))
+    (gen, cents, meta.getAs[Double]("scale"))
   }
 
   /** Probe the stored late-interaction index: route each query's pooled
@@ -391,7 +395,7 @@ object MaxSim {
     require(k > 0, s"k must be positive, got $k")
     require(mShort >= k, s"shortlist mShort=$mShort must be >= k=$k")
     val spark = queryVecs.sparkSession
-    val (cents, scale) = readModel(spark, dir)
+    val (gen, cents, scale) = readModel(spark, dir)
     require(nprobe >= 1 && nprobe <= cents.size,
       s"nprobe ($nprobe) must be in [1, nlist=${cents.size}]")
     // gathered once, consumed three times (routing collect, screen, re-rank)
@@ -401,11 +405,7 @@ object MaxSim {
       .trackedPersist()
     val probed = q.select(col("query_id"), col("__qpool"),
       explode(probeCellsD(cents, col("__qpool"), nprobe)).as("cell"))
-    // the probed-cell union across the batch: ≤ nlist ids, a bounded
-    // collect that becomes a partition-pruning predicate on the layout
-    val cells = probed.select("cell").distinct().collect().map(_.getString(0))
-    val mats = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
-      .filter(col("cell").isin(cells.toSeq: _*))
+    val mats = Ann.probedPartitions(s"$gen/mats", probed)
     val screened = mats.select(col("id").as("neighbor_id"), col("pool"), col("cell"))
       .join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -429,10 +429,11 @@ object MaxSim {
     * re-gathering the maintained membership from scratch under the same
     * model (gather, pooling, and routing are deterministic projections of
     * the token rows), the identity q_maxsim_index_delta's oracle checks.
-    * The caller writes the result back
-    * ([[graft.operators.Sinks.swapWrite]] with `partitionBy("cell")` —
-    * the atomic-swap writer; an in-place overwrite would delete the input
-    * under the job reading it) or appends just the admitted slice. `retiredIds` retires STORED rows only;
+    * The model and the stored mats come from ONE live generation. The
+    * caller writes the result back with `Sinks.swapWrite(result,
+    * s"$dir/mats", Seq("cell"))` — one new generation carrying the frozen
+    * model ([[Pq.indexCodesDelta]]); an in-place overwrite would delete
+    * the input under the job reading it. `retiredIds` retires STORED rows only;
     * admitted rows always enter — so retire + admit in one call replaces
     * a changed document (the [[graft.dedup.Dedup.indexDelta]] snapshotDiff
     * contract: retired = removed ∪ changed, admitted = added ∪ changed).
@@ -441,12 +442,8 @@ object MaxSim {
                      vecCol: String, dir: String,
                      retiredIds: DataFrame): DataFrame = {
     val spark = admitted.sparkSession
-    val (cents, scale) = readModel(spark, dir)
-    // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted documents
-    // replace any stored copy — idempotent under crash replay
-    val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
-      .join(broadcast(retire), Seq("id"), "left_anti")
+    val (gen, cents, scale) = readModel(spark, dir)
+    val kept = Ann.keptRows(s"$gen/mats", retiredIds, admitted, idCol)
       .select("id", "cell", "mat", "pool")
     // retire applies to STORED rows only — retire + admit = single-call
     // replace (the Dedup.indexDelta contract; see Pq.indexCodesDelta).

@@ -187,12 +187,16 @@ object Pq {
   // indexes — build once, probe deltas daily, maintain by delta.
   // -------------------------------------------------------------------
 
-  /** Write a persistent IVFPQ index under `dir`:
+  /** Write a persistent IVFPQ index under `dir`, a generation-pointer
+    * dir: ONE [[graft.operators.Sinks.swapGeneration]] writes the model
+    * and the codes into a fresh `dir/gen-N/` and flips `_CURRENT` once, so
+    * no reader or crash ever pairs one build's model with another's codes:
     *
-    *   - `model/coarse`    — (cent_id, cent_vec): the nlist coarse cells
-    *   - `model/codebooks` — (subspace, cid, centroid): PQ codebooks
-    *   - `model/rotation`  — (i, row): the OPQ rotation, when one is used
-    *   - `codes`           — (id, codes) parquet PARTITIONED BY `cell`
+    *   - `coarse`    — (cent_id, cent_vec): the nlist coarse cells
+    *   - `codebooks` — (subspace, cid, centroid): PQ codebooks
+    *   - `rotation`  — (i, row): the OPQ rotation, when one is used (an
+    *     unrotated rebuild's generation simply has none)
+    *   - `codes`     — (id, codes) parquet PARTITIONED BY `cell`
     *
     * `rotation` (typically [[Pca.rotation]] — the OPQ whitening step) is
     * applied to every corpus vector BEFORE coarse assignment, codebook
@@ -229,7 +233,6 @@ object Pq {
                  scale: Double = 1048576.0,
                  rotation: Option[Array[Array[Double]]] = None,
                  trained: Boolean = true): Unit = {
-    import graft.functions.Vectors
     val spark = corpus.sparkSession
     // rotate ONCE in the corpus projection; training, cell assignment and
     // encoding all see the rotated space (zero-shuffle MatVecMul)
@@ -237,55 +240,40 @@ object Pq {
       Pca.rotateAll(corpus.select(col(idCol), col(vecCol)), vecCol, r))
     val cbs = trainCodebooks(corpusR, idCol, vecCol, dim, m, k, rounds, scale)
     val cents = Ann.centroidsFor(corpusR, idCol, vecCol, nlist, trained)
-    import spark.implicits._
-    cents.map { case (cid, cv) => (cid, cv) }.toDF("cent_id", "cent_vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/coarse")
-    cbs.zipWithIndex.flatMap { case (cb, j) =>
-      cb.map { case (cid, cv) => (j, cid, cv.toSeq) }
-    }.toDF("subspace", "cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/codebooks")
-    val rotPath = new org.apache.hadoop.fs.Path(s"$dir/model/rotation")
-    rotation match {
-      case Some(r) =>
-        r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-          .toDF("i", "row")
-          .coalesce(1).write.mode("overwrite").parquet(rotPath.toString)
-      case None =>
-        // an earlier rotated build's rotation would be applied at probe
-        // time to an unrotated model
-        val fs = rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(!fs.exists(rotPath) || fs.delete(rotPath, true),
-          s"Pq.writeIndex: delete stale $rotPath failed")
-    }
     val celled = corpusR.select(col(idCol), col(vecCol),
       Ann.nearestCell(cents, col(vecCol)).as("cell"))
-    graft.operators.Sinks.swapWrite(
-      encode(celled, idCol, vecCol, cbs, scale, carry = Seq("cell")),
-      s"$dir/codes", Seq("cell"))
+    import spark.implicits._
+    graft.operators.Sinks.swapGeneration(spark, dir) { gen =>
+      Ann.writeCoarse(spark, cents, gen)
+      cbs.zipWithIndex.flatMap { case (cb, j) =>
+        cb.map { case (cid, cv) => (j, cid, cv.toSeq) }
+      }.toDF("subspace", "cid", "centroid")
+        .coalesce(1).write.parquet(s"$gen/codebooks")
+      rotation.foreach(r => r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
+        .toSeq.toDF("i", "row").coalesce(1).write.parquet(s"$gen/rotation"))
+      encode(celled, idCol, vecCol, cbs, scale, carry = Seq("cell"))
+        .write.partitionBy("cell").parquet(s"$gen/codes")
+    }
   }
 
-  /** Load the frozen model back as plan literals (model-sized collects by
-    * the build contract — nlist cells, m·k codebook rows, d² rotation
-    * doubles when the index was built rotated).
+  /** The live generation of index `dir` and its frozen model as plan
+    * literals (model-sized collects by the build contract — nlist cells,
+    * m·k codebook rows, d² rotation doubles when the index was built
+    * rotated).
     */
   private def readModel(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (Seq[(String, Seq[Float])], Seq[Seq[(Int, Array[Double])]],
+      : (String, Seq[(String, Seq[Float])], Seq[Seq[(Int, Array[Double])]],
          Option[Array[Array[Double]]]) = {
-    val cents = spark.read.parquet(s"$dir/model/coarse").collect()
-      .map(r => (r.getString(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
-    val cbs = spark.read.parquet(s"$dir/model/codebooks").collect()
+    val gen = Ann.liveGeneration(spark, dir)
+    val cbs = spark.read.parquet(s"$gen/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(t => (t._2, t._3)).sortBy(_._1).toSeq)
-    val rotPath = new org.apache.hadoop.fs.Path(s"$dir/model/rotation")
-    val fs = rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rot =
-      if (fs.exists(rotPath))
-        Some(spark.read.parquet(rotPath.toString).collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1).map(_._2))
-      else None
-    (cents, cbs, rot)
+    val rotPath = new org.apache.hadoop.fs.Path(s"$gen/rotation")
+    val rot = Option.when(rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(rotPath))(spark.read.parquet(rotPath.toString).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).map(_._2))
+    (gen, Ann.readCoarse(spark, gen), cbs, rot)
   }
 
   /** Probe the stored index: route each query to its `nprobe` nearest
@@ -302,9 +290,8 @@ object Pq {
   def probeIndex(queries: DataFrame, idCol: String, vecCol: String,
                  dir: String, topK: Int, nprobe: Int,
                  scale: Double = 1048576.0): DataFrame = {
-    import graft.functions.Vectors
     val spark = queries.sparkSession
-    val (cents, cbs, rot) = readModel(spark, dir)
+    val (gen, cents, cbs, rot) = readModel(spark, dir)
     require(nprobe >= 1 && nprobe <= cents.size,
       s"nprobe ($nprobe) must be in [1, nlist=${cents.size}]")
     val m = cbs.length
@@ -315,13 +302,7 @@ object Pq {
         Ann.probeCells(cents, col("__v"), nprobe))
       .select(col("query_id") +: (0 until m).map(j => col(s"__dt$j")) :+
         col("__pc").as("cell"): _*)
-    // the UNION of probed cells across the query batch is ≤ nlist ids —
-    // a bounded collect that turns routing into a partition-pruning
-    // predicate on the cell-partitioned layout
-    val cells = probed.select("cell").distinct().collect().map(_.getString(0))
-    val codes = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
-      .filter(col("cell").isin(cells.toSeq: _*))
-    val scored = codes.join(broadcast(probed), Seq("cell"))
+    val scored = Ann.probedPartitions(s"$gen/codes", probed).join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("id"))
       .select(col("query_id"), col("id").as("neighbor_id"), adcSum(m).as("adc2"))
     rankTopK(scored, topK)
@@ -332,26 +313,22 @@ object Pq {
     * (id, cell, codes) set — row-identical to re-encoding the maintained
     * membership from scratch under the same model (encoding is a
     * deterministic per-row projection), which is the maintenance identity
-    * q_ann_index_delta's oracle checks. Same contract as
+    * q_ann_index_delta's oracle checks. The model and the stored codes
+    * are read from ONE live generation. Same contract as
     * [[graft.dedup.Dedup.indexDelta]]: the caller writes the result back
-    * ([[graft.operators.Sinks.swapWrite]] with partitionBy("cell") — the
-    * atomic-swap writer) or appends just the admitted slice, and
-    * `retiredIds` retires STORED rows only while admitted rows always
-    * enter — retire + admit in one call replaces a changed document
-    * (retired = removed ∪ changed, admitted = added ∪ changed).
+    * with `Sinks.swapWrite(result, s"$dir/codes", Seq("cell"))`, which
+    * makes one new generation of `dir` holding these codes beside a byte
+    * copy of the frozen model ([[graft.operators.Sinks.swapWrite]]'s
+    * carry rule). `retiredIds` retires STORED rows only while admitted
+    * rows always enter — retire + admit in one call replaces a changed
+    * document (retired = removed ∪ changed, admitted = added ∪ changed).
     */
   def indexCodesDelta(admitted: DataFrame, idCol: String, vecCol: String,
                       dir: String, retiredIds: DataFrame,
                       scale: Double = 1048576.0): DataFrame = {
-    import graft.functions.Vectors
     val spark = admitted.sparkSession
-    val (cents, cbs, rot) = readModel(spark, dir)
-    // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors
-    // replace any stored copy — idempotent under crash replay
-    val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
-      .join(broadcast(retire), Seq("id"), "left_anti")
-      .select("id", "cell", "codes")
+    val (gen, cents, cbs, rot) = readModel(spark, dir)
+    val kept = Ann.keptRows(s"$gen/codes", retiredIds, admitted, idCol).select("id", "cell", "codes")
     // a stored rotation applies to the DELTA too — frozen-model encoding
     // means frozen rotation as well
     val admittedR = rot.fold(admitted.select(col(idCol), col(vecCol)))(r =>

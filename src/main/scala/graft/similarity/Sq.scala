@@ -158,12 +158,14 @@ object Sq {
   // economics, same frozen-model contract.
   // -------------------------------------------------------------------
 
-  /** Write a persistent IVF-SQ index under `dir`:
+  /** Write a persistent IVF-SQ index under `dir`, one generation of a
+    * pointer dir ([[Pq.writeIndex]]'s layout: one `dir/gen-N/`, one
+    * `_CURRENT` flip):
     *
-    *   - `model/scales` — (pos, lo, width, qscale): the affine model,
-    *     dim rows (config-table-sized by construction)
-    *   - `model/coarse` — (cent_id, cent_vec): the nlist coarse cells
-    *   - `codes`        — (id, codes) parquet PARTITIONED BY `cell`
+    *   - `scales` — (pos, lo, width, qscale): the affine model, dim rows
+    *     (config-table-sized by construction)
+    *   - `coarse` — (cent_id, cent_vec): the nlist coarse cells
+    *   - `codes`  — (id, codes) parquet PARTITIONED BY `cell`
     *
     * The cell partitioning turns a probe's routing into directory-level
     * partition pruning exactly as [[Pq.writeIndex]]'s does; the model is
@@ -190,31 +192,30 @@ object Sq {
     val spark = corpus.sparkSession
     val s = trainScales(corpus, vecCol, dim, scale)
     val cents = Ann.centroidsFor(corpus, idCol, vecCol, nlist, trained)
-    import spark.implicits._
-    s.lo.indices.map(i => (i, s.lo(i), s.width(i), s.scale)).toDF(
-        "pos", "lo", "width", "qscale")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/scales")
-    cents.map { case (cid, cv) => (cid, cv) }.toDF("cent_id", "cent_vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model/coarse")
     val celled = corpus.select(col(idCol), col(vecCol),
       Ann.nearestCell(cents, col(vecCol)).as("cell"))
-    graft.operators.Sinks.swapWrite(
-      encode(celled, idCol, vecCol, s, carry = Seq("cell")),
-      s"$dir/codes", Seq("cell"))
+    import spark.implicits._
+    graft.operators.Sinks.swapGeneration(spark, dir) { gen =>
+      s.lo.indices.map(i => (i, s.lo(i), s.width(i), s.scale)).toDF(
+          "pos", "lo", "width", "qscale")
+        .coalesce(1).write.parquet(s"$gen/scales")
+      Ann.writeCoarse(spark, cents, gen)
+      encode(celled, idCol, vecCol, s, carry = Seq("cell"))
+        .write.partitionBy("cell").parquet(s"$gen/codes")
+    }
   }
 
-  /** Load the frozen model back (dim + nlist rows — bounded collects by
-    * the build contract).
+  /** The live generation of index `dir` and its frozen model (dim + nlist
+    * rows — bounded collects by the build contract).
     */
   private def readModel(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): (Seq[(String, Seq[Float])], Scales) = {
-    val srows = spark.read.parquet(s"$dir/model/scales").collect()
+                        dir: String): (String, Seq[(String, Seq[Float])], Scales) = {
+    val gen = Ann.liveGeneration(spark, dir)
+    val srows = spark.read.parquet(s"$gen/scales").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1)
-    val s = Scales(srows.map(_._2), srows.map(_._3), srows.head._4)
-    val cents = spark.read.parquet(s"$dir/model/coarse").collect()
-      .map(r => (r.getString(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
-    (cents, s)
+    (gen, Ann.readCoarse(spark, gen),
+      Scales(srows.map(_._2), srows.map(_._3), srows.head._4))
   }
 
   /** Probe the stored index: route each query to its `nprobe` nearest
@@ -228,7 +229,7 @@ object Sq {
   def probeIndex(queries: DataFrame, idCol: String, vecCol: String,
                  dir: String, topK: Int, nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
-    val (cents, s) = readModel(spark, dir)
+    val (gen, cents, s) = readModel(spark, dir)
     require(nprobe >= 1 && nprobe <= cents.size,
       s"nprobe ($nprobe) must be in [1, nlist=${cents.size}]")
     val probed = queries.select(col(idCol).as("query_id"),
@@ -236,10 +237,7 @@ object Sq {
         Clustering.quantize(col(vecCol), s.scale).as("__qv"))
       .withColumn("cell", Ann.probeCells(cents, col("__v"), nprobe))
       .select("query_id", "__qv", "cell")
-    val cells = probed.select("cell").distinct().collect().map(_.getString(0))
-    val codes = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
-      .filter(col("cell").isin(cells.toSeq: _*))
-    val scored = codes.join(broadcast(probed), Seq("cell"))
+    val scored = Ann.probedPartitions(s"$gen/codes", probed).join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
         ColumnBridge.column(SqAdcDist(
@@ -253,21 +251,18 @@ object Sq {
     * SATURATE — the documented frozen-scale delta contract), return the
     * maintained (id, cell, codes) set — row-identical to re-encoding the
     * maintained membership from scratch under the same model, the
-    * identity q_sq_index_delta's oracle checks. Retire + admit in one
-    * call replaces a changed vector (the Dedup.indexDelta contract); the
-    * caller writes the result back via
-    * [[graft.operators.Sinks.swapWrite]] (partitionBy("cell")).
+    * identity q_sq_index_delta's oracle checks. The model and the stored
+    * codes come from ONE live generation. Retire + admit in one call
+    * replaces a changed vector (the Dedup.indexDelta contract); the caller
+    * writes the result back with `Sinks.swapWrite(result, s"$dir/codes",
+    * Seq("cell"))`, one new generation carrying the frozen model
+    * ([[Pq.indexCodesDelta]]).
     */
   def indexCodesDelta(admitted: DataFrame, idCol: String, vecCol: String,
                       dir: String, retiredIds: DataFrame): DataFrame = {
     val spark = admitted.sparkSession
-    val (cents, s) = readModel(spark, dir)
-    // retired ∪ admitted ids (Dedup.replaceIdFrame): admitted vectors
-    // replace any stored copy — idempotent under crash replay
-    val retire = graft.dedup.Dedup.replaceIdFrame(retiredIds, admitted, idCol)
-    val kept = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
-      .join(broadcast(retire), Seq("id"), "left_anti")
-      .select("id", "cell", "codes")
+    val (gen, cents, s) = readModel(spark, dir)
+    val kept = Ann.keptRows(s"$gen/codes", retiredIds, admitted, idCol).select("id", "cell", "codes")
     val celled = admitted.select(col(idCol), col(vecCol),
       Ann.nearestCell(cents, col(vecCol)).as("cell"))
     // retire applies to STORED rows only — retire + admit = single-call

@@ -764,23 +764,19 @@ object Streams {
     * it); nothing live means a missing dir, or a first build still being
     * written. Then `emptySchema` (when provided) yields an empty frame,
     * else this throws. Probes ([[graft.dedup.Dedup.incrementalNearDup]] /
-    * `winnowProbe` / ADC callers) load through this, never through a
+    * `winnowProbe` / readers of one artifact such as `idx/codes`) load
+    * through this, never through a
     * bare `spark.read.parquet`, which would fold retained generations
     * together. A non-empty dir in any other layout is refused.
-    *
-    * `schema` skips Parquet schema inference (one Spark job per read) for
-    * a caller that already knows the live generation's schema; unlike
-    * `emptySchema` it does not turn a missing directory into an empty
-    * index. `recursive` is ignored: no lookup recurses.
+    * `recursive` is ignored: no lookup recurses.
     */
   def readIndex(spark: SparkSession, indexDir: String,
                 emptySchema: Option[org.apache.spark.sql.types.StructType] = None,
-                recursive: Boolean = false,
-                schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+                recursive: Boolean = false): DataFrame = {
     val live = graft.operators.Sinks.resolveLive(spark, indexDir).paths
     // emptySchema applies to a live index too: an existing-but-FILELESS
     // delta (batch 0 crashed pre-commit) has nothing to infer from
-    val r = schema.orElse(emptySchema).fold(spark.read)(spark.read.schema(_))
+    val r = emptySchema.fold(spark.read)(spark.read.schema(_))
     if (live.nonEmpty) r.parquet(live: _*)
     else emptySchema.map(sc => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))

@@ -309,4 +309,116 @@ class LayoutSpec extends SparkSpec {
       assert(live.filter(col("cell") === 1).count() == 4)
     }
   }
+
+  test("one generation per stored index: after a build and a maintain, " +
+       "each family's dir is one _CURRENT over gen-N/ dirs, the maintained " +
+       "generation carries the build's model bytes, and it probes like a " +
+       "fresh build over the maintained membership") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import graft.similarity.{MaxSim, Pq, Search, Sq}
+    def md5(id: Long) = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    // the maintain re-keys two documents: their content comes back under
+    // new ids. Every family's model then trains the same over the
+    // maintained membership (Pq's codebook seeds are the two md5-first
+    // ids, which the re-keyed ids neither are nor precede), so a fresh
+    // build over it is the reference the maintained index must probe like
+    val built = (0L until 16L).map(i => i -> i) // (id, content)
+    val seeds = built.map(_._1).sortBy(i => (md5(i), i)).take(2)
+    val retired = built.map(_._1).filterNot(seeds.contains).take(2)
+    val added = (100L until 200L).filter(n => md5(n) > md5(seeds.last))
+      .take(2).zip(retired)
+    val maintained = built.filterNot(p => retired.contains(p._1)) ++ added
+    val queries = built.filter(p => seeds.contains(p._1))
+    val gone = retired.toDF("id")
+    def vecs(m: Seq[(Long, Long)]) = m.map { case (id, c) =>
+      val sign = if (c % 2 == 0) 1.0f else -1.0f
+      (id, Array.tabulate(8)(j => sign * (1.0f + j * 0.1f) + c * 1e-3f))
+    }.toDF("vec_id", "embedding")
+    def toks(m: Seq[(Long, Long)]) = m.flatMap { case (id, c) =>
+      (0L until 3L).map(p =>
+        (id, p, Array.tabulate(8)(j => ((c * 7 + p * 3 + j) % 5 - 2).toFloat)))
+    }.toDF("id", "pos", "embedding")
+    def docs(m: Seq[(Long, Long)]) = m.map { case (id, c) =>
+      (id, s"w${c % 3} w${c % 5} common t$c")
+    }.toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toString).sorted
+    // (family, model artifacts, build, maintain, probe)
+    val families = Seq[(String, Seq[String], (Seq[(Long, Long)], String) => Unit,
+                        String => Unit, String => Seq[String])](
+      ("lex", Nil,
+        (m, d) => Search.writeLexIndex(docs(m), "doc_id", "text", d, buckets = 4),
+        d => {
+          val (p, dl, st, t) = Search.lexIndexDelta(docs(added), "doc_id",
+            "text", d, gone)
+          Search.writeLexDelta(d, p, dl, st, t)
+        },
+        d => rows(Search.bm25FromIndex(spark, d, Seq("w1", "w2", "t3"), k = 5))),
+      ("pq", Seq("coarse", "codebooks"),
+        (m, d) => Pq.writeIndex(vecs(m), "vec_id", "embedding", dim = 8,
+          m = 2, k = 2, dir = d, nlist = 4),
+        d => Sinks.swapWrite(Pq.indexCodesDelta(vecs(added), "vec_id",
+          "embedding", d, gone), s"$d/codes", Seq("cell")),
+        d => rows(Pq.probeIndex(vecs(queries), "vec_id", "embedding", d,
+          topK = 5, nprobe = 4))),
+      ("sq", Seq("scales", "coarse"),
+        (m, d) => Sq.writeIndex(vecs(m), "vec_id", "embedding", dim = 8,
+          dir = d, nlist = 4),
+        d => Sinks.swapWrite(Sq.indexCodesDelta(vecs(added), "vec_id",
+          "embedding", d, gone), s"$d/codes", Seq("cell")),
+        d => rows(Sq.probeIndex(vecs(queries), "vec_id", "embedding", d,
+          topK = 5, nprobe = 4))),
+      ("maxsim", Seq("meta", "coarse"),
+        (m, d) => MaxSim.writeIndex(toks(m), "id", "pos", "embedding", d,
+          nlist = 4),
+        d => Sinks.swapWrite(MaxSim.indexMatsDelta(toks(added), "id", "pos",
+          "embedding", d, gone), s"$d/mats", Seq("cell")),
+        d => rows(MaxSim.probeIndex(toks(queries), "id", "pos", "embedding",
+          d, k = 3, nprobe = 4, mShort = 8))))
+    withTempDir("layout_gens") { base =>
+      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def live(d: String) = Sinks.resolveLive(spark, d).paths.head
+      // every data file under the model artifacts of generation `gen`
+      def modelBytes(gen: String, model: Seq[String]) = model.flatMap { a =>
+        val root = java.nio.file.Paths.get(new Path(s"$gen/$a").toUri.getPath)
+        java.nio.file.Files.walk(root).iterator().asScala
+          .filter(f => java.nio.file.Files.isRegularFile(f) &&
+            !f.getFileName.toString.startsWith("."))
+          .map(f => s"$a/${root.relativize(f)}" ->
+            java.nio.file.Files.readAllBytes(f).toSeq)
+      }.toMap
+      families.foreach { case (name, model, build, maintain, probe) =>
+        val dir = s"$base/$name"
+        build(built, dir)
+        val first = live(dir)
+        val bytes = modelBytes(first, model)
+        assert(bytes.size >= model.size, s"$name: no model files under $first")
+        maintain(dir)
+        val next = live(dir)
+        assert(first.endsWith("/gen-0") && next.endsWith("/gen-1"),
+          s"$name: the maintain did not write exactly one new generation: $next")
+        val top = fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
+        assert(top.filterNot(_.matches("gen-\\d+")) == Set(Sinks.PointerFile),
+          s"$name: an artifact sits beside the generations: $top")
+        val all = fs.listFiles(new Path(dir), true)
+        var pointers = 0
+        while (all.hasNext) if (all.next().getPath.getName == Sinks.PointerFile) pointers += 1
+        assert(pointers == 1, s"$name: $pointers pointer files")
+        assert(modelBytes(next, model) == bytes,
+          s"$name: the maintained generation's model differs from the build's")
+        build(maintained, s"$base/${name}_fresh")
+        val got = probe(dir)
+        assert(got.nonEmpty && got == probe(s"$base/${name}_fresh"),
+          s"$name: the maintained index probes unlike a fresh build")
+      }
+      // a pointer dir with nothing live has no model to carry: refused
+      assert(fs.mkdirs(new Path(s"$base/bare/gen-0")))
+      val ex = intercept[IllegalStateException](Sinks.swapWrite(
+        Seq((1L, "c0")).toDF("id", "cell"), s"$base/bare/codes", Seq("cell")))
+      assert(ex.getMessage.contains("no live generation"), ex.getMessage)
+      graft.Caching.drain()
+    }
+  }
 }

@@ -173,35 +173,37 @@ class MaxSimSpec extends SparkSpec {
   test("persistent MaxSim index: probe at nprobe = nlist ≡ in-memory " +
        "two-stage, routing prunes partitions, stored scale wins") {
     val queries = toks.filter(col("id") % 20 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("msidx").toString
-    MaxSim.writeIndex(toks, "id", "pos", "embedding", dir, nlist = 8)
-    val got = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir,
-      k = 3, nprobe = 8, mShort = 8)
-    val want = MaxSim.maxSimTopKPooled(toks, queries, "id", "pos",
-      "embedding", k = 3, mShort = 8)
-    assert(got.count() > 0)
-    assert(got.except(want).isEmpty && want.except(got).isEmpty,
-      "stored-index probe diverged from the in-memory two-stage")
-    // nprobe = 1 routing reaches the matrix scan as a PARTITION filter —
-    // pruning at file-listing time, the layout's reason to exist
-    val pruned = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir,
-      k = 3, nprobe = 1, mShort = 8)
-    pruned.collect()
-    val p = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined,
-      s"expected a cell partition filter in:\n${p.take(3000)}")
-    // the quantization scale is part of the MODEL: a probe against an
-    // index built at a different scale must use the stored one, matching
-    // the in-memory composition AT THAT SCALE (caller passes nothing)
-    val dir2 = java.nio.file.Files.createTempDirectory("msidx2").toString
-    MaxSim.writeIndex(toks, "id", "pos", "embedding", dir2, nlist = 8,
-      scale = 1024.0)
-    val got2 = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir2,
-      k = 3, nprobe = 8, mShort = 8)
-    val want2 = MaxSim.maxSimTopKPooled(toks, queries, "id", "pos",
-      "embedding", k = 3, mShort = 8, scale = 1024.0)
-    assert(got2.except(want2).isEmpty && want2.except(got2).isEmpty,
-      "probe ignored the stored quantization scale")
+    withTempDir("msidx") { dir =>
+      MaxSim.writeIndex(toks, "id", "pos", "embedding", dir, nlist = 8)
+      val got = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir,
+        k = 3, nprobe = 8, mShort = 8)
+      val want = MaxSim.maxSimTopKPooled(toks, queries, "id", "pos",
+        "embedding", k = 3, mShort = 8)
+      assert(got.count() > 0)
+      assert(got.except(want).isEmpty && want.except(got).isEmpty,
+        "stored-index probe diverged from the in-memory two-stage")
+      // nprobe = 1 routing reaches the matrix scan as a PARTITION filter —
+      // pruning at file-listing time, the layout's reason to exist
+      val pruned = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir,
+        k = 3, nprobe = 1, mShort = 8)
+      pruned.collect()
+      val p = pruned.queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined,
+        s"expected a cell partition filter in:\n${p.take(3000)}")
+      // the quantization scale is part of the MODEL: a probe against an
+      // index built at a different scale must use the stored one, matching
+      // the in-memory composition AT THAT SCALE (caller passes nothing)
+      withTempDir("msidx2") { dir2 =>
+        MaxSim.writeIndex(toks, "id", "pos", "embedding", dir2, nlist = 8,
+          scale = 1024.0)
+        val got2 = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir2,
+          k = 3, nprobe = 8, mShort = 8)
+        val want2 = MaxSim.maxSimTopKPooled(toks, queries, "id", "pos",
+          "embedding", k = 3, mShort = 8, scale = 1024.0)
+        assert(got2.except(want2).isEmpty && want2.except(got2).isEmpty,
+          "probe ignored the stored quantization scale")
+      }
+    }
   }
 
   test("a ragged (null-pool) document stays OUT of the stored layout " +
@@ -215,23 +217,24 @@ class MaxSimSpec extends SparkSpec {
       (999999L, 0L, Array.fill(64)(0.5f)),
       (999999L, 1L, Array.fill(3)(0.5f))).toDF("id", "pos", "embedding")
     val spiked = toks.unionByName(ragged)
-    val dir = java.nio.file.Files.createTempDirectory("msidx_null").toString
-    MaxSim.writeIndex(spiked, "id", "pos", "embedding", dir, nlist = 8)
-    val stored = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
-    assert(stored.filter(col("id") === 999999L).isEmpty,
-      "a null-pool document leaked into the stored layout")
-    // the index over the clean subset still probes identically
-    val queries = toks.filter(col("id") % 20 === 0)
-    val got = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir,
-      k = 3, nprobe = 8, mShort = 8)
-    val want = MaxSim.maxSimTopKPooled(toks, queries, "id", "pos",
-      "embedding", k = 3, mShort = 8)
-    assert(got.except(want).isEmpty && want.except(got).isEmpty)
-    // delta maintenance filters the same way — the layout rule is shared
-    val maintained = MaxSim.indexMatsDelta(ragged, "id", "pos", "embedding",
-      dir, spark.emptyDataFrame.withColumn("id", lit(0L)).limit(0))
-    assert(maintained.filter(col("id") === 999999L).isEmpty,
-      "a null-pool admitted doc leaked through maintenance")
+    withTempDir("msidx_null") { dir =>
+      MaxSim.writeIndex(spiked, "id", "pos", "embedding", dir, nlist = 8)
+      val stored = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
+      assert(stored.filter(col("id") === 999999L).isEmpty,
+        "a null-pool document leaked into the stored layout")
+      // the index over the clean subset still probes identically
+      val queries = toks.filter(col("id") % 20 === 0)
+      val got = MaxSim.probeIndex(queries, "id", "pos", "embedding", dir,
+        k = 3, nprobe = 8, mShort = 8)
+      val want = MaxSim.maxSimTopKPooled(toks, queries, "id", "pos",
+        "embedding", k = 3, mShort = 8)
+      assert(got.except(want).isEmpty && want.except(got).isEmpty)
+      // delta maintenance filters the same way — the layout rule is shared
+      val maintained = MaxSim.indexMatsDelta(ragged, "id", "pos", "embedding",
+        dir, spark.emptyDataFrame.withColumn("id", lit(0L)).limit(0))
+      assert(maintained.filter(col("id") === 999999L).isEmpty,
+        "a null-pool admitted doc leaked through maintenance")
+    }
   }
 
   test("MaxSim maintain LOOP: two delta generations through swapWrite ≡ " +
@@ -246,62 +249,65 @@ class MaxSimSpec extends SparkSpec {
       .select(col("id")).distinct()
     // two identical deterministic builds — one walks the loop, one takes
     // the combined single generation
-    val dirA = java.nio.file.Files.createTempDirectory("msidx_loopA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("msidx_loopB").toString
-    Seq(dirA, dirB).foreach(d =>
-      MaxSim.writeIndex(stored, "id", "pos", "embedding", d, nlist = 8))
-    // loop: gen 1 then gen 2, each swap-written over the live layout
-    graft.operators.Sinks.swapWrite(
-      MaxSim.indexMatsDelta(a1, "id", "pos", "embedding", dirA, r1),
-      s"$dirA/mats", Seq("cell"))
-    graft.operators.Sinks.swapWrite(
-      MaxSim.indexMatsDelta(a2, "id", "pos", "embedding", dirA, r2),
-      s"$dirA/mats", Seq("cell"))
-    // combined: one call with retired = r1 ∪ r2, admitted = (a1 − r2) ∪ a2
-    graft.operators.Sinks.swapWrite(
-      MaxSim.indexMatsDelta(
-        a1.join(r2, Seq("id"), "left_anti").unionByName(a2),
-        "id", "pos", "embedding", dirB, r1.unionByName(r2)),
-      s"$dirB/mats", Seq("cell"))
-    def rows(d: String) =
-      graft.streaming.Streams.readIndex(spark, s"$d/mats")
-      .select(col("id"), col("cell").cast("string"), col("mat"), col("pool"))
-      .as[(Long, String, Seq[Seq[Double]], Seq[Double])].collect().toSet
-    val (loop, combined) = (rows(dirA), rows(dirB))
-    assert(loop == combined && loop.nonEmpty)
+    withTempDir("msidx_loopA") { dirA =>
+      withTempDir("msidx_loopB") { dirB =>
+        Seq(dirA, dirB).foreach(d =>
+          MaxSim.writeIndex(stored, "id", "pos", "embedding", d, nlist = 8))
+        // loop: gen 1 then gen 2, each swap-written over the live layout
+        graft.operators.Sinks.swapWrite(
+          MaxSim.indexMatsDelta(a1, "id", "pos", "embedding", dirA, r1),
+          s"$dirA/mats", Seq("cell"))
+        graft.operators.Sinks.swapWrite(
+          MaxSim.indexMatsDelta(a2, "id", "pos", "embedding", dirA, r2),
+          s"$dirA/mats", Seq("cell"))
+        // combined: one call with retired = r1 ∪ r2, admitted = (a1 − r2) ∪ a2
+        graft.operators.Sinks.swapWrite(
+          MaxSim.indexMatsDelta(
+            a1.join(r2, Seq("id"), "left_anti").unionByName(a2),
+            "id", "pos", "embedding", dirB, r1.unionByName(r2)),
+          s"$dirB/mats", Seq("cell"))
+        def rows(d: String) =
+          graft.streaming.Streams.readIndex(spark, s"$d/mats")
+          .select(col("id"), col("cell").cast("string"), col("mat"), col("pool"))
+          .as[(Long, String, Seq[Seq[Double]], Seq[Double])].collect().toSet
+        val (loop, combined) = (rows(dirA), rows(dirB))
+        assert(loop == combined && loop.nonEmpty)
+      }
+    }
   }
 
   test("MaxSim index maintenance: retired ids leave, admitted ids route " +
        "under the frozen model, kept rows are byte-stable") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("msidx_d").toString
-    MaxSim.writeIndex(toks.filter(col("id") % 10 =!= 0), "id", "pos",
-      "embedding", dir, nlist = 8)
-    val admitted = toks.filter(col("id") % 10 === 0)
-    val retired = toks.filter(col("id") % 13 === 0).select(col("id"))
-    val maintained = MaxSim.indexMatsDelta(admitted, "id", "pos",
-      "embedding", dir, retired).cache()
-    val ids = maintained.select("id").as[Long].collect().toSet
-    val allIds = toks.select("id").distinct().as[Long].collect().toSet
-    // retire applies to STORED rows only: an id in both sets (0, 130, …)
-    // is REPLACED by its admitted tokens, not dropped
-    assert(ids == allIds.filter(i => i % 13 != 0 || i % 10 == 0),
-      "maintained membership is not (indexed − retired) ∪ admitted")
-    // admitted rows route onto STORED cells only (frozen model: no new
-    // centroids appear at maintenance time)
-    val centIds = spark.read.parquet(s"$dir/model/coarse")
-      .select("cent_id").as[String].collect().toSet
-    val freshCells = maintained.filter(col("id") % 10 === 0)
-      .select("cell").as[String].collect().toSet
-    assert(freshCells.nonEmpty && freshCells.subsetOf(centIds),
-      s"admitted rows routed off-model: ${freshCells -- centIds}")
-    // kept rows pass through byte-identical to the stored layout
-    val storedKept = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
-      .filter(col("id") % 13 =!= 0).select("id", "cell", "mat", "pool")
-    val keptOut = maintained.filter(col("id") % 10 =!= 0)
-      .select("id", "cell", "mat", "pool")
-    assert(keptOut.except(storedKept).isEmpty &&
-           storedKept.except(keptOut).isEmpty,
-      "kept rows were rewritten during maintenance")
+    withTempDir("msidx_d") { dir =>
+      MaxSim.writeIndex(toks.filter(col("id") % 10 =!= 0), "id", "pos",
+        "embedding", dir, nlist = 8)
+      val admitted = toks.filter(col("id") % 10 === 0)
+      val retired = toks.filter(col("id") % 13 === 0).select(col("id"))
+      val maintained = MaxSim.indexMatsDelta(admitted, "id", "pos",
+        "embedding", dir, retired).cache()
+      val ids = maintained.select("id").as[Long].collect().toSet
+      val allIds = toks.select("id").distinct().as[Long].collect().toSet
+      // retire applies to STORED rows only: an id in both sets (0, 130, …)
+      // is REPLACED by its admitted tokens, not dropped
+      assert(ids == allIds.filter(i => i % 13 != 0 || i % 10 == 0),
+        "maintained membership is not (indexed − retired) ∪ admitted")
+      // admitted rows route onto STORED cells only (frozen model: no new
+      // centroids appear at maintenance time)
+      val centIds = graft.streaming.Streams.readIndex(spark, s"$dir/coarse")
+        .select("cent_id").as[String].collect().toSet
+      val freshCells = maintained.filter(col("id") % 10 === 0)
+        .select("cell").as[String].collect().toSet
+      assert(freshCells.nonEmpty && freshCells.subsetOf(centIds),
+        s"admitted rows routed off-model: ${freshCells -- centIds}")
+      // kept rows pass through byte-identical to the stored layout
+      val storedKept = graft.streaming.Streams.readIndex(spark, s"$dir/mats")
+        .filter(col("id") % 13 =!= 0).select("id", "cell", "mat", "pool")
+      val keptOut = maintained.filter(col("id") % 10 =!= 0)
+        .select("id", "cell", "mat", "pool")
+      assert(keptOut.except(storedKept).isEmpty &&
+             storedKept.except(keptOut).isEmpty,
+        "kept rows were rewritten during maintenance")
+    }
   }
 }

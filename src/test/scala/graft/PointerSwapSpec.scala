@@ -245,6 +245,40 @@ class PointerSwapSpec extends SparkSpec {
     }
   }
 
+  test("a Pq rebuild that fails writing its codes leaves the previous " +
+       "build probing: the new model never lands beside the old codes") {
+    import graft.similarity.Pq
+    def corpus(spread: Float) = (0 until 16).map { i =>
+      val sign = if (i % 2 == 0) 1.0f else -1.0f
+      (i.toLong, Array.tabulate(8)(j => sign * (1.0f + j * spread) + i * 1e-3f))
+    }.toDF("vec_id", "embedding")
+    def build(dir: String, spread: Float): Unit =
+      Pq.writeIndex(corpus(spread), "vec_id", "embedding", dim = 8, m = 2,
+        k = 2, dir = dir, nlist = 4)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.failcodes.impl", classOf[FailCodesCreateFs].getName)
+    hc.setBoolean("fs.failcodes.impl.disable.cache", true)
+    try withTempDir("ptr_pqtorn") { base =>
+      val idx = s"$base/idx"
+      def probe() = Pq.probeIndex(corpus(0.1f).filter(col("vec_id") < 2),
+          "vec_id", "embedding", idx, topK = 5, nprobe = 4)
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      build(idx, 0.1f)
+      val before = probe()
+      // the same directory through a filesystem that cannot create a file
+      // under `codes`: the model tables land, the codes write fails
+      intercept[Exception](build(s"failcodes://$idx", 0.5f))
+      assert(probe() == before,
+        "the failed rebuild's model is scored against the old codes")
+      // the same rebuild on a working store does move the probe
+      build(idx, 0.5f)
+      assert(probe() != before)
+    } finally {
+      hc.unset("fs.failcodes.impl")
+      hc.unset("fs.failcodes.impl.disable.cache")
+    }
+  }
+
   // ------------------------------------------------------------------
   // crash injection into the ONLINE maintain loop: kill a generation
   // inside writeLexDelta's one swap, in each crash window, and assert the
@@ -390,5 +424,24 @@ object TornReadGate {
   def hold(): Unit = {
     entered.countDown()
     open.await(5, java.util.concurrent.TimeUnit.MINUTES)
+  }
+}
+
+/** The local filesystem under the `failcodes` scheme, except that
+  * creating a file under a `codes` path component throws — a vector-index
+  * build that fails after its model tables are written.
+  */
+class FailCodesCreateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failcodes:///")
+  override def getScheme: String = "failcodes"
+  private def refuse(f: Path): Unit =
+    if (Iterator.iterate(f)(_.getParent).takeWhile(_ != null).exists(_.getName == "codes"))
+      throw new java.io.IOException(s"failcodes: create $f refused")
+  override protected def createOutputStream(f: Path, append: Boolean): java.io.OutputStream = {
+    refuse(f); super.createOutputStream(f, append)
+  }
+  override protected def createOutputStreamWithMode(f: Path, append: Boolean,
+      permission: org.apache.hadoop.fs.permission.FsPermission): java.io.OutputStream = {
+    refuse(f); super.createOutputStreamWithMode(f, append, permission)
   }
 }

@@ -17,13 +17,15 @@ class SourcesAnnSpec extends SparkSpec {
   }
 
   test("csv and textLines sources read files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-src")
-    val f = dir.resolve("d.csv")
-    java.nio.file.Files.writeString(f, "id,name\n1,a\n2,b\n")
-    val csv = Sources.csv(spark, f.toString)
-    assert(csv.count() == 2 && csv.columns.toSeq == Seq("id", "name"))
-    val txt = Sources.textLines(spark, f.toString)
-    assert(txt.count() == 3)
+    withTempDir("graft-src") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      val f = dir.resolve("d.csv")
+      java.nio.file.Files.writeString(f, "id,name\n1,a\n2,b\n")
+      val csv = Sources.csv(spark, f.toString)
+      assert(csv.count() == 2 && csv.columns.toSeq == Seq("id", "name"))
+      val txt = Sources.textLines(spark, f.toString)
+      assert(txt.count() == 3)
+    }
   }
 
   test("Tables.events converts nanos to a usable timestamp") {
@@ -59,54 +61,55 @@ class SourcesAnnSpec extends SparkSpec {
   }
 
   test("graphExport writes node/edge parquet; cypherStatements renders MERGE text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-graph").toString
-    val edges = Seq(("u1", "p1", "BOUGHT")).toDF("src_id", "dst_id", "rel")
-    graft.operators.Sinks.graphExport(
-      Map("user" -> Seq(("u1", "alice")).toDF("id", "name")),
-      Map("bought" -> edges), dir)
-    assert(spark.read.parquet(s"$dir/nodes_user").count() == 1)
-    assert(spark.read.parquet(s"$dir/edges_bought").count() == 1)
-    val cy = graft.operators.Sinks.cypherStatements(edges, "User", "Part")
-      .as[String].head()
-    assert(cy == "MERGE (a:User {id: 'u1'}) MERGE (b:Part {id: 'p1'}) MERGE (a)-[:BOUGHT]->(b);")
-    // edges carrying a props column render SET clauses on the relationship
-    val withProps = Seq(("u1", "p1", "BOUGHT", Seq(("qty", "3"), ("unit", "ea"))))
-      .toDF("src_id", "dst_id", "rel", "props")
-    val cyP = graft.operators.Sinks.cypherStatements(
-        withProps.select(col("src_id"), col("dst_id"), col("rel"),
-          expr("transform(props, p -> struct(p._1 AS k, p._2 AS v))").as("props")),
-        "User", "Part")
-      .as[String].head()
-    assert(cyP == "MERGE (a:User {id: 'u1'}) MERGE (b:Part {id: 'p1'}) " +
-      "MERGE (a)-[r:BOUGHT]->(b) SET r.qty = '3' SET r.unit = 'ea';")
-    // data containing quotes/backslashes escapes; null prop values are
-    // skipped, not allowed to null the whole SET block
-    val tricky = Seq(("o'brien", "p\\q", "KNOWS", Seq(("note", "it's"), ("gone", null))))
-      .toDF("src_id", "dst_id", "rel", "props")
-    val cyT = graft.operators.Sinks.cypherStatements(
-        tricky.select(col("src_id"), col("dst_id"), col("rel"),
-          expr("transform(props, p -> struct(p._1 AS k, p._2 AS v))").as("props")),
-        "User", "User")
-      .as[String].head()
-    assert(cyT == "MERGE (a:User {id: 'o\\'brien'}) MERGE (b:User {id: 'p\\\\q'}) " +
-      "MERGE (a)-[r:KNOWS]->(b) SET r.note = 'it\\'s';")
-    // rel/prop keys interpolate OUTSIDE quotes — a data-derived value that
-    // isn't an identifier is an injection vector and must abort, not render
-    val inj = Seq(("u1", "p1", "X]->(b) DETACH DELETE a//"))
-      .toDF("src_id", "dst_id", "rel")
-    val ex = intercept[Exception] {
-      graft.operators.Sinks.cypherStatements(inj, "User", "Part").collect()
+    withTempDir("graft-graph") { dir =>
+      val edges = Seq(("u1", "p1", "BOUGHT")).toDF("src_id", "dst_id", "rel")
+      graft.operators.Sinks.graphExport(
+        Map("user" -> Seq(("u1", "alice")).toDF("id", "name")),
+        Map("bought" -> edges), dir)
+      assert(spark.read.parquet(s"$dir/nodes_user").count() == 1)
+      assert(spark.read.parquet(s"$dir/edges_bought").count() == 1)
+      val cy = graft.operators.Sinks.cypherStatements(edges, "User", "Part")
+        .as[String].head()
+      assert(cy == "MERGE (a:User {id: 'u1'}) MERGE (b:Part {id: 'p1'}) MERGE (a)-[:BOUGHT]->(b);")
+      // edges carrying a props column render SET clauses on the relationship
+      val withProps = Seq(("u1", "p1", "BOUGHT", Seq(("qty", "3"), ("unit", "ea"))))
+        .toDF("src_id", "dst_id", "rel", "props")
+      val cyP = graft.operators.Sinks.cypherStatements(
+          withProps.select(col("src_id"), col("dst_id"), col("rel"),
+            expr("transform(props, p -> struct(p._1 AS k, p._2 AS v))").as("props")),
+          "User", "Part")
+        .as[String].head()
+      assert(cyP == "MERGE (a:User {id: 'u1'}) MERGE (b:Part {id: 'p1'}) " +
+        "MERGE (a)-[r:BOUGHT]->(b) SET r.qty = '3' SET r.unit = 'ea';")
+      // data containing quotes/backslashes escapes; null prop values are
+      // skipped, not allowed to null the whole SET block
+      val tricky = Seq(("o'brien", "p\\q", "KNOWS", Seq(("note", "it's"), ("gone", null))))
+        .toDF("src_id", "dst_id", "rel", "props")
+      val cyT = graft.operators.Sinks.cypherStatements(
+          tricky.select(col("src_id"), col("dst_id"), col("rel"),
+            expr("transform(props, p -> struct(p._1 AS k, p._2 AS v))").as("props")),
+          "User", "User")
+        .as[String].head()
+      assert(cyT == "MERGE (a:User {id: 'o\\'brien'}) MERGE (b:User {id: 'p\\\\q'}) " +
+        "MERGE (a)-[r:KNOWS]->(b) SET r.note = 'it\\'s';")
+      // rel/prop keys interpolate OUTSIDE quotes — a data-derived value that
+      // isn't an identifier is an injection vector and must abort, not render
+      val inj = Seq(("u1", "p1", "X]->(b) DETACH DELETE a//"))
+        .toDF("src_id", "dst_id", "rel")
+      val ex = intercept[Exception] {
+        graft.operators.Sinks.cypherStatements(inj, "User", "Part").collect()
+      }
+      assert(ex.getMessage.contains("non-identifier"))
+      val injKey = Seq(("u1", "p1", "KNOWS", Seq(("k = '' DETACH DELETE a//", "v"))))
+        .toDF("src_id", "dst_id", "rel", "props")
+      val exK = intercept[Exception] {
+        graft.operators.Sinks.cypherStatements(
+          injKey.select(col("src_id"), col("dst_id"), col("rel"),
+            expr("transform(props, p -> struct(p._1 AS k, p._2 AS v))").as("props")),
+          "User", "Part").collect()
+      }
+      assert(exK.getMessage.contains("non-identifier"))
     }
-    assert(ex.getMessage.contains("non-identifier"))
-    val injKey = Seq(("u1", "p1", "KNOWS", Seq(("k = '' DETACH DELETE a//", "v"))))
-      .toDF("src_id", "dst_id", "rel", "props")
-    val exK = intercept[Exception] {
-      graft.operators.Sinks.cypherStatements(
-        injKey.select(col("src_id"), col("dst_id"), col("rel"),
-          expr("transform(props, p -> struct(p._1 AS k, p._2 AS v))").as("props")),
-        "User", "Part").collect()
-    }
-    assert(exK.getMessage.contains("non-identifier"))
   }
 
   test("cypherExecute drives statements through per-partition sessions in batches") {
@@ -129,64 +132,66 @@ class SourcesAnnSpec extends SparkSpec {
   }
 
   test("csvWrite round-trips quoted text and typed columns exactly") {
-    val base = java.nio.file.Files.createTempDirectory("graft_csvw").toString
-    val df = Seq(
-      (1L, "plain", 1.5),
-      (2L, "comma, inside", -0.125),
-      (3L, "quote \" and 'apostrophe'", 3.14159265358979)
-    ).toDF("id", "txt", "v")
-    graft.operators.Sinks.csvWrite(df, s"$base/t")
-    val back = graft.sources.Sources.csv(spark, s"$base/t",
-      schemaDdl = Some(df.schema.toDDL))
-    // names and types survive (CSV re-read is nullable-by-default, so
-    // nullability flags are not part of the contract)
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      == df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(back.orderBy("id").as[(Long, String, Double)].collect().toSeq
-      == df.orderBy("id").as[(Long, String, Double)].collect().toSeq)
+    withTempDir("graft_csvw") { base =>
+      val df = Seq(
+        (1L, "plain", 1.5),
+        (2L, "comma, inside", -0.125),
+        (3L, "quote \" and 'apostrophe'", 3.14159265358979)
+      ).toDF("id", "txt", "v")
+      graft.operators.Sinks.csvWrite(df, s"$base/t")
+      val back = graft.sources.Sources.csv(spark, s"$base/t",
+        schemaDdl = Some(df.schema.toDDL))
+      // names and types survive (CSV re-read is nullable-by-default, so
+      // nullability flags are not part of the contract)
+      assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq
+        == df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+      assert(back.orderBy("id").as[(Long, String, Double)].collect().toSeq
+        == df.orderBy("id").as[(Long, String, Double)].collect().toSeq)
+    }
   }
 
   test("compact merges small files without changing content; writeClustered sorts in-file") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val frag = s"$base/frag"; val out = s"$base/compacted"
-    // 16 tiny files
-    spark.range(0, 1000).toDF("id").repartition(16).write.parquet(frag)
-    val (before, after) = graft.operators.Sinks.compact(spark, frag, out,
-      targetBytes = 1L << 30)
-    assert(before == 16L && after == 1L)
-    assert(spark.read.parquet(out).agg(sum("id")).as[Long].head() == 499500L)
-    assert(spark.read.parquet(out).count() == 1000L)
-    // clustered write: rows within the single output file arrive sorted
-    val cl = s"$base/clustered"
-    graft.operators.Sinks.writeClustered(
-      spark.range(0, 100).toDF("id").withColumn("part", lit("p"))
-        .withColumn("v", expr("99 - id")).coalesce(1),
-      cl, Seq("part"), Seq("v"))
-    val vs = spark.read.parquet(s"$cl/part=p").select("v").as[Long].collect()
-    assert(vs.toSeq == vs.sorted.toSeq)
-    // compacting a hive-partitioned directory preserves the layout (and
-    // therefore downstream partition pruning), not just the rows
-    val pfrag = s"$base/pfrag"; val pout = s"$base/pcompacted"
-    spark.range(0, 200).toDF("id")
-      .withColumn("lang", expr("CASE WHEN id % 2 = 0 THEN 'en' ELSE 'es' END"))
-      .withColumn("src", lit("web"))
-      .repartition(8).write.partitionBy("lang", "src").parquet(pfrag)
-    graft.operators.Sinks.compact(spark, pfrag, pout, targetBytes = 1L << 30)
-    val sub = new java.io.File(pout).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(sub.toSet == Set("lang=en", "lang=es"))
-    assert(new java.io.File(s"$pout/lang=en").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet == Set("src=web"))
-    assert(spark.read.parquet(pout).agg(sum("id")).as[Long].head() == 19900L)
-    // a directory MIXING a hive-partitioned subdir with a plain one has no
-    // inferable layout — compact must refuse loudly, not guess a partitionBy
-    val mixed = s"$base/mixed"; val mout = s"$base/mixed_out"
-    spark.range(0, 10).toDF("id").coalesce(1).write.parquet(s"$mixed/lang=en")
-    spark.range(10, 20).toDF("id").coalesce(1).write.parquet(s"$mixed/plaindir")
-    val err = intercept[IllegalArgumentException] {
-      graft.operators.Sinks.compact(spark, mixed, mout, targetBytes = 1L << 30)
+    withTempDir("graft_compact") { base =>
+      val frag = s"$base/frag"; val out = s"$base/compacted"
+      // 16 tiny files
+      spark.range(0, 1000).toDF("id").repartition(16).write.parquet(frag)
+      val (before, after) = graft.operators.Sinks.compact(spark, frag, out,
+        targetBytes = 1L << 30)
+      assert(before == 16L && after == 1L)
+      assert(spark.read.parquet(out).agg(sum("id")).as[Long].head() == 499500L)
+      assert(spark.read.parquet(out).count() == 1000L)
+      // clustered write: rows within the single output file arrive sorted
+      val cl = s"$base/clustered"
+      graft.operators.Sinks.writeClustered(
+        spark.range(0, 100).toDF("id").withColumn("part", lit("p"))
+          .withColumn("v", expr("99 - id")).coalesce(1),
+        cl, Seq("part"), Seq("v"))
+      val vs = spark.read.parquet(s"$cl/part=p").select("v").as[Long].collect()
+      assert(vs.toSeq == vs.sorted.toSeq)
+      // compacting a hive-partitioned directory preserves the layout (and
+      // therefore downstream partition pruning), not just the rows
+      val pfrag = s"$base/pfrag"; val pout = s"$base/pcompacted"
+      spark.range(0, 200).toDF("id")
+        .withColumn("lang", expr("CASE WHEN id % 2 = 0 THEN 'en' ELSE 'es' END"))
+        .withColumn("src", lit("web"))
+        .repartition(8).write.partitionBy("lang", "src").parquet(pfrag)
+      graft.operators.Sinks.compact(spark, pfrag, pout, targetBytes = 1L << 30)
+      val sub = new java.io.File(pout).listFiles().filter(_.isDirectory).map(_.getName)
+      assert(sub.toSet == Set("lang=en", "lang=es"))
+      assert(new java.io.File(s"$pout/lang=en").listFiles()
+        .filter(_.isDirectory).map(_.getName).toSet == Set("src=web"))
+      assert(spark.read.parquet(pout).agg(sum("id")).as[Long].head() == 19900L)
+      // a directory MIXING a hive-partitioned subdir with a plain one has no
+      // inferable layout — compact must refuse loudly, not guess a partitionBy
+      val mixed = s"$base/mixed"; val mout = s"$base/mixed_out"
+      spark.range(0, 10).toDF("id").coalesce(1).write.parquet(s"$mixed/lang=en")
+      spark.range(10, 20).toDF("id").coalesce(1).write.parquet(s"$mixed/plaindir")
+      val err = intercept[IllegalArgumentException] {
+        graft.operators.Sinks.compact(spark, mixed, mout, targetBytes = 1L << 30)
+      }
+      assert(err.getMessage.contains("inconsistent partition layout"))
     }
-    assert(err.getMessage.contains("inconsistent partition layout"))
   }
 
   test("bm25TopK ranks by term rarity and frequency with an id tie-break") {
@@ -308,34 +313,35 @@ class SourcesAnnSpec extends SparkSpec {
       (2L, "spark common common common common"),
       (3L, "common common common common common"),
       (4L, "spark rare common")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lexidx_m").toString
-    Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
-    val q = Seq((0L, "spark"), (0L, "common"), (1L, "rare"),
-      (1L, "rare")) // repeated term must count once (term SETS)
-      .toDF("qid", "term")
-    val many = Search.bm25ManyFromIndex(spark, dir, q, "qid", "term", k = 3)
-      .as[(Long, Long, Double, Long)].collect().toSeq.sorted
-    val per = Seq(0L -> Seq("spark", "common"), 1L -> Seq("rare")).flatMap {
-      case (qid, ts) =>
-        Search.bm25FromIndex(spark, dir, ts, k = 3)
-          .as[(Long, Double)].collect().toSeq.zipWithIndex
-          .map { case ((id, sc), i) => (qid, id, sc, i + 1L) }
-    }.sorted
-    assert(many == per && many.nonEmpty)
-    // the df-ceiling guard runs as a distributed semi-join here (query
-    // terms never collect): at 800‰, 'common' (df 4/4 = 1000‰) drops from
-    // query 0 while spark (750‰) and rare (250‰) survive — per-query
-    // results equal per-call probes over the guarded term sets
-    val guardedMany = Search.bm25ManyFromIndex(spark, dir, q, "qid", "term",
-        k = 3, maxDfPermille = 800)
-      .as[(Long, Long, Double, Long)].collect().toSeq.sorted
-    val perGuarded = Seq(0L -> Seq("spark"), 1L -> Seq("rare")).flatMap {
-      case (qid, ts) =>
-        Search.bm25FromIndex(spark, dir, ts, k = 3)
-          .as[(Long, Double)].collect().toSeq.zipWithIndex
-          .map { case ((id, sc), i) => (qid, id, sc, i + 1L) }
-    }.sorted
-    assert(guardedMany == perGuarded && guardedMany.nonEmpty)
+    withTempDir("lexidx_m") { dir =>
+      Search.writeLexIndex(docs, "doc_id", "text", dir, buckets = 8)
+      val q = Seq((0L, "spark"), (0L, "common"), (1L, "rare"),
+        (1L, "rare")) // repeated term must count once (term SETS)
+        .toDF("qid", "term")
+      val many = Search.bm25ManyFromIndex(spark, dir, q, "qid", "term", k = 3)
+        .as[(Long, Long, Double, Long)].collect().toSeq.sorted
+      val per = Seq(0L -> Seq("spark", "common"), 1L -> Seq("rare")).flatMap {
+        case (qid, ts) =>
+          Search.bm25FromIndex(spark, dir, ts, k = 3)
+            .as[(Long, Double)].collect().toSeq.zipWithIndex
+            .map { case ((id, sc), i) => (qid, id, sc, i + 1L) }
+      }.sorted
+      assert(many == per && many.nonEmpty)
+      // the df-ceiling guard runs as a distributed semi-join here (query
+      // terms never collect): at 800‰, 'common' (df 4/4 = 1000‰) drops from
+      // query 0 while spark (750‰) and rare (250‰) survive — per-query
+      // results equal per-call probes over the guarded term sets
+      val guardedMany = Search.bm25ManyFromIndex(spark, dir, q, "qid", "term",
+          k = 3, maxDfPermille = 800)
+        .as[(Long, Long, Double, Long)].collect().toSeq.sorted
+      val perGuarded = Seq(0L -> Seq("spark"), 1L -> Seq("rare")).flatMap {
+        case (qid, ts) =>
+          Search.bm25FromIndex(spark, dir, ts, k = 3)
+            .as[(Long, Double)].collect().toSeq.zipWithIndex
+            .map { case ((id, sc), i) => (qid, id, sc, i + 1L) }
+      }.sorted
+      assert(guardedMany == perGuarded && guardedMany.nonEmpty)
+    }
   }
 
   test("writeLexDelta writes the maintained index back as one generation; " +
@@ -748,54 +754,55 @@ class SourcesAnnSpec extends SparkSpec {
       (i.toLong, Array.fill(8)(base + i * 1e-4f))
     }
     val df = pts.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("pqidx").toString
-    graft.similarity.Pq.writeIndex(df, "vec_id", "embedding",
-      dim = 8, m = 2, k = 2, dir = dir, nlist = 4)
-    // training is bit-deterministic, so retraining = the stored model
-    val cbs = graft.similarity.Pq.trainCodebooks(df, "vec_id", "embedding",
-      dim = 8, m = 2, k = 2, rounds = 2)
-    // probe with nprobe = nlist ≡ the exhaustive in-memory ADC scan
-    // (sorted compare: cross-query collect order is partition-arrival
-    // order — the identity is about content + within-query ranks)
-    val got = graft.similarity.Pq.probeIndex(df.filter($"vec_id" < 2),
-        "vec_id", "embedding", dir, topK = 5, nprobe = 4)
-      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    val want = graft.similarity.Pq.adcTopK(df.filter($"vec_id" < 2), df,
-        "vec_id", "embedding", cbs, topK = 5)
-      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    assert(got == want && got.nonEmpty)
-    // nprobe = 1 routing reaches the scan as a PARTITION filter on the
-    // cell-partitioned layout — pruned at file-listing time
-    val pruned = graft.similarity.Pq.probeIndex(df.filter($"vec_id" < 2),
-      "vec_id", "embedding", dir, topK = 5, nprobe = 1)
-    pruned.collect()
-    val p = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined,
-      s"expected a cell partition filter in:\n${p.take(3000)}")
-    // maintenance identity: retire + admit under the stored model ≡
-    // re-encoding the maintained membership from scratch (same model)
-    val fresh = (16 until 20).map { i =>
-      val base = if (i % 2 == 0) 1.0f else -1.0f
-      (i.toLong, Array.fill(8)(base + i * 1e-4f))
+    withTempDir("pqidx") { dir =>
+      graft.similarity.Pq.writeIndex(df, "vec_id", "embedding",
+        dim = 8, m = 2, k = 2, dir = dir, nlist = 4)
+      // training is bit-deterministic, so retraining = the stored model
+      val cbs = graft.similarity.Pq.trainCodebooks(df, "vec_id", "embedding",
+        dim = 8, m = 2, k = 2, rounds = 2)
+      // probe with nprobe = nlist ≡ the exhaustive in-memory ADC scan
+      // (sorted compare: cross-query collect order is partition-arrival
+      // order — the identity is about content + within-query ranks)
+      val got = graft.similarity.Pq.probeIndex(df.filter($"vec_id" < 2),
+          "vec_id", "embedding", dir, topK = 5, nprobe = 4)
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      val want = graft.similarity.Pq.adcTopK(df.filter($"vec_id" < 2), df,
+          "vec_id", "embedding", cbs, topK = 5)
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      assert(got == want && got.nonEmpty)
+      // nprobe = 1 routing reaches the scan as a PARTITION filter on the
+      // cell-partitioned layout — pruned at file-listing time
+      val pruned = graft.similarity.Pq.probeIndex(df.filter($"vec_id" < 2),
+        "vec_id", "embedding", dir, topK = 5, nprobe = 1)
+      pruned.collect()
+      val p = pruned.queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined,
+        s"expected a cell partition filter in:\n${p.take(3000)}")
+      // maintenance identity: retire + admit under the stored model ≡
+      // re-encoding the maintained membership from scratch (same model)
+      val fresh = (16 until 20).map { i =>
+        val base = if (i % 2 == 0) 1.0f else -1.0f
+        (i.toLong, Array.fill(8)(base + i * 1e-4f))
+      }
+      val admitted = fresh.toDF("vec_id", "embedding")
+      val retired = Seq(3L, 4L).toDF("id")
+      val maintained = graft.similarity.Pq.indexCodesDelta(
+          admitted, "vec_id", "embedding", dir, retired)
+        .as[(Long, String, Seq[Int])].collect().toSet
+      val membership = df.filter(!$"vec_id".isin(3L, 4L)).unionByName(admitted)
+      // the rebuild must route with the STORED (trained — the r12 default)
+      // centroids: the identity under test is maintenance under the frozen
+      // model, and the live generation's coarse parquet IS that model
+      val cents = graft.streaming.Streams.readIndex(spark, s"$dir/coarse")
+        .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
+      val celled = membership.select(col("vec_id"), col("embedding"),
+        graft.similarity.Ann.nearestCell(cents, col("embedding")).as("cell"))
+      val rebuilt = graft.similarity.Pq.encode(celled, "vec_id", "embedding",
+          cbs, carry = Seq("cell"))
+        .select(col("id"), col("cell"), col("codes"))
+        .as[(Long, String, Seq[Int])].collect().toSet
+      assert(maintained == rebuilt && maintained.size == 18)
     }
-    val admitted = fresh.toDF("vec_id", "embedding")
-    val retired = Seq(3L, 4L).toDF("id")
-    val maintained = graft.similarity.Pq.indexCodesDelta(
-        admitted, "vec_id", "embedding", dir, retired)
-      .as[(Long, String, Seq[Int])].collect().toSet
-    val membership = df.filter(!$"vec_id".isin(3L, 4L)).unionByName(admitted)
-    // the rebuild must route with the STORED (trained — the r12 default)
-    // centroids: the identity under test is maintenance under the frozen
-    // model, and the model/coarse parquet IS that model
-    val cents = spark.read.parquet(s"$dir/model/coarse")
-      .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
-    val celled = membership.select(col("vec_id"), col("embedding"),
-      graft.similarity.Ann.nearestCell(cents, col("embedding")).as("cell"))
-    val rebuilt = graft.similarity.Pq.encode(celled, "vec_id", "embedding",
-        cbs, carry = Seq("cell"))
-      .select(col("id"), col("cell"), col("codes"))
-      .as[(Long, String, Seq[Int])].collect().toSet
-    assert(maintained == rebuilt && maintained.size == 18)
   }
 
   test("trained coarse quantizer: probe identity unchanged, exactly nlist " +
@@ -827,12 +834,13 @@ class SourcesAnnSpec extends SparkSpec {
     // probe identity: at nprobe = nlist the stored-index probe result is
     // centroid-independent — trained and untrained builds agree
     def probeAll(trainedFlag: Boolean): Seq[(Long, Long, Long, Double)] = {
-      val dir = java.nio.file.Files.createTempDirectory("pqtrained").toString
-      Pq.writeIndex(df, "vec_id", "embedding", dim = 8, m = 2, k = 2,
-        dir = dir, nlist = 4, trained = trainedFlag)
-      Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id", "embedding",
-          dir, topK = 5, nprobe = 4)
-        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      withTempDir("pqtrained") { dir =>
+        Pq.writeIndex(df, "vec_id", "embedding", dim = 8, m = 2, k = 2,
+          dir = dir, nlist = 4, trained = trainedFlag)
+        Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id", "embedding",
+            dir, topK = 5, nprobe = 4)
+          .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      }
     }
     assert(probeAll(trainedFlag = true) == probeAll(trainedFlag = false))
     // the full lifecycle under a TRAINED model: delta maintenance reads
@@ -840,34 +848,35 @@ class SourcesAnnSpec extends SparkSpec {
     // the maintained probe ≡ exhaustive ADC over the maintained
     // membership under the frozen model — the G47 identity law holds for
     // trained builds end to end
-    val dirT = java.nio.file.Files.createTempDirectory("pqtrained_d").toString
-    Pq.writeIndex(df.filter($"vec_id" < 48), "vec_id", "embedding",
-      dim = 8, m = 2, k = 2, dir = dirT, nlist = 4, trained = true)
-    val admitted = df.filter($"vec_id" >= 48)
-    val retired = Seq(5L, 6L).toDF("id")
-    graft.operators.Sinks.swapWrite(
-      Pq.indexCodesDelta(admitted, "vec_id", "embedding", dirT, retired),
-      s"$dirT/codes", Seq("cell"))
-    val maintained = df.filter(!$"vec_id".isin(5L, 6L))
-    val cbsT = Pq.trainCodebooks(df.filter($"vec_id" < 48), "vec_id",
-      "embedding", dim = 8, m = 2, k = 2, rounds = 2)
-    val gotT = Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id", "embedding",
-        dirT, topK = 5, nprobe = 4)
-      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    val wantT = Pq.adcTopK(df.filter($"vec_id" < 2), maintained,
-        "vec_id", "embedding", cbsT, topK = 5)
-      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    assert(gotT == wantT && gotT.nonEmpty)
-    // pad path: more cells than distinct training survivors — empty-cluster
-    // slots refill with md5-order picks so nlist is honored exactly
-    val tiny = Seq((0L, Array.fill(8)(1.0f)), (1L, Array.fill(8)(-1.0f)),
-      (2L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    val padded = Ann.trainedCentroids(tiny, "vec_id", "embedding", nlist = 5)
-    assert(padded.size == 5 && padded.map(_._1).distinct.size == 5)
-    // deterministic hash-mod sampling still yields a full centroid set
-    val sampled = Ann.trainedCentroids(df, "vec_id", "embedding", nlist = 4,
-      sampleMod = 4)
-    assert(sampled.size == 4)
+    withTempDir("pqtrained_d") { dirT =>
+      Pq.writeIndex(df.filter($"vec_id" < 48), "vec_id", "embedding",
+        dim = 8, m = 2, k = 2, dir = dirT, nlist = 4, trained = true)
+      val admitted = df.filter($"vec_id" >= 48)
+      val retired = Seq(5L, 6L).toDF("id")
+      graft.operators.Sinks.swapWrite(
+        Pq.indexCodesDelta(admitted, "vec_id", "embedding", dirT, retired),
+        s"$dirT/codes", Seq("cell"))
+      val maintained = df.filter(!$"vec_id".isin(5L, 6L))
+      val cbsT = Pq.trainCodebooks(df.filter($"vec_id" < 48), "vec_id",
+        "embedding", dim = 8, m = 2, k = 2, rounds = 2)
+      val gotT = Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id", "embedding",
+          dirT, topK = 5, nprobe = 4)
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      val wantT = Pq.adcTopK(df.filter($"vec_id" < 2), maintained,
+          "vec_id", "embedding", cbsT, topK = 5)
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      assert(gotT == wantT && gotT.nonEmpty)
+      // pad path: more cells than distinct training survivors — empty-cluster
+      // slots refill with md5-order picks so nlist is honored exactly
+      val tiny = Seq((0L, Array.fill(8)(1.0f)), (1L, Array.fill(8)(-1.0f)),
+        (2L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
+      val padded = Ann.trainedCentroids(tiny, "vec_id", "embedding", nlist = 5)
+      assert(padded.size == 5 && padded.map(_._1).distinct.size == 5)
+      // deterministic hash-mod sampling still yields a full centroid set
+      val sampled = Ann.trainedCentroids(df, "vec_id", "embedding", nlist = 4,
+        sampleMod = 4)
+      assert(sampled.size == 4)
+    }
   }
 
   test("Pq: an unrotated rebuild over a rotated index probes like a fresh build") {
@@ -890,7 +899,7 @@ class SourcesAnnSpec extends SparkSpec {
       build(s"$base/fresh", None)
       val want = probe(s"$base/fresh")
       assert(want.nonEmpty && probe(s"$base/rebuilt") == want,
-        "the rotated build's model/rotation outlived the unrotated rebuild")
+        "the rotated build's rotation outlived the unrotated rebuild")
     }
   }
 
@@ -905,54 +914,56 @@ class SourcesAnnSpec extends SparkSpec {
     // the PRODUCTION rotation: data-derived principal axes (the SQL
     // oracle uses a fixed permutation instead; this pins the Jacobi path)
     val rot = Pca.rotation(df, "embedding", dim = 8)
-    val dir = java.nio.file.Files.createTempDirectory("pqidx_rot").toString
-    Pq.writeIndex(df, "vec_id", "embedding", dim = 8, m = 2, k = 2,
-      dir = dir, nlist = 4, rotation = Some(rot))
-    // probe at nprobe = nlist: callers pass RAW vectors; the result must
-    // equal the exhaustive ADC scan where EVERYTHING was rotated by hand
-    // collect() row order across queries is partition-arrival order, not
-    // deterministic — compare sorted (the per-query rank already totals
-    // the WITHIN-query order, which is what the identity is about)
-    val got = Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id", "embedding",
-        dir, topK = 5, nprobe = 4)
-      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    val dfR = Pca.rotateAll(df, "embedding", rot)
-    val cbsR = Pq.trainCodebooks(dfR, "vec_id", "embedding",
-      dim = 8, m = 2, k = 2, rounds = 2)
-    val want = Pq.adcTopK(dfR.filter($"vec_id" < 2), dfR,
-        "vec_id", "embedding", cbsR, topK = 5)
-      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    assert(got == want && got.nonEmpty)
-    // a rotated index must NOT answer like an unrotated one (the rotation
-    // is load-bearing, not a no-op): PQ codes differ under rotation
-    val dirPlain = java.nio.file.Files.createTempDirectory("pqidx_plain").toString
-    Pq.writeIndex(df, "vec_id", "embedding", dim = 8, m = 2, k = 2,
-      dir = dirPlain, nlist = 4)
-    val plainScores = Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id",
-        "embedding", dirPlain, topK = 5, nprobe = 4)
-      .select("adc2").as[Double].collect().toSet
-    assert(got.map(_._4).toSet != plainScores,
-      "rotated and plain indexes scored identically — rotation not applied")
-    // delta maintenance rotates the ADMITTED side with the stored model
-    val admitted = (16 until 20).map { i =>
-      (i.toLong, Array.tabulate(8)(j => 1.0f + i * 1e-4f + j * 0.01f))
-    }.toDF("vec_id", "embedding")
-    val maintained = Pq.indexCodesDelta(admitted, "vec_id", "embedding",
-        dir, Seq(3L).toDF("id"))
-      .as[(Long, String, Seq[Int])].collect().toSet
-    val membershipR = Pca.rotateAll(
-      df.filter($"vec_id" =!= 3L).unionByName(admitted), "embedding", rot)
-    // rebuild routes with the STORED (trained-by-default) centroids —
-    // frozen-model identity, same device as the unrotated delta test
-    val centsR = spark.read.parquet(s"$dir/model/coarse")
-      .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
-    val celledR = membershipR.select(col("vec_id"), col("embedding"),
-      graft.similarity.Ann.nearestCell(centsR, col("embedding")).as("cell"))
-    val rebuilt = Pq.encode(celledR, "vec_id", "embedding", cbsR,
-        carry = Seq("cell"))
-      .select(col("id"), col("cell"), col("codes"))
-      .as[(Long, String, Seq[Int])].collect().toSet
-    assert(maintained == rebuilt && maintained.size == 19)
+    withTempDir("pqidx_rot") { dir =>
+      Pq.writeIndex(df, "vec_id", "embedding", dim = 8, m = 2, k = 2,
+        dir = dir, nlist = 4, rotation = Some(rot))
+      // probe at nprobe = nlist: callers pass RAW vectors; the result must
+      // equal the exhaustive ADC scan where EVERYTHING was rotated by hand
+      // collect() row order across queries is partition-arrival order, not
+      // deterministic — compare sorted (the per-query rank already totals
+      // the WITHIN-query order, which is what the identity is about)
+      val got = Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id", "embedding",
+          dir, topK = 5, nprobe = 4)
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      val dfR = Pca.rotateAll(df, "embedding", rot)
+      val cbsR = Pq.trainCodebooks(dfR, "vec_id", "embedding",
+        dim = 8, m = 2, k = 2, rounds = 2)
+      val want = Pq.adcTopK(dfR.filter($"vec_id" < 2), dfR,
+          "vec_id", "embedding", cbsR, topK = 5)
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
+      assert(got == want && got.nonEmpty)
+      // a rotated index must NOT answer like an unrotated one (the rotation
+      // is load-bearing, not a no-op): PQ codes differ under rotation
+      withTempDir("pqidx_plain") { dirPlain =>
+        Pq.writeIndex(df, "vec_id", "embedding", dim = 8, m = 2, k = 2,
+          dir = dirPlain, nlist = 4)
+        val plainScores = Pq.probeIndex(df.filter($"vec_id" < 2), "vec_id",
+            "embedding", dirPlain, topK = 5, nprobe = 4)
+          .select("adc2").as[Double].collect().toSet
+        assert(got.map(_._4).toSet != plainScores,
+          "rotated and plain indexes scored identically — rotation not applied")
+        // delta maintenance rotates the ADMITTED side with the stored model
+        val admitted = (16 until 20).map { i =>
+          (i.toLong, Array.tabulate(8)(j => 1.0f + i * 1e-4f + j * 0.01f))
+        }.toDF("vec_id", "embedding")
+        val maintained = Pq.indexCodesDelta(admitted, "vec_id", "embedding",
+            dir, Seq(3L).toDF("id"))
+          .as[(Long, String, Seq[Int])].collect().toSet
+        val membershipR = Pca.rotateAll(
+          df.filter($"vec_id" =!= 3L).unionByName(admitted), "embedding", rot)
+        // rebuild routes with the STORED (trained-by-default) centroids —
+        // frozen-model identity, same device as the unrotated delta test
+        val centsR = graft.streaming.Streams.readIndex(spark, s"$dir/coarse")
+          .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
+        val celledR = membershipR.select(col("vec_id"), col("embedding"),
+          graft.similarity.Ann.nearestCell(centsR, col("embedding")).as("cell"))
+        val rebuilt = Pq.encode(celledR, "vec_id", "embedding", cbsR,
+            carry = Seq("cell"))
+          .select(col("id"), col("cell"), col("codes"))
+          .as[(Long, String, Seq[Int])].collect().toSet
+        assert(maintained == rebuilt && maintained.size == 19)
+      }
+    }
   }
 
   test("semDedup flags exactly the later ids with a high-cosine cluster-mate") {

@@ -169,88 +169,90 @@ class SqJlSpec extends SparkSpec {
        "partitions, delta-maintained ≡ re-encoded under the frozen model") {
     import spark.implicits._
     val queries = emb.filter(col("vec_id") < 4)
-    val dir = java.nio.file.Files.createTempDirectory("sqidx").toString
-    Sq.writeIndex(emb, "vec_id", "embedding", dim = 64, dir = dir, nlist = 8)
-    // probe at nprobe = nlist ≡ the exhaustive in-memory scan (training
-    // is one deterministic aggregate, so retrained scales = stored)
-    val got = Sq.probeIndex(queries, "vec_id", "embedding", dir,
-        topK = 3, nprobe = 8)
-      .as[(Long, Long, Long, Long)].collect().toSeq.sorted
-    val want = Sq.sqTopK(queries, emb, "vec_id", "embedding", scales, topK = 3)
-      .as[(Long, Long, Long, Long)].collect().toSeq.sorted
-    assert(got == want && got.nonEmpty)
-    // nprobe = 1 routing reaches the scan as a PARTITION filter
-    val pruned = Sq.probeIndex(queries, "vec_id", "embedding", dir,
-      topK = 3, nprobe = 1)
-    pruned.collect()
-    val p = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined,
-      s"expected a cell partition filter in:\n${p.take(3000)}")
-    // maintenance identity: retire + admit under the stored model ≡
-    // re-encoding the maintained membership from scratch (same scales,
-    // same cells); admitted rows saturate under the frozen scales
-    val admitted = Seq((9001L, Array.fill(64)(50.0f))).toDF("vec_id", "embedding")
-    val retired = Seq(3L, 4L).toDF("id")
-    val maintained = Sq.indexCodesDelta(admitted, "vec_id", "embedding",
-        dir, retired)
-      .as[(Long, String, Seq[Int])].collect().toSet
-    // rebuild routes with the STORED (trained — the r12 default) cells:
-    // the identity is maintenance under the frozen model
-    val cents = spark.read.parquet(s"$dir/model/coarse")
-      .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
-    val membership = emb.select(col("vec_id"), col("embedding"))
-      .filter(!col("vec_id").isin(3L, 4L)).unionByName(admitted)
-    val celled = membership.select(col("vec_id"), col("embedding"),
-      Ann.nearestCell(cents, col("embedding")).as("cell"))
-    val rebuilt = Sq.encode(celled, "vec_id", "embedding", scales,
-        carry = Seq("cell"))
-      .as[(Long, String, Seq[Int])].collect().toSet
-    assert(maintained == rebuilt)
-    assert(maintained.exists { case (id, _, codes) =>
-      id == 9001L && codes.forall(_ == 255) }) // saturation, not error
+    withTempDir("sqidx") { dir =>
+      Sq.writeIndex(emb, "vec_id", "embedding", dim = 64, dir = dir, nlist = 8)
+      // probe at nprobe = nlist ≡ the exhaustive in-memory scan (training
+      // is one deterministic aggregate, so retrained scales = stored)
+      val got = Sq.probeIndex(queries, "vec_id", "embedding", dir,
+          topK = 3, nprobe = 8)
+        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+      val want = Sq.sqTopK(queries, emb, "vec_id", "embedding", scales, topK = 3)
+        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+      assert(got == want && got.nonEmpty)
+      // nprobe = 1 routing reaches the scan as a PARTITION filter
+      val pruned = Sq.probeIndex(queries, "vec_id", "embedding", dir,
+        topK = 3, nprobe = 1)
+      pruned.collect()
+      val p = pruned.queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined,
+        s"expected a cell partition filter in:\n${p.take(3000)}")
+      // maintenance identity: retire + admit under the stored model ≡
+      // re-encoding the maintained membership from scratch (same scales,
+      // same cells); admitted rows saturate under the frozen scales
+      val admitted = Seq((9001L, Array.fill(64)(50.0f))).toDF("vec_id", "embedding")
+      val retired = Seq(3L, 4L).toDF("id")
+      val maintained = Sq.indexCodesDelta(admitted, "vec_id", "embedding",
+          dir, retired)
+        .as[(Long, String, Seq[Int])].collect().toSet
+      // rebuild routes with the STORED (trained — the r12 default) cells:
+      // the identity is maintenance under the frozen model
+      val cents = graft.streaming.Streams.readIndex(spark, s"$dir/coarse")
+        .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
+      val membership = emb.select(col("vec_id"), col("embedding"))
+        .filter(!col("vec_id").isin(3L, 4L)).unionByName(admitted)
+      val celled = membership.select(col("vec_id"), col("embedding"),
+        Ann.nearestCell(cents, col("embedding")).as("cell"))
+      val rebuilt = Sq.encode(celled, "vec_id", "embedding", scales,
+          carry = Seq("cell"))
+        .as[(Long, String, Seq[Int])].collect().toSet
+      assert(maintained == rebuilt)
+      assert(maintained.exists { case (id, _, codes) =>
+        id == 9001L && codes.forall(_ == 255) }) // saturation, not error
+    }
   }
 
   test("Sq maintain LOOP: two delta generations through swapWrite over the " +
        "live layout ≡ one re-encode of the final membership (the streaming " +
        "maintain composition at batch granularity)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sqidx_loop").toString
-    val stored = emb.filter(col("vec_id") % 4 === 0)
-    Sq.writeIndex(stored, "vec_id", "embedding", dim = 64, dir = dir, nlist = 8)
-    // generation 1: admit the %4==1 slice, retire stored %3==0 ids
-    val a1 = emb.filter(col("vec_id") % 4 === 1)
-    val r1 = stored.filter(col("vec_id") % 3 === 0).select(col("vec_id").as("id"))
-    graft.operators.Sinks.swapWrite(
-      Sq.indexCodesDelta(a1, "vec_id", "embedding", dir, r1),
-      s"$dir/codes", Seq("cell"))
-    // generation 2: admit the %4==2 slice, retire some of gen-1's admits
-    val a2 = emb.filter(col("vec_id") % 4 === 2)
-    val r2 = emb.filter(col("vec_id") % 4 === 1 && col("vec_id") % 5 === 0)
-      .select(col("vec_id").as("id"))
-    graft.operators.Sinks.swapWrite(
-      Sq.indexCodesDelta(a2, "vec_id", "embedding", dir, r2),
-      s"$dir/codes", Seq("cell"))
-    val maintained = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
-      .select(col("id"), col("cell").cast("string"), col("codes"))
-      .as[(Long, String, Seq[Int])].collect().toSet
-    // one re-encode of the FINAL membership under the same frozen model
-    val membership = emb.select(col("vec_id"), col("embedding")).filter(
-      (col("vec_id") % 4 === 0 && col("vec_id") % 3 =!= 0) ||
-      (col("vec_id") % 4 === 1 && col("vec_id") % 5 =!= 0) ||
-      (col("vec_id") % 4 === 2))
-    val cents = spark.read.parquet(s"$dir/model/coarse")
-      .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
-    val celled = membership.select(col("vec_id"), col("embedding"),
-      Ann.nearestCell(cents, col("embedding")).as("cell"))
-    // scales come from the STORED model (trained on the %4==0 generation,
-    // NOT the suite's full-corpus fixture) — the frozen-model contract
-    val srows = spark.read.parquet(s"$dir/model/scales")
-      .as[(Int, Long, Long, Double)].collect().sortBy(_._1)
-    val storedScales = Sq.Scales(srows.map(_._2), srows.map(_._3), srows.head._4)
-    val rebuilt = Sq.encode(celled, "vec_id", "embedding", storedScales,
-        carry = Seq("cell"))
-      .as[(Long, String, Seq[Int])].collect().toSet
-    assert(maintained == rebuilt && maintained.nonEmpty)
+    withTempDir("sqidx_loop") { dir =>
+      val stored = emb.filter(col("vec_id") % 4 === 0)
+      Sq.writeIndex(stored, "vec_id", "embedding", dim = 64, dir = dir, nlist = 8)
+      // generation 1: admit the %4==1 slice, retire stored %3==0 ids
+      val a1 = emb.filter(col("vec_id") % 4 === 1)
+      val r1 = stored.filter(col("vec_id") % 3 === 0).select(col("vec_id").as("id"))
+      graft.operators.Sinks.swapWrite(
+        Sq.indexCodesDelta(a1, "vec_id", "embedding", dir, r1),
+        s"$dir/codes", Seq("cell"))
+      // generation 2: admit the %4==2 slice, retire some of gen-1's admits
+      val a2 = emb.filter(col("vec_id") % 4 === 2)
+      val r2 = emb.filter(col("vec_id") % 4 === 1 && col("vec_id") % 5 === 0)
+        .select(col("vec_id").as("id"))
+      graft.operators.Sinks.swapWrite(
+        Sq.indexCodesDelta(a2, "vec_id", "embedding", dir, r2),
+        s"$dir/codes", Seq("cell"))
+      val maintained = graft.streaming.Streams.readIndex(spark, s"$dir/codes")
+        .select(col("id"), col("cell").cast("string"), col("codes"))
+        .as[(Long, String, Seq[Int])].collect().toSet
+      // one re-encode of the FINAL membership under the same frozen model
+      val membership = emb.select(col("vec_id"), col("embedding")).filter(
+        (col("vec_id") % 4 === 0 && col("vec_id") % 3 =!= 0) ||
+        (col("vec_id") % 4 === 1 && col("vec_id") % 5 =!= 0) ||
+        (col("vec_id") % 4 === 2))
+      val cents = graft.streaming.Streams.readIndex(spark, s"$dir/coarse")
+        .as[(String, Seq[Float])].collect().toSeq.sortBy(_._1)
+      val celled = membership.select(col("vec_id"), col("embedding"),
+        Ann.nearestCell(cents, col("embedding")).as("cell"))
+      // scales come from the STORED model (trained on the %4==0 generation,
+      // NOT the suite's full-corpus fixture) — the frozen-model contract
+      val srows = graft.streaming.Streams.readIndex(spark, s"$dir/scales")
+        .as[(Int, Long, Long, Double)].collect().sortBy(_._1)
+      val storedScales = Sq.Scales(srows.map(_._2), srows.map(_._3), srows.head._4)
+      val rebuilt = Sq.encode(celled, "vec_id", "embedding", storedScales,
+          carry = Seq("cell"))
+        .as[(Long, String, Seq[Int])].collect().toSet
+      assert(maintained == rebuilt && maintained.nonEmpty)
+    }
   }
 
   test("JL sign matrix is reproducible, ±1, and roughly balanced") {
