@@ -75,7 +75,8 @@ object Harness {
     } finally deleteTree(d)
   }
 
-  private def deleteTree(d: Path): Unit =
+  /** Delete `d` and everything under it, ignoring failures. */
+  private[graft] def deleteTree(d: Path): Unit =
     try Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach(f => Files.deleteIfExists(f))
     catch { case NonFatal(_) => () }

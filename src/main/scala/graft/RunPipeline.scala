@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.monitor.PipelineMetrics
 import graft.pipeline.ConfigPipeline
 
 /** CLI runner for config-built pipelines — the `bin/metalpipe <config>`
@@ -18,8 +17,9 @@ import graft.pipeline.ConfigPipeline
   * ([[ConfigPipeline.render]] — the reference's jinja/environment
   * templating), builds the [[graft.pipeline.Pipeline]] DAG, materializes
   * `stage`, and either writes it to parquet (`outPath` given) or prints a
-  * sample. A [[PipelineMetrics]] listener snapshot prints at the end — the
-  * reference's monitor-thread table, from Spark's own counters.
+  * sample. The task counters of every job the run submitted
+  * ([[Jobs.recorded]]) print at the end — the reference's monitor-thread
+  * table, from Spark's own counters.
   *
   * On a cluster, submit the assembly with `spark-submit --class
   * graft.RunPipeline` instead; the config and semantics are identical.
@@ -31,11 +31,21 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: RunPipeline <config.json> <stage> [outPath]")
-    val Array(cfgPath, stage) = args.take(2)
-    val outPath = args.lift(2)
     val spark = GraftSession.auto()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = PipelineMetrics.attach(spark)
+    val jobs = Jobs.recorded(spark)(run(spark, args)).jobs
+    val counters = Seq[(String, Jobs.Job => Long)]("tasks" -> (_.tasks),
+      "failed_tasks" -> (_.failedTasks), "records_read" -> (_.inputRecords),
+      "bytes_read" -> (_.inputBytes), "shuffle_bytes_written" -> (_.shuffleWrite),
+      "shuffle_bytes_read" -> (_.shuffleRead), "executor_cpu_ns" -> (_.cpuNs))
+    println(counters.map { case (k, f) => s"$k=${jobs.map(f).sum}" }
+      .mkString("[graft] ", " | ", ""))
+    spark.stop()
+  }
+
+  private def run(spark: SparkSession, args: Array[String]): Unit = {
+    val Array(cfgPath, stage) = args.take(2)
+    val outPath = args.lift(2)
     val cfg = ConfigPipeline.render(Files.readString(Paths.get(cfgPath)))
     val result = ConfigPipeline.fromJson(spark, cfg).output(stage)
     (outPath, result.isStreaming) match {
@@ -44,20 +54,21 @@ object RunPipeline {
         // drain-and-stop via AvailableNow, per-batch-id dirs so foreachBatch
         // retries stay idempotent. args(3) supplies a DURABLE checkpoint for
         // restartable runs (README contract); the temp default is for
-        // bounded drains.
+        // bounded drains and is deleted after the drain.
         val ckpt = args.lift(3).getOrElse(
-          java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+          Files.createTempDirectory("graft_ckpt").toString)
         // args(4) picks the sink output mode: "append" (default — finalized
         // rows only; windowed aggs emit as the watermark passes each window)
         // or "update" (changelog — compact drained batches by max batch id,
         // the keepBestStream pattern)
-        val q = graft.streaming.Streams.toForeachBatch(result, ckpt,
+        try graft.streaming.Streams.toForeachBatch(result, ckpt,
           availableNow = true,
           outputMode = args.lift(4).getOrElse("append")) { (batch, id) =>
           batch.write.mode("overwrite").parquet(s"$p/batch_$id")
-        }
-        q.awaitTermination()
-        println(s"[graft] stream stage '$stage' drained -> $p (checkpoint $ckpt)")
+        }.awaitTermination()
+        finally if (args.lift(3).isEmpty) Harness.deleteTree(Paths.get(ckpt))
+        println(s"[graft] stream stage '$stage' drained -> $p" +
+          args.lift(3).map(c => s" (checkpoint $c)").getOrElse(""))
       case (None, true) =>
         sys.error(s"stage '$stage' is streaming - pass an outPath to drain it")
       case (Some(p), false) =>
@@ -72,9 +83,6 @@ object RunPipeline {
       case (None, false) =>
         result.show(20, truncate = false)
     }
-    println(metrics.snapshot.map { case (k, v) => s"$k=$v" }
-      .mkString("[graft] ", " | ", ""))
-    spark.stop()
   }
 
   /** Batch write with an optional layout directive (see main). Plain

@@ -65,30 +65,31 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("zorderWrite preserves content and skips files linear sort cannot") {
-    val base = java.nio.file.Files.createTempDirectory("graft_zw").toString
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      .withColumn("cents", expr("cast(floor(o_totalprice * 100) as bigint)"))
-      .select("o_orderkey", "o_custkey", "cents")
-    Sinks.zorderWrite(orders, s"$base/z", Seq("o_custkey", "cents"),
-      bits = 8, numFiles = 16)
-    orders.repartitionByRange(16, col("o_custkey"))
-      .sortWithinPartitions("o_custkey")
-      .write.mode("overwrite").parquet(s"$base/lin")
-    val back = spark.read.parquet(s"$base/z")
-    assert(back.columns.toSeq == orders.columns.toSeq) // zval dropped
-    assert(back.exceptAll(orders).isEmpty && orders.exceptAll(back).isEmpty)
-    def stats(dir: String) = spark.read.parquet(dir)
-      .groupBy(input_file_name()).agg(min("cents").as("lp"), max("cents").as("hp"))
-    // a band predicate on the SECOND dimension: a custkey-sorted layout
-    // spreads cents uniformly through every file (all files candidate);
-    // z-order files cover small rectangles, so most files' [min,max] miss
-    val (plo, phi) = orders.agg(min("cents"), max("cents")).as[(Long, Long)].head()
-    val w = (phi - plo + 1) / 8
-    val (b1, b2) = (plo + 3 * w, plo + 4 * w - 1)
-    def candidates(dir: String): Long =
-      stats(dir).filter(col("hp") >= b1 && col("lp") <= b2).count()
-    val (zc, lc) = (candidates(s"$base/z"), candidates(s"$base/lin"))
-    assert(zc * 2 <= lc, s"z-order candidates $zc not < half of linear $lc")
+    withTempDir("graft_zw") { base =>
+      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+        .withColumn("cents", expr("cast(floor(o_totalprice * 100) as bigint)"))
+        .select("o_orderkey", "o_custkey", "cents")
+      Sinks.zorderWrite(orders, s"$base/z", Seq("o_custkey", "cents"),
+        bits = 8, numFiles = 16)
+      orders.repartitionByRange(16, col("o_custkey"))
+        .sortWithinPartitions("o_custkey")
+        .write.mode("overwrite").parquet(s"$base/lin")
+      val back = spark.read.parquet(s"$base/z")
+      assert(back.columns.toSeq == orders.columns.toSeq) // zval dropped
+      assert(back.exceptAll(orders).isEmpty && orders.exceptAll(back).isEmpty)
+      def stats(dir: String) = spark.read.parquet(dir)
+        .groupBy(input_file_name()).agg(min("cents").as("lp"), max("cents").as("hp"))
+      // a band predicate on the SECOND dimension: a custkey-sorted layout
+      // spreads cents uniformly through every file (all files candidate);
+      // z-order files cover small rectangles, so most files' [min,max] miss
+      val (plo, phi) = orders.agg(min("cents"), max("cents")).as[(Long, Long)].head()
+      val w = (phi - plo + 1) / 8
+      val (b1, b2) = (plo + 3 * w, plo + 4 * w - 1)
+      def candidates(dir: String): Long =
+        stats(dir).filter(col("hp") >= b1 && col("lp") <= b2).count()
+      val (zc, lc) = (candidates(s"$base/z"), candidates(s"$base/lin"))
+      assert(zc * 2 <= lc, s"z-order candidates $zc not < half of linear $lc")
+    }
   }
 
   test("corpusShuffle is invariant to input partitioning and covers shards") {
@@ -110,118 +111,122 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("shuffledWrite emits byte-identical shards at any parallelism") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sw").toString
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    Sinks.shuffledWrite(docs.repartition(2), s"$base/a", "doc_id",
-      seed = 7L, numShards = 4)
-    Sinks.shuffledWrite(docs.repartition(9), s"$base/b", "doc_id",
-      seed = 7L, numShards = 4)
-    for (s <- 0 until 4) {
-      val a = spark.read.parquet(s"$base/a/shard=$s").select("doc_id")
-        .as[Long].collect().toSeq
-      val b = spark.read.parquet(s"$base/b/shard=$s").select("doc_id")
-        .as[Long].collect().toSeq
-      assert(a.nonEmpty && a == b, s"shard $s differs across parallelism")
+    withTempDir("graft_sw") { base =>
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select("doc_id", "text")
+      Sinks.shuffledWrite(docs.repartition(2), s"$base/a", "doc_id",
+        seed = 7L, numShards = 4)
+      Sinks.shuffledWrite(docs.repartition(9), s"$base/b", "doc_id",
+        seed = 7L, numShards = 4)
+      for (s <- 0 until 4) {
+        val a = spark.read.parquet(s"$base/a/shard=$s").select("doc_id")
+          .as[Long].collect().toSeq
+        val b = spark.read.parquet(s"$base/b/shard=$s").select("doc_id")
+          .as[Long].collect().toSeq
+        assert(a.nonEmpty && a == b, s"shard $s differs across parallelism")
+      }
+      // and the query form pins the written MEMBERSHIP (not just sizes — a
+      // drifted assignment preserving shard counts must fail here)
+      val want = Ops.corpusShuffle(docs, "doc_id", 7L, 4)
+        .select("shard", "doc_id").as[(Long, Long)].collect().toSet
+      val wrote = spark.read.parquet(s"$base/a")
+        .select(col("shard").cast("long"), col("doc_id"))
+        .as[(Long, Long)].collect().toSet
+      assert(wrote == want)
     }
-    // and the query form pins the written MEMBERSHIP (not just sizes — a
-    // drifted assignment preserving shard counts must fail here)
-    val want = Ops.corpusShuffle(docs, "doc_id", 7L, 4)
-      .select("shard", "doc_id").as[(Long, Long)].collect().toSet
-    val wrote = spark.read.parquet(s"$base/a")
-      .select(col("shard").cast("long"), col("doc_id"))
-      .as[(Long, Long)].collect().toSet
-    assert(wrote == want)
   }
 
   test("zorderValue handles empty input and refuses overflow-wide columns") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ze").toString
-    val empty = spark.range(0).selectExpr("id AS a", "id AS b")
-    Sinks.zorderWrite(empty, s"$base/e", Seq("a", "b"), bits = 8, numFiles = 4)
-    assert(spark.read.parquet(s"$base/e").count() == 0L) // no NPE, empty out
-    // a raw xxhash64-style full-range column must fail loudly, not wrap
-    val wide = Seq(Long.MinValue, 0L, Long.MaxValue).toDF("a")
-      .withColumn("b", lit(1L))
-    val e = intercept[IllegalArgumentException] {
-      Sinks.zorderValue(wide, Seq("a", "b"), bits = 8)
+    withTempDir("graft_ze") { base =>
+      val empty = spark.range(0).selectExpr("id AS a", "id AS b")
+      Sinks.zorderWrite(empty, s"$base/e", Seq("a", "b"), bits = 8, numFiles = 4)
+      assert(spark.read.parquet(s"$base/e").count() == 0L) // no NPE, empty out
+      // a raw xxhash64-style full-range column must fail loudly, not wrap
+      val wide = Seq(Long.MinValue, 0L, Long.MaxValue).toDF("a")
+        .withColumn("b", lit(1L))
+      val e = intercept[IllegalArgumentException] {
+        Sinks.zorderValue(wide, Seq("a", "b"), bits = 8)
+      }
+      assert(e.getMessage.contains("too wide") && e.getMessage.contains("div"))
     }
-    assert(e.getMessage.contains("too wide") && e.getMessage.contains("div"))
   }
 
   test("RunPipeline layout directives route to the Sinks writers") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ld").toString
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      .withColumn("cents", expr("cast(floor(o_totalprice * 100) as bigint)"))
-      .select("o_orderkey", "o_custkey", "cents")
-    RunPipeline.writeBatch(orders, s"$base/plain", None)
-    assert(spark.read.parquet(s"$base/plain").count() == orders.count())
-    RunPipeline.writeBatch(orders, s"$base/z",
-      Some("zorder=o_custkey,cents,8,4"))
-    val z = spark.read.parquet(s"$base/z")
-    assert(z.count() == orders.count() && z.columns.toSeq == orders.columns.toSeq)
-    RunPipeline.writeBatch(orders, s"$base/sh",
-      Some("shuffled=o_orderkey,7,4"))
-    assert((0 until 4).forall(s =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/sh/shard=$s"))))
-    RunPipeline.writeBatch(
-      orders.withColumn("bucket", pmod(col("o_custkey"), lit(3))),
-      s"$base/pt", Some("partitioned=bucket"))
-    assert(spark.read.parquet(s"$base/pt").columns.contains("bucket"))
-    // bucketed=table,cols,n[,sortCols] (r13): a catalog bucketed table
-    RunPipeline.writeBatch(orders, s"$base/bkt",
-      Some("bucketed=ld_bkt_orders,o_orderkey,4,o_orderkey"))
-    assert(spark.table("ld_bkt_orders").count() == orders.count())
-    assert(spark.sql("DESCRIBE TABLE EXTENDED ld_bkt_orders").collect()
-      .exists(r => r.getString(0) == "Num Buckets" && r.getString(1) == "4"))
-    val e0 = intercept[Exception] {
-      RunPipeline.writeBatch(orders, s"$base/badb", Some("bucketed=t,o_orderkey"))
+    withTempDir("graft_ld") { base =>
+      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+        .withColumn("cents", expr("cast(floor(o_totalprice * 100) as bigint)"))
+        .select("o_orderkey", "o_custkey", "cents")
+      RunPipeline.writeBatch(orders, s"$base/plain", None)
+      assert(spark.read.parquet(s"$base/plain").count() == orders.count())
+      RunPipeline.writeBatch(orders, s"$base/z",
+        Some("zorder=o_custkey,cents,8,4"))
+      val z = spark.read.parquet(s"$base/z")
+      assert(z.count() == orders.count() && z.columns.toSeq == orders.columns.toSeq)
+      RunPipeline.writeBatch(orders, s"$base/sh",
+        Some("shuffled=o_orderkey,7,4"))
+      assert((0 until 4).forall(s =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/sh/shard=$s"))))
+      RunPipeline.writeBatch(
+        orders.withColumn("bucket", pmod(col("o_custkey"), lit(3))),
+        s"$base/pt", Some("partitioned=bucket"))
+      assert(spark.read.parquet(s"$base/pt").columns.contains("bucket"))
+      // bucketed=table,cols,n[,sortCols] (r13): a catalog bucketed table
+      RunPipeline.writeBatch(orders, s"$base/bkt",
+        Some("bucketed=ld_bkt_orders,o_orderkey,4,o_orderkey"))
+      assert(spark.table("ld_bkt_orders").count() == orders.count())
+      assert(spark.sql("DESCRIBE TABLE EXTENDED ld_bkt_orders").collect()
+        .exists(r => r.getString(0) == "Num Buckets" && r.getString(1) == "4"))
+      val e0 = intercept[Exception] {
+        RunPipeline.writeBatch(orders, s"$base/badb", Some("bucketed=t,o_orderkey"))
+      }
+      assert(e0.getMessage.contains("bucketed layout needs"))
+      intercept[Exception] {
+        RunPipeline.writeBatch(orders, s"$base/bad", Some("sorted=o_custkey"))
+      }
+      // malformed zorder specs fail with the directive grammar, not a bare
+      // NumberFormatException from a stray empty/misplaced token
+      val e1 = intercept[IllegalArgumentException] {
+        RunPipeline.writeBatch(orders, s"$base/bad2", Some("zorder=o_custkey,cents,"))
+      }
+      assert(e1.getMessage.contains("empty segment"))
+      val e2 = intercept[IllegalArgumentException] {
+        RunPipeline.writeBatch(orders, s"$base/bad3", Some("zorder=8,o_custkey"))
+      }
+      assert(e2.getMessage.contains("knobs LAST"))
     }
-    assert(e0.getMessage.contains("bucketed layout needs"))
-    intercept[Exception] {
-      RunPipeline.writeBatch(orders, s"$base/bad", Some("sorted=o_custkey"))
-    }
-    // malformed zorder specs fail with the directive grammar, not a bare
-    // NumberFormatException from a stray empty/misplaced token
-    val e1 = intercept[IllegalArgumentException] {
-      RunPipeline.writeBatch(orders, s"$base/bad2", Some("zorder=o_custkey,cents,"))
-    }
-    assert(e1.getMessage.contains("empty segment"))
-    val e2 = intercept[IllegalArgumentException] {
-      RunPipeline.writeBatch(orders, s"$base/bad3", Some("zorder=8,o_custkey"))
-    }
-    assert(e2.getMessage.contains("knobs LAST"))
   }
 
   test("writeBucketed: matching-bucket equi-join plans with ZERO exchanges " +
        "under the join, and the layout is transparent to results (r13)") {
-    val base = java.nio.file.Files.createTempDirectory("bkt_spec").toString
-    val left = spark.range(0, 1000)
-      .select(col("id").as("k"), (col("id") % 7).as("lv"))
-    val right = spark.range(0, 1000).filter(col("id") % 2 === 0)
-      .select(col("id").as("k"), (col("id") % 11).as("rv"))
-    Sinks.writeBucketed(left, "bkt_spec_l", s"$base/l", Seq("k"), buckets = 4,
-      sortCols = Seq("k"))
-    Sinks.writeBucketed(right, "bkt_spec_r", s"$base/r", Seq("k"), buckets = 4)
-    // hint the merge join the planner would pick at fact×fact scale —
-    // toy fixtures broadcast otherwise and never exercise the layout
-    val joined = spark.table("bkt_spec_l")
-      .join(spark.table("bkt_spec_r").hint("merge"), "k")
-    // values: exactly the plain join's
-    val want = left.join(right, "k").orderBy("k")
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(joined.orderBy("k").as[(Long, Long, Long)].collect().toSeq == want
-      && want.size == 500)
-    // plan: a sort-merge (or shuffle-hash) join whose subtree holds NO
-    // Exchange — the bucketed scans already satisfy the partitioning
-    // requirement. explain the JOIN frame itself (no agg tail) so any
-    // exchange in the text would belong to the join
-    val plan = joined.queryExecution.executedPlan.toString()
-    assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-      s"expected a non-broadcast equi-join over bucketed scans:\n$plan")
-    assert(!plan.contains("Exchange"),
-      s"bucketed join must not shuffle either side:\n$plan")
-    assert(plan.contains("SelectedBucketsCount") || plan.contains("Bucketed: true"),
-      s"scan did not report the bucketed layout:\n$plan")
+    withTempDir("bkt_spec") { base =>
+      val left = spark.range(0, 1000)
+        .select(col("id").as("k"), (col("id") % 7).as("lv"))
+      val right = spark.range(0, 1000).filter(col("id") % 2 === 0)
+        .select(col("id").as("k"), (col("id") % 11).as("rv"))
+      Sinks.writeBucketed(left, "bkt_spec_l", s"$base/l", Seq("k"), buckets = 4,
+        sortCols = Seq("k"))
+      Sinks.writeBucketed(right, "bkt_spec_r", s"$base/r", Seq("k"), buckets = 4)
+      // hint the merge join the planner would pick at fact×fact scale —
+      // toy fixtures broadcast otherwise and never exercise the layout
+      val joined = spark.table("bkt_spec_l")
+        .join(spark.table("bkt_spec_r").hint("merge"), "k")
+      // values: exactly the plain join's
+      val want = left.join(right, "k").orderBy("k")
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(joined.orderBy("k").as[(Long, Long, Long)].collect().toSeq == want
+        && want.size == 500)
+      // plan: a sort-merge (or shuffle-hash) join whose subtree holds NO
+      // Exchange — the bucketed scans already satisfy the partitioning
+      // requirement. explain the JOIN frame itself (no agg tail) so any
+      // exchange in the text would belong to the join
+      val plan = joined.queryExecution.executedPlan.toString()
+      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
+        s"expected a non-broadcast equi-join over bucketed scans:\n$plan")
+      assert(!plan.contains("Exchange"),
+        s"bucketed join must not shuffle either side:\n$plan")
+      assert(plan.contains("SelectedBucketsCount") || plan.contains("Bucketed: true"),
+        s"scan did not report the bucketed layout:\n$plan")
+    }
   }
 
   test("swapWrite: first write, read-then-rewrite over the live dir, " +
@@ -276,24 +281,23 @@ class LayoutSpec extends SparkSpec {
     val df = spark.range(n).select(
       (col("id") * 2654435761L % n).as("k"),
       concat(lit("pad"), col("id").cast("string")).as("pay"))
-    val base = java.nio.file.Files.createTempDirectory("graft_bloomspec").toString
-    Sinks.writeClustered(df.repartition(8), s"$base/plain", Nil, Nil)
-    Sinks.writeClustered(df.repartition(8), s"$base/bloom", Nil, Nil,
-      bloomFilterCols = Seq("k"), bloomNdv = n / 8)
-    def recordsRead(path: String): Long = {
-      val m = graft.monitor.PipelineMetrics.attach(spark)
-      assert(spark.read.parquet(path).filter(col("k") === 12345L).count() == 1L)
-      Thread.sleep(500) // listener events are async
-      val r = m.snapshot("records_read")
-      m.detach()
-      r
+    withTempDir("graft_bloomspec") { base =>
+      Sinks.writeClustered(df.repartition(8), s"$base/plain", Nil, Nil)
+      Sinks.writeClustered(df.repartition(8), s"$base/bloom", Nil, Nil,
+        bloomFilterCols = Seq("k"), bloomNdv = n / 8)
+      def recordsRead(path: String): Long = {
+        val r = Jobs.recorded(spark)(
+          spark.read.parquet(path).filter(col("k") === 12345L).count())
+        assert(r.value == 1L)
+        r.jobs.map(_.inputRecords).sum
+      }
+      val plain = recordsRead(s"$base/plain")
+      val bloom = recordsRead(s"$base/bloom")
+      // the scattered key defeats min/max pruning (plain reads everything);
+      // the bloom drops all but the holding row group(s)
+      assert(plain >= n, s"expected a full scan without blooms, read $plain")
+      assert(bloom <= plain / 4, s"bloom read $bloom of $plain — no row-group skip")
     }
-    val plain = recordsRead(s"$base/plain")
-    val bloom = recordsRead(s"$base/bloom")
-    // the scattered key defeats min/max pruning (plain reads everything);
-    // the bloom drops all but the holding row group(s)
-    assert(plain >= n, s"expected a full scan without blooms, read $plain")
-    assert(bloom <= plain / 4, s"bloom read $bloom of $plain — no row-group skip")
   }
 
   test("readIndex infers a swapWrite generation's hive partition column") {

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.json.MtlParser
-import graft.monitor.PipelineMetrics
 import graft.operators.Ops
 import graft.pipeline.ConfigPipeline
 
@@ -1209,18 +1208,11 @@ class MtlConfigSpec extends SparkSpec {
     assert(bucketed == plain)
   }
 
-  test("PipelineMetrics snapshots task counters from a listener") {
-    val m = PipelineMetrics.attach(spark)
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      // listener bus is async; poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (m.snapshot("tasks") == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      val snap = m.snapshot
-      assert(snap("tasks") > 0)
-      assert(snap("records_read") > 0)
-    } finally m.detach()
+  test("Jobs.recorded sums task counters over the jobs its body ran") {
+    val jobs = Jobs.recorded(spark)(
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count()).jobs
+    assert(jobs.map(_.tasks).sum > 0)
+    assert(jobs.map(_.inputRecords).sum > 0)
   }
 
   test("MTL WHERE accepts quoted literals containing spaces and '#'") {

@@ -217,15 +217,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partition-layout reads prune to the filtered partition directories") {
-    val out = java.nio.file.Files.createTempDirectory("graft_prune").toString + "/docs"
-    graft.operators.Sinks.writePartitioned(
-      Tables.load(spark, sfDir, "documents").select("doc_id", "text", "lang"),
-      out, Seq("lang"))
-    val read = spark.read.parquet(out).filter(col("lang") === "en").select("doc_id")
-    val p = planString(read)
-    assert(p.contains("PartitionFilters") && p.contains("lang"), p)
-    // the scan must NOT carry lang as a data filter — it is a directory prune
-    assert(!p.contains("PushedFilters: [IsNotNull(lang)"), p)
+    withTempDir("graft_prune") { base =>
+      val out = s"$base/docs"
+      graft.operators.Sinks.writePartitioned(
+        Tables.load(spark, sfDir, "documents").select("doc_id", "text", "lang"),
+        out, Seq("lang"))
+      val read = spark.read.parquet(out).filter(col("lang") === "en").select("doc_id")
+      val p = planString(read)
+      assert(p.contains("PartitionFilters") && p.contains("lang"), p)
+      // the scan must NOT carry lang as a data filter — it is a directory prune
+      assert(!p.contains("PushedFilters: [IsNotNull(lang)"), p)
+    }
   }
 
   test("kmeans assignment is a zero-shuffle projection over the corpus") {
@@ -422,25 +424,17 @@ class PlanSpec extends SparkSpec {
   test("k-center greedy rounds run zero shuffle stages — argmax is a " +
        "per-partition TakeOrdered, centers are plan literals") {
     val emb = Tables.load(spark, sfDir, "embeddings")
-    var shuffleWrites = 0L
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleWrites += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val sel = graft.similarity.Clustering
-        .kCenterGreedy(emb, "vec_id", "embedding", k = 4)
+    val r = Jobs.recorded(spark) {
       // collect, not count: count() itself plans a partial-count exchange
       // and would charge the TEST's aggregation to the operator
-      assert(sel.collect().length == 4)
-      // listener delivery is async; give the bus a moment to drain
-      Thread.sleep(500)
-      assert(shuffleWrites == 0L,
-        s"k-center rounds wrote $shuffleWrites shuffle bytes; every round " +
-          "must be a scan + TakeOrdered(1), no exchange")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      graft.similarity.Clustering.kCenterGreedy(emb, "vec_id", "embedding", k = 4)
+        .collect()
+    }
+    assert(r.value.length == 4)
+    val shuffleWrites = r.jobs.map(_.shuffleWrite).sum
+    assert(shuffleWrites == 0L,
+      s"k-center rounds wrote $shuffleWrites shuffle bytes; every round " +
+        "must be a scan + TakeOrdered(1), no exchange")
   }
 
   test("k-center round plan is constant-size in the picked count and stays " +
@@ -526,50 +520,51 @@ class PlanSpec extends SparkSpec {
     // (far past any threshold) would see. AQE itself off so the static
     // executedPlan is the one audited, not a runtime re-plan of tiny data.
     val marker = "idxplan-" + System.nanoTime()
-    val dir = java.nio.file.Files.createTempDirectory(marker).toString
-    val docs = Tables.load(spark, sfDir, "documents")
-    Dedup.bandKeysOf(docs.filter(col("doc_id") % 13 =!= 5), "doc_id", "text")
-      .write.mode("overwrite").parquet(dir)
-    val index = spark.read.parquet(dir)
-    val delta = docs.filter(col("doc_id") % 13 === 5)
-    val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val probed = Dedup.incrementalNearDup(delta, "doc_id", "text", index)
-      val plan = probed.queryExecution.executedPlan
-      def isIndexScan(p: SparkPlan): Boolean =
-        p.children.isEmpty && p.verboseStringWithSuffix(10000).contains(marker)
-      // root→scan path (the index parquet is read exactly once)
-      def path(p: SparkPlan): Option[List[SparkPlan]] =
-        if (isIndexScan(p)) Some(List(p))
-        else p.children.view.flatMap(c => path(c).map(p :: _)).headOption
-      val toScan = path(plan).getOrElse(fail("index scan not found in plan:\n" +
-        plan.toString.take(3000)))
-      // walking UP from the scan, the first exchange-or-join must be a
-      // BroadcastHashJoin that STREAMS the index (build = broadcast delta):
-      // the corpus flows into the join straight off the scan, unshuffled,
-      // and everything above that join is delta-bounded by the semi join.
-      val firstBarrier = toScan.reverse.drop(1).find {
-        case _: ShuffleExchangeExec => true
-        case _: BroadcastExchangeExec => true
-        case _: BroadcastHashJoinExec => true
-        case p => p.getClass.getSimpleName.contains("Join")
+    withTempDir(marker) { dir =>
+      val docs = Tables.load(spark, sfDir, "documents")
+      Dedup.bandKeysOf(docs.filter(col("doc_id") % 13 =!= 5), "doc_id", "text")
+        .write.mode("overwrite").parquet(dir)
+      val index = spark.read.parquet(dir)
+      val delta = docs.filter(col("doc_id") % 13 === 5)
+      val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      val prevA = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val probed = Dedup.incrementalNearDup(delta, "doc_id", "text", index)
+        val plan = probed.queryExecution.executedPlan
+        def isIndexScan(p: SparkPlan): Boolean =
+          p.children.isEmpty && p.verboseStringWithSuffix(10000).contains(marker)
+        // root→scan path (the index parquet is read exactly once)
+        def path(p: SparkPlan): Option[List[SparkPlan]] =
+          if (isIndexScan(p)) Some(List(p))
+          else p.children.view.flatMap(c => path(c).map(p :: _)).headOption
+        val toScan = path(plan).getOrElse(fail("index scan not found in plan:\n" +
+          plan.toString.take(3000)))
+        // walking UP from the scan, the first exchange-or-join must be a
+        // BroadcastHashJoin that STREAMS the index (build = broadcast delta):
+        // the corpus flows into the join straight off the scan, unshuffled,
+        // and everything above that join is delta-bounded by the semi join.
+        val firstBarrier = toScan.reverse.drop(1).find {
+          case _: ShuffleExchangeExec => true
+          case _: BroadcastExchangeExec => true
+          case _: BroadcastHashJoinExec => true
+          case p => p.getClass.getSimpleName.contains("Join")
+        }
+        firstBarrier match {
+          case Some(j: BroadcastHashJoinExec) =>
+            assert(path(j.children.head).isDefined,
+              "index must be on the STREAMED (left) side of the probe join:\n" + j)
+          case other => fail(s"first barrier above the index scan is $other, " +
+            "expected a BroadcastHashJoin streaming the index:\n" +
+            plan.toString.take(3000))
+        }
+        // and the answer is still the answer with broadcast thresholds off
+        assert(probed.filter(col("dup_of_corpus")).count() > 0)
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
+        spark.conf.set("spark.sql.adaptive.enabled", prevA)
       }
-      firstBarrier match {
-        case Some(j: BroadcastHashJoinExec) =>
-          assert(path(j.children.head).isDefined,
-            "index must be on the STREAMED (left) side of the probe join:\n" + j)
-        case other => fail(s"first barrier above the index scan is $other, " +
-          "expected a BroadcastHashJoin streaming the index:\n" +
-          plan.toString.take(3000))
-      }
-      // and the answer is still the answer with broadcast thresholds off
-      assert(probed.filter(col("dup_of_corpus")).count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-      spark.conf.set("spark.sql.adaptive.enabled", prevA)
     }
   }
 
@@ -580,44 +575,45 @@ class PlanSpec extends SparkSpec {
     // same at-scale posture as the LSH probe above — the build-side law
     // holds for every stored-index probe in the library
     val marker = "wnplan-" + System.nanoTime()
-    val dir = java.nio.file.Files.createTempDirectory(marker).toString
-    val docs = Tables.load(spark, sfDir, "documents")
-    Dedup.winnowedPrints(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
-      .write.mode("overwrite").parquet(dir)
-    val index = spark.read.parquet(dir)
-    val delta = docs.filter(col("doc_id") % 10 === 0)
-    val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val probed = Dedup.winnowProbe(delta, "doc_id", "text", index)
-      val plan = probed.queryExecution.executedPlan
-      def isIndexScan(p: SparkPlan): Boolean =
-        p.children.isEmpty && p.verboseStringWithSuffix(10000).contains(marker)
-      def path(p: SparkPlan): Option[List[SparkPlan]] =
-        if (isIndexScan(p)) Some(List(p))
-        else p.children.view.flatMap(c => path(c).map(p :: _)).headOption
-      val toScan = path(plan).getOrElse(fail("index scan not found in plan:\n" +
-        plan.toString.take(3000)))
-      val firstBarrier = toScan.reverse.drop(1).find {
-        case _: ShuffleExchangeExec => true
-        case _: BroadcastExchangeExec => true
-        case _: BroadcastHashJoinExec => true
-        case p => p.getClass.getSimpleName.contains("Join")
+    withTempDir(marker) { dir =>
+      val docs = Tables.load(spark, sfDir, "documents")
+      Dedup.winnowedPrints(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
+        .write.mode("overwrite").parquet(dir)
+      val index = spark.read.parquet(dir)
+      val delta = docs.filter(col("doc_id") % 10 === 0)
+      val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      val prevA = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val probed = Dedup.winnowProbe(delta, "doc_id", "text", index)
+        val plan = probed.queryExecution.executedPlan
+        def isIndexScan(p: SparkPlan): Boolean =
+          p.children.isEmpty && p.verboseStringWithSuffix(10000).contains(marker)
+        def path(p: SparkPlan): Option[List[SparkPlan]] =
+          if (isIndexScan(p)) Some(List(p))
+          else p.children.view.flatMap(c => path(c).map(p :: _)).headOption
+        val toScan = path(plan).getOrElse(fail("index scan not found in plan:\n" +
+          plan.toString.take(3000)))
+        val firstBarrier = toScan.reverse.drop(1).find {
+          case _: ShuffleExchangeExec => true
+          case _: BroadcastExchangeExec => true
+          case _: BroadcastHashJoinExec => true
+          case p => p.getClass.getSimpleName.contains("Join")
+        }
+        firstBarrier match {
+          case Some(j: BroadcastHashJoinExec) =>
+            assert(path(j.children.head).isDefined,
+              "index must be on the STREAMED (left) side of the probe join:\n" + j)
+          case other => fail(s"first barrier above the index scan is $other, " +
+            "expected a BroadcastHashJoin streaming the index:\n" +
+            plan.toString.take(3000))
+        }
+        assert(probed.filter(col("contaminated")).count() > 0)
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
+        spark.conf.set("spark.sql.adaptive.enabled", prevA)
       }
-      firstBarrier match {
-        case Some(j: BroadcastHashJoinExec) =>
-          assert(path(j.children.head).isDefined,
-            "index must be on the STREAMED (left) side of the probe join:\n" + j)
-        case other => fail(s"first barrier above the index scan is $other, " +
-          "expected a BroadcastHashJoin streaming the index:\n" +
-          plan.toString.take(3000))
-      }
-      assert(probed.filter(col("contaminated")).count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-      spark.conf.set("spark.sql.adaptive.enabled", prevA)
     }
   }
 }

@@ -50,36 +50,11 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   /** The call sites (result-stage names, e.g. "parquet at Streams.scala:853")
-    * of the Spark jobs `body` submits. Jobs are tagged through a local
-    * property, and a tagged marker job fences the asynchronous listener
-    * bus, so every job of `body` has been seen when this returns.
+    * of the Spark jobs `body` submits, complete when this returns
+    * ([[Jobs.recorded]]).
     */
-  protected def jobsOf(body: => Unit): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val tag = "graft.spec.jobs"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(tag))).foreach { t =>
-          seen.add(t -> js.stageInfos.maxBy(_.stageId).name)
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      try body finally sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.asScala.exists(_._1 == "marker") &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(seen.asScala.exists(_._1 == "marker"), "listener bus did not drain")
-      seen.asScala.collect { case ("body", site) => site }.toSeq
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  protected def jobsOf(body: => Unit): Seq[String] =
+    Jobs.recorded(spark)(body).jobs.map(_.site)
 
   /** AQE-aware shuffle-exchange count over the executed plan TREE
     * (children only — subquery plans are pinned separately where a spec

@@ -770,35 +770,24 @@ class TextDedupSpec extends SparkSpec {
 
   test("Bpe.train at production merge counts runs Q job rounds, not one per merge") {
     val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val m = graft.functions.Bpe.train(cust, "c_name",
-          nMerges = 544, mergesPerRound = 32, maxRounds = 17)._1
+    val rec = Jobs.recorded(spark) {
+      graft.functions.Bpe.train(cust, "c_name", nMerges = 544,
+        mergesPerRound = 32, maxRounds = 17)._1
         .orderBy("rank").as[(Long, String, String, String, Long)].collect()
-      // 150 distinct customer names → 187 merges in 17 rounds (early
-      // rounds short of R=32: only ~24 initial symbols exist; later
-      // rounds widen as merged symbols join the pool)
-      assert(m.length == 187)
-      assert(m.map(_._1).toSeq == (1L to 187L))
-      assert(m.forall { case (_, l, r, mg, _) => mg == l + r })
-      // drain the async listener bus before reading the counter
-      val deadline = System.currentTimeMillis() + 10000
-      var last = -1
-      while (jobs != last && System.currentTimeMillis() < deadline) {
-        last = jobs; Thread.sleep(300)
-      }
-      // jobs-per-MERGE is the production claim: a round is one pair-count
-      // collect + one checkpoint materialization (+ constant setup), so
-      // the whole 187-merge run is bounded by rounds — ~0.4 jobs/merge
-      // here, vs >= 2 jobs/merge at R=1 (187 rounds)
-      assert(jobs >= 17, s"listener undercounted: $jobs")
-      assert(jobs <= 4 * 17 + 10, s"too many jobs for 17 rounds: $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (m, jobs) = (rec.value, rec.jobs.size)
+    // 150 distinct customer names → 187 merges in 17 rounds (early
+    // rounds short of R=32: only ~24 initial symbols exist; later
+    // rounds widen as merged symbols join the pool)
+    assert(m.length == 187)
+    assert(m.map(_._1).toSeq == (1L to 187L))
+    assert(m.forall { case (_, l, r, mg, _) => mg == l + r })
+    // jobs-per-MERGE is the production claim: a round is one pair-count
+    // collect + one checkpoint materialization (+ constant setup), so
+    // the whole 187-merge run is bounded by rounds — ~0.4 jobs/merge
+    // here, vs >= 2 jobs/merge at R=1 (187 rounds)
+    assert(jobs >= 17, s"recorder undercounted: $jobs")
+    assert(jobs <= 4 * 17 + 10, s"too many jobs for 17 rounds: $jobs")
   }
 
   test("Bpe.segment replays merges identically to the trained vocabulary") {
