@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage pinning for ITERATIVE operators (PageRank, Datalog closure,
   * dup-cluster pointer jumping, k-means, BPE merge rounds, bigram LM):
@@ -43,6 +44,19 @@ object Checkpoints {
       cached.unpersist()
       out
     } else df.localCheckpoint(true)
+
+  /** Drop the blocks behind a frame [[pin]] returned, once nothing reads
+    * it: an iterative loop releases a round as soon as the next round's
+    * eager pin has materialized, since that pin no longer reads it. A
+    * released local checkpoint cannot be recomputed, so a frame that
+    * still reads it fails. Reliable checkpoint files are left to Spark's
+    * cleaner.
+    */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** `.pinned()` chain syntax so call sites read like the plan they build. */
   implicit final class PinSyntax(private val df: DataFrame) extends AnyVal {

@@ -1075,13 +1075,13 @@ object EntryQueriesDedup {
     // BPE training off the toy regime: 17 batched job rounds at R=32 over
     // the customer-name corpus (the richest vocabulary in the testdata —
     // documents.text has 31 distinct words and exhausts at 89 merges)
-    // yield 268 merges at sf0.01. One corpus scan; a round is ONE
-    // vocab-sized job + argmax fetch, not 32 — the scheduler-round-trip
-    // posture a 50k-merge production run needs (at R=32 that run is ~1.6k
-    // vocab-sized jobs, not 50k). maxRounds bounds rounds instead of the
-    // merge count so every round wants the full R and the oracle can
-    // unroll exactly 17 rounds — short early rounds (symbol diversity <
-    // 64) mirror as empty SQL slots. The oracle replays the batched
+    // yield 268 merges at sf0.01. One corpus scan; the vocab fits the
+    // driver, so the rounds run there after one collect (past the vocab
+    // ceiling a round is ONE vocab-sized job + pair-prefix fetch, not 32
+    // — at R=32 a 50k-merge run is ~1.6k jobs, not 50k). maxRounds
+    // bounds rounds instead of the merge count so every round wants the
+    // full R and the oracle can unroll exactly 17 rounds — short early
+    // rounds (symbol diversity < 64) mirror as empty SQL slots. The oracle replays the batched
     // greedy selection round for round in the same padded-string
     // representation.
     "q_bpe_merges" -> ((s, dir) =>

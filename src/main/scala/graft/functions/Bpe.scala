@@ -1,8 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.{Checkpoints, Jobs}
 import graft.Checkpoints.PinSyntax
 
 /** Byte-pair-encoding tokenizer training over a corpus (the
@@ -15,8 +19,10 @@ import graft.Checkpoints.PinSyntax
   * count table; every training round after that touches only that
   * vocab-sized table (this is how production BPE trainers scale — merge
   * statistics are a function of the weighted vocabulary, not the corpus).
-  * Per round: one vocab-sized aggregate + a one-row argmax fetch; the
-  * merge is then applied as a `replace` projection. [[segment]] applies a
+  * A vocab that fits the driver trains there in plain Scala after one
+  * collect; a larger one runs each round as one vocab-sized aggregate +
+  * a pair-prefix fetch, the merges applied as a `replace` projection
+  * ([[train]] has both paths). [[segment]] applies a
   * trained merge list to a corpus as ONE native
   * [[org.apache.spark.sql.graftglue.ChainedReplace]] projection — zero
   * shuffles, and the projection stays inside whole-stage codegen at any
@@ -72,32 +78,43 @@ object Bpe {
 
   /** Train `nMerges` BPE merges on the corpus. Returns the merge table
     * (rank, left, right, merged, n) in training order; ties in pair
-    * frequency break by (left, right) ascending so training is fully
-    * deterministic. If the vocabulary runs out of pairs early the table
-    * is short. The returned vocabulary holds the final segmentation.
+    * frequency break by (left, right) ascending in Spark's binary (UTF-8)
+    * string order, so training is fully deterministic. If the vocabulary
+    * runs out of pairs early the table is short. The returned vocabulary
+    * holds the final segmentation.
     *
-    * `mergesPerRound` (R) batches the driver round-trips: each JOB round
-    * computes pair counts once and applies the top R pairwise
-    * SYMBOL-DISJOINT pairs from that one snapshot, selected greedily down
-    * the (n DESC, left, right) order — a pair is skipped while a
-    * higher-ranked selection of the same round already uses either of its
-    * symbols. Disjointness makes the R replaces commute and leaves each
-    * selected pair's count unaffected by the others, so the batch is
-    * well-defined from one snapshot and an external engine can replay it
-    * exactly. R=1 IS classic sequential BPE; R>1 is the batched variant
-    * production trainers use (a 50k-merge run at R=1 means 50k scheduler
-    * round-trips — hours of driver overhead on a cluster; at R=64 it is
-    * ~800 vocab-sized jobs). The variants can diverge after the first
-    * round (sequential BPE may rank a freshly-created pair above a
-    * later-batched one), which is why R is explicit, not a silent default.
+    * `mergesPerRound` (R) batches the rounds: each round computes pair
+    * counts once and applies the top R pairwise SYMBOL-DISJOINT pairs from
+    * that one snapshot, selected greedily down the (n DESC, left, right)
+    * order — a pair is skipped while a higher-ranked selection of the same
+    * round already uses either of its symbols. Disjointness makes the R
+    * replaces commute and leaves each selected pair's count unaffected by
+    * the others, so the batch is well-defined from one snapshot and an
+    * external engine can replay it exactly. R=1 IS classic sequential BPE;
+    * R>1 is the batched variant production trainers use. The variants can
+    * diverge after the first round (sequential BPE may rank a
+    * freshly-created pair above a later-batched one), which is why R is
+    * explicit, not a silent default.
     *
-    * `maxRounds` bounds the JOB rounds instead of the merge count: with
+    * `maxRounds` bounds the rounds instead of the merge count: with
     * `nMerges >= maxRounds * mergesPerRound` every round wants the full R
     * and takes whatever symbol-disjoint pairs the snapshot offers, so the
-    * run's shape is "Q vocab-sized jobs", data-independent — the form an
-    * external replay (the q_bpe oracle) can unroll exactly even when
-    * early rounds come up short of R (symbol diversity, not the cap,
-    * limits a round's take).
+    * run's shape is "Q rounds", data-independent — the form an external
+    * replay (the q_bpe oracle) can unroll exactly even when early rounds
+    * come up short of R (symbol diversity, not the cap, limits a round's
+    * take).
+    *
+    * Two paths, same rows. The vocabulary is collected once (its
+    * aggregate's shuffle stage and one fetch); at or under
+    * [[DriverVocabCeiling]] distinct words every round runs in plain Scala
+    * on the driver
+    * ([[trainDriver]]) and the frames come back as local relations — a
+    * round costs microseconds, not a Spark job. Above the ceiling the
+    * rounds run as Spark jobs over the pinned vocab ([[trainSpark]]): one
+    * vocab-sized aggregate and one pin per round. That path stays because
+    * it is the only one that trains a vocabulary larger than driver memory
+    * — the scale the object doc promises. The jobs carry the description
+    * "Bpe.train: driver" or "Bpe.train: spark" after the path that ran.
     */
   def train(docs: DataFrame, textCol: String, nMerges: Int,
             mergesPerRound: Int = 1,
@@ -106,59 +123,159 @@ object Bpe {
     require(mergesPerRound > 0,
       s"mergesPerRound must be positive, got $mergesPerRound")
     require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // vocab is small by construction (distinct words); keep it hot and cut
-    // lineage once so the training rounds replay an in-memory table, not
-    // the corpus scan.
-    var vocab = wordCounts(docs, textCol)
+    trainDriver(docs, textCol, nMerges, mergesPerRound, maxRounds)
+      .getOrElse(trainSpark(docs, textCol, nMerges, mergesPerRound, maxRounds))
+  }
+
+  /** Most distinct words [[train]] trains on the driver. */
+  private[graft] val DriverVocabCeiling = 65536
+
+  /** (word, cnt, syms): the initial segmentation of the word counts. */
+  private def initialVocab(docs: DataFrame, textCol: String): DataFrame =
+    wordCounts(docs, textCol)
       .select(col("word"), col("cnt"), symbolize(col("word")).as("syms"))
-      .pinned()
+
+  private def mergeTable(spark: SparkSession,
+                         merges: Seq[(Long, String, String, String, Long)]): DataFrame = {
+    import spark.implicits._
+    merges.toDF("rank", "l", "r", "merged", "n")
+  }
+
+  /** The symbols of a padded segmentation, as [[pairCounts]] splits them:
+    * Spark's `trim` strips spaces (0x20) only, where `String.trim` would
+    * also drop a trailing `\t` or control-char symbol.
+    */
+  private def symbolsOf(syms: String): Array[String] = {
+    var b = 0
+    var e = syms.length
+    while (b < e && syms.charAt(b) == ' ') b += 1
+    while (e > b && syms.charAt(e - 1) == ' ') e -= 1
+    syms.substring(b, e).split("  ", -1)
+  }
+
+  /** [[train]] in plain Scala over the collected vocabulary, or None when
+    * it has more than [[DriverVocabCeiling]] words. Each round recounts
+    * only the words a merge rewrote.
+    */
+  private[graft] def trainDriver(docs: DataFrame, textCol: String, nMerges: Int,
+                                 mergesPerRound: Int,
+                                 maxRounds: Int): Option[(DataFrame, DataFrame)] = {
+    val spark = docs.sparkSession
+    val vocab0 = initialVocab(docs, textCol)
+    val rows = Jobs.labeled(spark, "Bpe.train: driver") {
+      vocab0.limit(DriverVocabCeiling + 1).collect()
+    }
+    if (rows.length > DriverVocabCeiling) return None
+    val cnt = rows.map(_.getLong(1))
+    val syms = rows.map(_.getString(2))
+    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    def count(s: String, w: Long): Unit =
+      symbolsOf(s).sliding(2).foreach {
+        case Array(l, r) =>
+          val n = counts.getOrElse((l, r), 0L) + w
+          if (n == 0) counts.remove((l, r)) else counts((l, r)) = n
+        case _ =>
+      }
+    syms.indices.foreach(i => count(syms(i), cnt(i)))
+    // Spark orders strings by their UTF-8 bytes
+    val utf8 = scala.collection.mutable.HashMap.empty[String, UTF8String]
+    def key(s: String) = utf8.getOrElseUpdate(s, UTF8String.fromString(s))
+    val order: Ordering[((String, String), Long)] = (a, b) => {
+      val c = java.lang.Long.compare(b._2, a._2)
+      if (c != 0) c else {
+        val l = key(a._1._1).compareTo(key(b._1._1))
+        if (l != 0) l else key(a._1._2).compareTo(key(b._1._2))
+      }
+    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var exhausted = false
     var round = 0
-    while (merges.size < nMerges && round < maxRounds && !exhausted) {
+    while (merges.size < nMerges && round < maxRounds && counts.nonEmpty) {
       round += 1
       val want = math.min(mergesPerRound, nMerges - merges.size)
-      // One vocab-sized job per ROUND: collect a prefix of the sorted pair
-      // table and select greedily; the prefix grows (rare) if overlaps ate
-      // it before `want` disjoint pairs were found while more rows existed.
-      var prefix = math.max(64, want * 8)
-      var selected: Seq[(String, String, Long)] = Nil
-      var complete = false
-      while (!complete) {
-        val top = pairCounts(vocab)
-          .orderBy(col("n").desc, col("left"), col("right"))
-          .limit(prefix).as[(String, String, Long)].collect()
-        val used = scala.collection.mutable.Set.empty[String]
-        val sel = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        val it = top.iterator
-        while (sel.size < want && it.hasNext) {
-          val (l, r, n) = it.next()
-          if (!used(l) && !used(r)) { sel += ((l, r, n)); used += l; used += r }
-        }
-        if (sel.size == want || top.length < prefix) {
-          selected = sel.toSeq
-          complete = true
-          if (top.isEmpty) exhausted = true
-        } else prefix *= 4
-      }
-      if (selected.nonEmpty) {
-        selected.foreach { case (l, r, n) =>
+      val used = scala.collection.mutable.Set.empty[String]
+      val selected = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      val it = counts.toArray.sorted(order).iterator
+      while (selected.size < want && it.hasNext) {
+        val ((l, r), n) = it.next()
+        if (!used(l) && !used(r)) {
+          selected += ((l, r)); used += l; used += r
           merges += ((merges.size + 1L, l, r, l + r, n))
         }
-        // disjoint ⇒ the replaces commute; applied in selection order to
-        // match the rank order segment() replays — as ONE ChainedReplace
-        // (segment()'s codegen shape) instead of an R-deep fold
-        vocab = vocab.withColumn("syms",
-            org.apache.spark.sql.graftglue.ColumnBridge.column(
-              org.apache.spark.sql.graftglue.ChainedReplace(
-                org.apache.spark.sql.graftglue.ColumnBridge.expression(col("syms")),
-                selected.map { case (l, r, _) => (s" $l  $r ", s" ${l}${r} ") })))
-          .pinned()
-      } else exhausted = true
+      }
+      val steps = selected.map { case (l, r) => (s" $l  $r ", s" $l$r ") }
+      syms.indices.foreach { i =>
+        val s = steps.foldLeft(syms(i)) { case (s, (from, to)) => s.replace(from, to) }
+        if (s != syms(i)) { count(syms(i), -cnt(i)); count(s, cnt(i)); syms(i) = s }
+      }
     }
-    (merges.toSeq.toDF("rank", "l", "r", "merged", "n"), vocab)
+    val vocab = spark.createDataFrame(
+      rows.indices.map(i => Row(rows(i).get(0), cnt(i), syms(i))).asJava, vocab0.schema)
+    Some((mergeTable(spark, merges.toSeq), vocab))
+  }
+
+  /** [[train]] as Spark jobs: one vocab-sized pair-count collect and one
+    * pin per round. Each round's vocab is pinned eagerly, so the round
+    * before it is released as soon as the new one has materialized; the
+    * returned vocab holds the one pin left.
+    */
+  private[graft] def trainSpark(docs: DataFrame, textCol: String, nMerges: Int,
+                                mergesPerRound: Int,
+                                maxRounds: Int): (DataFrame, DataFrame) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    Jobs.labeled(spark, "Bpe.train: spark") {
+      // vocab is small by construction (distinct words); keep it hot and
+      // cut lineage once so the training rounds replay an in-memory table,
+      // not the corpus scan.
+      var vocab = initialVocab(docs, textCol).pinned()
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
+      var exhausted = false
+      var round = 0
+      while (merges.size < nMerges && round < maxRounds && !exhausted) {
+        round += 1
+        val want = math.min(mergesPerRound, nMerges - merges.size)
+        // One vocab-sized job per ROUND: collect a prefix of the sorted pair
+        // table and select greedily; the prefix grows (rare) if overlaps ate
+        // it before `want` disjoint pairs were found while more rows existed.
+        var prefix = math.max(64, want * 8)
+        var selected: Seq[(String, String, Long)] = Nil
+        var complete = false
+        while (!complete) {
+          val top = pairCounts(vocab)
+            .orderBy(col("n").desc, col("left"), col("right"))
+            .limit(prefix).as[(String, String, Long)].collect()
+          val used = scala.collection.mutable.Set.empty[String]
+          val sel = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+          val it = top.iterator
+          while (sel.size < want && it.hasNext) {
+            val (l, r, n) = it.next()
+            if (!used(l) && !used(r)) { sel += ((l, r, n)); used += l; used += r }
+          }
+          if (sel.size == want || top.length < prefix) {
+            selected = sel.toSeq
+            complete = true
+            if (top.isEmpty) exhausted = true
+          } else prefix *= 4
+        }
+        if (selected.nonEmpty) {
+          selected.foreach { case (l, r, n) =>
+            merges += ((merges.size + 1L, l, r, l + r, n))
+          }
+          // disjoint ⇒ the replaces commute; applied in selection order to
+          // match the rank order segment() replays — as ONE ChainedReplace
+          // (segment()'s codegen shape) instead of an R-deep fold
+          val next = vocab.withColumn("syms",
+              org.apache.spark.sql.graftglue.ColumnBridge.column(
+                org.apache.spark.sql.graftglue.ChainedReplace(
+                  org.apache.spark.sql.graftglue.ColumnBridge.expression(col("syms")),
+                  selected.map { case (l, r, _) => (s" $l  $r ", s" ${l}${r} ") })))
+            .pinned()
+          Checkpoints.release(vocab)
+          vocab = next
+        } else exhausted = true
+      }
+      (mergeTable(spark, merges.toSeq), vocab)
+    }
   }
 
   /** Apply an ordered merge list to a corpus of documents: each token is

@@ -48,7 +48,7 @@ object Graph {
     * the SAME key every round, so a pre-`repartition` on src_id makes all
     * iterations reuse one exchange) + one groupBy(dst_id) sum with map-side
     * partials. Rank frames localCheckpoint each round — constant-size
-    * plans, no lineage blowup (same rationale as MtlParser.inferTransitive).
+    * plans, no lineage blowup (same rationale as MtlParser.closureSpark).
     *
     * Output: (id, rank) for every node appearing as src or dst; `rank` is
     * the scaled BIGINT (divide by 1e6 for the conventional value).

@@ -1,8 +1,12 @@
 package graft.json
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType,
+  StructField, StructType}
+import graft.{Checkpoints, Jobs}
 import graft.Checkpoints.PinSyntax
 import graft.Caching.TrackedSyntax
 
@@ -466,34 +470,6 @@ object MtlParser {
     lbl.select(col("id").as("member"), col("lbl").as("canonical"))
   }
 
-  /** Datalog-style transitive inference over a knowledge-base edge table
-    * (the derivation layer of the reference's assertion KB,
-    * `node_classes/nft_nodes.py` — rules fire until no new facts appear).
-    * Derives `outRel(x, z) :- rel(x, y), rel*(y, z)`: the transitive
-    * closure of `rel`, emitted as new edges labeled `outRel`.
-    *
-    * Path-doubling evaluation: each round joins the closure-so-far with
-    * ITSELF, so reachable path length doubles per round and a diameter-d
-    * graph saturates in ceil(log2(d)) rounds — the right trade for Spark,
-    * where rounds are stages and a 25-hop chain should cost 5 shuffles,
-    * not 24 (plain semi-naive is linear in d). Fixpoint = a round whose
-    * distinct-count does not grow; cycles terminate because the closure is
-    * a set and can only grow to n²; `maxRounds` still bounds the loop
-    * (2^maxRounds hops).
-    *
-    * Each round ends in an EAGER `localCheckpoint`, not a persist: caching
-    * short-circuits recomputation but leaves the *logical* plan intact, and
-    * this loop references the closure-so-far four times per round, so the
-    * analyzed tree grows ~4^rounds and Catalyst analysis goes exponential
-    * (measured: round ~10 pinned the driver for minutes before any task
-    * ran). Checkpointing truncates lineage to an RDD scan — constant-size
-    * plans, constant per-round analysis cost. On a real cluster prefer
-    * `sc.setCheckpointDir` + reliable `.checkpoint()` for fault tolerance;
-    * local checkpoint is the right trade single-node.
-    *
-    * Output: (src_id, dst_id, rel=outRel) — derived pairs only; union the
-    * input back if the raw facts should ride along.
-    */
   /** Single Datalog rule application (reference `nft_nodes.py` rule firing,
     * the non-recursive case): `outRel(a, c) :- rel1(a, b), rel2(b, c)` —
     * one equi-join on the shared variable, distinct heads. Compose with
@@ -511,30 +487,135 @@ object MtlParser {
       .withColumn("rel", lit(outRel))
   }
 
+  /** Datalog-style transitive inference over a knowledge-base edge table
+    * (the derivation layer of the reference's assertion KB,
+    * `node_classes/nft_nodes.py` — rules fire until no new facts appear).
+    * Derives `outRel(x, z) :- rel(x, y), rel*(y, z)`: the transitive
+    * closure of `rel`, emitted as new edges labeled `outRel`. A pair is in
+    * the result when a path of 1 to 2^maxRounds edges joins it; cycles
+    * reach their own nodes. Null ids ride along in the base edges but
+    * never join: a path does not continue through a null.
+    *
+    * Two paths, same rows. The distinct edge list is collected once; at or
+    * under [[DriverEdgeCeiling]] edges the closure runs on the driver
+    * ([[closureDriver]]: a bounded breadth-first search from every source,
+    * returned as a local relation) unless it derives more than
+    * [[DriverPairCap]] pairs — a long chain's closure grows quadratically —
+    * in which case that result is dropped. Otherwise the closure runs as
+    * Spark jobs ([[closureSpark]]), the only path for graphs larger than
+    * driver memory. The jobs carry the description "inferTransitive:
+    * driver" or "inferTransitive: spark" after the path that ran.
+    *
+    * Output: (src_id, dst_id, rel=outRel) — the closure, base edges
+    * included.
+    */
   def inferTransitive(edges: DataFrame, rel: String, outRel: String,
                       maxRounds: Int = 20): DataFrame = {
     require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
-    var all = edges.filter(col("rel") === rel)
-      .select(col("src_id"), col("dst_id")).distinct()
-      .pinned()
-    var prevN = all.count()
-    var round = 0
-    var deltaN = prevN
-    while (deltaN > 0 && round < maxRounds) {
-      val next = all.select(col("src_id"), col("dst_id").as("__mid"))
-        .join(all.select(col("src_id").as("__mid"), col("dst_id")), "__mid")
-        .select(col("src_id"), col("dst_id"))
-      // ONE distinct over (old ∪ new) both dedups the join output and
-      // subsumes the fresh-pair anti-join: growth is detected by the count
-      // delta, so the round costs 2 shuffles (join + distinct), not 4
-      // (join, distinct, anti-join, distinct).
-      val grown = all.union(next).distinct().pinned()
-      val grownN = grown.count()
-      deltaN = grownN - prevN
-      prevN = grownN
-      all = grown
-      round += 1
-    }
-    all.withColumn("rel", lit(outRel))
+    closureDriver(edges, rel, outRel, maxRounds)
+      .getOrElse(closureSpark(edges, rel, outRel, maxRounds))
   }
+
+  /** Most distinct edges [[inferTransitive]] closes on the driver. */
+  private[graft] val DriverEdgeCeiling = 65536
+  /** Most pairs a driver closure may derive before it is dropped for the
+    * Spark path: a local relation this size is a few MB of rows.
+    */
+  private[graft] val DriverPairCap = 1 << 18
+
+  /** Id types whose JVM equality is Spark's join equality. */
+  private val DriverIdTypes = Set[DataType](StringType, IntegerType, LongType)
+
+  private def closureEdges(edges: DataFrame, rel: String): DataFrame =
+    edges.filter(col("rel") === rel).select(col("src_id"), col("dst_id")).distinct()
+
+  /** [[inferTransitive]] on the driver, or None when the edge list passes
+    * [[DriverEdgeCeiling]], the closure passes [[DriverPairCap]], or the
+    * ids are not one string or integer type.
+    */
+  private[graft] def closureDriver(edges: DataFrame, rel: String, outRel: String,
+                                   maxRounds: Int): Option[DataFrame] = {
+    val base = closureEdges(edges, rel)
+    val schema = base.withColumn("rel", lit(outRel)).schema
+    if (schema("src_id").dataType != schema("dst_id").dataType ||
+        !DriverIdTypes(schema("src_id").dataType)) return None
+    val rows = Jobs.labeled(edges.sparkSession, "inferTransitive: driver") {
+      base.limit(DriverEdgeCeiling + 1).collect()
+    }
+    if (rows.length > DriverEdgeCeiling) return None
+    // nodes are array indices; java's HashMap takes the null id as a key
+    val index = new java.util.HashMap[Any, Integer]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def node(v: Any): Int = {
+      val i = index.get(v)
+      if (i != null) i else { index.put(v, ids.size); ids += v; ids.size - 1 }
+    }
+    val es = rows.map(r => (node(r.get(0)), node(r.get(1))))
+    val out = Array.fill(ids.size)(scala.collection.mutable.ArrayBuffer.empty[Int])
+    es.foreach { case (s, d) => out(s) += d }
+    val nullNode = Option(index.get(null)).fold(-1)(_.intValue)
+    val maxHops = if (maxRounds >= 31) Int.MaxValue else 1 << maxRounds
+    val seenBy = Array.fill(ids.size)(-1)
+    val pairs = scala.collection.mutable.ArrayBuffer.empty[Row]
+    // semi-naive per source: each hop expands only the nodes first reached
+    // on the hop before, so a node's shortest path decides whether it is
+    // within maxHops; a null id is a source but never a mid
+    for (s <- ids.indices if out(s).nonEmpty) {
+      var frontier = Seq(s)
+      var hops = 0
+      while (frontier.nonEmpty && hops < maxHops) {
+        hops += 1
+        frontier = for {
+          v <- frontier if hops == 1 || v != nullNode
+          t <- out(v) if seenBy(t) != s
+        } yield { seenBy(t) = s; pairs += Row(ids(s), ids(t), outRel); t }
+      }
+      if (pairs.size > DriverPairCap) return None
+    }
+    Some(edges.sparkSession.createDataFrame(pairs.asJava, schema))
+  }
+
+  /** [[inferTransitive]] as Spark jobs, by path doubling: each round joins
+    * the closure-so-far with ITSELF, so reachable path length doubles per
+    * round and a diameter-d graph saturates in ceil(log2(d)) rounds — a
+    * 25-hop chain costs 5 shuffles, not 24. Fixpoint = a round whose
+    * distinct-count does not grow; cycles terminate because the closure is
+    * a set and can only grow to n²; `maxRounds` still bounds the loop
+    * (2^maxRounds hops).
+    *
+    * Each round ends in an EAGER pin, not a persist: caching
+    * short-circuits recomputation but leaves the *logical* plan intact, and
+    * this loop references the closure-so-far four times per round, so the
+    * analyzed tree grows ~4^rounds and Catalyst analysis goes exponential
+    * (measured: round ~10 pinned the driver for minutes before any task
+    * ran). Pinning truncates lineage to an RDD scan — constant-size plans,
+    * constant per-round analysis cost — and frees the round before it,
+    * which is released as soon as the new pin has materialized; the
+    * returned frame reads the one pin left.
+    */
+  private[graft] def closureSpark(edges: DataFrame, rel: String, outRel: String,
+                                  maxRounds: Int): DataFrame =
+    Jobs.labeled(edges.sparkSession, "inferTransitive: spark") {
+      var all = closureEdges(edges, rel).pinned()
+      var prevN = all.count()
+      var round = 0
+      var deltaN = prevN
+      while (deltaN > 0 && round < maxRounds) {
+        val next = all.select(col("src_id"), col("dst_id").as("__mid"))
+          .join(all.select(col("src_id").as("__mid"), col("dst_id")), "__mid")
+          .select(col("src_id"), col("dst_id"))
+        // ONE distinct over (old ∪ new) both dedups the join output and
+        // subsumes the fresh-pair anti-join: growth is detected by the count
+        // delta, so the round costs 2 shuffles (join + distinct), not 4
+        // (join, distinct, anti-join, distinct).
+        val grown = all.union(next).distinct().pinned()
+        val grownN = grown.count()
+        Checkpoints.release(all)
+        deltaN = grownN - prevN
+        prevN = grownN
+        all = grown
+        round += 1
+      }
+      all.withColumn("rel", lit(outRel))
+    }
 }

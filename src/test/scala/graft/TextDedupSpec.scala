@@ -769,9 +769,11 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("Bpe.train at production merge counts runs Q job rounds, not one per merge") {
+    // the Spark path, called directly: the public call trains this
+    // 150-word vocabulary on the driver (next test)
     val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     val rec = Jobs.recorded(spark) {
-      graft.functions.Bpe.train(cust, "c_name", nMerges = 544,
+      graft.functions.Bpe.trainSpark(cust, "c_name", nMerges = 544,
         mergesPerRound = 32, maxRounds = 17)._1
         .orderBy("rank").as[(Long, String, String, String, Long)].collect()
     }
@@ -788,6 +790,21 @@ class TextDedupSpec extends SparkSpec {
     // here, vs >= 2 jobs/merge at R=1 (187 rounds)
     assert(jobs >= 17, s"recorder undercounted: $jobs")
     assert(jobs <= 4 * 17 + 10, s"too many jobs for 17 rounds: $jobs")
+  }
+
+  test("Bpe.train at production merge counts trains on the driver in at most 2 jobs") {
+    val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val rec = Jobs.recorded(spark) {
+      graft.functions.Bpe.train(cust, "c_name", nMerges = 544,
+        mergesPerRound = 32, maxRounds = 17)
+    }
+    val m = rec.value._1.orderBy("rank").as[(Long, String, String, String, Long)].collect()
+    assert(m.length == 187)
+    assert(m.map(_._1).toSeq == (1L to 187L))
+    assert(m.forall { case (_, l, r, mg, _) => mg == l + r })
+    // one collect of the 150-word vocab (its aggregate's stage + result);
+    // all 17 rounds then run in plain Scala
+    assert(rec.jobs.size <= 2, rec.jobs.map(_.site))
   }
 
   test("Bpe.segment replays merges identically to the trained vocabulary") {
