@@ -1081,9 +1081,9 @@ object EntryQueriesDedup {
     // — at R=32 a 50k-merge run is ~1.6k jobs, not 50k). maxRounds
     // bounds rounds instead of the merge count so every round wants the
     // full R and the oracle can unroll exactly 17 rounds — short early
-    // rounds (symbol diversity < 64) mirror as empty SQL slots. The oracle replays the batched
-    // greedy selection round for round in the same padded-string
-    // representation.
+    // rounds (symbol diversity < 64) mirror as empty SQL slots. The
+    // oracle replays the batched greedy selection round for round in the
+    // same padded-string representation.
     "q_bpe_merges" -> ((s, dir) =>
       graft.functions.Bpe.train(T(s, dir, "customer"), "c_name",
           nMerges = 544, mergesPerRound = 32, maxRounds = 17)._1

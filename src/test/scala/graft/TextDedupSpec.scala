@@ -771,7 +771,7 @@ class TextDedupSpec extends SparkSpec {
   test("Bpe.train at production merge counts runs Q job rounds, not one per merge") {
     // the Spark path, called directly: the public call trains this
     // 150-word vocabulary on the driver (next test)
-    val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
     val rec = Jobs.recorded(spark) {
       graft.functions.Bpe.trainSpark(cust, "c_name", nMerges = 544,
         mergesPerRound = 32, maxRounds = 17)._1
@@ -793,7 +793,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("Bpe.train at production merge counts trains on the driver in at most 2 jobs") {
-    val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
     val rec = Jobs.recorded(spark) {
       graft.functions.Bpe.train(cust, "c_name", nMerges = 544,
         mergesPerRound = 32, maxRounds = 17)
