@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage pinning for ITERATIVE operators (PageRank, Datalog closure,
@@ -57,6 +58,28 @@ object Checkpoints {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** The driver/Spark split of an iterative operator whose state usually
+    * fits the driver: `onDriver` on the rows of `state` when there are at
+    * most `ceiling` of them and it returns Some, else `onSpark` on `state`
+    * pinned. `state` is planned and its shuffle stages run once: the
+    * bounded take runs `state`'s own physical plan, which the pin then
+    * reuses with its shuffle output and its size statistics, so an input
+    * above the ceiling is not scanned twice and plans the same joins.
+    * The take's jobs are labeled "`label`: driver", the pin's
+    * "`label`: spark"; `onSpark` labels its own.
+    */
+  def onDriverOrPinned[T](state: DataFrame, ceiling: Int, label: String)(
+      onDriver: Array[Row] => Option[T])(onSpark: DataFrame => T): T = {
+    val spark = state.sparkSession
+    val toRow = CatalystTypeConverters.createToScalaConverter(state.schema)
+    val rows = Jobs.labeled(spark, s"$label: driver") {
+      state.queryExecution.executedPlan.executeTake(ceiling + 1).map(toRow(_).asInstanceOf[Row])
+    }
+    (if (rows.length <= ceiling) onDriver(rows) else None).getOrElse {
+      onSpark(Jobs.labeled(spark, s"$label: spark")(state.pinned()))
+    }
+  }
 
   /** `.pinned()` chain syntax so call sites read like the plan they build. */
   implicit final class PinSyntax(private val df: DataFrame) extends AnyVal {

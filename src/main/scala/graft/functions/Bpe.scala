@@ -104,17 +104,18 @@ object Bpe {
     * come up short of R (symbol diversity, not the cap, limits a round's
     * take).
     *
-    * Two paths, same rows. The vocabulary is collected once (its
-    * aggregate's shuffle stage and one fetch); at or under
+    * Two paths, same rows. The vocabulary is built once (its aggregate's
+    * shuffle stage) and fetched up to one row past the ceiling; at or under
     * [[DriverVocabCeiling]] distinct words every round runs in plain Scala
-    * on the driver
-    * ([[trainDriver]]) and the frames come back as local relations — a
-    * round costs microseconds, not a Spark job. Above the ceiling the
-    * rounds run as Spark jobs over the pinned vocab ([[trainSpark]]): one
-    * vocab-sized aggregate and one pin per round. That path stays because
-    * it is the only one that trains a vocabulary larger than driver memory
-    * — the scale the object doc promises. The jobs carry the description
-    * "Bpe.train: driver" or "Bpe.train: spark" after the path that ran.
+    * on the driver ([[trainDriver]]) and the frames come back as local
+    * relations — a round costs microseconds, not a Spark job. Above the
+    * ceiling the rounds run as Spark jobs over the vocab, pinned from the
+    * same build ([[trainSpark]]): one vocab-sized aggregate and one pin
+    * per round. That path stays because it is the only one that trains a
+    * vocabulary larger than driver memory — the scale the object doc
+    * promises. The jobs carry the description "Bpe.train: driver" (the
+    * fetch) or "Bpe.train: spark" after the path that ran
+    * ([[graft.Checkpoints.onDriverOrPinned]]).
     */
   def train(docs: DataFrame, textCol: String, nMerges: Int,
             mergesPerRound: Int = 1,
@@ -123,15 +124,20 @@ object Bpe {
     require(mergesPerRound > 0,
       s"mergesPerRound must be positive, got $mergesPerRound")
     require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
-    trainDriver(docs, textCol, nMerges, mergesPerRound, maxRounds)
-      .getOrElse(trainSpark(docs, textCol, nMerges, mergesPerRound, maxRounds))
+    val vocab = initialVocab(docs, textCol)
+    Checkpoints.onDriverOrPinned(vocab, DriverVocabCeiling, "Bpe.train")(rows =>
+      Some(trainDriver(vocab.sparkSession, rows, vocab.schema, nMerges,
+        mergesPerRound, maxRounds)))(
+      trainSpark(_, nMerges, mergesPerRound, maxRounds))
   }
 
   /** Most distinct words [[train]] trains on the driver. */
   private[graft] val DriverVocabCeiling = 65536
 
-  /** (word, cnt, syms): the initial segmentation of the word counts. */
-  private def initialVocab(docs: DataFrame, textCol: String): DataFrame =
+  /** (word, cnt, syms): the initial segmentation of the word counts, the
+    * state both [[train]] paths start from.
+    */
+  private[graft] def initialVocab(docs: DataFrame, textCol: String): DataFrame =
     wordCounts(docs, textCol)
       .select(col("word"), col("cnt"), symbolize(col("word")).as("syms"))
 
@@ -150,84 +156,102 @@ object Bpe {
     var e = syms.length
     while (b < e && syms.charAt(b) == ' ') b += 1
     while (e > b && syms.charAt(e - 1) == ' ') e -= 1
-    syms.substring(b, e).split("  ", -1)
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = syms.indexOf("  ", b)
+    while (i >= 0 && i < e) { out += syms.substring(b, i); b = i + 2; i = syms.indexOf("  ", b) }
+    out += syms.substring(b, e)
+    out.toArray
   }
 
-  /** [[train]] in plain Scala over the collected vocabulary, or None when
-    * it has more than [[DriverVocabCeiling]] words. Each round recounts
-    * only the words a merge rewrote.
+  /** [[train]] in plain Scala over the collected [[initialVocab]] rows
+    * (`schema` is that frame's). Each round ranks only the top of the pair
+    * table, and rewrites and recounts only the words holding a selected
+    * pair.
     */
-  private[graft] def trainDriver(docs: DataFrame, textCol: String, nMerges: Int,
-                                 mergesPerRound: Int,
-                                 maxRounds: Int): Option[(DataFrame, DataFrame)] = {
-    val spark = docs.sparkSession
-    val vocab0 = initialVocab(docs, textCol)
-    val rows = Jobs.labeled(spark, "Bpe.train: driver") {
-      vocab0.limit(DriverVocabCeiling + 1).collect()
-    }
-    if (rows.length > DriverVocabCeiling) return None
+  private[graft] def trainDriver(spark: SparkSession, rows: Array[Row], schema: StructType,
+                                 nMerges: Int, mergesPerRound: Int,
+                                 maxRounds: Int): (DataFrame, DataFrame) = {
     val cnt = rows.map(_.getLong(1))
     val syms = rows.map(_.getString(2))
-    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-    def count(s: String, w: Long): Unit =
-      symbolsOf(s).sliding(2).foreach {
-        case Array(l, r) =>
-          val n = counts.getOrElse((l, r), 0L) + w
-          if (n == 0) counts.remove((l, r)) else counts((l, r)) = n
-        case _ =>
+    type Pair = (String, String)
+    val counts = scala.collection.mutable.HashMap.empty[Pair, Long]
+    // the words holding each pair, so a merge touches only those words
+    val holders = scala.collection.mutable.HashMap.empty[Pair, scala.collection.mutable.Set[Int]]
+    def count(i: Int, sign: Int): Unit = {
+      val sy = symbolsOf(syms(i))
+      for (j <- 1 until sy.length) {
+        val p = (sy(j - 1), sy(j))
+        val n = counts.getOrElse(p, 0L) + sign * cnt(i)
+        if (n == 0) { counts.remove(p); holders.remove(p) }
+        else {
+          counts(p) = n
+          if (sign > 0) holders.getOrElseUpdate(p, scala.collection.mutable.Set.empty) += i
+        }
       }
-    syms.indices.foreach(i => count(syms(i), cnt(i)))
+    }
+    syms.indices.foreach(count(_, 1))
     // Spark orders strings by their UTF-8 bytes
     val utf8 = scala.collection.mutable.HashMap.empty[String, UTF8String]
     def key(s: String) = utf8.getOrElseUpdate(s, UTF8String.fromString(s))
-    val order: Ordering[((String, String), Long)] = (a, b) => {
+    val order: Ordering[(Pair, Long)] = (a, b) => {
       val c = java.lang.Long.compare(b._2, a._2)
       if (c != 0) c else {
         val l = key(a._1._1).compareTo(key(b._1._1))
         if (l != 0) l else key(a._1._2).compareTo(key(b._1._2))
       }
     }
+    /** The first `k` pairs in `order`, without sorting the whole table. */
+    def top(k: Int): Seq[(Pair, Long)] = {
+      val heap = new java.util.PriorityQueue[(Pair, Long)](k + 1, order.reverse)
+      counts.foreach { e =>
+        if (heap.size < k) heap.add(e)
+        else if (order.lt(e, heap.peek())) { heap.poll(); heap.add(e) }
+      }
+      heap.asScala.toSeq.sorted(order)
+    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     var round = 0
     while (merges.size < nMerges && round < maxRounds && counts.nonEmpty) {
       round += 1
       val want = math.min(mergesPerRound, nMerges - merges.size)
-      val used = scala.collection.mutable.Set.empty[String]
-      val selected = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      val it = counts.toArray.sorted(order).iterator
-      while (selected.size < want && it.hasNext) {
-        val ((l, r), n) = it.next()
-        if (!used(l) && !used(r)) {
-          selected += ((l, r)); used += l; used += r
-          merges += ((merges.size + 1L, l, r, l + r, n))
-        }
+      // greedy down the order; the prefix grows (rare) when overlaps ate it
+      var prefix = math.max(64, want * 8)
+      var selected = Seq.empty[(Pair, Long)]
+      var complete = false
+      while (!complete) {
+        val ranked = top(prefix)
+        val used = scala.collection.mutable.Set.empty[String]
+        selected = ranked.iterator.filter { case ((l, r), _) =>
+          !used(l) && !used(r) && { used += l; used += r; true }
+        }.take(want).toSeq
+        complete = selected.size == want || ranked.size < prefix
+        prefix *= 4
       }
-      val steps = selected.map { case (l, r) => (s" $l  $r ", s" $l$r ") }
-      syms.indices.foreach { i =>
+      selected.foreach { case ((l, r), n) => merges += ((merges.size + 1L, l, r, l + r, n)) }
+      val steps = selected.map { case ((l, r), _) => (s" $l  $r ", s" $l$r ") }
+      val touched = selected.flatMap(s => holders.getOrElse(s._1, Nil)).distinct
+      touched.foreach { i =>
         val s = steps.foldLeft(syms(i)) { case (s, (from, to)) => s.replace(from, to) }
-        if (s != syms(i)) { count(syms(i), -cnt(i)); count(s, cnt(i)); syms(i) = s }
+        if (s != syms(i)) { count(i, -1); syms(i) = s; count(i, 1) }
       }
     }
     val vocab = spark.createDataFrame(
-      rows.indices.map(i => Row(rows(i).get(0), cnt(i), syms(i))).asJava, vocab0.schema)
-    Some((mergeTable(spark, merges.toSeq), vocab))
+      rows.indices.map(i => Row(rows(i).get(0), cnt(i), syms(i))).asJava, schema)
+    (mergeTable(spark, merges.toSeq), vocab)
   }
 
-  /** [[train]] as Spark jobs: one vocab-sized pair-count collect and one
-    * pin per round. Each round's vocab is pinned eagerly, so the round
-    * before it is released as soon as the new one has materialized; the
-    * returned vocab holds the one pin left.
+  /** [[train]] as Spark jobs over the pinned [[initialVocab]]: one
+    * vocab-sized pair-count collect and one pin per round. Each round's
+    * vocab is pinned eagerly, so the round before it (`vocab` included) is
+    * released as soon as the new one has materialized; the returned vocab
+    * holds the one pin left.
     */
-  private[graft] def trainSpark(docs: DataFrame, textCol: String, nMerges: Int,
-                                mergesPerRound: Int,
+  private[graft] def trainSpark(vocab: DataFrame, nMerges: Int, mergesPerRound: Int,
                                 maxRounds: Int): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
+    val spark = vocab.sparkSession
     import spark.implicits._
     Jobs.labeled(spark, "Bpe.train: spark") {
-      // vocab is small by construction (distinct words); keep it hot and
-      // cut lineage once so the training rounds replay an in-memory table,
-      // not the corpus scan.
-      var vocab = initialVocab(docs, textCol).pinned()
+      var current = vocab
       val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
       var exhausted = false
       var round = 0
@@ -241,7 +265,7 @@ object Bpe {
         var selected: Seq[(String, String, Long)] = Nil
         var complete = false
         while (!complete) {
-          val top = pairCounts(vocab)
+          val top = pairCounts(current)
             .orderBy(col("n").desc, col("left"), col("right"))
             .limit(prefix).as[(String, String, Long)].collect()
           val used = scala.collection.mutable.Set.empty[String]
@@ -264,17 +288,17 @@ object Bpe {
           // disjoint ⇒ the replaces commute; applied in selection order to
           // match the rank order segment() replays — as ONE ChainedReplace
           // (segment()'s codegen shape) instead of an R-deep fold
-          val next = vocab.withColumn("syms",
+          val next = current.withColumn("syms",
               org.apache.spark.sql.graftglue.ColumnBridge.column(
                 org.apache.spark.sql.graftglue.ChainedReplace(
                   org.apache.spark.sql.graftglue.ColumnBridge.expression(col("syms")),
                   selected.map { case (l, r, _) => (s" $l  $r ", s" ${l}${r} ") })))
             .pinned()
-          Checkpoints.release(vocab)
-          vocab = next
+          Checkpoints.release(current)
+          current = next
         } else exhausted = true
       }
-      (mergeTable(spark, merges.toSeq), vocab)
+      (mergeTable(spark, merges.toSeq), current)
     }
   }
 

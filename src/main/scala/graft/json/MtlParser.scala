@@ -2,7 +2,7 @@ package graft.json
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType,
   StructField, StructType}
@@ -496,15 +496,18 @@ object MtlParser {
     * reach their own nodes. Null ids ride along in the base edges but
     * never join: a path does not continue through a null.
     *
-    * Two paths, same rows. The distinct edge list is collected once; at or
-    * under [[DriverEdgeCeiling]] edges the closure runs on the driver
+    * Two paths, same rows. The distinct edge list is built once and
+    * fetched up to one row past the ceiling; at or under
+    * [[DriverEdgeCeiling]] edges the closure runs on the driver
     * ([[closureDriver]]: a bounded breadth-first search from every source,
     * returned as a local relation) unless it derives more than
-    * [[DriverPairCap]] pairs — a long chain's closure grows quadratically —
-    * in which case that result is dropped. Otherwise the closure runs as
-    * Spark jobs ([[closureSpark]]), the only path for graphs larger than
-    * driver memory. The jobs carry the description "inferTransitive:
-    * driver" or "inferTransitive: spark" after the path that ran.
+    * [[DriverPairCap]] pairs — a long chain's closure grows quadratically
+    * — in which case that result is dropped. Otherwise the closure runs as
+    * Spark jobs over the edge list, pinned from the same build
+    * ([[closureSpark]]), the only path for graphs larger than driver
+    * memory. The jobs carry the description "inferTransitive: driver" (the
+    * fetch) or "inferTransitive: spark" after the path that ran
+    * ([[graft.Checkpoints.onDriverOrPinned]]).
     *
     * Output: (src_id, dst_id, rel=outRel) — the closure, base edges
     * included.
@@ -512,8 +515,15 @@ object MtlParser {
   def inferTransitive(edges: DataFrame, rel: String, outRel: String,
                       maxRounds: Int = 20): DataFrame = {
     require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
-    closureDriver(edges, rel, outRel, maxRounds)
-      .getOrElse(closureSpark(edges, rel, outRel, maxRounds))
+    val base = closureEdges(edges, rel)
+    val ids = base.schema.map(_.dataType).distinct
+    if (ids.size == 1 && DriverIdTypes(ids.head))
+      Checkpoints.onDriverOrPinned(base, DriverEdgeCeiling, "inferTransitive")(
+        closureDriver(base.sparkSession, _, base.schema, outRel, maxRounds))(
+        closureSpark(_, outRel, maxRounds))
+    else closureSpark(Jobs.labeled(base.sparkSession, "inferTransitive: spark") {
+      base.pinned()
+    }, outRel, maxRounds)
   }
 
   /** Most distinct edges [[inferTransitive]] closes on the driver. */
@@ -526,23 +536,18 @@ object MtlParser {
   /** Id types whose JVM equality is Spark's join equality. */
   private val DriverIdTypes = Set[DataType](StringType, IntegerType, LongType)
 
-  private def closureEdges(edges: DataFrame, rel: String): DataFrame =
+  /** (src_id, dst_id): the distinct `rel` edges, the state both
+    * [[inferTransitive]] paths start from.
+    */
+  private[graft] def closureEdges(edges: DataFrame, rel: String): DataFrame =
     edges.filter(col("rel") === rel).select(col("src_id"), col("dst_id")).distinct()
 
-  /** [[inferTransitive]] on the driver, or None when the edge list passes
-    * [[DriverEdgeCeiling]], the closure passes [[DriverPairCap]], or the
-    * ids are not one string or integer type.
+  /** [[inferTransitive]] on the driver over the collected [[closureEdges]]
+    * rows (`schema` is that frame's, ids of one [[DriverIdTypes]] type), or
+    * None when the closure passes [[DriverPairCap]].
     */
-  private[graft] def closureDriver(edges: DataFrame, rel: String, outRel: String,
-                                   maxRounds: Int): Option[DataFrame] = {
-    val base = closureEdges(edges, rel)
-    val schema = base.withColumn("rel", lit(outRel)).schema
-    if (schema("src_id").dataType != schema("dst_id").dataType ||
-        !DriverIdTypes(schema("src_id").dataType)) return None
-    val rows = Jobs.labeled(edges.sparkSession, "inferTransitive: driver") {
-      base.limit(DriverEdgeCeiling + 1).collect()
-    }
-    if (rows.length > DriverEdgeCeiling) return None
+  private[graft] def closureDriver(spark: SparkSession, rows: Array[Row], schema: StructType,
+                                   outRel: String, maxRounds: Int): Option[DataFrame] = {
     // nodes are array indices; java's HashMap takes the null id as a key
     val index = new java.util.HashMap[Any, Integer]
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -556,7 +561,8 @@ object MtlParser {
     val nullNode = Option(index.get(null)).fold(-1)(_.intValue)
     val maxHops = if (maxRounds >= 31) Int.MaxValue else 1 << maxRounds
     val seenBy = Array.fill(ids.size)(-1)
-    val pairs = scala.collection.mutable.ArrayBuffer.empty[Row]
+    // (source << 32 | target) node pairs; rows are built only under the cap
+    val pairs = new scala.collection.mutable.ArrayBuilder.ofLong
     // semi-naive per source: each hop expands only the nodes first reached
     // on the hop before, so a node's shortest path decides whether it is
     // within maxHops; a null id is a source but never a mid
@@ -568,20 +574,21 @@ object MtlParser {
         frontier = for {
           v <- frontier if hops == 1 || v != nullNode
           t <- out(v) if seenBy(t) != s
-        } yield { seenBy(t) = s; pairs += Row(ids(s), ids(t), outRel); t }
+        } yield { seenBy(t) = s; pairs += (s.toLong << 32 | t); t }
       }
-      if (pairs.size > DriverPairCap) return None
+      if (pairs.length > DriverPairCap) return None
     }
-    Some(edges.sparkSession.createDataFrame(pairs.asJava, schema))
+    val closed = pairs.result().toSeq.map(p => Row(ids((p >>> 32).toInt), ids(p.toInt), outRel))
+    Some(spark.createDataFrame(closed.asJava, schema.add("rel", StringType, nullable = false)))
   }
 
-  /** [[inferTransitive]] as Spark jobs, by path doubling: each round joins
-    * the closure-so-far with ITSELF, so reachable path length doubles per
-    * round and a diameter-d graph saturates in ceil(log2(d)) rounds — a
-    * 25-hop chain costs 5 shuffles, not 24. Fixpoint = a round whose
-    * distinct-count does not grow; cycles terminate because the closure is
-    * a set and can only grow to n²; `maxRounds` still bounds the loop
-    * (2^maxRounds hops).
+  /** [[inferTransitive]] as Spark jobs over the pinned [[closureEdges]]
+    * `edges`, by path doubling: each round joins the closure-so-far with
+    * ITSELF, so reachable path length doubles per round and a diameter-d
+    * graph saturates in ceil(log2(d)) rounds — a 25-hop chain costs 5
+    * shuffles, not 24. Fixpoint = a round whose distinct-count does not
+    * grow; cycles terminate because the closure is a set and can only grow
+    * to n²; `maxRounds` still bounds the loop (2^maxRounds hops).
     *
     * Each round ends in an EAGER pin, not a persist: caching
     * short-circuits recomputation but leaves the *logical* plan intact, and
@@ -589,14 +596,14 @@ object MtlParser {
     * analyzed tree grows ~4^rounds and Catalyst analysis goes exponential
     * (measured: round ~10 pinned the driver for minutes before any task
     * ran). Pinning truncates lineage to an RDD scan — constant-size plans,
-    * constant per-round analysis cost — and frees the round before it,
-    * which is released as soon as the new pin has materialized; the
-    * returned frame reads the one pin left.
+    * constant per-round analysis cost — and frees the round before it
+    * (`edges` included), which is released as soon as the new pin has
+    * materialized; the returned frame reads the one pin left.
     */
-  private[graft] def closureSpark(edges: DataFrame, rel: String, outRel: String,
+  private[graft] def closureSpark(edges: DataFrame, outRel: String,
                                   maxRounds: Int): DataFrame =
     Jobs.labeled(edges.sparkSession, "inferTransitive: spark") {
-      var all = closureEdges(edges, rel).pinned()
+      var all = edges
       var prevN = all.count()
       var round = 0
       var deltaN = prevN

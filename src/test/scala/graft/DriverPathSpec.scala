@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 
+import graft.Checkpoints.PinSyntax
 import graft.functions.Bpe
 import graft.json.MtlParser
 
@@ -32,8 +33,10 @@ class DriverPathSpec extends SparkSpec {
     */
   private def bpeBoth(docs: DataFrame, nMerges: Int, perRound: Int,
                       maxRounds: Int): Seq[(Long, String, String, String, Long)] = {
-    val (dm, dv) = Bpe.trainDriver(docs, "text", nMerges, perRound, maxRounds).get
-    val (sm, sv) = Bpe.trainSpark(docs, "text", nMerges, perRound, maxRounds)
+    val vocab = Bpe.initialVocab(docs, "text")
+    val (dm, dv) = Bpe.trainDriver(spark, vocab.collect(), vocab.schema, nMerges, perRound,
+      maxRounds)
+    val (sm, sv) = Bpe.trainSpark(vocab.pinned(), nMerges, perRound, maxRounds)
     def merges(m: DataFrame) =
       m.orderBy("rank").as[(Long, String, String, String, Long)].collect().toSeq
     val got = merges(dm)
@@ -90,7 +93,8 @@ class DriverPathSpec extends SparkSpec {
     assert(rec.jobs.size <= 2, rec.jobs.map(_.site))
     assert(rec.jobs.forall(_.desc == "Bpe.train: driver"), rec.jobs.map(_.desc))
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
-    val spk = Jobs.recorded(spark)(Bpe.trainSpark(docs, "text", 12, 4, Int.MaxValue))
+    val vocab = Bpe.initialVocab(docs, "text").pinned()
+    val spk = Jobs.recorded(spark)(Bpe.trainSpark(vocab, 12, 4, Int.MaxValue))
     assert(spk.jobs.nonEmpty && spk.jobs.forall(_.desc == "Bpe.train: spark"),
       spk.jobs.map(_.desc))
   }
@@ -99,8 +103,9 @@ class DriverPathSpec extends SparkSpec {
     * sets, and returns the rows.
     */
   private def closureBoth(edges: DataFrame, maxRounds: Int): Set[Row] = {
-    val d = MtlParser.closureDriver(edges, "r", "out", maxRounds).get
-    val s = MtlParser.closureSpark(edges, "r", "out", maxRounds)
+    val base = MtlParser.closureEdges(edges, "r")
+    val d = MtlParser.closureDriver(spark, base.collect(), base.schema, "out", maxRounds).get
+    val s = MtlParser.closureSpark(base.pinned(), "out", maxRounds)
     assert(d.schema == s.schema)
     val got = d.collect().toSet
     assert(got == s.collect().toSet, s"maxRounds=$maxRounds")
@@ -145,13 +150,38 @@ class DriverPathSpec extends SparkSpec {
     // a chain's closure is quadratic: n(n+1)/2 pairs for n edges
     val n = Iterator.from(1).find(k => k.toLong * (k + 1) / 2 > MtlParser.DriverPairCap).get
     val chain = (0 until n).map(i => (i, i + 1, "r")).toDF("src_id", "dst_id", "rel")
-    assert(MtlParser.closureDriver(chain, "r", "out", 20).isEmpty)
+    val base = MtlParser.closureEdges(chain, "r")
+    assert(MtlParser.closureDriver(spark, base.collect(), base.schema, "out", 20).isEmpty)
     val rec = Jobs.recorded(spark) {
       MtlParser.inferTransitive(chain, "r", "out").as[(Int, Int, String)].collect()
     }
     val want = for (i <- 0 until n; j <- i + 1 to n) yield (i, j, "out")
     assert(rec.value.length == want.size && rec.value.toSet == want.toSet)
-    assert(rec.jobs.exists(_.desc == "inferTransitive: spark"))
+    // the Spark loop's pin reads the edge list the take built: its job
+    // runs no shuffle map stage of its own
+    val pin = rec.jobs.find(_.desc == "inferTransitive: spark")
+    assert(pin.exists(_.shuffleWrite == 0), rec.jobs.map(j => (j.desc, j.shuffleWrite)))
+  }
+
+  test("Bpe.train above the vocab ceiling trains on Spark from the one vocab build") {
+    // 65,537 distinct words: base-8 numerals over "abcdefgh", 6 symbols each
+    val words = (0 to Bpe.DriverVocabCeiling).map { i =>
+      Iterator.iterate(i)(_ / 8).take(6).map(d => ('a' + d % 8).toChar).mkString
+    }
+    val docs = words.grouped(512).zipWithIndex
+      .map { case (ws, d) => (d.toLong, ws.mkString(" ")) }.toSeq.toDF("doc_id", "text")
+    val rec = Jobs.recorded(spark) {
+      val (m, v) = Bpe.train(docs, "text", 8, 4, 2)
+      (m.orderBy("rank").as[(Long, String, String, String, Long)].collect().toSeq,
+        v.collect().toSet)
+    }
+    val vocab = Bpe.initialVocab(docs, "text")
+    val (dm, dv) = Bpe.trainDriver(spark, vocab.collect(), vocab.schema, 8, 4, 2)
+    assert(rec.value._1 == dm.orderBy("rank").as[(Long, String, String, String, Long)]
+      .collect().toSeq)
+    assert(rec.value._2 == dv.collect().toSet)
+    val pin = rec.jobs.find(_.desc == "Bpe.train: spark")
+    assert(pin.exists(_.shuffleWrite == 0), rec.jobs.map(j => (j.desc, j.shuffleWrite)))
   }
 
   test("small inferTransitive runs on the driver in at most 2 jobs, labeled") {
@@ -172,12 +202,13 @@ class DriverPathSpec extends SparkSpec {
     }
     val docs = corpus(31L, "abcd", 30, 6)
     assert(newPins {
-      val (m, v) = Bpe.trainSpark(docs, "text", 12, 2, Int.MaxValue)
+      val (m, v) = Bpe.trainSpark(Bpe.initialVocab(docs, "text").pinned(), 12, 2, Int.MaxValue)
       m.collect(); v.collect()
     } <= 1)
     val chain = (0L until 20L).map(i => (i, i + 1, "r")).toDF("src_id", "dst_id", "rel")
     assert(newPins {
-      assert(MtlParser.closureSpark(chain, "r", "out", 20).count() == 20 * 21 / 2)
+      val edges = MtlParser.closureEdges(chain, "r").pinned()
+      assert(MtlParser.closureSpark(edges, "out", 20).count() == 20 * 21 / 2)
     } <= 1)
   }
 }

@@ -773,7 +773,8 @@ class TextDedupSpec extends SparkSpec {
     // 150-word vocabulary on the driver (next test)
     val cust = spark.read.parquet(s"$sfDir/customer.parquet")
     val rec = Jobs.recorded(spark) {
-      graft.functions.Bpe.trainSpark(cust, "c_name", nMerges = 544,
+      val vocab = graft.Checkpoints.pin(graft.functions.Bpe.initialVocab(cust, "c_name"))
+      graft.functions.Bpe.trainSpark(vocab, nMerges = 544,
         mergesPerRound = 32, maxRounds = 17)._1
         .orderBy("rank").as[(Long, String, String, String, Long)].collect()
     }
